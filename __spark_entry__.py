@@ -1896,8 +1896,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         }
     )
     # The driver's correctness gate evaluates the FIRST 50 entries of
-    # this dict; 86 exist (bigram_nll joined in r11), so 36 sit past
-    # the cap every round. Rotation
+    # this dict; 86 exist, so 36 sit past the cap every round. Rotation
     # is governed by the ledger invariant (tools/rotation_ledger.py +
     # tests/test_rotation.py): a query may sit past the cap ONLY if it
     # has a green driver row, neither its op modules nor its q_* wrapper
@@ -1905,75 +1904,63 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # row, AND the row is from the latest or the immediately previous
     # completed round (freshness budget 1 against max(recorded rounds)
     # — the halves of the query set alternate through the window round
-    # over round). The full 85 stay covered by tools/check_entry.py
+    # over round). The full 86 stay covered by tools/check_entry.py
     # (EXACT=1) locally.
     #
-    # r11 rotations IN (the freshness budget forces this — exactly the
-    # alternation SURVEY §9 planned): all 35 r9-certified corpus/text/
-    # dedup/web/pipeline rows hit age 2 > budget 1 at r11 and rotate
-    # back into the window; with them in-window, editing their modules
-    # is free — which is what the r11 fold-back used (ops/vocab.py
-    # folded into corpus.py, rle_postings deduplicated into
-    # ops/text.py). Also in-window: every r10 row over modules r11
-    # touches — unigram_nll/dsir_weights (the fold-back itself),
-    # source_cap/token_budget_sample (their module closure includes
-    # text.py), events_hourly/events_session_window/stream_funnel
-    # (streaming/ops.py session-split work) — plus the ann family
-    # (similarity.py headroom for the recall-scorecard refresh) and
-    # dedup_semantic filling the last slot.
-    # Deferred: 36 r10-certified rows over modules r11 does NOT touch
-    # (the 18 gen_* rows on the frozen generation engine, the joins.py
-    # family, the five non-text sampling rows, events_funnel, and 8
-    # single-module analytics/profile/skew/multimodal/vectors rows).
+    # r13 window (in): every row certified before r12 — the 18 gen_*
+    # rows, the analytics/profile/skew/multimodal/vectors/sampling/web
+    # singles and four wrapper-only SQL rows (32 r10 + 4 r11 rows, which
+    # reach age 2 at r13 and must re-certify) — plus 14 r12 rows
+    # over the modules r13 edits: the six ann_* rows (similarity.py),
+    # the four events_* join rows (joins.py), events_hourly /
+    # events_session_window / stream_funnel (streaming/) and url_dedup
+    # (web.py). With them in-window, generation (engine.py, core/,
+    # generators/, config/, oracle.py), analytics, multimodal, profile,
+    # skew, vectors, similarity, joins, streaming and web are free to
+    # edit in r13.
+    # r13 deferred (below): the 36 other r12 rows — corpus.py, dedup.py,
+    # text.py, sampling, pipeline and ordering plus the wrapper-only
+    # SQL rollup/percentiles rows. Those modules stay frozen in r13.
+    # r14 plan: these 36 reach age 2 and rotate IN, freeing
+    # corpus/dedup/text/sampling/pipeline/ordering for edits; the rows
+    # r13 re-certifies are deferred in their place.
     deferred = [
-        # r12 rotation: the r12 job-floor pass edited ops/joins.py
-        # (_bounded_local_right fixed-width fast path), voiding the
-        # events_asof/gapfill/interval_join/range_join r10 certificates
-        # — those four rotate INTO the window for fresh rows. Deferred
-        # in their place: pricing_summary, media_features,
-        # url_canonicalize, html_extract — all r11-green and their
-        # module closures (media.py / web.py / wrapper-only SQL) are
-        # untouched by r12's corpus/dedup/joins/similarity edits.
-        # The rest are r10/r11-certified rows over modules untouched
-        # in r11+r12 (18 gen_* rows on the frozen generation engine,
-        # non-text sampling rows, events_funnel, single-module
-        # analytics/profile/skew/multimodal/vectors rows).
-        "events_funnel",
-        "gen_integer_ordered",
-        "gen_integer_random",
-        "gen_integer_distinct",
-        "gen_float32",
-        "gen_float_null",
-        "gen_datetime_ordered",
-        "gen_datetime_random",
-        "gen_enum",
-        "gen_first_name",
-        "gen_last_name",
-        "gen_phone",
-        "gen_ranges",
-        "gen_foreign_key",
-        "gen_slice_resume",
-        "gen_uuid",
-        "gen_string_simple",
-        "gen_template",
-        "gen_text",
-        "pricing_summary",
-        "media_features",
-        "url_canonicalize",
-        "html_extract",
-        "corpus_mix",
-        "data_split",
-        "data_split_by_source",
-        "quality_band",
-        "stratified_sample",
-        "profile_events",
-        "skew_salted_agg",
-        "media_audio_features",
-        "embedding_quantize",
-        "top_revenue",
-        "user_running_value",
-        "events_sessionize",
-        "events_retention",
+        "text_features",
+        "dedup_exact",
+        "dedup_jaccard",
+        "dedup_minhash",
+        "dedup_simhash",
+        "dedup_components",
+        "dedup_embedding",
+        "corpus_vocab",
+        "decontaminate",
+        "pack_sequences",
+        "pack_sequences_chars",
+        "pack_nostraddle",
+        "pack_order",
+        "pii_redact",
+        "curate",
+        "events_rollup",
+        "dedup_semantic",
+        "tfidf_keywords",
+        "events_percentiles",
+        "doc_chunks",
+        "dedup_incremental",
+        "duplicate_spans",
+        "remove_duplicate_spans",
+        "unigram_nll",
+        "bigram_nll",
+        "repetition_features",
+        "collocations",
+        "token_divergence",
+        "zipf_fit",
+        "token_budget_sample",
+        "source_cap",
+        "dedup_incremental_minhash",
+        "bm25_retrieval",
+        "dsir_weights",
+        "language_confidence",
+        "paragraph_dedup",
     ]
     head = {k: v for k, v in out.items() if k not in deferred}
     return {**head, **{k: out[k] for k in deferred}}

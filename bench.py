@@ -50,6 +50,54 @@ GEN_BENCH_CFG = {
 }
 
 
+# The headline query list: bench.py times these, and tools/dump_plans.py
+# and tools/shuffle_report.py default to them.
+BENCH_QUERIES = [
+    "text_features",
+    "dedup_minhash",
+    "dedup_simhash",
+    "ann_topk",
+    "ann_lsh",
+    "ann_ivf",
+    "ann_ivf_index",
+    "ann_quantized",
+    "pricing_summary",
+    "top_revenue",
+    "events_sessionize",
+    "user_running_value",
+    "skew_salted_agg",
+    "data_split",
+    "corpus_vocab",
+    "decontaminate",
+    "pack_sequences",
+    "curate",
+    "events_asof",
+    "events_range_join",
+    "events_rollup",
+    "events_gapfill",
+    "events_percentiles",
+    "dedup_semantic",
+    "tfidf_keywords",
+    "doc_chunks",
+    "corpus_mix",
+    "dedup_incremental",
+    "stratified_sample",
+    "duplicate_spans",
+    "unigram_nll",
+    "repetition_features",
+    "events_funnel",
+    "events_retention",
+    "collocations",
+    "token_divergence",
+    "quality_band",
+    "zipf_fit",
+    "url_dedup",
+    "language_confidence",
+    "paragraph_dedup",
+    "pack_order",
+]
+
+
 def calibrate_cpu() -> float:
     """Fixed single-thread numpy microbench (frf kernel on 1e8 u64) so a
     host-speed change is visible in the report instead of masquerading
@@ -153,54 +201,8 @@ def main() -> None:
     # first query doesn't absorb session boot costs
     spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).count()
     qs = E.queries()
-    bench_queries = [
-        "text_features",
-        "dedup_minhash",
-        "dedup_simhash",
-        "ann_topk",
-        "ann_lsh",
-        "ann_ivf",
-        "ann_ivf_index",
-        "ann_quantized",
-        "pricing_summary",
-        "top_revenue",
-        "events_sessionize",
-        "user_running_value",
-        "skew_salted_agg",
-        "data_split",
-        "corpus_vocab",
-        "decontaminate",
-        "pack_sequences",
-        "curate",
-        "events_asof",
-        "events_range_join",
-        "events_rollup",
-        "events_gapfill",
-        "events_percentiles",
-        "dedup_semantic",
-        "tfidf_keywords",
-        "doc_chunks",
-        "corpus_mix",
-        "dedup_incremental",
-        "stratified_sample",
-        "duplicate_spans",
-        "unigram_nll",
-        "repetition_features",
-        "events_funnel",
-        "events_retention",
-        "collocations",
-        "token_divergence",
-        "quality_band",
-        "zipf_fit",
-        # r7 additions
-        "url_dedup",
-        "language_confidence",
-        "paragraph_dedup",
-        # r9 additions
-        "pack_order",
-    ]
     floors: dict[str, list[float]] = {}
-    for name in bench_queries:
+    for name in BENCH_QUERIES:
         # three full runs (construction + action: some operators do
         # their heavy work while building the DataFrame); report the
         # median so one noisy sample can't swing the round-over-round

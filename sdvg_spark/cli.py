@@ -217,8 +217,11 @@ def cmd_curate(args: argparse.Namespace) -> int:
     docs = spark.read.parquet(args.input)
     out = curate(docs, cfg, id_col=args.id_col, text_col=args.text_col)
     out.write.mode("overwrite").parquet(args.output)
-    kept = out.where("keep").count()
-    total = out.count()
+    # count the written files: `out` is unpersisted, so counting it
+    # would re-run the whole pipeline twice
+    written = spark.read.parquet(args.output)
+    kept = written.where("keep").count()
+    total = written.count()
     print(f"curated {total} docs -> {kept} kept ({args.output})")
     return 0
 

@@ -1260,7 +1260,6 @@ def ivf_write_index(
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
     quantize: bool = False,
-    cluster: bool = True,
 ) -> None:
     """Assign every corpus vector to its nearest centroid (one map-only
     Arrow matmul pass) and persist ``(c_id, vec, cell)`` partitioned by
@@ -1295,15 +1294,12 @@ def ivf_write_index(
     # inside index files is irrelevant to search results: per-row
     # scores are independent dot products and the top-k tie rule keeps
     # every k-th-score tie before the (score DESC, id ASC) cut.
-    # (`cluster=False` keeps the unclustered task×cell layout — the
-    # r12 A/B probe's control arm; production callers never pass it)
-    if cluster:
-        salt_mod = _index_file_salt(corpus, len(centroids), quantize)
-        assigned = assigned.repartition(
-            len(centroids) * salt_mod,
-            F.col("cell"),
-            F.pmod(F.col("c_id"), F.lit(salt_mod)),
-        )
+    salt_mod = _index_file_salt(corpus, len(centroids), quantize)
+    assigned = assigned.repartition(
+        len(centroids) * salt_mod,
+        F.col("cell"),
+        F.pmod(F.col("c_id"), F.lit(salt_mod)),
+    )
     assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
 
 

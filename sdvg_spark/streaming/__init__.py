@@ -1,27 +1,19 @@
 from sdvg_spark.streaming.generate import stream_model
 from sdvg_spark.streaming.ops import (
     stream_running_totals,
-    stream_running_totals_tws,
-    sessionize_batch_twolevel,
-    sessionize_batch_windowform,
     sessionize_stream,
     stream_dedup,
     stream_funnel,
     stream_funnel_replay,
-    stream_funnel_tws,
     windowed_agg,
 )
 
 __all__ = [
     "stream_model",
     "windowed_agg",
-    "sessionize_batch_twolevel",
-    "sessionize_batch_windowform",
     "sessionize_stream",
     "stream_dedup",
     "stream_funnel",
     "stream_funnel_replay",
-    "stream_funnel_tws",
     "stream_running_totals",
-    "stream_running_totals_tws",
 ]

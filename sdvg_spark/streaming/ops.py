@@ -108,146 +108,6 @@ def sessionize_stream(
     )
 
 
-def sessionize_batch_twolevel(
-    df: DataFrame,
-    ts_col: str,
-    gap_seconds: int,
-    partial_aggs: dict[str, Column],
-    merge_aggs: dict[str, Column],
-    *,
-    keys: list[str],
-    bucket_seconds: int | None = None,
-) -> DataFrame:
-    """Batch-mode two-level sessionization: local ``session_window``
-    sessions within ``(keys, coarse time bucket)``, then a per-key
-    interval-chain merge of the (far fewer) local sessions.
-
-    Candidate scale path for :func:`sessionize_stream`'s batch knob
-    when (key, session) cardinality is near the row count: level 1
-    repartitions on ``(keys, bucket)`` — MORE partitioning keys than
-    the plain shuffle_first, so the session-merge operator's per-task
-    group state is bounded by the bucket width — and the level-2 merge
-    runs over local-session rows only (≈ #sessions, not #events).
-
-    Correctness: events cannot leave their bucket (the bucket is a
-    function of ``ts``), ``session_window`` merges chains within a
-    bucket, and local sessions of one key occupy disjoint event-time
-    ranges — so sorting them by start time and merging adjacent ones
-    whose gap is ≤ ``gap_seconds`` (lag, not cummax: ends are
-    monotone) reproduces the single-level chain exactly. Aggregates
-    must therefore be decomposable: ``partial_aggs`` runs over events,
-    ``merge_aggs`` over the partial columns (sum/count/min/max —
-    the same contract as any partial+final aggregate).
-
-    Tie semantics match ``session_window`` (measured, and the DuckDB
-    oracle's ``date_diff > gap`` rule): an event exactly ``gap_seconds``
-    after its predecessor MERGES into the session — windows are closed
-    ``[ts, ts+gap]`` for merge purposes — so a new session starts only
-    on a strictly-greater gap.
-    """
-    bucket_seconds = bucket_seconds or max(gap_seconds * 8, 3600)
-    ts = F.col(ts_col)
-    # unix_micros over a cast to TIMESTAMP handles TIMESTAMP_NTZ inputs
-    # too (the session timezone is pinned to UTC, joins.py idiom); a
-    # plain cast-to-double is rejected for NTZ columns.
-    ts_us = F.unix_micros(ts.cast("timestamp"))
-    pre = df.withColumn(
-        "__bucket", F.floor(ts_us / F.lit(int(bucket_seconds) * 1_000_000))
-    ).repartition(*[F.col(k) for k in keys], F.col("__bucket"))
-    loc = pre.groupBy(
-        F.session_window(ts, f"{int(gap_seconds)} seconds"),
-        *[F.col(k) for k in keys],
-        F.col("__bucket"),
-    ).agg(
-        F.min(ts).alias("__min_ts"),
-        F.max(ts).alias("__max_ts"),
-        *[c.alias(n) for n, c in partial_aggs.items()],
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(*keys).orderBy("__min_ts")
-    prev_end = F.lag(F.unix_micros(F.col("__max_ts").cast("timestamp"))).over(w)
-    loc = loc.withColumn(
-        "__new",
-        F.when(
-            prev_end.isNull()
-            | (
-                F.unix_micros(F.col("__min_ts").cast("timestamp")) - prev_end
-                > gap_seconds * 1_000_000
-            ),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    ).withColumn(
-        "__sid",
-        F.sum("__new").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    out = loc.groupBy(*[F.col(k) for k in keys], F.col("__sid")).agg(
-        F.min("__min_ts").alias("session_start"),
-        (
-            F.max("__max_ts") + F.expr(f"INTERVAL {int(gap_seconds)} SECONDS")
-        ).alias("session_end"),
-        *[c.alias(n) for n, c in merge_aggs.items()],
-    )
-    return out.select(
-        "session_start",
-        "session_end",
-        *[F.col(k) for k in keys],
-        *[F.col(n) for n in merge_aggs],
-    )
-
-
-def sessionize_batch_windowform(
-    df: DataFrame,
-    ts_col: str,
-    gap_seconds: int,
-    aggs: dict[str, Column],
-    *,
-    keys: list[str],
-) -> DataFrame:
-    """Batch-mode sessionization via the lag/cumsum window formulation,
-    emitting ``session_window``-shaped output (start, end = last event
-    + gap). Candidate scale path: ONE exchange on ``keys`` feeds the
-    window sort, the session-id cumsum, and the final sort-aggregate in
-    a single post-shuffle stage — no session-merge operator machinery.
-    Same tie rule as ``session_window`` (an event exactly
-    ``gap_seconds`` later merges; new session only on a strictly
-    greater gap).
-    """
-    from pyspark.sql.window import Window
-
-    ts = F.col(ts_col)
-    ts_us = F.unix_micros(ts.cast("timestamp"))
-    w = Window.partitionBy(*keys).orderBy(ts_col)
-    prev = F.lag(ts_us).over(w)
-    flagged = df.withColumn(
-        "__new",
-        F.when(
-            prev.isNull() | (ts_us - prev > gap_seconds * 1_000_000),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    ).withColumn(
-        "__sid",
-        F.sum("__new").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    out = flagged.groupBy(*[F.col(k) for k in keys], F.col("__sid")).agg(
-        F.min(ts).alias("session_start"),
-        (F.max(ts) + F.expr(f"INTERVAL {int(gap_seconds)} SECONDS")).alias(
-            "session_end"
-        ),
-        *[c.alias(n) for n, c in aggs.items()],
-    )
-    return out.select(
-        "session_start",
-        "session_end",
-        *[F.col(k) for k in keys],
-        *[F.col(n) for n in aggs],
-    )
-
-
 def stream_dedup(
     df: DataFrame,
     cols: list[str],
@@ -355,81 +215,10 @@ def _micros_of(values) -> int:
     return int(m.astype(np.int64).sum())
 
 
-def stream_running_totals_tws(
-    df: DataFrame,
-    key_col: str,
-    value_col: str,
-) -> DataFrame:
-    """:func:`stream_running_totals` on the ``transformWithStateInPandas``
-    API (Spark 4.x ``StatefulProcessor``) — the successor surface to
-    ``applyInPandasWithState``, with named per-key state slots, timers,
-    and initial-state support. Same contract: exact integer micro-unit
-    accumulator, one updated row per key per micro-batch, final totals
-    equal to the batch GROUP BY bit-for-bit.
-
-    Both variants stay exported: ``applyInPandasWithState`` remains the
-    broadly-deployed API, this is the forward path.
-
-    Requires the ``protobuf`` package (the transformWithState state
-    server speaks a protobuf protocol); environments without it get a
-    clear error here instead of a crashed Python driver worker
-    mid-query — use :func:`stream_running_totals` there.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise RuntimeError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(pyspark's state-server protocol); it is not installed — "
-            "use stream_running_totals (applyInPandasWithState) instead"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals", "total_micros long, count long"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            micros, count = (
-                self._state.get() if self._state.exists() else (0, 0)
-            )
-            for pdf in rows:
-                vals = pdf[value_col].dropna()
-                micros += _micros_of(vals)
-                count += int(vals.count())
-            self._state.update((micros, count))
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "total": [micros / 1e6],
-                    "total_micros": [micros],
-                    "count": [count],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    key_dtype = dict(df.dtypes)[key_col]
-    return df.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=f"{key_col} {key_dtype}, total double, total_micros long, count long",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def _funnel_replay(t, pdf, ts_col, type_col, first_index, fi, w_us):
     """Replay one micro-batch's rows for one user through the greedy
-    funnel update (shared by both stateful-API variants; semantics ==
-    the batch fold tier, see ops/analytics.py:_funnel_fold)."""
+    funnel update (semantics == the batch fold tier, see
+    ops/analytics.py:_funnel_fold)."""
     sub = pdf[[ts_col, type_col]].dropna(subset=[ts_col])
     idx = sub[type_col].map(first_index)
     sub = sub.assign(__i=idx).dropna(subset=["__i"])
@@ -532,82 +321,6 @@ def stream_funnel(
         stateStructType=", ".join(f"t{k} long" for k in range(k_n)),
         outputMode="update",
         timeoutConf=timeout,
-    )
-
-
-def stream_funnel_tws(
-    df: DataFrame,
-    user_col: str,
-    ts_col: str,
-    type_col: str,
-    steps: list[str],
-    *,
-    within_seconds: int | None = None,
-) -> DataFrame:
-    """:func:`stream_funnel` on the ``transformWithStateInPandas`` API
-    (Spark 4.x ``StatefulProcessor``) — same greedy replay
-    (:func:`_funnel_replay`), same state shape (K epoch-µs longs, -1 =
-    unreached), same emitted rows; pytest (protobuf-gated, like
-    :func:`stream_running_totals_tws`) asserts both variants match the
-    batch funnel on the same in-order micro-batches.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise RuntimeError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(pyspark's state-server protocol); it is not installed — "
-            "use stream_funnel (applyInPandasWithState) instead"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    if len(steps) < 2:
-        raise ValueError(f"stream_funnel_tws needs >= 2 steps, got {steps!r}")
-    if within_seconds is not None and within_seconds < 1:
-        raise ValueError(f"within_seconds must be >= 1, got {within_seconds}")
-
-    k_n = len(steps)
-    fi = [steps.index(steps[k]) for k in range(k_n)]
-    first_index = {}
-    for pos, s in enumerate(steps):
-        first_index.setdefault(s, pos)
-    w_us = None if within_seconds is None else int(within_seconds) * 1_000_000
-    state_schema = ", ".join(f"t{k} long" for k in range(k_n))
-
-    class Funnel(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("steps", state_schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            t = list(self._state.get()) if self._state.exists() else [-1] * k_n
-            for pdf in rows:
-                t = _funnel_replay(t, pdf, ts_col, type_col, first_index, fi, w_us)
-            self._state.update(tuple(t))
-            if t[0] == -1:
-                return
-            row = {user_col: [key[0]]}
-            for k in range(k_n):
-                row[f"step_{k + 1}_ts"] = [
-                    pd.Timestamp(t[k], unit="us") if t[k] != -1 else pd.NaT
-                ]
-            row["depth"] = [sum(1 for v in t if v != -1)]
-            yield pd.DataFrame(row)
-
-        def close(self) -> None:
-            pass
-
-    key_dtype = dict(df.dtypes)[user_col]
-    step_cols = ", ".join(f"step_{k + 1}_ts timestamp" for k in range(k_n))
-    return df.groupBy(user_col).transformWithStateInPandas(
-        statefulProcessor=Funnel(),
-        outputStructType=f"{user_col} {key_dtype}, {step_cols}, depth int",
-        outputMode="Update",
-        timeMode="None",
     )
 
 

@@ -157,19 +157,17 @@ def test_shuffle_first_mode_same_values_one_exchange(spark, event_files):
         assert plan.count("Exchange hashpartitioning") == 1, (fn.__name__, plan)
 
 
-def test_sessionize_batch_variants_parity(spark):
-    """The two batch scale candidates (two-level bucket split, lag/
-    cumsum window form) must reproduce native ``session_window``
-    exactly — including events spaced EXACTLY one gap apart (the tie
-    boundary) and chains crossing coarse-bucket boundaries."""
+def test_sessionize_stream_exact_gap_ties(spark):
+    """``sessionize_stream`` must match a plain-Python sessionizer that
+    opens a new session only when the gap to the previous event is
+    STRICTLY greater than 30 minutes — including events spaced EXACTLY
+    one gap apart (the tie boundary merges) and chains of sub-gap
+    events spanning many hours."""
     import random
 
-    from sdvg_spark.streaming import (
-        sessionize_batch_twolevel,
-        sessionize_batch_windowform,
-        sessionize_stream,
-    )
+    from sdvg_spark.streaming import sessionize_stream
 
+    gap = 1800
     rnd = random.Random(7)
     rows, eid, base = [], 0, 1_700_000_000
     for uid in range(1, 21):
@@ -177,11 +175,11 @@ def test_sessionize_batch_variants_parity(spark):
         for _ in range(rnd.randrange(1, 60)):
             r = rnd.random()
             if r < 0.55:
-                t += rnd.randrange(1, 1800)
+                t += rnd.randrange(1, gap)
             elif r < 0.70:
-                t += 1800  # exact-gap tie
+                t += gap  # exact-gap tie
             else:
-                t += rnd.randrange(1801, 30_000)
+                t += rnd.randrange(gap + 1, 30_000)
             rows.append((uid, eid, t, rnd.randrange(1, 100)))
             eid += 1
     df = (
@@ -197,30 +195,30 @@ def test_sessionize_batch_variants_parity(spark):
     )
     aggs = {"n": F.count(F.lit(1)), "v": F.sum("value")}
 
-    def key(rs):
-        return {(r.user_id, r.session_start, r.session_end, r.n, r.v) for r in rs}
+    # [start, last, n, v] per session; rows are time-ordered per user
+    sessions: dict[int, list[list[int]]] = {}
+    for uid, _, t, v in rows:
+        open_ = sessions.setdefault(uid, [])
+        if open_ and t - open_[-1][1] <= gap:
+            open_[-1][1:] = [t, open_[-1][2] + 1, open_[-1][3] + v]
+        else:
+            open_.append([t, t, 1, v])
+    want = {
+        (uid, start, last + gap, n, v)
+        for uid, ss in sessions.items()
+        for start, last, n, v in ss
+    }
 
-    ref = key(
-        sessionize_stream(df, "ts", "30 minutes", aggs, keys=["user_id"]).collect()
+    got = sessionize_stream(
+        df, "ts", "30 minutes", aggs, keys=["user_id"]
+    ).select(
+        "user_id",
+        F.unix_seconds("session_start"),
+        F.unix_seconds("session_end"),
+        "n",
+        "v",
     )
-    two = key(
-        sessionize_batch_twolevel(
-            df,
-            "ts",
-            1800,
-            aggs,
-            {"n": F.sum("n"), "v": F.sum("v")},
-            keys=["user_id"],
-            bucket_seconds=7200,
-        ).collect()
-    )
-    wf = key(
-        sessionize_batch_windowform(
-            df, "ts", 1800, aggs, keys=["user_id"]
-        ).collect()
-    )
-    assert two == ref
-    assert wf == ref
+    assert {tuple(r) for r in got.collect()} == want
 
 
 def test_stream_dedup(spark, tmp_path):
@@ -242,24 +240,11 @@ def test_stream_dedup(spark, tmp_path):
     assert {(r.payload, r.c) for r in rows} == {("x", 1), ("y", 1)}
 
 
-@pytest.mark.parametrize("variant", ["apply", "tws"])
-def test_stream_running_totals(spark, tmp_path, variant):
-    """Both stateful APIs (applyInPandasWithState and its Spark-4
-    successor transformWithStateInPandas) must produce batch-identical
-    totals from the same exact micro-unit state."""
-    from sdvg_spark.streaming import (
-        stream_running_totals,
-        stream_running_totals_tws,
-    )
+def test_stream_running_totals(spark, tmp_path):
+    """The applyInPandasWithState operator must produce batch-identical
+    totals from its exact micro-unit state."""
+    from sdvg_spark.streaming import stream_running_totals
 
-    if variant == "tws":
-        try:
-            from google.protobuf import descriptor  # noqa: F401
-        except ImportError:
-            pytest.skip("transformWithStateInPandas needs protobuf (not in container)")
-    stream_running = (
-        stream_running_totals if variant == "apply" else stream_running_totals_tws
-    )
     # two micro-batch files so state genuinely crosses batches
     src = str(tmp_path / "rt_src")
     batch = Engine(parse_config(CFG)).model_df(spark, "m", keep_id=True)
@@ -273,8 +258,8 @@ def test_stream_running_totals(spark, tmp_path, variant):
     b2.coalesce(1).write.mode("append").parquet(src)
 
     sdf = spark.readStream.schema("k long, v double").parquet(src)
-    out = stream_running(sdf, "k", "v")
-    name = f"rt_sink_{variant}"
+    out = stream_running_totals(sdf, "k", "v")
+    name = "rt_sink"
     q = (
         out.writeStream.format("memory")
         .queryName(name)
@@ -388,24 +373,15 @@ def test_watermark_drops_late_events(spark, tmp_path):
     assert 12 not in by_hour
 
 
-@pytest.mark.parametrize("variant", ["apply", "tws"])
-def test_stream_funnel_matches_batch(spark, tmp_path, variant):
+def test_stream_funnel_matches_batch(spark, tmp_path):
     """Per-user in-order delivery across micro-batches -> the final
     emitted row per user is identical to the batch funnel (fold tier)
-    of the concatenated input, including conversion-window drops.
-    Both stateful APIs must agree (tws is protobuf-gated)."""
+    of the concatenated input, including conversion-window drops."""
     from datetime import datetime, timedelta
     import random
 
     from sdvg_spark.ops.analytics import funnel
-    from sdvg_spark.streaming import stream_funnel, stream_funnel_tws
-
-    if variant == "tws":
-        try:
-            from google.protobuf import descriptor  # noqa: F401
-        except ImportError:
-            pytest.skip("transformWithStateInPandas needs protobuf (not in container)")
-    stream_op = stream_funnel if variant == "apply" else stream_funnel_tws
+    from sdvg_spark.streaming import stream_funnel
 
     rng = random.Random(29)
     base = datetime(2024, 6, 1)
@@ -430,11 +406,11 @@ def test_stream_funnel_matches_batch(spark, tmp_path, variant):
     df.where(F.col("ts") >= cuts[1]).coalesce(1).write.mode("append").parquet(src)
 
     sdf = spark.readStream.schema(df.schema).parquet(src)
-    out = stream_op(
+    out = stream_funnel(
         sdf, "user_id", "ts", "event_type",
         ["view", "click", "purchase"], within_seconds=5 * 86400,
     )
-    name = f"sf_sink_{variant}_{int(time.time() * 1000)}"
+    name = f"sf_sink_{int(time.time() * 1000)}"
     q = (
         out.writeStream.format("memory")
         .queryName(name)

@@ -517,9 +517,10 @@ def test_cli_generate_config_interactive(tmp_path, monkeypatch, capsys):
     assert raw["models"]["m"]["rows_count"] == 100
 
 
-def test_cli_curate(spark, tmp_path):
+def test_cli_curate(spark, tmp_path, capsys):
     """The curate subcommand: parquet corpus in -> disposition parquet
-    out, with CLI knobs mapped onto CurationConfig."""
+    out, with CLI knobs mapped onto CurationConfig, and a summary line
+    counted from the written output."""
     import duckdb
 
     from sdvg_spark.cli import main
@@ -537,6 +538,7 @@ def test_cli_curate(spark, tmp_path):
         "--pack-budget", "8",
     ])
     assert rc == 0
+    assert f"curated 3 docs -> 1 kept ({out})" in capsys.readouterr().out
     rows = {r[0]: r[1] for r in duckdb.sql(
         f"SELECT doc_id, drop_reason FROM '{out}/*.parquet'").fetchall()}
     assert rows[1] is None          # keeper

@@ -13,22 +13,9 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-BENCH_QUERIES = [
-    "text_features", "dedup_minhash", "dedup_simhash", "ann_topk",
-    "ann_lsh", "ann_ivf", "ann_ivf_index", "ann_quantized",
-    "pricing_summary", "top_revenue", "events_sessionize",
-    "user_running_value", "skew_salted_agg", "data_split",
-    "corpus_vocab", "decontaminate", "pack_sequences", "curate",
-    "events_asof", "events_range_join", "events_rollup",
-    "events_gapfill", "events_percentiles", "dedup_semantic",
-    "tfidf_keywords", "doc_chunks", "corpus_mix", "dedup_incremental",
-    "stratified_sample", "duplicate_spans", "unigram_nll",
-    "repetition_features", "events_funnel", "events_retention",
-    "collocations", "token_divergence", "quality_band", "zipf_fit",
-    "url_dedup", "language_confidence", "paragraph_dedup", "pack_order",
-]
+from bench import BENCH_QUERIES  # noqa: E402
 
 
 def explain_str(df) -> str:

@@ -3,9 +3,15 @@
 Quantifies the plan-audit story the plan tests assert qualitatively:
 how many bytes each headline query actually shuffles at a given scale
 factor, and — when two sf dirs are given — how those bytes GROW with
-the data (the 100 TB question). Run:
+the data (the 100 TB question). Each query's DataFrame build and its
+action are timed and tagged apart, so the table also splits wall time
+and Spark jobs into build vs action. Run:
 
     python tools/shuffle_report.py [sf_dir ...] > SHUFFLE_r{N}.md
+    SHUFFLE_QUERIES=unigram_nll,ann_ivf python tools/shuffle_report.py <sf_dir>
+
+The default query list is bench.py's ``BENCH_QUERIES``;
+``SHUFFLE_QUERIES`` names any other ``queries()`` entries.
 
 Attribution is by job group (``setJobGroup`` around each run, jobs ->
 stageIds via the REST API), not a stage-id watermark: stages that
@@ -24,59 +30,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-QUERIES = [
-    "text_features",
-    "dedup_minhash",
-    "dedup_simhash",
-    "dedup_exact",
-    "ann_topk",
-    "ann_lsh",
-    "ann_ivf",
-    "ann_ivf_index",
-    "ann_quantized",
-    "pricing_summary",
-    "top_revenue",
-    "events_sessionize",
-    "user_running_value",
-    "skew_salted_agg",
-    "data_split",
-    "embedding_quantize",
-    "corpus_vocab",
-    "decontaminate",
-    "pack_sequences",
-    "pack_order",
-    "events_asof",
-    "events_range_join",
-    "events_rollup",
-    "events_gapfill",
-    "events_percentiles",
-    "dedup_semantic",
-    "tfidf_keywords",
-    "doc_chunks",
-    "corpus_mix",
-    "dedup_incremental",
-    "stratified_sample",
-    "duplicate_spans",
-    "remove_duplicate_spans",
-    "unigram_nll",
-    "repetition_features",
-    "events_funnel",
-    "events_retention",
-    "collocations",
-    "token_divergence",
-    "quality_band",
-    "zipf_fit",
-    "pack_nostraddle",
-    "token_budget_sample",
-    "source_cap",
-    "events_interval_join",
-    # r7 additions
-    "url_canonicalize",
-    "url_dedup",
-    "language_confidence",
-    "paragraph_dedup",
-    "html_extract",
-]
+from bench import BENCH_QUERIES  # noqa: E402
 
 
 def _api(base: str, path: str):
@@ -96,23 +50,37 @@ def main() -> None:
     app_id = _api(base, "applications")[0]["id"]
     qs = E.queries()
 
-    def run_tagged(tag: str, name: str, sf_dir: str):
-        sc.setJobGroup(tag, f"{name} @ {sf_dir}")
+    def run_tagged(tag: str, name: str, sf_dir: str) -> dict:
+        """Build the query under job group ``<tag>:build`` and run its
+        noop action under ``<tag>:action`` (operators that do eager
+        work while building the DataFrame fire their jobs in the first
+        group); returns the two wall times."""
         try:
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            sc.setJobGroup(f"{tag}:build", f"{name} build @ {sf_dir}")
+            t0 = time.perf_counter()
+            df = qs[name](spark, sf_dir)
+            t1 = time.perf_counter()
+            sc.setJobGroup(f"{tag}:action", f"{name} action @ {sf_dir}")
+            df.write.format("noop").mode("overwrite").save()
+            t2 = time.perf_counter()
         finally:
             sc.setJobGroup("", "")
         time.sleep(1.0)  # AppStatusListener aggregates asynchronously
+        return {"build_s": t1 - t0, "action_s": t2 - t1}
 
     def collect(tag: str):
         jobs = _api(base, f"applications/{app_id}/jobs")
         stage_ids = set()
+        n_jobs = {"build_jobs": 0, "action_jobs": 0}
         for j in jobs:
-            if j.get("jobGroup") == tag:
-                stage_ids.update(j.get("stageIds", []))
+            for phase in ("build", "action"):
+                if j.get("jobGroup") == f"{tag}:{phase}":
+                    n_jobs[f"{phase}_jobs"] += 1
+                    stage_ids.update(j.get("stageIds", []))
         stages = _api(base, f"applications/{app_id}/stages?status=complete")
         mine = [s for s in stages if s["stageId"] in stage_ids]
         return {
+            **n_jobs,
             "stages": len(mine),
             "shuffle_write_mb": sum(s.get("shuffleWriteBytes", 0) for s in mine) / 1e6,
             "shuffle_read_mb": sum(s.get("shuffleReadBytes", 0) for s in mine) / 1e6,
@@ -123,7 +91,7 @@ def main() -> None:
     # a query that errors at a given scale (e.g. a byte-capped tier
     # refusing, by design) records err instead of killing the report
     only = os.environ.get("SHUFFLE_QUERIES", "")
-    queries = [q for q in only.split(",") if q] or QUERIES
+    queries = [q for q in only.split(",") if q] or BENCH_QUERIES
 
     run_tagged("warmup", queries[0], sf_dirs[0])  # absorb scan/codegen init
 
@@ -140,11 +108,15 @@ def main() -> None:
         for name in queries:
             tag = f"{name}#{di}"
             try:
-                run_tagged(tag, name, sf_dir)
+                walls = run_tagged(tag, name, sf_dir)
             except Exception as e:
                 rows.append(
                     {
                         "query": name,
+                        "build_s": 0.0,
+                        "build_jobs": 0,
+                        "action_s": 0.0,
+                        "action_jobs": 0,
                         "stages": 0,
                         "shuffle_write_mb": 0.0,
                         "shuffle_read_mb": 0.0,
@@ -153,7 +125,7 @@ def main() -> None:
                     }
                 )
                 continue
-            rows.append({"query": name, **collect(tag)})
+            rows.append({"query": name, **walls, **collect(tag)})
         per_dir[sf_dir] = rows
 
     def dir_mb(d):
@@ -178,17 +150,24 @@ def main() -> None:
     print("warm-up). This is the scale story behind the plan tests: a")
     print("query whose shuffle is a small fraction of its input stays")
     print("network-light at 100x, and zero spill means partitions fit")
-    print("executor memory at this sizing.")
+    print("executor memory at this sizing. Build columns count the wall")
+    print("time and Spark jobs of constructing the DataFrame (eager work")
+    print("such as k-means or footer reads), action columns the noop write.")
     for sf_dir, rows in per_dir.items():
         print()
         print(f"## {sf_dir} (tables on disk: {dir_mb(sf_dir):.0f} MB)")
         print()
-        print("| query | stages | shuffle write MB | shuffle read MB | spill MB |")
-        print("|---|---|---|---|---|")
+        print(
+            "| query | build s | build jobs | action s | action jobs "
+            "| stages | shuffle write MB | shuffle read MB | spill MB |"
+        )
+        print("|---|---|---|---|---|---|---|---|---|")
         for r in rows:
             name = r["query"] + (f" (ERR: {r['err']})" if r.get("err") else "")
             print(
-                f"| {name} | {r['stages']} | {r['shuffle_write_mb']:.2f} "
+                f"| {name} | {r['build_s']:.3f} | {r['build_jobs']} "
+                f"| {r['action_s']:.3f} | {r['action_jobs']} "
+                f"| {r['stages']} | {r['shuffle_write_mb']:.2f} "
                 f"| {r['shuffle_read_mb']:.2f} | {r['spill_mb']:.2f} |"
             )
     if len(sf_dirs) == 2:
