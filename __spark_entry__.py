@@ -15,6 +15,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sdvg_spark import plan_stats
 from sdvg_spark.config.model import parse_config
 from sdvg_spark.engine import Engine
 from sdvg_spark.oracle import column_oracle_sql
@@ -104,121 +105,37 @@ def _gen_query(model: str, column: str) -> Callable[[SparkSession, str], DataFra
 # pipeline ops + analytics over the testdata tables
 
 
-def _parquet_col_bytes(sf_dir: str, name: str, col: str) -> int:
-    """Uncompressed byte size of one column from parquet FOOTER
-    metadata (no Spark job, no scan) — an upper bound on the column's
-    character count, used to pick size-tiered strategies driver-side.
-    Returns -1 when footers are unreachable (caller falls back to a
-    measuring job)."""
-    import os
-
-    path = f"{sf_dir}/{name}.parquet"
+def _footer_stat(reduce: Callable, fallback, sf_dir: str, name: str, *args):
+    """``reduce`` (a ``sdvg_spark.plan_stats`` reducer) over table
+    ``name``'s parquet footers: no Spark job, no scan. Unreachable or
+    unreadable footers give ``fallback``, on which the callers run the
+    measuring job instead."""
     try:
-        import pyarrow.parquet as pq
-
-        def one(p: str) -> int:
-            md = pq.ParquetFile(p).metadata
-            total = 0
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    c = g.column(ci)
-                    if c.path_in_schema.split(".")[0] == col:
-                        total += c.total_uncompressed_size
-            return total
-
-        if os.path.isdir(path):
-            total = 0
-            for root, _dirs, files in os.walk(path):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        total += one(os.path.join(root, f))
-            return total
-        return one(path)
+        return reduce(f"{sf_dir}/{name}.parquet", *args)
     except Exception:
-        return -1
+        return fallback
+
+
+def _parquet_rows(sf_dir: str, name: str) -> int:
+    """Row count, or -1 (caller falls back to ``df.count()``)."""
+    return _footer_stat(plan_stats.rows, -1, sf_dir, name)
+
+
+def _parquet_col_bytes(sf_dir: str, name: str, col: str) -> int:
+    """Uncompressed column bytes (an upper bound on its character
+    count, used to pick size-tiered strategies), or -1."""
+    return _footer_stat(plan_stats.column_bytes, -1, sf_dir, name, col)
 
 
 def _parquet_list_dims(sf_dir: str, name: str, col: str) -> int | None:
-    """Element width of a list column from parquet FOOTER metadata (no
-    Spark job, no scan): leaf value count / row count, when that
-    divides exactly and the column has no nulls. The engine's
-    embedding tables are fixed-width by construction, so the division
-    is exact there; anything ragged (or unreachable footers) returns
-    None and callers fall back to the in-op width probe."""
-    import os
-
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        import pyarrow.parquet as pq
-
-        rows = 0
-        vals = 0
-        nulls = 0
-
-        def one(p: str) -> None:
-            nonlocal rows, vals, nulls
-            md = pq.ParquetFile(p).metadata
-            rows += md.num_rows
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    c = g.column(ci)
-                    if c.path_in_schema.split(".")[0] == col:
-                        vals += c.num_values
-                        if c.statistics is not None and c.statistics.null_count:
-                            nulls += c.statistics.null_count
-
-        if os.path.isdir(path):
-            for root, _dirs, files in os.walk(path):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        one(os.path.join(root, f))
-        else:
-            one(path)
-        if rows <= 0 or nulls or vals % rows:
-            return None
-        return vals // rows
-    except Exception:
-        return None
+    """Fixed list-column width, or None (ragged, nulls, unreachable;
+    callers fall back to the in-op width probe)."""
+    return _footer_stat(plan_stats.list_width, None, sf_dir, name, col)
 
 
 def _parquet_col_minmax(sf_dir: str, name: str, col: str):
-    """(min, max) of one column from parquet FOOTER statistics — no
-    Spark job. None when stats are missing/unreachable."""
-    import os
-
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        import pyarrow.parquet as pq
-
-        lo = hi = None
-
-        def one(p: str) -> None:
-            nonlocal lo, hi
-            md = pq.ParquetFile(p).metadata
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    c = g.column(ci)
-                    if c.path_in_schema == col and c.statistics is not None:
-                        st = c.statistics
-                        if st.has_min_max:
-                            lo = st.min if lo is None else min(lo, st.min)
-                            hi = st.max if hi is None else max(hi, st.max)
-
-        if os.path.isdir(path):
-            for root, _dirs, files in os.walk(path):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        one(os.path.join(root, f))
-        else:
-            one(path)
-        if lo is None:
-            return None
-        return (lo, hi)
-    except Exception:
-        return None
+    """(min, max) from chunk statistics, or None."""
+    return _footer_stat(plan_stats.column_min_max, None, sf_dir, name, col)
 
 
 # -- prepared expression fragments ------------------------------------------
@@ -283,35 +200,6 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         _READ_MEMO.clear()
     _READ_MEMO[key] = df
     return df
-
-
-def _parquet_rows(sf_dir: str, name: str) -> int:
-    """Row count from parquet FOOTER metadata — no Spark job, no scan.
-
-    ``DataFrame.count()`` launches a real job (Spark serves parquet
-    count(*) from footers only with aggregate pushdown enabled), so the
-    tier probes here read the footers directly: one ``num_rows`` field
-    per file, O(files) driver-side metadata I/O. On a real cluster the
-    same number would come from catalog stats; for path-addressed
-    fixtures the footer sum IS the catalog. Falls back to a column-free
-    Spark count for non-local filesystems pyarrow can't reach.
-    """
-    import os
-
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            total = 0
-            for root, _dirs, files in os.walk(path):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-            return total
-        return pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        return -1  # caller falls back to df.count()
 
 
 def q_text_features(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,12 +17,13 @@ is more robust than trusting a checkpoint counter written on a timer.
 
 from __future__ import annotations
 
-import glob
 import hashlib
 import json
 import os
 import shutil
 from typing import Any
+
+from sdvg_spark.plan_stats import committed_files, rows
 
 BACKUP_FILE = "backup.json"
 
@@ -131,45 +132,30 @@ def load_checkpoint(out_dir: str, model_dir: str) -> int | None:
         return None
 
 
-def _committed(files: list[str]) -> list[str]:
-    """Drop files under Spark's in-flight ``_temporary`` staging dirs —
-    a killed job leaves them behind and they are NOT committed output."""
-    sep = os.sep
-    return [f for f in files if f"{sep}_temporary{sep}" not in f]
-
-
 def rows_on_disk(
     path: str, fmt: str, *, header: bool = True, delimiter: str = ","
 ) -> int:
     """Rows already written for a model (the resume point).
 
-    Reads sink metadata with DuckDB — parquet row counts come from
-    footers (no scan); CSV needs a line pass. CSV layout (header,
-    delimiter) comes from the OUTPUT CONFIG, never from sniffing:
-    auto-detection can mistake the first data row of an all-string
-    headerless file for a header, undercounting by one per file and
-    making resume duplicate those rows. Missing dir -> 0.
+    Counts the committed files only (``plan_stats.committed_files``:
+    a killed job's ``_temporary/`` staging is not output). Parquet row
+    counts come from footers (no scan); CSV needs a DuckDB line pass.
+    CSV layout (header, delimiter) comes from the OUTPUT CONFIG, never
+    from sniffing: auto-detection can mistake the first data row of an
+    all-string headerless file for a header, undercounting by one per
+    file and making resume duplicate those rows. Missing dir -> 0.
     """
-    import duckdb
-
     if not os.path.isdir(path):
         return 0
     if fmt == "parquet":
-        files = _committed(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-        if not files:
-            return 0
-        con = duckdb.connect()
-        # count(*) over parquet is answered from footer metadata
-        (n,) = con.execute(
-            "SELECT count(*) FROM read_parquet($1)", [files]
-        ).fetchone()
-        return int(n or 0)
+        return rows(path)
     if fmt == "csv":
-        files = _committed(glob.glob(os.path.join(path, "**", "*.csv"), recursive=True))
+        import duckdb
+
+        files = committed_files(path)
         if not files:
             return 0
-        con = duckdb.connect()
-        (n,) = con.execute(
+        (n,) = duckdb.connect().execute(
             "SELECT count(*) FROM read_csv($1, union_by_name=true, "
             "header=$2, delim=$3, all_varchar=true)",
             [files, bool(header), delimiter],

@@ -176,7 +176,8 @@ def cmd_generate_config(args: argparse.Namespace) -> int:
 
 def cmd_compact(args: argparse.Namespace) -> int:
     from sdvg_spark.session import get_spark
-    from sdvg_spark.sinks.compact import compact_parquet, dataset_bytes
+    from sdvg_spark.plan_stats import dataset_bytes
+    from sdvg_spark.sinks.compact import compact_parquet
 
     spark = get_spark(app_name="sdvg-compact")
     before = dataset_bytes(args.input)

@@ -385,7 +385,7 @@ def value_expr(plan: ColumnPlan, num: Column, ridx: Column, r01: Column) -> Colu
 
 
 class Engine:
-    """Config -> DataFrames -> sinks."""
+    """Config -> DataFrames; ``jobs.run_generate`` writes them to sinks."""
 
     def __init__(self, cfg: GenerationConfig):
         self.cfg = cfg
@@ -406,13 +406,8 @@ class Engine:
         model = self.cfg.models[model_name]
         lo = model.generate_from if generate_from is None else generate_from
         hi = model.generate_to if generate_to is None else generate_to
-        base = (
-            spark.range(lo, hi, 1, num_partitions)
-            if num_partitions
-            else spark.range(lo, hi)
-        )
-        plans = self.plans_for(model)
-        return self.apply_columns(spark, base, plans, keep_id=keep_id)
+        base = spark.range(lo, hi, 1, num_partitions)
+        return self.apply_columns(spark, base, self.plans_for(model), keep_id=keep_id)
 
     def apply_columns(
         self,
@@ -484,40 +479,5 @@ class Engine:
         model = self.cfg.models[model_name]
         plan = plan_column(self.cfg, model, model.column(column_name))
         lo, hi = model.generate_from, model.generate_to
-        base = (
-            spark.range(lo, hi, 1, num_partitions)
-            if num_partitions
-            else spark.range(lo, hi)
-        )
-        if plan.pure_native:
-            r = plan.ranges[0]
-            num = ordered_col(F.col("id"), r.distinct, r.cnt)
-            ridx = F.lit(0)
-            r01 = F.lit(0.0)
-            staged = base
-        elif plan.fully_udf:
-            kernel = _make_fused_kernel(plan, spark)
-            return base.select(
-                F.col("id"), kernel(F.col("id")).alias(plan.name)
-            )
-        else:
-            kernel = _make_sequence_kernel(plan, spark)
-            staged = base.select(F.col("id"), kernel(F.col("id")).alias("__seq"))
-            num = F.col("__seq.num")
-            ridx = F.col("__seq.ridx")
-            r01 = F.col("__seq.r01")
-        return staged.select(F.col("id"), value_expr(plan, num, ridx, r01))
-
-    def run(self, spark: SparkSession, models: list[str] | None = None) -> dict[str, str]:
-        """Generate + write every (non-ignored) model. Returns model->path."""
-        from sdvg_spark.sinks.writers import write_model
-
-        written: dict[str, str] = {}
-        for name, model in self.cfg.models.items():
-            if name in self.cfg.models_to_ignore:
-                continue
-            if models is not None and name not in models:
-                continue
-            df = self.model_df(spark, name)
-            written[name] = write_model(spark, df, model, self.cfg.output)
-        return written
+        base = spark.range(lo, hi, 1, num_partitions)
+        return self.apply_columns(spark, base, [plan], keep_id=True)

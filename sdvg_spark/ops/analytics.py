@@ -24,7 +24,6 @@ def funnel(
     steps: list[str],
     *,
     within_seconds: int | None = None,
-    mode: str = "fold",
 ) -> DataFrame:
     """Ordered conversion funnel.
 
@@ -40,21 +39,18 @@ def funnel(
     with NULL timestamps past the deepest step reached and
     ``depth`` = number of steps completed.
 
-    Two value-identical execution tiers (pytest asserts agreement on
-    randomized data):
-
-    * ``mode="fold"`` (default, the 100 TB path): filter to the K step
-      types, ONE user-keyed shuffle collecting each user's (ts, step)
-      events, then a greedy left fold over the time-sorted array.
-      Greedy-equals-min because each step's timestamp is fixed at the
-      first qualifying event of a time-ordered scan; within an equal
-      timestamp the fold orders by step index, so a step-k event at
-      exactly step-(k-1)'s timestamp still qualifies (the chain's
-      ``>=``). Per-user state is its own filtered event list — the
-      same bound as any per-entity window.
-    * ``mode="chain"``: one min-aggregation per step plus a left join
-      per step after the first — K user-keyed shuffles. The shape the
-      SQL oracle mirrors 1:1.
+    Plan: filter to the K step types, ONE user-keyed shuffle collecting
+    each user's (ts, step) events, then a greedy left fold over the
+    time-sorted array. Greedy-equals-min because each step's timestamp
+    is fixed at the first qualifying event of a time-ordered scan;
+    within an equal timestamp the fold orders by step index, so a
+    step-k event at exactly step-(k-1)'s timestamp still qualifies (the
+    ``>=`` of the per-step min-aggregation chain that
+    :func:`funnel_oracle_sql` spells out). Duplicate step TYPES map to
+    one index and the fold's sequential within-event update lets a
+    single event satisfy consecutive same-type steps, exactly like that
+    chain. Per-user state is its own filtered event list — the same
+    bound as any per-entity window.
 
     Timestamps compare at full microsecond precision, so results are
     exact and partitioning-independent.
@@ -63,73 +59,19 @@ def funnel(
         raise ValueError(f"funnel needs >= 2 steps, got {steps!r}")
     if within_seconds is not None and within_seconds < 1:
         raise ValueError(f"within_seconds must be >= 1, got {within_seconds}")
-    if mode not in ("fold", "chain"):
-        raise ValueError(f"mode must be 'fold' or 'chain', got {mode!r}")
 
     # NULL-timestamp events carry no ordering information and are
-    # dropped up front — keeps both tiers (and the SQL oracle, which
-    # filters identically) agreeing on the degenerate corner where a
-    # user's only step-1 events are unstamped.
+    # dropped up front, as the SQL oracle does — the degenerate corner
+    # is a user whose only step-1 events are unstamped.
     ev = events.where(F.col(ts_col).isNotNull()).select(
         F.col(user_col).alias("__u"),
         F.col(ts_col).alias("__ts"),
         F.col(type_col).alias("__t"),
     )
-    if mode == "fold":
-        return _funnel_fold(ev, user_col, steps, within_seconds)
-    cur = (
-        ev.where(F.col("__t") == steps[0])
-        .groupBy("__u")
-        .agg(F.min("__ts").alias("step_1_ts"))
-    )
-    for k, step in enumerate(steps[1:], start=2):
-        nxt = ev.where(F.col("__t") == step).select(
-            F.col("__u").alias("__nu"), F.col("__ts").alias("__nts")
-        )
-        cond = (F.col("__u") == F.col("__nu")) & (
-            F.col("__nts") >= F.col(f"step_{k - 1}_ts")
-        )
-        if within_seconds is not None:
-            cond = cond & (
-                F.col("__nts")
-                <= F.col("step_1_ts")
-                + F.expr(f"INTERVAL {int(within_seconds)} SECOND")
-            )
-        prev_cols = ["__u"] + [f"step_{i}_ts" for i in range(1, k)]
-        cur = (
-            cur.join(nxt, cond, "left")
-            .groupBy(*prev_cols)
-            .agg(F.min("__nts").alias(f"step_{k}_ts"))
-        )
-    depth: Column = F.lit(1)
-    for k in range(2, len(steps) + 1):
-        depth = depth + F.when(
-            F.col(f"step_{k}_ts").isNotNull(), F.lit(1)
-        ).otherwise(F.lit(0))
-    return cur.select(
-        F.col("__u").alias(user_col),
-        *[f"step_{k}_ts" for k in range(1, len(steps) + 1)],
-        depth.cast("int").alias("depth"),
-    )
-
-
-def _funnel_fold(
-    ev: DataFrame,
-    user_col: str,
-    steps: list[str],
-    within_seconds: int | None,
-) -> DataFrame:
-    """Single-shuffle funnel tier: greedy fold over each user's
-    time-sorted step events (see :func:`funnel` for the equivalence
-    argument). Event structs carry (epoch-µs, step-index) so ties at
-    one timestamp fold in step order; duplicate step TYPES map to one
-    index and the fold's sequential within-event update lets a single
-    event satisfy consecutive same-type steps, exactly like the
-    chain's ``>=`` min-aggregation."""
     k_n = len(steps)
     # fold on the NATIVE timestamp type (TIMESTAMP or TIMESTAMP_NTZ):
     # comparisons, sort_array and the INTERVAL window bound all work on
-    # either, and the output columns keep the chain tier's exact type
+    # either, and the output columns keep the input's exact type
     ts_type = ev.schema["__ts"].dataType.simpleString()
     bound = (
         None
@@ -195,8 +137,9 @@ def funnel_oracle_sql(
     steps: list[str],
     within_seconds: int | None = None,
 ) -> str:
-    """DuckDB mirror of :func:`funnel` — the same per-step
-    min-aggregation + left-join chain, microsecond-exact."""
+    """DuckDB mirror of :func:`funnel`, written as the per-step
+    min-aggregation + left-join chain the fold is equivalent to,
+    microsecond-exact."""
     parts = [
         f"e AS (SELECT {user_col} AS u, {ts_col}::TIMESTAMP AS ts, "
         f"{type_col} AS t FROM {table} WHERE {ts_col} IS NOT NULL)",

@@ -181,11 +181,3 @@ def _duck_type(spark_dtype: str) -> str:
         "timestamp": "TIMESTAMP",
         "string": "VARCHAR",
     }[spark_dtype]
-
-
-def single_column_df(spark, cfg: GenerationConfig, model_name: str, column_name: str):
-    """Engine-side counterpart of :func:`column_oracle_sql`: DataFrame
-    of (id, <column>) for exactly one column."""
-    from sdvg_spark.engine import Engine
-
-    return Engine(cfg).column_df(spark, model_name, column_name)

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from sdvg_spark.plan_stats import dataset_bytes
+
 
 def tune_malloc() -> None:
     """Stop glibc from returning large buffers to the OS on free.
@@ -91,17 +93,12 @@ def scale_shuffle_partitions(
     coalesces small-query shuffles back down, so over-provision is
     cheap and under-provision (spill) is avoided.
 
-    ``paths`` are files or directories (summed recursively). Returns the
+    ``paths`` are datasets (files or directory trees, counted by
+    ``plan_stats.dataset_bytes``'s committed-file rule). Returns the
     partition count set. Callers that know their dataset dir (bench,
     shuffle reports, CLI jobs) call this once per dataset.
     """
-    total = 0
-    for p in paths:
-        if os.path.isdir(p):
-            for root, _dirs, files in os.walk(p):
-                total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        elif os.path.isfile(p):
-            total += os.path.getsize(p)
+    total = sum(dataset_bytes(p) for p in paths)
     # floor at the cluster's parallelism (not the current conf value, so
     # per-dataset calls are idempotent: sf10 then sf0.1 sizes back down)
     floor = spark.sparkContext.defaultParallelism

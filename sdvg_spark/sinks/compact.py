@@ -14,21 +14,10 @@ the table format).
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import SparkSession
 
-
-def dataset_bytes(path: str) -> int:
-    """On-disk bytes of a parquet dataset (file or directory tree)."""
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
+from sdvg_spark.plan_stats import committed_files, dataset_bytes
 
 
 def compact_parquet(
@@ -57,9 +46,4 @@ def compact_parquet(
     else:
         df = df.coalesce(n)
     df.write.mode("overwrite").parquet(out_path)
-    return sum(
-        1
-        for root, _d, files in os.walk(out_path)
-        for f in files
-        if f.endswith(".parquet")
-    )
+    return len(committed_files(out_path))

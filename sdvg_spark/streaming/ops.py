@@ -217,8 +217,8 @@ def _micros_of(values) -> int:
 
 def _funnel_replay(t, pdf, ts_col, type_col, first_index, fi, w_us):
     """Replay one micro-batch's rows for one user through the greedy
-    funnel update (semantics == the batch fold tier, see
-    ops/analytics.py:_funnel_fold)."""
+    funnel update (semantics == the batch fold, see
+    ops/analytics.py:funnel)."""
     sub = pdf[[ts_col, type_col]].dropna(subset=[ts_col])
     idx = sub[type_col].map(first_index)
     sub = sub.assign(__i=idx).dropna(subset=["__i"])
@@ -258,7 +258,7 @@ def stream_funnel(
     a fixed-width long row in Spark's state store, bytes per user, any
     cardinality). Each micro-batch's rows are sorted by
     (ts, step-index) and replayed through the SAME greedy update as
-    the batch fold tier — including its tie rule and the sequential
+    the batch fold — including its tie rule and the sequential
     within-event update that lets one event satisfy consecutive
     duplicate-type steps — so when each user's events arrive
     event-time-ordered ACROSS micro-batches (per-user in-order

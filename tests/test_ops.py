@@ -1791,14 +1791,17 @@ def test_token_divergence_validates_args(spark):
         token_divergence(df, df, alpha=0.0)
 
 
-def test_funnel_fold_and_chain_agree_randomized(spark):
-    """The single-shuffle fold tier and the K-shuffle chain tier are
-    value-identical on randomized event streams (incl. ts ties and a
-    conversion window), and on a funnel with a REPEATED step type."""
+def test_funnel_matches_oracle_sql_randomized(spark):
+    """The fold agrees with funnel_oracle_sql's per-step min-aggregation
+    chain, run in DuckDB over the same randomized event stream (incl. ts
+    ties, unstamped events and a conversion window), and on a funnel
+    with a REPEATED step type."""
     import random
     from datetime import datetime, timedelta
 
-    from sdvg_spark.ops.analytics import funnel
+    import duckdb
+
+    from sdvg_spark.ops.analytics import funnel, funnel_oracle_sql
 
     rng = random.Random(13)
     base = datetime(2024, 5, 1)
@@ -1806,7 +1809,7 @@ def test_funnel_fold_and_chain_agree_randomized(spark):
         (
             u,
             # coarse grid -> many ties; ~8% unstamped events (dropped
-            # identically by both tiers)
+            # by both engines)
             None
             if rng.random() < 0.08
             else base + timedelta(hours=rng.randrange(0, 200)),
@@ -1816,33 +1819,34 @@ def test_funnel_fold_and_chain_agree_randomized(spark):
         for _ in range(rng.randrange(0, 12))
     ]
     ev = spark.createDataFrame(rows, "user_id long, ts timestamp, event_type string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE events (user_id BIGINT, ts TIMESTAMP, event_type VARCHAR)")
+    con.executemany("INSERT INTO events VALUES (?, ?, ?)", rows)
     for steps, w in [
         (["view", "click", "purchase"], 3 * 86400),
         (["view", "click"], None),
         (["view", "view", "click"], 7 * 86400),  # duplicate step type
     ]:
-        a = sorted(
+        got = sorted(
             map(tuple, funnel(ev, "user_id", "ts", "event_type", steps,
-                              within_seconds=w, mode="fold").collect())
+                              within_seconds=w).collect())
         )
-        b = sorted(
-            map(tuple, funnel(ev, "user_id", "ts", "event_type", steps,
-                              within_seconds=w, mode="chain").collect())
+        want = sorted(
+            con.execute(funnel_oracle_sql(steps=steps, within_seconds=w)).fetchall()
         )
-        assert a == b, f"tiers disagree for steps={steps} w={w}"
+        assert got and got == want, f"funnel != oracle for steps={steps} w={w}"
 
 
 def test_funnel_fold_single_shuffle_plan(spark):
-    """The fold tier's plan contains exactly ONE Exchange (the
-    user-keyed aggregation) — the chain tier needs K."""
+    """The funnel plan contains exactly ONE Exchange (the user-keyed
+    aggregation), where the per-step chain would need K."""
     from sdvg_spark.ops.analytics import funnel
 
     ev = spark.createDataFrame(
         [(1, None, "view")], "user_id long, ts timestamp, event_type string"
     )
     plan = funnel(
-        ev, "user_id", "ts", "event_type", ["view", "click", "purchase"],
-        mode="fold",
+        ev, "user_id", "ts", "event_type", ["view", "click", "purchase"]
     )._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1
 

@@ -14,6 +14,7 @@ import pytest
 
 from sdvg_spark.config.model import parse_config
 from sdvg_spark.engine import Engine
+from sdvg_spark.jobs import run_generate
 
 
 def _cfg(tmp, out_type, rows=500, **out_extra):
@@ -37,8 +38,7 @@ def _cfg(tmp, out_type, rows=500, **out_extra):
 
 
 def test_csv_roundtrip(spark, tmp_path):
-    cfg = parse_config(_cfg(tmp_path / "csv", "csv"))
-    Engine(cfg).run(spark)
+    run_generate(_cfg(tmp_path / "csv", "csv"), spark=spark)
     con = duckdb.connect()
     n, kmin, kmax = con.execute(
         f"SELECT count(*), min(k), max(k) FROM read_csv_auto('{tmp_path}/csv/t/*.csv')"
@@ -52,10 +52,10 @@ def test_csv_roundtrip(spark, tmp_path):
 
 
 def test_csv_no_header_custom_delim(spark, tmp_path):
-    cfg = parse_config(
-        _cfg(tmp_path / "c2", "csv", without_headers=True, delimiter=";")
+    run_generate(
+        _cfg(tmp_path / "c2", "csv", without_headers=True, delimiter=";"),
+        spark=spark,
     )
-    Engine(cfg).run(spark)
     files = glob.glob(f"{tmp_path}/c2/t/*.csv")
     assert files
     first = open(files[0]).readline()
@@ -63,8 +63,7 @@ def test_csv_no_header_custom_delim(spark, tmp_path):
 
 
 def test_csv_unix_datetime(spark, tmp_path):
-    cfg = parse_config(_cfg(tmp_path / "c3", "csv", datetime_format="unix"))
-    Engine(cfg).run(spark)
+    run_generate(_cfg(tmp_path / "c3", "csv", datetime_format="unix"), spark=spark)
     con = duckdb.connect()
     (ts,) = con.execute(
         f"SELECT ts FROM read_csv_auto('{tmp_path}/c3/t/*.csv') LIMIT 1"
@@ -76,8 +75,7 @@ def test_csv_unix_datetime(spark, tmp_path):
 def test_parquet_roundtrip_and_rotation(spark, tmp_path):
     raw = _cfg(tmp_path / "pq", "parquet", rows=1000)
     raw["models"]["t"]["rows_per_file"] = 250
-    cfg = parse_config(raw)
-    Engine(cfg).run(spark)
+    run_generate(raw, spark=spark)
     files = glob.glob(f"{tmp_path}/pq/t/*.parquet")
     # 1000 rows at <=250 rows/file -> at least 4 files
     assert len(files) >= 4
@@ -91,8 +89,7 @@ def test_parquet_roundtrip_and_rotation(spark, tmp_path):
 def test_partition_columns(spark, tmp_path):
     raw = _cfg(tmp_path / "part", "parquet")
     raw["models"]["t"]["partition_columns"] = [{"name": "tag"}]
-    cfg = parse_config(raw)
-    Engine(cfg).run(spark)
+    run_generate(raw, spark=spark)
     dirs = {os.path.basename(p) for p in glob.glob(f"{tmp_path}/part/t/tag=*")}
     assert dirs == {"tag=x", "tag=y", "tag=z"}
     con = duckdb.connect()
@@ -103,8 +100,7 @@ def test_partition_columns(spark, tmp_path):
 
 
 def test_devnull(spark, tmp_path):
-    cfg = parse_config(_cfg(tmp_path / "dn", "devnull"))
-    out = Engine(cfg).run(spark)
+    out = run_generate(_cfg(tmp_path / "dn", "devnull"), spark=spark)
     assert out["t"].startswith("noop")
 
 
@@ -127,16 +123,16 @@ def test_http_sink(spark, tmp_path):
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     try:
-        cfg = parse_config(
+        run_generate(
             _cfg(
                 tmp_path / "h",
                 "http",
                 rows=120,
                 endpoint=f"http://127.0.0.1:{srv.server_port}/ingest",
                 batch_size=50,
-            )
+            ),
+            spark=spark,
         )
-        Engine(cfg).run(spark)
     finally:
         srv.shutdown()
     total = sum(len(p["rows"]) for p in received)
@@ -149,10 +145,10 @@ def test_http_sink(spark, tmp_path):
 
 
 def test_csv_go_layout_datetime_format(spark, tmp_path):
-    cfg = parse_config(
-        _cfg(tmp_path / "gofmt", "csv", datetime_format="2006-01-02 15:04:05")
+    run_generate(
+        _cfg(tmp_path / "gofmt", "csv", datetime_format="2006-01-02 15:04:05"),
+        spark=spark,
     )
-    Engine(cfg).run(spark)
     import re
 
     con = duckdb.connect()
@@ -169,8 +165,7 @@ def test_layout_parity_file_names_and_null_partition(spark, tmp_path):
     raw["models"]["t"]["rows_per_file"] = 200
     raw["models"]["t"]["columns"][3]["values"] = ["x", "y", None]
     raw["models"]["t"]["partition_columns"] = [{"name": "tag"}]
-    cfg = parse_config(raw)
-    Engine(cfg).run(spark)
+    run_generate(raw, spark=spark)
     dirs = {os.path.basename(p) for p in glob.glob(f"{tmp_path}/lp/t/tag=*")}
     assert dirs == {"tag=x", "tag=y", "tag=null"}
     for d in dirs:
@@ -192,8 +187,7 @@ def test_write_to_output_keeps_column_in_payload(spark, tmp_path):
     raw["models"]["t"]["partition_columns"] = [
         {"name": "tag", "write_to_output": True}
     ]
-    cfg = parse_config(raw)
-    Engine(cfg).run(spark)
+    run_generate(raw, spark=spark)
     dirs = {os.path.basename(p) for p in glob.glob(f"{tmp_path}/wto/t/tag=*")}
     assert dirs == {"tag=x", "tag=y", "tag=z"}
     con = duckdb.connect()
@@ -218,8 +212,7 @@ def test_parquet_per_column_encodings(spark, tmp_path):
     cols[0]["parquet"] = {"encoding": "DELTA_BINARY_PACKED"}
     cols[1]["parquet"] = {"encoding": "BYTE_STREAM_SPLIT"}
     cols[3]["parquet"] = {"encoding": "PLAIN_DICT"}
-    cfg = parse_config(raw)
-    Engine(cfg).run(spark)
+    run_generate(raw, spark=spark)
     files = sorted(glob.glob(f"{tmp_path}/enc/t/*.parquet"))
     assert files and all(
         os.path.basename(f).startswith("t_") for f in files
@@ -248,8 +241,7 @@ def test_parquet_encodings_with_partitioning(spark, tmp_path):
     raw["models"]["t"]["columns"][0]["parquet"] = {"encoding": "DELTA_BINARY_PACKED"}
     raw["models"]["t"]["columns"][3]["values"] = ["x", None]
     raw["models"]["t"]["partition_columns"] = [{"name": "tag"}]
-    cfg = parse_config(raw)
-    Engine(cfg).run(spark)
+    run_generate(raw, spark=spark)
     dirs = {os.path.basename(p) for p in glob.glob(f"{tmp_path}/encp/t/tag=*")}
     assert dirs == {"tag=x", "tag=null"}
     con = duckdb.connect()
@@ -260,8 +252,7 @@ def test_parquet_encodings_with_partitioning(spark, tmp_path):
 
 
 def test_parquet_float_rounding(spark, tmp_path):
-    cfg = parse_config(_cfg(tmp_path / "pqr", "parquet", rows=200))
-    Engine(cfg).run(spark)
+    run_generate(_cfg(tmp_path / "pqr", "parquet", rows=200), spark=spark)
     con = duckdb.connect()
     (bad,) = con.execute(
         f"SELECT count(*) FROM read_parquet('{tmp_path}/pqr/t/*.parquet') "
@@ -277,8 +268,7 @@ def test_ignored_model_not_written(spark, tmp_path):
         "columns": [{"name": "v", "type": "integer"}],
     }
     raw["models_to_ignore"] = ["extra"]
-    cfg = parse_config(raw)
-    Engine(cfg).run(spark)
+    run_generate(raw, spark=spark)
     assert os.path.isdir(f"{tmp_path}/ig/t")
     assert not os.path.isdir(f"{tmp_path}/ig/extra")
 
@@ -380,11 +370,8 @@ def test_parquet_sort_by_tightens_row_group_stats(spark, tmp_path):
     which is what lets a reader skip row groups at scale."""
     import pyarrow.parquet as pq
 
-    from sdvg_spark.config.model import parse_config
-    from sdvg_spark.engine import Engine
-
     d = str(tmp_path / "sorted")
-    cfg = parse_config(
+    run_generate(
         {
             "random_seed": 11,
             "output": {"type": "parquet", "dir": d, "sort_by": ["v"]},
@@ -398,9 +385,9 @@ def test_parquet_sort_by_tightens_row_group_stats(spark, tmp_path):
                     ],
                 }
             },
-        }
+        },
+        spark=spark,
     )
-    Engine(cfg).run(spark)
     import pathlib
 
     files = list(pathlib.Path(d).rglob("*.parquet"))
@@ -447,11 +434,8 @@ def test_parquet_sort_by_with_partition_columns(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
-    from sdvg_spark.config.model import parse_config
-    from sdvg_spark.engine import Engine
-
     d = str(tmp_path / "psorted")
-    cfg = parse_config(
+    run_generate(
         {
             "random_seed": 12,
             "output": {"type": "parquet", "dir": d, "sort_by": ["v"]},
@@ -466,9 +450,9 @@ def test_parquet_sort_by_with_partition_columns(spark, tmp_path):
                     "partition_columns": [{"name": "grp"}],
                 }
             },
-        }
+        },
+        spark=spark,
     )
-    Engine(cfg).run(spark)
     files = list(pathlib.Path(d).rglob("*.parquet"))
     assert files
     assert any("grp=a" in str(f) for f in files)
@@ -522,11 +506,8 @@ def test_parquet_zorder_prunes_on_both_columns(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
-    from sdvg_spark.config.model import parse_config
-    from sdvg_spark.engine import Engine
-
     def write(d, extra_output):
-        cfg = parse_config(
+        run_generate(
             {
                 "random_seed": 23,
                 "output": {"type": "parquet", "dir": d, **extra_output},
@@ -542,9 +523,9 @@ def test_parquet_zorder_prunes_on_both_columns(spark, tmp_path):
                         ],
                     }
                 },
-            }
+            },
+            spark=spark,
         )
-        Engine(cfg).run(spark)
 
     def overlaps(d, col, point):
         total = hit = 0

@@ -1,11 +1,11 @@
-"""Per-query shuffle/input byte report via Spark's status REST API.
+"""Per-query shuffle/input byte report from perfbench's trace spans.
 
 Quantifies the plan-audit story the plan tests assert qualitatively:
 how many bytes each headline query actually shuffles at a given scale
 factor, and — when two sf dirs are given — how those bytes GROW with
 the data (the 100 TB question). Each query's DataFrame build and its
-action are timed and tagged apart, so the table also splits wall time
-and Spark jobs into build vs action. Run:
+action are timed and attributed apart, so the table also splits wall
+time and Spark jobs into build vs action. Run:
 
     python tools/shuffle_report.py [sf_dir ...] > SHUFFLE_r{N}.md
     SHUFFLE_QUERIES=unigram_nll,ann_ivf python tools/shuffle_report.py <sf_dir>
@@ -13,79 +13,34 @@ and Spark jobs into build vs action. Run:
 The default query list is bench.py's ``BENCH_QUERIES``;
 ``SHUFFLE_QUERIES`` names any other ``queries()`` entries.
 
-Attribution is by job group (``setJobGroup`` around each run, jobs ->
-stageIds via the REST API), not a stage-id watermark: stages that
-complete late are still attributed to the query that submitted them,
-and concurrent/AQE-reused stages cannot leak across queries. Skipped
-(reuse) stages execute nothing and correctly contribute no bytes.
+Attribution is ``perfbench/trace.py``'s: one span per query with
+``build`` and ``action`` children, each tagging its jobs with its own
+job group, so stages that complete late are still attributed to the
+query that submitted them. Skipped (reuse) stages execute nothing and
+contribute no bytes.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import BENCH_QUERIES  # noqa: E402
-
-
-def _api(base: str, path: str):
-    with urllib.request.urlopen(f"{base}/api/v1/{path}") as r:
-        return json.load(r)
+from perfbench.trace import SparkStatus, inclusive, traced  # noqa: E402
+from sdvg_spark.plan_stats import dataset_bytes  # noqa: E402
 
 
 def main() -> None:
     sf_dirs = sys.argv[1:] or ["/root/testdata/sf0.1"]
 
     import __spark_entry__ as E
-    from sdvg_spark.session import get_spark
+    from sdvg_spark.session import get_spark, scale_shuffle_partitions
 
     spark = get_spark(app_name="shuffle-report")
-    sc = spark.sparkContext
-    base = sc.uiWebUrl
-    app_id = _api(base, "applications")[0]["id"]
+    status = SparkStatus(spark)
     qs = E.queries()
-
-    def run_tagged(tag: str, name: str, sf_dir: str) -> dict:
-        """Build the query under job group ``<tag>:build`` and run its
-        noop action under ``<tag>:action`` (operators that do eager
-        work while building the DataFrame fire their jobs in the first
-        group); returns the two wall times."""
-        try:
-            sc.setJobGroup(f"{tag}:build", f"{name} build @ {sf_dir}")
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            t1 = time.perf_counter()
-            sc.setJobGroup(f"{tag}:action", f"{name} action @ {sf_dir}")
-            df.write.format("noop").mode("overwrite").save()
-            t2 = time.perf_counter()
-        finally:
-            sc.setJobGroup("", "")
-        time.sleep(1.0)  # AppStatusListener aggregates asynchronously
-        return {"build_s": t1 - t0, "action_s": t2 - t1}
-
-    def collect(tag: str):
-        jobs = _api(base, f"applications/{app_id}/jobs")
-        stage_ids = set()
-        n_jobs = {"build_jobs": 0, "action_jobs": 0}
-        for j in jobs:
-            for phase in ("build", "action"):
-                if j.get("jobGroup") == f"{tag}:{phase}":
-                    n_jobs[f"{phase}_jobs"] += 1
-                    stage_ids.update(j.get("stageIds", []))
-        stages = _api(base, f"applications/{app_id}/stages?status=complete")
-        mine = [s for s in stages if s["stageId"] in stage_ids]
-        return {
-            **n_jobs,
-            "stages": len(mine),
-            "shuffle_write_mb": sum(s.get("shuffleWriteBytes", 0) for s in mine) / 1e6,
-            "shuffle_read_mb": sum(s.get("shuffleReadBytes", 0) for s in mine) / 1e6,
-            "spill_mb": sum(s.get("diskBytesSpilled", 0) for s in mine) / 1e6,
-        }
 
     # SHUFFLE_QUERIES=a,b,c restricts the sweep (large scale points);
     # a query that errors at a given scale (e.g. a byte-capped tier
@@ -93,55 +48,58 @@ def main() -> None:
     only = os.environ.get("SHUFFLE_QUERIES", "")
     queries = [q for q in only.split(",") if q] or BENCH_QUERIES
 
-    run_tagged("warmup", queries[0], sf_dirs[0])  # absorb scan/codegen init
+    # warm-up: absorb scan/codegen init
+    qs[queries[0]](spark, sf_dirs[0]).write.format("noop").mode("overwrite").save()
 
-    from sdvg_spark.session import scale_shuffle_partitions
+    errors: dict[tuple[str, str], str] = {}
 
-    per_dir: dict[str, list[dict]] = {}
-    for di, sf_dir in enumerate(sf_dirs):
-        # size shuffle partitions to THIS scale point's input bytes —
-        # the sf10 simhash spill in SHUFFLE_r06 was 32 fixed partitions
-        # sized for sf0.1 (session.py:scale_shuffle_partitions)
-        n_parts = scale_shuffle_partitions(spark, sf_dir)
-        print(f"<!-- {sf_dir}: spark.sql.shuffle.partitions={n_parts} -->")
-        rows = []
-        for name in queries:
-            tag = f"{name}#{di}"
-            try:
-                walls = run_tagged(tag, name, sf_dir)
-            except Exception as e:
-                rows.append(
-                    {
-                        "query": name,
-                        "build_s": 0.0,
-                        "build_jobs": 0,
-                        "action_s": 0.0,
-                        "action_jobs": 0,
-                        "stages": 0,
-                        "shuffle_write_mb": 0.0,
-                        "shuffle_read_mb": 0.0,
-                        "spill_mb": 0.0,
-                        "err": f"{type(e).__name__}: {str(e)[:120]}",
-                    }
-                )
-                continue
-            rows.append({"query": name, **walls, **collect(tag)})
-        per_dir[sf_dir] = rows
+    def body(tr):
+        """One span per query; its ``build`` child constructs the
+        DataFrame (operators that do eager work fire their jobs there),
+        its ``action`` child runs the noop write."""
+        for sf_dir in sf_dirs:
+            # size shuffle partitions to THIS scale point's input bytes —
+            # the sf10 simhash spill in SHUFFLE_r06 was 32 fixed partitions
+            # sized for sf0.1 (session.py:scale_shuffle_partitions)
+            n_parts = scale_shuffle_partitions(spark, sf_dir)
+            print(f"<!-- {sf_dir}: spark.sql.shuffle.partitions={n_parts} -->")
+            for name in queries:
+                with tr.span(name, sf_dir=sf_dir):
+                    try:
+                        with tr.span("build"):
+                            df = qs[name](spark, sf_dir)
+                        with tr.span("action"):
+                            df.write.format("noop").mode("overwrite").save()
+                    except Exception as e:
+                        errors[sf_dir, name] = f"{type(e).__name__}: {str(e)[:120]}"
 
-    def dir_mb(d):
-        total = 0
-        for f in os.listdir(d):
-            p = os.path.join(d, f)
-            if f.endswith(".parquet"):
-                if os.path.isdir(p):  # spark-written dataset dir
-                    total += sum(
-                        os.path.getsize(os.path.join(p, g))
-                        for g in os.listdir(p)
-                        if g.endswith(".parquet")
-                    )
-                else:
-                    total += os.path.getsize(p)
-        return total / 1e6
+    tr, by_span, _recon = traced(spark, status, lambda tr: None, body)
+
+    def phase(kids: dict, name: str) -> tuple[float, int]:
+        k = kids.get(name)
+        return (k.duration, int(inclusive(tr, by_span, k)["jobs"])) if k else (0.0, 0)
+
+    per_dir: dict[str, list[dict]] = {d: [] for d in sf_dirs}
+    for s in tr.spans:
+        if s.parent is not None:
+            continue
+        kids = {c.name: c for c in tr.spans if c.parent == s.id}
+        tot = inclusive(tr, by_span, s)
+        (build_s, build_jobs), (action_s, action_jobs) = phase(kids, "build"), phase(kids, "action")
+        sf_dir = s.attrs["sf_dir"]
+        per_dir[sf_dir].append({
+            "query": s.name,
+            "build_s": build_s,
+            "build_jobs": build_jobs,
+            "action_s": action_s,
+            "action_jobs": action_jobs,
+            "python_s": tot["run_s"],
+            "stages": int(tot["stages"]),
+            "shuffle_write_mb": tot["shuffle_write_bytes"] / 1e6,
+            "shuffle_read_mb": tot["shuffle_read_bytes"] / 1e6,
+            "spill_mb": tot["spill_bytes"] / 1e6,
+            "err": errors.get((sf_dir, s.name)),
+        })
 
     print(f"# Shuffle report — {', '.join(sf_dirs)}")
     print()
@@ -153,26 +111,28 @@ def main() -> None:
     print("executor memory at this sizing. Build columns count the wall")
     print("time and Spark jobs of constructing the DataFrame (eager work")
     print("such as k-means or footer reads), action columns the noop write.")
+    print("`python s` is the time inside Python workers; spill counts")
+    print("memory and disk spill together.")
     for sf_dir, rows in per_dir.items():
         print()
-        print(f"## {sf_dir} (tables on disk: {dir_mb(sf_dir):.0f} MB)")
+        print(f"## {sf_dir} (tables on disk: {dataset_bytes(sf_dir) / 1e6:.0f} MB)")
         print()
         print(
-            "| query | build s | build jobs | action s | action jobs "
-            "| stages | shuffle write MB | shuffle read MB | spill MB |"
+            "| query | build s | build jobs | action s | action jobs | python s "
+            "| stages | shuffle write MB | shuffle read MB | spill (mem+disk) MB |"
         )
-        print("|---|---|---|---|---|---|---|---|---|")
+        print("|---|---|---|---|---|---|---|---|---|---|")
         for r in rows:
-            name = r["query"] + (f" (ERR: {r['err']})" if r.get("err") else "")
+            name = r["query"] + (f" (ERR: {r['err']})" if r["err"] else "")
             print(
                 f"| {name} | {r['build_s']:.3f} | {r['build_jobs']} "
-                f"| {r['action_s']:.3f} | {r['action_jobs']} "
+                f"| {r['action_s']:.3f} | {r['action_jobs']} | {r['python_s']:.3f} "
                 f"| {r['stages']} | {r['shuffle_write_mb']:.2f} "
                 f"| {r['shuffle_read_mb']:.2f} | {r['spill_mb']:.2f} |"
             )
     if len(sf_dirs) == 2:
         a, b = sf_dirs
-        in_ratio = dir_mb(b) / max(dir_mb(a), 1e-9)
+        in_ratio = dataset_bytes(b) / max(dataset_bytes(a), 1)
         print()
         print(f"## Scaling {a} -> {b} (input bytes grow {in_ratio:.1f}x)")
         print()
