@@ -211,6 +211,9 @@ def main() -> None:
         samples = []
         fl = []
         for _ in range(3):
+            # each rep starts from an empty cache: a rep must not read
+            # what an earlier rep of the same query persisted
+            spark.catalog.clearCache()
             fl.append(calib_floor_probe())
             t0 = time.time()
             qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()

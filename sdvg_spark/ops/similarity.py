@@ -1,38 +1,50 @@
 """Similarity search over embedding columns (array<float>).
 
-Baseline: brute-force cosine top-k — one broadcast of the query set,
-one scan of the corpus, per-partition partial top-k then a tiny final
-reduce (never a global sort of the scored corpus). Scale path:
-random-hyperplane LSH bucketing (search only matching buckets) with
-multi-probe, trading recall for a corpus-fraction scan.
+Every search is ONE map-only pass of one scoring kernel over the
+corpus, then the shared (cosine DESC, c_id ASC) ranking window
+(:func:`_ranked`) — never a global sort of the scored corpus, never a
+join. The query set is collected once through a byte-capped fetch
+(:func:`_local_queries`) and broadcast. The kernels that run:
 
-Brute-force scoring is an Arrow-batched numpy matmul per partition
-(corpus-block × queriesᵀ): Spark's higher-order lambdas evaluate
-interpreted per element, so a vectorized Pandas-UDF block beats the
-"native" zip_with dot product by ~10×.
+* :func:`brute_force_topk` — exact; its inline kernel scores each
+  Arrow batch (normalized block × queriesᵀ) and keeps the batch-local
+  top-k per query.
+* :func:`lsh_topk` — multi-table hyperplane LSH with multiprobe:
+  :func:`_lsh_taskmerge_kernel`.
+* :func:`ivf_topk` and :func:`ivf_index_topk` — IVF cells, assigned
+  on the fly from the centroids or read from a persisted
+  cell-partitioned index: :func:`_ivf_taskmerge_kernel`.
+* :func:`quantized_rescore_topk` — int8 shortlist plus exact rescore:
+  :func:`_quantized_fused_kernel`.
 
-The LSH and IVF entry points run TASK-MERGED kernels by default
-(``_lsh_taskmerge_kernel`` / ``_ivf_taskmerge_kernel``, folded back
-from the round-9 ops/ivf_merge.py staging module): one running
-per-query top-k pool per task, emitting ≤ queries × k rows at task
-end instead of per (batch, cell/bucket). The per-batch kernels
-(``_lsh_fused_kernel`` / ``_ivf_fused_kernel``) are retained as the
-semantic reference the property suite reduces the merged kernels
-against — at the sf100 census the per-batch ivf emission cost a
-127 GB memory / 51 GB disk pre-rank sort spill and the per-batch lsh
-triple buffer OOM-killed the Python workers (SHUFFLE_r09.md), while
-the merged kernels run both censuses with ZERO spill at equal wall.
+Scoring is an Arrow-batched numpy matmul: Spark's higher-order lambdas
+evaluate interpreted per element, so a vectorized Pandas-UDF block
+beats the "native" zip_with dot product by ~10×.
 
-LSH score-quantization contract: both lsh kernels round every cosine
-to ``_SCORE_DECIMALS`` right after the gemm, BEFORE any threshold or
-cut. The same (query, candidate) pair is scored in different gemm
-block shapes across the two kernels (full-bucket vs chunked) and
-across tables, so mathematically-tied scores (duplicate vectors)
-differ in the last ulp and exact-float tie-breaking becomes
-block-shape-dependent — Hypothesis found a pool cut permanently
-evicting the (score DESC, id ASC) tie winner (r9 verdict #1).
-Rounding makes true ties true, the order a total order consistent
-across any block decomposition, and the pool's exact cuts
+The LSH and IVF kernels are TASK-MERGED (:func:`_pooled_kernel`): one
+running per-query top-k pool per task, emitting ≤ queries × k rows at
+task end instead of per (batch, cell/bucket). At the sf100 census the
+per-batch emission cost a 127 GB memory / 51 GB disk pre-rank sort
+spill (ivf) and OOM-killed the Python workers (lsh); the pooled
+kernels run both censuses with ZERO spill at equal wall
+(SHUFFLE_r09.md). Per-query top-k under (score DESC, id ASC) is
+associative across row subsets, so a pool cut never drops a global
+winner. tests/test_properties.py, tests/test_lsh_merge.py and
+tests/test_ivf_merge.py check each pool against a numpy brute force —
+every query's exact 12-dp top-k over its probed cells or buckets, ties
+by id ascending — across random censuses, batch sizes and compaction
+cadences; each entry query is checked against its DuckDB mirror (the
+``*_oracle_sql`` builders below).
+
+LSH score-quantization contract: the lsh kernel rounds every cosine to
+``_SCORE_DECIMALS`` right after the gemm, BEFORE any threshold or cut.
+The same (query, candidate) pair is scored in different gemm block
+shapes across batches and tables, so mathematically-tied scores
+(duplicate vectors) differ in the last ulp and exact-float
+tie-breaking becomes block-shape-dependent — Hypothesis found a pool
+cut permanently evicting the (score DESC, id ASC) tie winner (r9
+verdict #1). Rounding makes true ties true, the order a total order
+consistent across any block decomposition, and the pool's exact cuts
 associative. 12 dp sits ~3 orders above ulp noise on unit cosines and
 ~6 below real score gaps, so only genuine ties are affected.
 """
@@ -51,7 +63,7 @@ from pyspark.sql import functions as F
 # JVM.
 _SCORE_CHUNK_ELEMS = 4_000_000
 
-# Decimal places both LSH kernels round cosines to before any
+# Decimal places the lsh kernel rounds cosines to before any
 # threshold/cut (see the module docstring's quantization contract).
 _SCORE_DECIMALS = 12
 
@@ -61,6 +73,106 @@ _SCORE_DECIMALS = 12
 # blocks, small enough that a task's peak candidate footprint stays
 # flat no matter how many batches × cells/buckets it scans.
 _POOL_COMPACT_ROWS = 1_000_000
+
+# Driver byte cap on the query matrix of the searches that take no
+# ``max_query_bytes`` kwarg.
+_QUERY_MAX_BYTES = 256_000_000
+
+# What every search kernel emits: candidate pairs before the ranking.
+_PAIRS = "q_id long, c_id long, cosine double"
+
+
+def _unit_rows(M):
+    """Rows scaled to unit L2 norm; all-zero rows stay zero."""
+    import numpy as np
+
+    nrm = np.linalg.norm(M, axis=1)
+    nrm[nrm == 0] = 1.0
+    return M / nrm[:, None]
+
+
+def _local_queries(
+    queries: DataFrame, query_id: str, query_vec: str, dims, max_query_bytes=None
+):
+    """The query set as sorted ``(ids, float64 matrix)`` on the driver,
+    fetched through :func:`bounded_local_vectors`: a query set too big
+    to broadcast raises here instead of OOMing the driver. ``dims``
+    (the vector width, e.g. from parquet footer metadata) turns the
+    byte cap into a row cap, so the fetch is one limit-guarded job
+    instead of estimate job + collect job. ``max_query_bytes`` is the
+    caller's kwarg when it has one; otherwise ``_QUERY_MAX_BYTES``
+    applies."""
+    from sdvg_spark.ops.dedup import bounded_local_vectors
+
+    cap = _QUERY_MAX_BYTES if max_query_bytes is None else max_query_bytes
+    loc = bounded_local_vectors(
+        queries.select(F.col(query_id).alias("q_id"), F.col(query_vec).alias("__qv")),
+        "q_id",
+        "__qv",
+        cap,
+        known_dims=dims,
+    )
+    if loc is None:
+        limit = (
+            f"the {cap}-byte query cap" if max_query_bytes is None
+            else f"max_query_bytes={cap}"
+        )
+        raise ValueError(f"query set exceeds {limit}: the search broadcasts the query matrix")
+    return loc
+
+
+def _empty_result(spark) -> DataFrame:
+    return spark.createDataFrame([], "q_id long, c_id long, cosine double, rank int")
+
+
+def _corpus_pass(
+    corpus: DataFrame, corpus_id: str, corpus_vec: str, kernel, schema: str = _PAIRS
+) -> DataFrame:
+    """``kernel`` over the corpus as ``(c_id, __v)``: one map-only
+    stage, widened first when the corpus is narrow."""
+    from sdvg_spark.ops.dedup import widen
+
+    return (
+        widen(corpus, min_bytes=4 << 20)
+        .select(F.col(corpus_id).alias("c_id"), F.col(corpus_vec).alias("__v"))
+        .mapInPandas(kernel, schema)
+    )
+
+
+def _ranked(part: DataFrame, k: int) -> DataFrame:
+    """The global per-query top-k of the kernels' candidate pairs under
+    (cosine DESC, c_id ASC) — the total order every local cut keeps and
+    every DuckDB mirror ranks by. The exchange moves only the kernels'
+    k-bounded emissions."""
+    rank = F.row_number().over(
+        Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
+    )
+    return (
+        part.withColumn("rank", rank)
+        .where(F.col("rank") <= k)
+        .select("q_id", "c_id", "cosine", "rank")
+    )
+
+
+def _signatures(M, w_flat, n_tables: int, n_planes: int):
+    """(rows × n_tables) int64 LSH signatures: bit p of table t is set
+    when dot(vec, w[t, p]) ≥ 0 on the RAW vector — the sign rule
+    :func:`lsh_topk_oracle_sql` re-derives with ``list_dot_product``."""
+    import numpy as np
+
+    bits = ((M @ w_flat.T) >= 0).reshape(len(M), n_tables, n_planes).astype(np.int64)
+    return (bits << np.arange(n_planes, dtype=np.int64)).sum(axis=2)
+
+
+def _probing(Qn, cent, n_probe: int):
+    """Inverted probe map: ``probing[cell]`` = indices (into ``Qn``) of
+    the queries whose ``n_probe`` nearest centroids include ``cell``.
+    The stable argsort breaks ties to the lowest cell, as the assignment
+    kernel and the oracle do."""
+    import numpy as np
+
+    order = np.argsort(-(Qn @ cent.T), axis=1, kind="stable")[:, :n_probe]
+    return [np.flatnonzero((order == c).any(axis=1)) for c in range(len(cent))]
 
 
 def _pool_topk(q, c, s, top: int):
@@ -98,36 +210,30 @@ def _dedup_pool(q, c, s):
     return q[first], c[first], s[first]
 
 
-def _block_topk_into(C_rows, block_ids, Qn, qidx, q_ids, top_n, out_q, out_c, out_s):
+def _block_topk(C_rows, block_ids, Qn, qidx, top_n: int, decimals: int | None = None):
     """Score one cell/bucket block against its probing queries and
-    append each query's block-local top-k to the output accumulators.
+    yield, per query chunk, the block-local top-k as ``(query index,
+    id, score)`` arrays.
 
     Exact selection semantics (shared by every search path, and what
     the DuckDB oracles mirror): per query, keep every row whose score
     ties the k-th largest, then order by (score DESC, id ASC) and cut
-    at k. Fully vectorized — the k-th score per column comes from one
-    ``np.partition``, the tied candidates from one boolean mask, and
-    the per-column (score DESC, id ASC) cut from one ``lexsort`` +
-    group-rank pass — so cost is O(rows × chunk) with NO per-query
-    Python loop (the loop was ~0.5 ms × queries × cells × batches: at
-    the sf100 probe that extrapolated to hours of pure argpartition
-    calls)."""
+    at k (:func:`_topk_select`, one vectorized pass per chunk — the old
+    per-query Python loop was ~0.5 ms × queries × cells × batches: at
+    the sf100 probe that extrapolated to hours). Query chunks bound the
+    score matrix at ``_SCORE_CHUNK_ELEMS``. ``decimals`` rounds the
+    scores straight off the gemm, before the cut."""
     import numpy as np
 
-    m = len(block_ids)
-    if m == 0 or len(qidx) == 0:
-        return
-    q_ids = np.asarray(q_ids, dtype=np.int64)
-    qidx = np.asarray(qidx, dtype=np.int64)
-    top = min(int(top_n), m)
-    chunk = max(1, _SCORE_CHUNK_ELEMS // m)
+    top = min(int(top_n), len(block_ids))
+    chunk = max(1, _SCORE_CHUNK_ELEMS // len(block_ids))
     for s in range(0, len(qidx), chunk):
         qc = qidx[s : s + chunk]
         sims = C_rows @ Qn[qc].T  # (m, |qc|)
+        if decimals is not None:
+            sims = np.round(sims, decimals)
         cols, rows = _topk_select(sims, block_ids, top)
-        out_q.append(q_ids[qc[cols]])
-        out_c.append(block_ids[rows])
-        out_s.append(sims[rows, cols])
+        yield qc[cols], block_ids[rows], sims[rows, cols]
 
 
 def _topk_select(sims, block_ids, top):
@@ -175,102 +281,6 @@ def hyperplane_weights(n_planes: int, n_tables: int, seed: int, dims: int):
     return w
 
 
-def hyperplane_sigs_df(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    *,
-    n_planes: int,
-    n_tables: int,
-    seed: int,
-    dims: int,
-    out_id: str = "__id",
-) -> DataFrame:
-    """(id, __t, __sig): per-table sign signatures via one Arrow-batched
-    numpy matmul per partition — map-only, no shuffle.
-
-    Replaces the expression form (``F.aggregate``/``zip_with`` lambdas,
-    which Spark evaluates interpreted at n_tables × n_planes × dims ops
-    per row — ~6k interpreted mul-adds per corpus row at the entry's
-    settings) with a single (batch × dims) @ (dims × tables·planes)
-    float64 matmul. Bit p of table t's signature = dot(vec, w[t,p]) ≥ 0.
-    """
-    import numpy as np
-    import pandas as pd
-
-    w = hyperplane_weights(n_planes, n_tables, seed, dims)
-    w_flat = w.reshape(n_tables * n_planes, dims)
-
-    def kernel(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            M = np.array(list(pdf[vec_col]), dtype=np.float64)
-            bits = (M @ w_flat.T) >= 0  # (n, T*P)
-            sigs = np.zeros((n, n_tables), dtype=np.int64)
-            for t in range(n_tables):
-                for p in range(n_planes):
-                    sigs[:, t] |= bits[:, t * n_planes + p].astype(np.int64) << p
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            yield pd.DataFrame(
-                {
-                    out_id: np.repeat(ids, n_tables),
-                    "__t": np.tile(np.arange(n_tables, dtype=np.int32), n),
-                    "__sig": sigs.ravel(),
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        kernel, f"{out_id} long, __t int, __sig long"
-    )
-
-
-def _partition_topk_kernel(bc, vec_col: str, top_n: int, score, out_col: str = "score"):
-    """mapInPandas kernel factory: deterministic partition-local top-k
-    per query over an arbitrary scoring function.
-
-    ``bc`` broadcasts a payload tuple whose FIRST element is the query
-    id array; ``score(C, payload)`` maps an (m × dims) float64 block to
-    an (m × n_queries) similarity matrix. Boundary ties must all
-    survive to the (score DESC, c_id ASC) lexsort (duplicate vectors ⇒
-    identical scores), so every row ≥ the top_n-th value is kept before
-    the id tiebreak cuts — the local cut can then never drop a row the
-    global top-k needs. The cut is applied PER ARROW BATCH and the
-    ranking window reduces across batches and partitions alike (a
-    global top-k row is top-k within every subset containing it, so a
-    finer cut stays correct) — peak memory is O(batch), never
-    O(partition vectors), and wide 100 TB partitions cannot OOM the
-    task. Yields nothing for empty partitions or an empty query set.
-    """
-    import numpy as np
-    import pandas as pd
-
-    def run(batches):
-        payload = bc.value
-        b_qids = payload[0]
-        if len(b_qids) == 0:
-            return
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.array(list(pdf[vec_col]), dtype=np.float64)
-            c_ids = pdf["c_id"].to_numpy(dtype=np.int64)
-            sims = score(C, payload)  # (m_batch, n_queries)
-            m = len(c_ids)
-            top = min(top_n, m)
-            cols, rows = _topk_select(sims, c_ids, top)
-            yield pd.DataFrame(
-                {
-                    "q_id": np.asarray(b_qids, dtype=np.int64)[cols],
-                    "c_id": c_ids[rows],
-                    out_col: sims[rows, cols],
-                }
-            )
-
-    return run
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -287,63 +297,41 @@ def brute_force_topk(
 
     Plan shape at scale: the query matrix is broadcast (it is the
     small side by construction); scoring is a map-only stage — each
-    corpus partition computes its normalized block × queriesᵀ in numpy
-    and emits only its partition-local top-k per query, so the final
-    reduce shuffles O(q·k·partitions) rows, not O(q·corpus).
+    Arrow batch computes its normalized block × queriesᵀ in numpy and
+    emits only its batch-local top-k per query (every row tying the
+    k-th score survives to the id tiebreak, so the local cut never
+    drops a global winner), and the final reduce shuffles
+    O(q·k·batches) rows, not O(q·corpus). Peak memory is O(batch),
+    never O(partition vectors).
 
-    The query matrix rides through :func:`bounded_local_vectors`
-    (pre-flight byte estimate, ``max_query_bytes``) — a query set too
-    big to broadcast raises instead of OOMing the driver. ``dims``
-    (the vector width, e.g. from parquet footer metadata or catalog
-    stats) turns the byte cap into a row cap so the collect is a
-    single limit-guarded job instead of estimate job + collect job.
+    The query matrix rides through :func:`_local_queries`
+    (``max_query_bytes`` cap; ``dims`` makes the fetch one job).
 
     Ties broken by corpus id ascending (deterministic).
     """
     import numpy as np
-
-    from sdvg_spark.ops.dedup import bounded_local_vectors, widen
+    import pandas as pd
 
     spark = corpus.sparkSession
-    loc = bounded_local_vectors(
-        queries.select(F.col(query_id).alias("q_id"), F.col(query_vec).alias("__qv")),
-        "q_id",
-        "__qv",
-        max_query_bytes,
-        known_dims=dims,
-    )
-    if loc is None:
-        raise ValueError(
-            f"query set exceeds max_query_bytes={max_query_bytes}; brute-force "
-            "top-k broadcasts the query matrix — shrink the query set, raise "
-            "the cap, or use lsh_topk"
-        )
-    q_ids, q_mat = loc
+    q_ids, Q = _local_queries(queries, query_id, query_vec, dims, max_query_bytes)
     if len(q_ids) == 0:
-        return spark.createDataFrame(
-            [], "q_id long, c_id long, cosine double, rank int"
-        )
-    qn = np.linalg.norm(q_mat, axis=1)
-    qn[qn == 0] = 1.0
-    q_mat = q_mat / qn[:, None]
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
+        return _empty_result(spark)
+    bc = spark.sparkContext.broadcast((q_ids, _unit_rows(Q)))
+    top_n = int(k)
 
-    def cosine_scores(C, payload):
-        _, b_q = payload
-        cn = np.linalg.norm(C, axis=1)
-        cn[cn == 0] = 1.0
-        return (C / cn[:, None]) @ b_q.T  # (m, n_queries)
+    def run(batches):
+        b_qids, b_Q = bc.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            c_ids = pdf["c_id"].to_numpy(dtype=np.int64)
+            sims = _unit_rows(np.array(list(pdf["__v"]), dtype=np.float64)) @ b_Q.T
+            cols, rows = _topk_select(sims, c_ids, min(top_n, len(c_ids)))
+            yield pd.DataFrame(
+                {"q_id": b_qids[cols], "c_id": c_ids[rows], "cosine": sims[rows, cols]}
+            )
 
-    c = widen(corpus, min_bytes=4 << 20).select(F.col(corpus_id).alias("c_id"), F.col(corpus_vec).alias("__cv"))
-    part = c.mapInPandas(
-        _partition_topk_kernel(bc, "__cv", int(k), cosine_scores, out_col="cosine"),
-        "q_id long, c_id long, cosine double",
-    )
-    final = part.withColumn(
-        "rank",
-        F.row_number().over(Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))),
-    ).where(F.col("rank") <= k)
-    return final.select("q_id", "c_id", "cosine", "rank")
+    return _ranked(_corpus_pass(corpus, corpus_id, corpus_vec, run), k)
 
 
 def lsh_topk(
@@ -379,51 +367,28 @@ def lsh_topk(
     probe map (query signatures + multiprobe expansion are derived
     driver-side from the collected query matrix), scores those
     candidates, dedups per query across tables (a pair colliding in
-    several tables appears once, matching the old dropDuplicates), and
-    keeps ONE running per-query top-k pool for the whole task
-    (:func:`_lsh_taskmerge_kernel` — bounded-pool emission; the
-    per-batch kernel's triple buffer was ~110 GB per Arrow batch at
-    the sf100 census and OOM-killed the workers). No bucket join, no
-    candidate→vector re-attach shuffle, no global dedup exchange; the
-    final exchange moves only O(tasks × queries × k) rows into the
-    ranking window. Cosines are quantized to ``_SCORE_DECIMALS`` (see
-    the module docstring) so tie-breaking is block-shape-independent.
+    several tables appears once) and keeps ONE running per-query top-k
+    pool for the whole task (:func:`_lsh_taskmerge_kernel`). No bucket
+    join, no candidate→vector re-attach shuffle, no global dedup
+    exchange; the final exchange moves only O(tasks × queries × k) rows
+    into the ranking window. Cosines are quantized to
+    ``_SCORE_DECIMALS`` (see the module docstring) so tie-breaking is
+    block-shape-independent. The query collect is capped at
+    ``_QUERY_MAX_BYTES``.
     """
     import numpy as np
-    import pandas as pd
-
-    from sdvg_spark.ops.dedup import bounded_local_vectors, widen
 
     spark = corpus.sparkSession
-    # dims (when the caller knows it — footer metadata/catalog stats)
-    # turns the byte cap into a row cap: single-job collect, no
-    # estimate action (same contract as ivf_topk's query collect)
-    qloc = bounded_local_vectors(
-        queries.select(F.col(query_id).alias("q_id"), F.col(query_vec).alias("__qv")),
-        "q_id",
-        "__qv",
-        256_000_000,
-        known_dims=dims,
-    )
-    if qloc is None:
-        raise ValueError("query set exceeds max_query_bytes")
-    q_ids, Q = qloc
+    q_ids, Q = _local_queries(queries, query_id, query_vec, dims)
     if len(q_ids) == 0:
-        return spark.createDataFrame(
-            [], "q_id long, c_id long, cosine double, rank int"
-        )
+        return _empty_result(spark)
     if dims is None:
         dims = Q.shape[1]
     w_flat = hyperplane_weights(n_planes, n_tables, seed, dims).reshape(
         n_tables * n_planes, dims
     )
-    # query signatures + multiprobe expansion, driver-side (same
-    # sign-of-dot rule as hyperplane_sigs_df, raw vectors)
-    qbits = (Q @ w_flat.T) >= 0
-    qsigs = np.zeros((len(q_ids), n_tables), dtype=np.int64)
-    for t in range(n_tables):
-        for p in range(n_planes):
-            qsigs[:, t] |= qbits[:, t * n_planes + p].astype(np.int64) << p
+    # query signatures + multiprobe expansion, driver-side
+    qsigs = _signatures(Q, w_flat, n_tables, n_planes)
     flips = [0]
     if multiprobe >= 1:
         flips += [1 << b for b in range(n_planes)]
@@ -440,24 +405,11 @@ def lsh_topk(
             for fl in flips:
                 buckets.setdefault(int(qsigs[qi, t]) ^ fl, []).append(qi)
         tables.append({s: np.array(v, dtype=np.int64) for s, v in buckets.items()})
-    qn = np.linalg.norm(Q, axis=1)
-    qn[qn == 0] = 1.0
-    Qn = Q / qn[:, None]
     bc = spark.sparkContext.broadcast(
-        (q_ids, Qn, w_flat, n_tables, n_planes, tables)
+        (q_ids, _unit_rows(Q), w_flat, n_tables, n_planes, tables)
     )
-    part = (
-        widen(corpus, min_bytes=4 << 20)
-        .select(F.col(corpus_id).alias("c_id"), F.col(corpus_vec).alias("__v"))
-        .mapInPandas(
-            _lsh_taskmerge_kernel(bc, int(k)), "q_id long, c_id long, cosine double"
-        )
-    )
-    final = part.withColumn(
-        "rank",
-        F.row_number().over(Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))),
-    ).where(F.col("rank") <= k)
-    return final.select("q_id", "c_id", "cosine", "rank")
+    kernel = _lsh_taskmerge_kernel(bc, int(k))
+    return _ranked(_corpus_pass(corpus, corpus_id, corpus_vec, kernel), k)
 
 
 def _quantized_fused_kernel(bc, short_n: int):
@@ -530,222 +482,121 @@ def _quantized_fused_kernel(bc, short_n: int):
     return run
 
 
-def _lsh_fused_kernel(bc, top_n: int):
-    """mapInPandas kernel: per-table signatures + bucket lookup +
-    scoring + per-query partition-local top-k in ONE pass over the
-    corpus.
+class _TaskPool:
+    """One task's running per-query top-k. Block winners accumulate and
+    are compacted to the exact per-query top-``top_n``
+    (:func:`_pool_topk`) once more than ``compact_rows`` are pending,
+    so a task's candidate footprint stays flat no matter how many
+    batches × cells/buckets it scans. Once a query's pool is full, its
+    k-th score is a floor later candidates must reach (ties kept:
+    ``>=``), so post-warmup blocks contribute little. With ``dedup``,
+    repeated (q, c) pairs are dropped before every cut (lsh's
+    cross-table collisions must count ONCE). The pool stores query
+    INDICES into the broadcast query arrays."""
 
-    ``bc`` broadcasts ``(q_ids, Qn, w_flat, n_tables, n_planes,
-    tables)`` where ``tables[t]`` maps a signature to the indices (into
-    ``Qn``) of the queries probing that bucket of table ``t``
-    (multiprobe expansion already applied). Each partition buffers its
-    vectors, signs them against the hyperplane tensor, scores each
-    locally-present probed bucket's rows against that bucket's queries,
-    dedups candidates per query across tables (same-pair collisions in
-    several tables count once — legal per batch because a corpus row
-    lives in exactly one batch, so cross-table duplicates of a pair
-    never straddle batches), and keeps the top-k with the usual
-    boundary-tie rule (every row ≥ the k-th score survives to the c_id
-    tiebreak). The cut applies PER ARROW BATCH — the ranking window
-    reduces across batches/partitions (finer local cuts stay correct),
-    and peak memory is O(batch), never O(partition vectors).
+    def __init__(self, n_queries: int, top_n: int, compact_rows: int, dedup: bool):
+        import numpy as np
 
-    Scores are quantized to ``_SCORE_DECIMALS`` straight off the gemm
-    (module-docstring contract) so this kernel and the task-merged
-    default emit identical values for any block decomposition.
+        self.top_n, self.compact_rows, self.dedup = top_n, compact_rows, dedup
+        self.thr = np.full(n_queries, -np.inf)
+        self.parts: list = []
+        self.pending = 0
 
-    NOT an entry-point kernel since round 10: per-batch emission
-    buffers the full (tables × probing-queries × rows) triple set —
-    ~110 GB per 64k-row Arrow batch at the sf100 census, OOM-killing
-    the workers (SHUFFLE_r09.md). Retained as the semantic reference
-    the property suite reduces ``_lsh_taskmerge_kernel`` against."""
+    def add(self, qi, c, s) -> None:
+        keep = s >= self.thr[qi]
+        if keep.any():
+            self.parts.append((qi[keep], c[keep], s[keep]))
+            self.pending += int(keep.sum())
+            if self.pending > self.compact_rows:
+                self.compact()
+
+    def compact(self):
+        import numpy as np
+
+        q, c, s = (np.concatenate(a) for a in zip(*self.parts))
+        if self.dedup:
+            q, c, s = _dedup_pool(q, c, s)
+        q, c, s = _pool_topk(q, c, s, self.top_n)
+        self.parts = [(q, c, s)]
+        self.pending = len(q)
+        starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
+        full = starts[np.diff(np.append(starts, len(q))) >= self.top_n]
+        self.thr[q[full]] = s[full + self.top_n - 1]
+        return q, c, s
+
+
+def _pooled_kernel(
+    bc, top_n: int, compact_rows: int, blocks, *, dedup: bool = False,
+    decimals: int | None = None,
+):
+    """mapInPandas kernel shared by the lsh and ivf searches. ``bc``
+    broadcasts a payload whose first two elements are the sorted query
+    ids and their unit-normalized matrix. Per Arrow batch,
+    ``blocks(payload, pdf, M, C)`` (raw and unit-normalized vectors)
+    yields ``(row positions, probing query indices)`` scoring blocks;
+    each block's :func:`_block_topk` winners feed ONE
+    :class:`_TaskPool`, and the task emits the pool — ≤ queries ×
+    top_n rows — once, at the end. Rows carry ``__v``, or the int8
+    index layout's ``qvec`` + ``scale``, decoded as code × scale."""
     import numpy as np
     import pandas as pd
 
     def run(batches):
-        q_ids, Qn, w_flat, n_tables, n_planes, tables = bc.value
+        payload = bc.value
+        q_ids, Qn = payload[0], payload[1]
         if len(q_ids) == 0:
             return
-        nq = len(q_ids)
+        pool = _TaskPool(len(q_ids), top_n, compact_rows, dedup)
         for pdf in batches:
             if not len(pdf):
                 continue
-            M = np.array(list(pdf["__v"]), dtype=np.float64)
-            c_ids = pdf["c_id"].to_numpy(dtype=np.int64)
-            bits = (M @ w_flat.T) >= 0  # sign rule ≡ hyperplane_sigs_df
-            sigs = np.zeros((len(M), n_tables), dtype=np.int64)
-            for t in range(n_tables):
-                for p in range(n_planes):
-                    sigs[:, t] |= bits[:, t * n_planes + p].astype(np.int64) << p
-            nrm = np.linalg.norm(M, axis=1)
-            nrm[nrm == 0] = 1.0
-            C = M / nrm[:, None]
-            # gather (query, candidate, score) triples across tables as
-            # flat arrays; per-bucket scoring stays a matmul. The
-            # previous shape accumulated per-query PYTHON lists and
-            # finished with an argpartition loop over every query —
-            # fine at thousands of queries, hours at a corpus-scale
-            # census (the same trap fixed in the ivf kernels).
-            tri_q: list = []
-            tri_c: list = []
-            tri_s: list = []
-            for t in range(n_tables):
-                tbl = tables[t]
-                col = sigs[:, t]
-                uniq, inv = np.unique(col, return_inverse=True)
-                for ui in range(len(uniq)):
-                    qidx = tbl.get(int(uniq[ui]))
-                    if qidx is None:
-                        continue
-                    rows = np.flatnonzero(inv == ui)
-                    sims = np.round(C[rows] @ Qn[qidx].T, _SCORE_DECIMALS)
-                    tri_q.append(np.repeat(np.asarray(qidx), len(rows)))
-                    tri_c.append(np.tile(c_ids[rows], len(qidx)))
-                    tri_s.append(sims.T.ravel())
-            if tri_q:
-                q = np.concatenate(tri_q)
-                c = np.concatenate(tri_c)
-                s = np.concatenate(tri_s)
-                # cross-table dedup of (query, candidate): same pair in
-                # several tables scores identically, keep one
-                o = np.lexsort((c, q))
-                q, c, s = q[o], c[o], s[o]
-                first = np.r_[True, (q[1:] != q[:-1]) | (c[1:] != c[:-1])]
-                q, c, s = q[first], c[first], s[first]
-                # per-query (score DESC, id ASC) top-k in one pass:
-                # rank-within-group on the fully ordered triples selects
-                # exactly the rows the old threshold+tiebreak cut did
-                o = np.lexsort((c, -s, q))
-                q, c, s = q[o], c[o], s[o]
-                starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
-                grp = np.repeat(starts, np.diff(np.append(starts, len(q))))
-                keep = (np.arange(len(q)) - grp) < top_n
-                out_q = [np.asarray(q_ids, dtype=np.int64)[q[keep]]]
-                out_c = [c[keep]]
-                out_s = [s[keep]]
+            if "qvec" in pdf.columns:
+                M = np.array(list(pdf["qvec"]), dtype=np.float64)
+                M *= pdf["scale"].to_numpy(dtype=np.float64)[:, None]
             else:
-                out_q = []
-                out_c = []
-                out_s = []
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "q_id": np.concatenate(out_q),
-                        "c_id": np.concatenate(out_c),
-                        "cosine": np.concatenate(out_s),
-                    }
-                )
+                M = np.array(list(pdf["__v"]), dtype=np.float64)
+            C = _unit_rows(M)
+            c_ids = pdf["c_id"].to_numpy(dtype=np.int64)
+            for rows, qidx in blocks(payload, pdf, M, C):
+                for qi, c, s in _block_topk(C[rows], c_ids[rows], Qn, qidx, top_n, decimals):
+                    pool.add(qi, c, s)
+        if pool.parts:
+            q, c, s = pool.compact()
+            yield pd.DataFrame(
+                {"q_id": np.asarray(q_ids, dtype=np.int64)[q], "c_id": c, "cosine": s}
+            )
 
     return run
 
 
 def _lsh_taskmerge_kernel(bc, top_n: int, compact_rows: int = _POOL_COMPACT_ROWS):
-    """mapInPandas kernel (the :func:`lsh_topk` default): per-table
-    signatures + bucket scoring + ONE running per-query top-k pool for
-    the whole task — the scale fix for ``_lsh_fused_kernel``, which
-    buffers the full batch triple set (tables × probing-queries × rows)
-    before compacting; at the sf100 census that is ~110 GB per 64k-row
-    Arrow batch and the Python workers die on the allocation
-    (SHUFFLE_r09.md).
-
-    Three bounds replace the batch buffer:
-
-    * per-(table, bucket) block cut — each scored block contributes at
-      most |probing queries| × top_n rows (``_topk_select``, the exact
-      per-block cut every kernel here shares);
-    * a per-query score threshold — once a query's pool holds top_n
-      candidates, its k-th score is a floor no later candidate may
-      under-run (ties kept: ``>=``), so post-warmup blocks contribute
-      little;
-    * pool compaction past ``compact_rows``: dedup cross-table (q, c)
-      repeats, cut to exact per-query top-k, refresh the thresholds.
-
-    Scores are quantized to ``_SCORE_DECIMALS`` straight off each gemm
-    — BEFORE the threshold, the block cut, and every pool cut — so the
-    (score DESC, id ASC) order is a total order identical across block
-    decompositions and the exact pool cuts are associative (the r9
-    Hypothesis counterexample: an ulp-noise winner evicted the id-ASC
-    tie winner permanently). The pool stores query INDICES (positions
-    in the sorted q_ids / Qn), mapped to ids once at emission.
-    """
+    """mapInPandas kernel of :func:`lsh_topk`. ``bc`` broadcasts
+    ``(q_ids, Qn, w_flat, n_tables, n_planes, tables)`` where
+    ``tables[t]`` maps a signature to the indices (into ``Qn``) of the
+    queries probing that bucket of table ``t`` (multiprobe expansion
+    already applied). Each batch's vectors are signed
+    (:func:`_signatures`); every locally present probed bucket of every
+    table is one scoring block. Scores are quantized to
+    ``_SCORE_DECIMALS`` straight off each gemm — BEFORE the threshold,
+    the block cut and every pool cut — so the (score DESC, id ASC)
+    order is identical across block decompositions and a pair that
+    collides in several tables carries one score (the pool keeps one
+    instance)."""
     import numpy as np
-    import pandas as pd
 
-    def run(batches):
-        q_ids, Qn, w_flat, n_tables, n_planes, tables = bc.value
-        nq = len(q_ids)
-        if nq == 0:
-            return
-        q_arr = np.asarray(q_ids, dtype=np.int64)
-        acc_q: list = []
-        acc_c: list = []
-        acc_s: list = []
-        pending = 0
-        thr = np.full(nq, -np.inf)
+    def blocks(payload, pdf, M, C):
+        _, _, w_flat, n_tables, n_planes, tables = payload
+        sigs = _signatures(M, w_flat, n_tables, n_planes)
+        for t in range(n_tables):
+            uniq, inv = np.unique(sigs[:, t], return_inverse=True)
+            for ui, sig in enumerate(uniq):
+                qidx = tables[t].get(int(sig))
+                if qidx is not None and len(qidx):
+                    yield np.flatnonzero(inv == ui), qidx
 
-        def compact():
-            nonlocal pending
-            q = np.concatenate(acc_q)
-            c = np.concatenate(acc_c)
-            s = np.concatenate(acc_s)
-            q, c, s = _dedup_pool(q, c, s)
-            q, c, s = _pool_topk(q, c, s, top_n)
-            acc_q[:], acc_c[:], acc_s[:] = [q], [c], [s]
-            pending = len(q)
-            starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
-            counts = np.diff(np.append(starts, len(q)))
-            full = counts >= top_n
-            thr[q[starts[full]]] = s[starts[full] + top_n - 1]
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.array(list(pdf["__v"]), dtype=np.float64)
-            c_ids = pdf["c_id"].to_numpy(dtype=np.int64)
-            bits = (M @ w_flat.T) >= 0  # sign rule ≡ hyperplane_sigs_df
-            sigs = np.zeros((len(M), n_tables), dtype=np.int64)
-            for t in range(n_tables):
-                for p in range(n_planes):
-                    sigs[:, t] |= bits[:, t * n_planes + p].astype(np.int64) << p
-            nrm = np.linalg.norm(M, axis=1)
-            nrm[nrm == 0] = 1.0
-            C = M / nrm[:, None]
-            for t in range(n_tables):
-                tbl = tables[t]
-                col = sigs[:, t]
-                uniq, inv = np.unique(col, return_inverse=True)
-                for ui in range(len(uniq)):
-                    qidx = tbl.get(int(uniq[ui]))
-                    if qidx is None or not len(qidx):
-                        continue
-                    rows = np.flatnonzero(inv == ui)
-                    ids_b = c_ids[rows]
-                    Cb = C[rows]
-                    top = min(top_n, len(rows))
-                    qidx = np.asarray(qidx, dtype=np.int64)
-                    chunk = max(1, _SCORE_CHUNK_ELEMS // len(rows))
-                    for s0 in range(0, len(qidx), chunk):
-                        qc = qidx[s0 : s0 + chunk]
-                        sims = np.round(Cb @ Qn[qc].T, _SCORE_DECIMALS)
-                        cols, rws = _topk_select(sims, ids_b, top)
-                        sv = sims[rws, cols]
-                        qi = qc[cols]
-                        keep = sv >= thr[qi]
-                        if not keep.any():
-                            continue
-                        acc_q.append(qi[keep])
-                        acc_c.append(ids_b[rws[keep]])
-                        acc_s.append(sv[keep])
-                        pending += int(keep.sum())
-                        if pending > compact_rows:
-                            compact()
-        if acc_q:
-            compact()
-            yield pd.DataFrame(
-                {"q_id": q_arr[acc_q[0]], "c_id": acc_c[0], "cosine": acc_s[0]}
-            )
-
-    return run
+    return _pooled_kernel(
+        bc, top_n, compact_rows, blocks, dedup=True, decimals=_SCORE_DECIMALS
+    )
 
 
 def _centroid_assign_kernel(bc, id_name: str, top: int, vec_out: str | None = None):
@@ -786,137 +637,31 @@ def _centroid_assign_kernel(bc, id_name: str, top: int, vec_out: str | None = No
     return run
 
 
-def _ivf_fused_kernel(bc, top_n: int):
-    """mapInPandas kernel: cell assignment + candidate scoring +
-    per-(cell, query) partition-local top-k in ONE pass over the corpus.
-
-    ``bc`` broadcasts ``(q_ids, Qn, cent, probing)`` — normalized query
-    matrix, normalized centroid matrix, and ``probing[cell]`` = indices
-    into ``Qn`` of the queries whose n_probe nearest cells include
-    ``cell``. Each Arrow batch assigns its vectors to cells, scores
-    every locally-present cell's block against only its probing
-    queries, and keeps the block's top-k per query. A corpus vector
-    belongs to exactly one cell (and one batch), so the union of
-    winners is duplicate-free and any global top-k row survives its
-    own (batch, cell) cut — same boundary-tie rule as
-    :func:`_partition_topk_kernel` (every row ≥ the k-th score is kept
-    before the c_id tiebreak cuts). Per-batch processing keeps peak
-    memory at O(batch), never O(partition vectors).
-
-    NOT an entry-point kernel since round 10: per-(batch, cell)
-    emission hands ≈ queries × n_probe × k rows per task to the
-    ranking exchange, whose map-side rank≤k prune sorted 4.8M rows per
-    task at the sf100 census — 127 GB memory / 51 GB disk spill
-    (SHUFFLE_r09.md). Retained as the semantic reference the property
-    suite reduces ``_ivf_taskmerge_kernel`` against."""
-    import numpy as np
-    import pandas as pd
-
-    def run(batches):
-        q_ids, Qn, cent, probing = bc.value
-        if len(q_ids) == 0:
-            return
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.array(list(pdf["__v"]), dtype=np.float64)
-            nrm = np.linalg.norm(M, axis=1)
-            nrm[nrm == 0] = 1.0
-            C = M / nrm[:, None]
-            c_ids = pdf["c_id"].to_numpy(dtype=np.int64)
-            cells = np.argmax(C @ cent.T, axis=1)  # first max = lowest cell
-            out_q, out_c, out_s = [], [], []
-            for cell in np.unique(cells):
-                qidx = probing[cell]
-                if not len(qidx):
-                    continue
-                rows = np.flatnonzero(cells == cell)
-                _block_topk_into(
-                    C[rows], c_ids[rows], Qn, qidx, q_ids, top_n,
-                    out_q, out_c, out_s,
-                )
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "q_id": np.concatenate(out_q),
-                        "c_id": np.concatenate(out_c),
-                        "cosine": np.concatenate(out_s),
-                    }
-                )
-
-    return run
-
-
 def _ivf_taskmerge_kernel(bc, top_n: int, compact_rows: int = _POOL_COMPACT_ROWS):
-    """mapInPandas kernel (the :func:`ivf_topk` default): cell
-    assignment + candidate scoring + ONE running per-query top-k pool
-    for the whole task.
-
-    Identical per-block scoring to ``_ivf_fused_kernel`` (it calls the
-    same ``_block_topk_into``); the difference is that block winners
-    accumulate into a task-wide pool that is compacted to exact
-    per-query top-k whenever it exceeds ``compact_rows``, and the task
-    emits a single Arrow batch of ≤ queries × top_n rows at the end
-    instead of per-(batch, cell) frames — the sf100 pre-rank-sort
-    spill fix, A/B'd at 1062 partitions to ZERO spill at equal wall
-    (SHUFFLE_r09.md). Per-query top-k under (score DESC, id ASC) is
-    associative across row subsets (a corpus vector lives in exactly
-    one cell and one batch, so every pair is scored ONCE and the order
-    is strict — no cross-shape tie hazard, unlike lsh), so the pool
-    cut never drops a global winner; property-tested against the fused
-    reference over random censuses, batch sizes, and compaction
-    cadences.
-    """
+    """mapInPandas kernel of :func:`ivf_topk` and :func:`ivf_index_topk`.
+    ``bc`` broadcasts ``(q_ids, Qn, cent, probing)``: ``probing[cell]``
+    = indices (into ``Qn``) of the queries whose n_probe nearest cells
+    include ``cell``. With centroids, each vector's cell is its nearest
+    normalized centroid (ties to the lowest cell, as in
+    :func:`_centroid_assign_kernel`); with ``cent=None`` the rows carry
+    the ``cell`` column a persisted index stored. Every locally present
+    probed cell is one scoring block. A corpus vector lives in exactly
+    one cell and one batch, so every pair is scored ONCE and the pool
+    needs no dedup."""
     import numpy as np
-    import pandas as pd
 
-    def run(batches):
-        q_ids, Qn, cent, probing = bc.value
-        if len(q_ids) == 0:
-            return
-        acc_q: list = []
-        acc_c: list = []
-        acc_s: list = []
-        pending = 0
-
-        def compact():
-            nonlocal pending
-            q = np.concatenate(acc_q)
-            c = np.concatenate(acc_c)
-            s = np.concatenate(acc_s)
-            q, c, s = _pool_topk(q, c, s, top_n)
-            acc_q[:], acc_c[:], acc_s[:] = [q], [c], [s]
-            pending = len(q)
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.array(list(pdf["__v"]), dtype=np.float64)
-            nrm = np.linalg.norm(M, axis=1)
-            nrm[nrm == 0] = 1.0
-            C = M / nrm[:, None]
-            c_ids = pdf["c_id"].to_numpy(dtype=np.int64)
+    def blocks(payload, pdf, M, C):
+        cent, probing = payload[2], payload[3]
+        if cent is None:
+            cells = pdf["cell"].to_numpy(dtype=np.int64)
+        else:
             cells = np.argmax(C @ cent.T, axis=1)  # first max = lowest cell
-            before = len(acc_q)
-            for cell in np.unique(cells):
-                qidx = probing[cell]
-                if not len(qidx):
-                    continue
-                rows = np.flatnonzero(cells == cell)
-                _block_topk_into(
-                    C[rows], c_ids[rows], Qn, qidx, q_ids, top_n,
-                    acc_q, acc_c, acc_s,
-                )
-            pending += sum(len(a) for a in acc_q[before:])
-            if pending > compact_rows:
-                compact()
-        if acc_q:
-            compact()
-            yield pd.DataFrame(
-                {"q_id": acc_q[0], "c_id": acc_c[0], "cosine": acc_s[0]}
-            )
+        for cell in np.unique(cells):
+            qidx = probing[cell]
+            if len(qidx):
+                yield np.flatnonzero(cells == cell), qidx
 
-    return run
+    return _pooled_kernel(bc, top_n, compact_rows, blocks)
 
 
 def ivf_topk(
@@ -974,10 +719,7 @@ def ivf_topk(
     census that previously sorted 4.8M rows/task, 127 GB spill —
     SHUFFLE_r09.md). Ties everywhere break by id/cell ascending.
     """
-    import numpy as np
-    import pandas as pd
-
-    from sdvg_spark.ops.dedup import bounded_local_vectors, widen
+    from sdvg_spark.ops.dedup import bounded_local_vectors
 
     # Byte cap on the centroid collect: with `dims` in hand the cap is a
     # correct row cap (single-job collect path); without it, run the
@@ -993,51 +735,20 @@ def ivf_topk(
     )
     if loc is None:  # n_cells rows alone exceeded the cap
         raise ValueError("n_cells × dims exceeds centroid_max_bytes")
-    _, cent = loc  # ids sorted ascending -> cell index = rank of id
-    cnorm = np.linalg.norm(cent, axis=1)
-    cnorm[cnorm == 0] = 1.0
-    cent = cent / cnorm[:, None]
+    cent = _unit_rows(loc[1])  # ids sorted ascending -> cell index = rank of id
     spark = corpus.sparkSession
 
-    # Queries are driver-bounded by contract (256 MB byte cap), so
-    # collect them ONCE and derive the
-    # probe assignment locally with the exact arithmetic of
-    # _centroid_assign_kernel (float64 normalize, stable argsort); the
-    # inverted cell→queries map then rides the broadcast into the fused
-    # corpus pass.
-    qloc = bounded_local_vectors(
-        queries.select(F.col(query_id).alias("q_id"), F.col(query_vec).alias("__qv")),
-        "q_id",
-        "__qv",
-        256_000_000,
-        known_dims=cent.shape[1],  # single-job collect: dims known
-    )
-    if qloc is None:
-        raise ValueError("query set exceeds max_query_bytes")
-    q_ids, Q = qloc
+    # The queries are collected ONCE (single job: dims known from the
+    # centroids) and probe their cells driver-side with the assignment
+    # kernel's arithmetic; the inverted cell→queries map then rides the
+    # broadcast into the corpus pass.
+    q_ids, Q = _local_queries(queries, query_id, query_vec, cent.shape[1])
     if len(q_ids) == 0:
-        return spark.createDataFrame(
-            [], "q_id long, c_id long, cosine double, rank int"
-        )
-    qn = np.linalg.norm(Q, axis=1)
-    qn[qn == 0] = 1.0
-    Qn = Q / qn[:, None]
-    order = np.argsort(-(Qn @ cent.T), axis=1, kind="stable")[:, :n_probe]
-    probing = [np.flatnonzero((order == c).any(axis=1)) for c in range(len(cent))]
-    bc = spark.sparkContext.broadcast((q_ids, Qn, cent, probing))
-
-    part = (
-        widen(corpus, min_bytes=4 << 20)
-        .select(F.col(corpus_id).alias("c_id"), F.col(corpus_vec).alias("__v"))
-        .mapInPandas(
-            _ivf_taskmerge_kernel(bc, int(k)), "q_id long, c_id long, cosine double"
-        )
-    )
-    final = part.withColumn(
-        "rank",
-        F.row_number().over(Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))),
-    ).where(F.col("rank") <= k)
-    return final.select("q_id", "c_id", "cosine", "rank")
+        return _empty_result(spark)
+    Qn = _unit_rows(Q)
+    bc = spark.sparkContext.broadcast((q_ids, Qn, cent, _probing(Qn, cent, n_probe)))
+    kernel = _ivf_taskmerge_kernel(bc, int(k))
+    return _ranked(_corpus_pass(corpus, corpus_id, corpus_vec, kernel), k)
 
 
 def _rewrite_filter(query_filter: str, id_col: str, alias: str) -> str:
@@ -1236,9 +947,7 @@ def ivf_train_centroids(
     ids, M = loc
     if len(ids) < n_cells:
         raise ValueError(f"sample has {len(ids)} rows < n_cells={n_cells}")
-    nrm = np.linalg.norm(M, axis=1)
-    nrm[nrm == 0] = 1.0
-    M = M / nrm[:, None]
+    M = _unit_rows(M)
     cent = M[:n_cells].copy()  # ids sorted ascending -> smallest-id seed
     for _ in range(n_iters):
         assign = np.argmax(M @ cent.T, axis=1)  # first max = lowest cell
@@ -1351,100 +1060,33 @@ def ivf_index_topk(
 
     The probed cell set (≤ n_cells values by construction — it is a
     subset of the centroid count, not data-sized) is derived driver-side
-    from the collected query matrix (same float64 normalize + stable
-    argsort as :func:`_centroid_assign_kernel`) and pushed into the
-    parquet scan as a partition filter, so unprobed cells are pruned
-    before any bytes are read. Candidates come out of the scan WITH
-    their vectors (the layout stores them; the quantized layout
-    reconstructs code·scale inside the kernel), so scoring is the same
-    normalized multiply-sum Arrow kernel as the other search paths — no
-    corpus re-attach shuffle, no interpreted per-element cosine.
+    from the collected query matrix (:func:`_probing`) and pushed into
+    the parquet scan as a partition filter, so unprobed cells are pruned
+    before any bytes are read. The scan feeds :func:`_ivf_taskmerge_kernel`
+    directly: candidates come out WITH their vectors (the int8 layout
+    is decoded as code × scale inside the kernel) and their stored
+    cell, so nothing is joined and each task emits ≤ queries × k rows.
     """
     import numpy as np
-    import pandas as pd
-
-    from sdvg_spark.ops.dedup import bounded_local_vectors
 
     spark = queries.sparkSession
     cent = np.asarray(centroids, dtype=np.float64)
-    qloc = bounded_local_vectors(
-        queries.select(F.col(query_id).alias("q_id"), F.col(query_vec).alias("__qv")),
-        "q_id",
-        "__qv",
-        256_000_000,
-        known_dims=cent.shape[1],
-    )
-    if qloc is None:
-        raise ValueError("query set exceeds max_query_bytes")
-    q_ids, Q = qloc
+    q_ids, Q = _local_queries(queries, query_id, query_vec, cent.shape[1])
     if len(q_ids) == 0:
-        return spark.createDataFrame(
-            [], "q_id long, c_id long, cosine double, rank int"
-        )
-    qn = np.linalg.norm(Q, axis=1)
-    qn[qn == 0] = 1.0
-    Qn = Q / qn[:, None]
-    # centroids arrive normalized from ivf_train_centroids; the stable
-    # argsort mirrors the assignment kernel's tie rule (lowest cell)
-    order = np.argsort(-(Qn @ cent.T), axis=1, kind="stable")[:, :n_probe]
-    cells = sorted(int(c) for c in np.unique(order))
-    # fused index-scan kernel (same shape as ivf_topk's): score each
-    # pruned cell's block against only its probing queries and keep the
-    # (batch, cell) top-k INSIDE the scan pass. The previous form
-    # broadcast-joined a (q_id, cell) probe table onto the index —
-    # materializing every (query, cell-row) candidate WITH its vector
-    # (queries/n_cells × corpus rows) and scoring row-by-row; at the
-    # sf10 scale point that stage spilled 2.5 GB. Now nothing is
-    # joined: the exchange moves O(partitions × queries × k) rows.
-    probing = [np.flatnonzero((order == c).any(axis=1)) for c in range(len(cent))]
-    bcq = spark.sparkContext.broadcast((q_ids, Qn, probing))
+        return _empty_result(spark)
+    Qn = _unit_rows(Q)
+    # centroids arrive normalized from ivf_train_centroids
+    probing = _probing(Qn, cent, n_probe)
+    bc = spark.sparkContext.broadcast((q_ids, Qn, None, probing))
     reader = spark.read if index_schema is None else spark.read.schema(index_schema)
-    index = reader.parquet(path).where(F.col("cell").isin(cells))
-    quantized = "qvec" in index.columns
-    vec_cols = ["qvec", "scale"] if quantized else ["vec"]
-    sel = index.select("c_id", "cell", *vec_cols)
-    top_n = int(k)
-
-    def run(batches):
-        b_qids, b_Q, b_probing = bcq.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if quantized:
-                M = np.array(list(pdf["qvec"]), dtype=np.float64)
-                M *= pdf["scale"].to_numpy(dtype=np.float64)[:, None]
-            else:
-                M = np.array(list(pdf["vec"]), dtype=np.float64)
-            nrm = np.linalg.norm(M, axis=1)
-            nrm[nrm == 0] = 1.0
-            C = M / nrm[:, None]
-            c_ids = pdf["c_id"].to_numpy(dtype=np.int64)
-            row_cells = pdf["cell"].to_numpy(dtype=np.int64)
-            out_q, out_c, out_s = [], [], []
-            for cell in np.unique(row_cells):
-                qidx = b_probing[cell]
-                if not len(qidx):
-                    continue
-                rows = np.flatnonzero(row_cells == cell)
-                _block_topk_into(
-                    C[rows], c_ids[rows], b_Q, qidx, b_qids, top_n,
-                    out_q, out_c, out_s,
-                )
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "q_id": np.concatenate(out_q),
-                        "c_id": np.concatenate(out_c),
-                        "cosine": np.concatenate(out_s),
-                    }
-                )
-
-    scored = sel.mapInPandas(run, "q_id long, c_id long, cosine double")
-    final = scored.withColumn(
-        "rank",
-        F.row_number().over(Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))),
-    ).where(F.col("rank") <= k)
-    return final.select("q_id", "c_id", "cosine", "rank")
+    index = reader.parquet(path).where(
+        F.col("cell").isin([c for c, qidx in enumerate(probing) if len(qidx)])
+    )
+    if "qvec" in index.columns:
+        index = index.select("c_id", "cell", "qvec", "scale")
+    else:
+        index = index.select("c_id", "cell", F.col("vec").alias("__v"))
+    return _ranked(index.mapInPandas(_ivf_taskmerge_kernel(bc, int(k)), _PAIRS), k)
 
 
 def quantized_rescore_topk(
@@ -1495,22 +1137,12 @@ def quantized_rescore_topk(
     """
     import numpy as np
 
-    from sdvg_spark.ops.dedup import bounded_local_vectors, widen
     from sdvg_spark.ops.vectors import Q_MAX
 
     spark = corpus.sparkSession
-    loc = bounded_local_vectors(
-        queries.select(F.col(query_id).alias("q_id"), F.col(query_vec).alias("__qv")),
-        "q_id",
-        "__qv",
-        max_query_bytes,
-        known_dims=dims,
-    )
-    if loc is None:
-        raise ValueError("query set exceeds max_query_bytes")
-    q_ids, q_mat = loc
+    q_ids, q_mat = _local_queries(queries, query_id, query_vec, dims, max_query_bytes)
     if len(q_ids) == 0:
-        return spark.createDataFrame([], "q_id long, c_id long, cosine double, rank int")
+        return _empty_result(spark)
     # quantize queries with the same rule as the corpus codes. Rounding
     # must be half-away-from-zero ON THE EXACT DOUBLE to match Spark's
     # round()/DuckDB's round(): np.round is banker's (ties to even),
@@ -1523,19 +1155,15 @@ def quantized_rescore_topk(
     frac = scaled - whole  # exact: |scaled| <= 127 << 2^52
     q_codes = whole + np.where(np.abs(frac) >= 0.5, np.copysign(1.0, scaled), 0.0)
     q_cc = (q_codes * q_codes).sum(axis=1)  # exact ints in float64
-    qn = np.linalg.norm(q_mat, axis=1)
-    qn[qn == 0] = 1.0
-    Qn = q_mat / qn[:, None]
-    bc = spark.sparkContext.broadcast((q_ids, q_codes, q_cc, Qn))
+    bc = spark.sparkContext.broadcast((q_ids, q_codes, q_cc, _unit_rows(q_mat)))
     short_n = int(k * shortlist)
 
-    part = (
-        widen(corpus, min_bytes=4 << 20)
-        .select(F.col(corpus_id).alias("c_id"), F.col(corpus_vec).alias("__v"))
-        .mapInPandas(
-            _quantized_fused_kernel(bc, short_n),
-            "q_id long, c_id long, approx double, cosine double",
-        )
+    part = _corpus_pass(
+        corpus,
+        corpus_id,
+        corpus_vec,
+        _quantized_fused_kernel(bc, short_n),
+        "q_id long, c_id long, approx double, cosine double",
     )
     shortlisted = part.withColumn(
         "srank",
@@ -1543,11 +1171,7 @@ def quantized_rescore_topk(
             Window.partitionBy("q_id").orderBy(F.desc("approx"), F.asc("c_id"))
         ),
     ).where(F.col("srank") <= short_n)
-    final = shortlisted.withColumn(
-        "rank",
-        F.row_number().over(Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))),
-    ).where(F.col("rank") <= k)
-    return final.select("q_id", "c_id", "cosine", "rank")
+    return _ranked(shortlisted, k)
 
 
 def quantized_rescore_oracle_sql(

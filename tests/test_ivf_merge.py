@@ -1,5 +1,5 @@
-"""Task-merged IVF kernel (similarity._ivf_taskmerge_kernel — the
-ivf_topk default since round 10): value identity against an
+"""Task-merged IVF kernel (similarity._ivf_taskmerge_kernel — what
+ivf_topk and ivf_index_topk run): value identity against an
 independent numpy ground truth, the per-task emission bound that IS
 the sf100 spill fix, and exact tie semantics of the pool cut."""
 
@@ -67,6 +67,72 @@ def test_ivf_topk_matches_numpy_ground_truth(spark):
     assert got == want and len(want) > 0
 
 
+def test_ivf_index_topk_exact_across_arrow_batches(spark, tmp_path):
+    """The persisted-index search runs the task-merged kernel over the
+    pruned scan, reading each row's cell from the index. With 7-row
+    Arrow batches every task pools many batches and cells; the answer
+    must still be the exact per-query top-k over the probed cells —
+    for the raw layout (vs the operator's numpy ground truth:
+    n_iters=0 centroids are the smallest-id rows) and for the int8
+    layout (vs numpy over the read-back code × scale vectors)."""
+    from sdvg_spark.ops.similarity import (
+        ivf_index_topk,
+        ivf_train_centroids,
+        ivf_write_index,
+    )
+
+    n, dims, k, n_cells, n_probe = 120, 16, 5, 8, 3
+    rng = np.random.default_rng(29)
+    V = rng.normal(size=(n, dims))
+    ids = np.arange(n, dtype=np.int64)
+    emb = spark.createDataFrame(
+        [(int(i), V[j].tolist()) for j, i in enumerate(ids)],
+        "vec_id long, embedding array<double>",
+    )
+    q = emb.where(F.col("vec_id") % 10 == 0).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+
+    def search(path, cent):
+        got = {}
+        for r in ivf_index_topk(q, path, cent, k=k, n_probe=n_probe).collect():
+            got.setdefault(r.q_id, []).append((r.c_id, r.rank))
+        return {qid: sorted(v, key=lambda t: t[1]) for qid, v in got.items()}
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        cent = ivf_train_centroids(emb, n_cells=n_cells, n_iters=0)
+        raw, quant = str(tmp_path / "raw"), str(tmp_path / "quant")
+        ivf_write_index(emb, raw, cent)
+        ivf_write_index(emb, quant, cent, quantize=True)
+        got_raw, got_quant = search(raw, cent), search(quant, cent)
+    finally:
+        spark.conf.set(key, old)
+
+    want = _ivf_ground_truth(V, ids, ids % 10 == 0, k, n_cells, n_probe)
+    assert got_raw == want and len(want) > 0
+
+    rows = spark.read.parquet(quant).select("c_id", "cell", "qvec", "scale").collect()
+    c_ids = np.array([r.c_id for r in rows], dtype=np.int64)
+    cells = np.array([r.cell for r in rows])
+    M = np.array([r.qvec for r in rows], dtype=np.float64)
+    M *= np.array([r.scale for r in rows], dtype=np.float64)[:, None]
+    Mn = M / np.linalg.norm(M, axis=1)[:, None]
+    want_quant = {}
+    for qi in np.flatnonzero(ids % 10 == 0):
+        qn = V[qi] / np.linalg.norm(V[qi])
+        probe = np.argsort(-(qn @ cent.T), kind="stable")[:n_probe]
+        cand = np.flatnonzero(np.isin(cells, probe))
+        sims = Mn[cand] @ qn
+        o = np.lexsort((c_ids[cand], -sims))[:k]
+        want_quant[int(ids[qi])] = [
+            (int(cid), rank + 1) for rank, cid in enumerate(c_ids[cand][o])
+        ]
+    assert got_quant == want_quant
+
+
 class _FakeBroadcast:
     def __init__(self, value):
         self.value = value
@@ -109,36 +175,31 @@ def _run_kernel(kernel_factory, bc_val, C, c_ids, top_n, batch_size, **kw):
 
 def test_taskmerge_kernel_emission_bound_and_values():
     """The whole point of the merge: across MANY batches and cells, one
-    task emits at most queries × k rows — and, after the global rank
-    both kernels' emissions reduce to, the selected ids are identical.
-    compact_rows is forced tiny so the mid-stream compaction path runs."""
-    from sdvg_spark.ops.similarity import (
-        _ivf_fused_kernel,
-        _ivf_taskmerge_kernel,
-        _pool_topk,
-    )
+    task emits at most queries × k rows — and they are exactly each
+    query's top-k over the cells it probes (numpy brute force, cosine
+    DESC, id ASC). compact_rows is forced tiny so the mid-stream
+    compaction path runs."""
+    from sdvg_spark.ops.similarity import _ivf_taskmerge_kernel
 
     bc_val, C, c_ids = _kernel_inputs()
-    q_ids = bc_val[0]
+    q_ids, Qn, cent, probing = bc_val
     top = 5
     merged = _run_kernel(
         _ivf_taskmerge_kernel, bc_val, C, c_ids, top, batch_size=17, compact_rows=8
     )
-    fused = _run_kernel(_ivf_fused_kernel, bc_val, C, c_ids, top, batch_size=17)
-    # emission bound: the fused kernel's per-(batch, cell) output is the
-    # spill driver; the merged kernel must stay under queries × k
     assert len(merged) <= len(q_ids) * top
-    assert len(fused) > len(merged)
-    # value identity after the exact global per-query top-k both plans
-    # apply (row_number over cosine DESC, c_id ASC)
-    def reduce(df):
-        q = df["q_id"].to_numpy(np.int64)
-        c = df["c_id"].to_numpy(np.int64)
-        s = df["cosine"].to_numpy(np.float64)
-        qq, cc, ss = _pool_topk(q, c, s, top)
-        return list(zip(qq.tolist(), cc.tolist()))
-
-    assert reduce(merged) == reduce(fused)
+    got = {}
+    for qid, _, cid in sorted(zip(merged["q_id"], -merged["cosine"], merged["c_id"])):
+        got.setdefault(int(qid), []).append(int(cid))
+    Cn = C / np.linalg.norm(C, axis=1)[:, None]
+    cells = np.argmax(Cn @ cent.T, axis=1)
+    want = {}
+    for qi, qid in enumerate(q_ids):
+        rows = np.flatnonzero([qi in probing[cell] for cell in cells])
+        sims = Cn[rows] @ Qn[qi]
+        o = np.lexsort((c_ids[rows], -sims))[:top]
+        want[int(qid)] = c_ids[rows][o].tolist()
+    assert got == want and len(want) > 0
 
 
 def test_pool_topk_exact_cut_and_tiebreak():

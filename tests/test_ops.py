@@ -388,12 +388,14 @@ def test_embedding_exact_cap_fallback_and_error(spark):
 
 
 def test_brute_force_query_cap(spark):
-    from sdvg_spark.ops.similarity import brute_force_topk
+    from sdvg_spark.ops.similarity import brute_force_topk, quantized_rescore_topk
 
     emb = _embeddings(spark)
     q = emb.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
     with pytest.raises(ValueError, match="max_query_bytes"):
         brute_force_topk(emb, q, k=3, max_query_bytes=64)
+    with pytest.raises(ValueError, match="max_query_bytes"):
+        quantized_rescore_topk(emb, q, k=3, max_query_bytes=64)
 
 
 def test_ivf_topk_self_and_recall(spark):

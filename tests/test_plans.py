@@ -145,23 +145,6 @@ def test_no_query_uses_cartesian_or_bnl_joins(spark, entry):
     assert not offenders, offenders
 
 
-def test_hyperplane_sigs_kernel_is_map_only(spark):
-    """Signature computation must be a map-only Arrow stage: no exchange
-    between the scan and the mapInPandas kernel (at 100 TB an extra
-    shuffle there would move the whole corpus once more)."""
-    from pyspark.sql import functions as F
-
-    from sdvg_spark.ops.similarity import hyperplane_sigs_df
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    sig = hyperplane_sigs_df(
-        emb, "vec_id", "embedding", n_planes=6, n_tables=4, seed=7, dims=64
-    )
-    plan = _plan(sig)
-    assert "MapInPandas" in plan
-    assert "Exchange" not in plan  # scan -> kernel, nothing in between
-
-
 def test_ann_search_plans_are_join_free(spark, entry):
     """The task-merged lsh/ivf kernels have no bucket/probe joins and
     no candidate→vector re-attach shuffles — pin that both plans are

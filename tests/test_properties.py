@@ -263,7 +263,44 @@ def test_funnel_replay_equals_chain_and_composes(data, steps, window):
     assert state == one_shot
 
 
-# --- task-merged ANN kernels (ops/similarity.py defaults) ---------------
+# --- task-merged ANN kernels (ops/similarity.py) -----------------------
+
+def _pool_emission(kernel, C, c_ids, batch):
+    """Run a task-merged kernel over the corpus in ``batch``-row frames
+    (one task); its emission as [(q_id, c_id)], per query in (12-dp
+    cosine DESC, id ASC) order."""
+    import pandas as pd
+
+    frames = list(
+        kernel(
+            pd.DataFrame({"c_id": c_ids[s : s + batch], "__v": list(C[s : s + batch])})
+            for s in range(0, len(c_ids), batch)
+        )
+    )
+    if not frames:
+        return []
+    df = pd.concat(frames, ignore_index=True)
+    q = df["q_id"].to_numpy(np.int64)
+    c = df["c_id"].to_numpy(np.int64)
+    s = np.round(df["cosine"].to_numpy(np.float64), 12)
+    o = np.lexsort((c, -s, q))
+    return list(zip(q[o].tolist(), c[o].tolist()))
+
+
+def _exact_topk(C, c_ids, Qn, q_ids, cand, top):
+    """numpy brute force: each query's exact top-``top`` over its
+    candidate rows ``cand[qi]`` (a boolean row mask) under (12-dp cosine
+    DESC, id ASC). The corpus rows are unit-normalized here, as the
+    kernels do."""
+    Cn = C / np.linalg.norm(C, axis=1)[:, None]
+    out = []
+    for qi in range(len(q_ids)):
+        rows = np.flatnonzero(cand[qi])
+        sims = np.round(Cn[rows] @ Qn[qi], 12)
+        o = np.lexsort((c_ids[rows], -sims))[:top]
+        out += [(int(q_ids[qi]), int(cid)) for cid in c_ids[rows][o]]
+    return out
+
 
 @given(
     n=st.integers(20, 300),
@@ -275,19 +312,12 @@ def test_funnel_replay_equals_chain_and_composes(data, steps, window):
     seed=st.integers(0, 2**31 - 1),
 )
 @settings(max_examples=25, deadline=None)
-def test_ivf_taskmerge_pool_reduces_to_fused(n, nq, dims, top, batch, compact, seed):
+def test_ivf_taskmerge_pool_is_exact_topk(n, nq, dims, top, batch, compact, seed):
     """For ANY corpus/query census, batch size, and compaction cadence,
-    the merged ivf kernel's emission reduces (dedup + exact per-query
-    top-k) to the same winners as the per-(batch, cell) fused kernel —
-    the associativity the sf100 spill fix rests on."""
-    import pandas as pd
-
-    from sdvg_spark.ops.similarity import (
-        _dedup_pool,
-        _ivf_fused_kernel,
-        _ivf_taskmerge_kernel,
-        _pool_topk,
-    )
+    the merged ivf kernel's one-per-task emission is exactly each
+    query's top-k over the cells it probes — the associativity the
+    sf100 spill fix rests on."""
+    from sdvg_spark.ops.similarity import _ivf_taskmerge_kernel
 
     rng = np.random.default_rng(seed)
     C = rng.normal(size=(n, dims))
@@ -301,37 +331,15 @@ def test_ivf_taskmerge_pool_reduces_to_fused(n, nq, dims, top, batch, compact, s
     n_probe = max(1, n_cells - 1)
     order = np.argsort(-(Qn @ cent.T), axis=1, kind="stable")[:, :n_probe]
     probing = [np.flatnonzero((order == c).any(axis=1)) for c in range(n_cells)]
-    bc_val = (q_ids, Qn, cent, probing)
 
     class BC:
-        value = bc_val
+        value = (q_ids, Qn, cent, probing)
 
-    def run(factory, **kw):
-        kern = factory(BC(), top, **kw)
-        frames = list(
-            kern(
-                pd.DataFrame(
-                    {"c_id": c_ids[s : s + batch], "__v": list(C[s : s + batch])}
-                )
-                for s in range(0, n, batch)
-            )
-        )
-        if not frames:
-            return None
-        df = pd.concat(frames, ignore_index=True)
-        q = df["q_id"].to_numpy(np.int64)
-        c = df["c_id"].to_numpy(np.int64)
-        # 12-dp rounding: a candidate pair scored in two different gemm
-        # block shapes can differ in the LAST ULP (planted exact
-        # duplicates make such ties real), so exact-float tie-breaking
-        # is block-shape-dependent in BOTH kernels; rounding restores a
-        # true tie and the (score DESC, id ASC) cut is deterministic.
-        s = np.round(df["cosine"].to_numpy(np.float64), 12)
-        q, c, s = _dedup_pool(q, c, s)
-        q, c, s = _pool_topk(q, c, s, top)
-        return list(zip(q.tolist(), c.tolist()))
-
-    assert run(_ivf_taskmerge_kernel, compact_rows=compact) == run(_ivf_fused_kernel)
+    cells = np.argmax((C / np.linalg.norm(C, axis=1)[:, None]) @ cent.T, axis=1)
+    cand = [np.isin(cells, order[qi]) for qi in range(nq)]
+    kernel = _ivf_taskmerge_kernel(BC(), top, compact_rows=compact)
+    got = _pool_emission(kernel, C, c_ids, batch)
+    assert got == _exact_topk(C, c_ids, Qn, q_ids, cand, top)
 
 
 @given(
@@ -355,21 +363,14 @@ def test_ivf_taskmerge_pool_reduces_to_fused(n, nq, dims, top, batch, compact, s
     batch=7, compact=4, seed=7683,
 )
 @settings(max_examples=25, deadline=None)
-def test_lsh_taskmerge_pool_reduces_to_fused(
+def test_lsh_taskmerge_pool_is_exact_topk(
     n, nq, dims, top, n_planes, n_tables, batch, compact, seed
 ):
-    """Same associativity property for the lsh kernel, which must ALSO
-    dedup cross-table (q, c) collisions before any cut — duplicated
-    corpus directions are planted to force multi-table collisions."""
-    import pandas as pd
-
-    from sdvg_spark.ops.similarity import (
-        _dedup_pool,
-        _lsh_fused_kernel,
-        _lsh_taskmerge_kernel,
-        _pool_topk,
-        hyperplane_weights,
-    )
+    """Same property for the lsh kernel, whose candidates are the union
+    of each query's probed buckets over all tables: a pair colliding in
+    several tables must count ONCE (dedup before every cut), and
+    planted duplicate directions force such collisions and true ties."""
+    from sdvg_spark.ops.similarity import _lsh_taskmerge_kernel, hyperplane_weights
 
     rng = np.random.default_rng(seed)
     C = rng.normal(size=(n, dims))
@@ -381,11 +382,16 @@ def test_lsh_taskmerge_pool_reduces_to_fused(
     w_flat = hyperplane_weights(n_planes, n_tables, seed % 997, dims).reshape(
         n_tables * n_planes, dims
     )
-    qbits = (Q @ w_flat.T) >= 0
-    qsigs = np.zeros((nq, n_tables), dtype=np.int64)
-    for t in range(n_tables):
-        for p in range(n_planes):
-            qsigs[:, t] |= qbits[:, t * n_planes + p].astype(np.int64) << p
+
+    def sigs_of(M):
+        bits = (M @ w_flat.T) >= 0
+        sigs = np.zeros((len(M), n_tables), dtype=np.int64)
+        for t in range(n_tables):
+            for p in range(n_planes):
+                sigs[:, t] |= bits[:, t * n_planes + p].astype(np.int64) << p
+        return sigs
+
+    qsigs, csigs = sigs_of(Q), sigs_of(C)
     flips = [0] + [1 << b for b in range(n_planes)]
     tables = []
     for t in range(n_tables):
@@ -396,34 +402,18 @@ def test_lsh_taskmerge_pool_reduces_to_fused(
         tables.append({s: np.array(v, dtype=np.int64) for s, v in buckets.items()})
     qn = np.maximum(np.linalg.norm(Q, axis=1), 1e-12)
     Qn = Q / qn[:, None]
-    bc_val = (q_ids, Qn, w_flat, n_tables, n_planes, tables)
 
     class BC:
-        value = bc_val
+        value = (q_ids, Qn, w_flat, n_tables, n_planes, tables)
 
-    def run(factory, **kw):
-        kern = factory(BC(), top, **kw)
-        frames = list(
-            kern(
-                pd.DataFrame(
-                    {"c_id": c_ids[s : s + batch], "__v": list(C[s : s + batch])}
-                )
-                for s in range(0, n, batch)
-            )
+    cand = [
+        np.any(
+            [np.isin(csigs[:, t], [int(qsigs[qi, t]) ^ fl for fl in flips])
+             for t in range(n_tables)],
+            axis=0,
         )
-        if not frames:
-            return None
-        df = pd.concat(frames, ignore_index=True)
-        q = df["q_id"].to_numpy(np.int64)
-        c = df["c_id"].to_numpy(np.int64)
-        # Both lsh kernels quantize cosines to 12 dp INTERNALLY now
-        # (the r9 counterexample: ulp noise across gemm block shapes
-        # made pool cuts evict true-tie winners), so the emitted
-        # values are already tie-stable; this re-round is a no-op kept
-        # as a guard against a kernel regressing the contract.
-        s = np.round(df["cosine"].to_numpy(np.float64), 12)
-        q, c, s = _dedup_pool(q, c, s)
-        q, c, s = _pool_topk(q, c, s, top)
-        return list(zip(q.tolist(), c.tolist()))
-
-    assert run(_lsh_taskmerge_kernel, compact_rows=compact) == run(_lsh_fused_kernel)
+        for qi in range(nq)
+    ]
+    kernel = _lsh_taskmerge_kernel(BC(), top, compact_rows=compact)
+    got = _pool_emission(kernel, C, c_ids, batch)
+    assert got == _exact_topk(C, c_ids, Qn, q_ids, cand, top)
