@@ -18,7 +18,11 @@ contract — a seeded bijective "shuffle" of ``[0, n)`` that cycles — as a
   network's domain is 2^ceil(log2 n) < 2n for every n, so cycle-walking
   rejects < 1/2 per pass — the earlier balanced network rounded odd bit
   counts UP, giving a < 4n domain whose ~70% rejection at e.g. n=20M
-  tripled the kernel cost.)
+  tripled the kernel cost.) While both halves are at most 16 bits
+  (n <= 2^32) each round is a gather from a per-key table of its
+  masked SplitMix outputs (``_round_tables``: uint16, at most 512 KB a
+  key, a 64-key LRU per process, so at most 32 MB); wider halves
+  compute the round per row.
 
 Both are exposed through ``perm_np(idx, n, seed, mode)``; the *ordered*
 sequencer (a monotone step function) is pure arithmetic and has a native
@@ -110,6 +114,34 @@ def _feistel_round(r: np.ndarray, rnd: int, seed: int, half_bits: int) -> np.nda
     return splitmix64_np(x) & np.uint64((1 << half_bits) - 1)
 
 
+# Widest half whose round functions are tabulated: a 16-bit half has at
+# most 65,536 distinct inputs, so a round is one uint16 gather instead of
+# a 9-step SplitMix per row. Covers every n <= 2^32.
+_TABLE_HALF_BITS = 16
+_ROUND_TABLES_MAX = 64
+
+
+@lru_cache(maxsize=_ROUND_TABLES_MAX)
+def _round_tables(seed: int, h_l: int, h_r: int, rounds: int = 4) -> tuple[np.ndarray, ...]:
+    """Round ``rnd``'s keyed function tabulated over every input of its
+    source half: ``tabs[rnd][v] == _feistel_round(v, rnd, seed, dst)``
+    (even rounds map the right half to ``h_l`` bits, odd rounds the left
+    half to ``h_r`` bits).
+
+    Both halves are at most 16 bits, so a table has at most 2^16 uint16
+    entries (128 KB) and one key at most 4 x 128 KB = 512 KB; the
+    ``_ROUND_TABLES_MAX`` cache slots bound a worker at 32 MB.
+    """
+    tabs = []
+    for rnd in range(rounds):
+        src, dst = (h_r, h_l) if rnd % 2 == 0 else (h_l, h_r)
+        v = np.arange(1 << src, dtype=np.uint64)
+        tab = _feistel_round(v, rnd, seed, dst).astype(np.uint16)
+        tab.setflags(write=False)
+        tabs.append(tab)
+    return tuple(tabs)
+
+
 def feistel_np(idx: np.ndarray, n: int, seed: int, rounds: int = 4) -> np.ndarray:
     """Seeded bijection of [0, n) evaluated at ``idx`` (uint64 array).
 
@@ -129,34 +161,59 @@ def feistel_np(idx: np.ndarray, n: int, seed: int, rounds: int = 4) -> np.ndarra
     kernel). The exact-width domain is < 2n for every n, so rejection
     is < 1/2 and the expected pass count is < 2 (0 when n is a power
     of two).
+
+    When both halves are at most 16 bits (n <= 2^32) each round is a
+    gather from :func:`_round_tables`; wider halves compute the round
+    function per row. Both give the same values.
     """
     if n <= 1:
         return np.zeros(len(idx), dtype=np.uint64)
     total_bits = max((n - 1).bit_length(), 2)
     h_l = total_bits // 2
     h_r = total_bits - h_l
-    mask_l = np.uint64((1 << h_l) - 1)
+    m_l, m_r = (1 << h_l) - 1, (1 << h_r) - 1
+
+    if h_r <= _TABLE_HALF_BITS:
+        tabs = _round_tables(seed, h_l, h_r, rounds)
+
+        def apply_net(x: np.ndarray) -> np.ndarray:
+            # int64 halves: ``take`` gathers with them without an index cast
+            x = x.view(np.int64)
+            left = (x >> h_r) & m_l
+            right = x & m_r
+            for rnd, tab in enumerate(tabs):
+                if rnd % 2 == 0:
+                    left ^= tab.take(right)
+                else:
+                    right ^= tab.take(left)
+            left <<= h_r
+            left |= right
+            return left.view(np.uint64)
+
+    else:
+        uh_r, mask_l, mask_r = np.uint64(h_r), np.uint64(m_l), np.uint64(m_r)
+
+        def apply_net(x: np.ndarray) -> np.ndarray:
+            left = (x >> uh_r) & mask_l
+            right = x & mask_r
+            for rnd in range(rounds):
+                if rnd % 2 == 0:
+                    left = left ^ _feistel_round(right, rnd, seed, h_l)
+                else:
+                    right = right ^ _feistel_round(left, rnd, seed, h_r)
+            return (left << uh_r) | right
+
     un = np.uint64(n)
-    uh_r = np.uint64(h_r)
-
-    def apply_net(x: np.ndarray) -> np.ndarray:
-        left = (x >> uh_r) & mask_l
-        right = x & np.uint64((1 << h_r) - 1)
-        for rnd in range(rounds):
-            if rnd % 2 == 0:
-                left = left ^ _feistel_round(right, rnd, seed, h_l)
-            else:
-                right = right ^ _feistel_round(left, rnd, seed, h_r)
-        return (left << uh_r) | right
-
     y = apply_net(np.asarray(idx, dtype=np.uint64))
-    out_of_domain = y >= un
     # Cycle-walking: the network permutes [0, 2^total_bits) with
     # 2^total_bits < 2n, so each walk step keeps < 1/2 of the
-    # stragglers; expected depth < 2.
-    while out_of_domain.any():
-        y[out_of_domain] = apply_net(y[out_of_domain])
-        out_of_domain = y >= un
+    # stragglers; expected depth < 2. The straggler index list shrinks
+    # with them, so a pass costs only its stragglers.
+    todo = np.flatnonzero(y >= un)
+    while len(todo):
+        z = apply_net(y[todo])
+        y[todo] = z
+        todo = todo[z >= un]
     return y
 
 

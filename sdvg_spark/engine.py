@@ -9,11 +9,12 @@ generation is embarrassingly parallel and idempotent under any
 partitioning. At 100 TB this means: no stage boundaries, no skew, output
 parallelism == input splits of ``range``.
 
-The one non-native step is the seeded permutation (a pandas UDF over
-Arrow batches — numpy uint64 kernels). Columns whose sequencers are all
-*ordered* skip it entirely and stay in whole-stage codegen. Value
-functions are native Column expressions for integer/float/datetime/enum/
-name/phone; uuid/template/plain-string/text use vectorized numpy UDFs.
+The one non-native step is the seeded permutation (an Arrow UDF:
+numpy uint64 kernels over Arrow batches that return Arrow arrays, with
+no pandas in between). Columns whose sequencers are all *ordered* skip
+it entirely and stay in whole-stage codegen. Value functions are native
+Column expressions for integer/float/datetime/enum/name/phone;
+uuid/template/plain-string/text use vectorized numpy Arrow UDFs.
 
 Foreign keys re-evaluate the *parent's* pure expression on the child's
 row-ids (the reference's zero-shuffle trick, task.go:86-114): referential
@@ -26,10 +27,10 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from sdvg_spark.config.model import ColumnSpec, ConfigError, GenerationConfig, ModelSpec
 from sdvg_spark.core.rng import derive_seed
@@ -73,7 +74,7 @@ class ColumnPlan:
     def fully_udf(self) -> bool:
         """Every range's value generator needs the Python path (uuid,
         free-form strings, templates, text): fuse sequencer + value into
-        ONE pandas UDF so each row crosses the JVM<->Arrow boundary once,
+        ONE Arrow UDF so each row crosses the JVM<->Arrow boundary once,
         not twice."""
         return all(not r.vgen.is_native for r in self.ranges)
 
@@ -195,11 +196,12 @@ def _column_dtype(data_column: ColumnSpec, plans: list[RangePlan]) -> str:
 
 
 # ---------------------------------------------------------------------------
-# sequencer kernel (the only pandas-UDF stage of the pipeline)
+# sequencer kernel (the only Arrow-UDF stage of the pipeline)
 
 
 def _make_sequencer(plan: ColumnPlan, spark: SparkSession):
-    """Closure: uint64 id array -> (ridx, num, r01) numpy arrays.
+    """Closure: Arrow int64 id array -> (ridx, num, r01) numpy arrays;
+    ridx is None for single-range columns (its dispatch is the constant 0).
 
     One vectorized pass computes the column-level permutation, the
     range dispatch, the per-range draw number, and the frf hash draw
@@ -217,6 +219,7 @@ def _make_sequencer(plan: ColumnPlan, spark: SparkSession):
     rows = plan.rows
     data_seed = plan.data_seed
     mode = plan.perm_mode
+    single = len(plan.ranges) == 1
     single_ordered = plan.all_ordered_single
     offs = np.array([r.off for r in plan.ranges], dtype=np.uint64)
     cnts = np.array([r.cnt for r in plan.ranges], dtype=np.uint64)
@@ -241,40 +244,46 @@ def _make_sequencer(plan: ColumnPlan, spark: SparkSession):
 
     from sdvg_spark.core.rng import frf_np
 
-    def compute(idx: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    def draw(idx: np.ndarray) -> tuple[np.ndarray | None, np.ndarray]:
         if single_ordered:
-            ridx = np.zeros(len(idx), dtype=np.int64)
-            num = ordered_np(idx, int(distincts[0]), int(cnts[0]))
+            return None, ordered_np(idx, int(distincts[0]), int(cnts[0]))
+        if single and tables_bc is None:
+            # one permuted range at offset 0: the dispatch is the
+            # identity (ridx 0, k == gnum), so skip it
+            gnum = perm_np(idx, rows, data_seed, mode)
+            return None, perm_np(gnum, int(distincts[0]), int(order_seeds[0]), "feistel")
+        if tables_bc is not None:
+            tables = tables_bc.value
+            gnum = tables["col"][(idx % np.uint64(rows)).astype(np.int64)]
         else:
-            if tables_bc is not None:
-                tables = tables_bc.value
-                gnum = tables["col"][(idx % np.uint64(rows)).astype(np.int64)]
+            gnum = perm_np(idx, rows, data_seed, mode)
+        ridx = np.searchsorted(bounds, gnum, side="right").astype(np.int64)
+        np.minimum(ridx, len(bounds) - 1, out=ridx)
+        k = gnum - offs[ridx]
+        num = np.zeros(len(idx), dtype=np.uint64)
+        for j in range(len(offs)):
+            m = ridx == j
+            if not m.any():
+                continue
+            if ordereds[j]:
+                num[m] = ordered_np(k[m], int(distincts[j]), int(cnts[j]))
             else:
-                gnum = perm_np(idx, rows, data_seed, mode)
-            ridx = np.searchsorted(bounds, gnum, side="right").astype(np.int64)
-            np.minimum(ridx, len(bounds) - 1, out=ridx)
-            k = gnum - offs[ridx]
-            num = np.zeros(len(idx), dtype=np.uint64)
-            for j in range(len(offs)):
-                m = ridx == j
-                if not m.any():
-                    continue
-                if ordereds[j]:
-                    num[m] = ordered_np(k[m], int(distincts[j]), int(cnts[j]))
+                tab = tables_bc.value.get(j) if tables_bc is not None else None
+                if tab is not None:
+                    num[m] = tab[(k[m] % distincts[j]).astype(np.int64)]
                 else:
-                    tab = tables_bc.value.get(j) if tables_bc is not None else None
-                    if tab is not None:
-                        num[m] = tab[(k[m] % distincts[j]).astype(np.int64)]
-                    else:
-                        num[m] = perm_np(k[m], int(distincts[j]), int(order_seeds[j]), "feistel")
-        r01 = frf_np(num + np.uint64(data_seed))
-        return ridx, num, r01
+                    num[m] = perm_np(k[m], int(distincts[j]), int(order_seeds[j]), "feistel")
+        return (None if single else ridx), num
+
+    def compute(ids: pa.Array) -> tuple[np.ndarray | None, np.ndarray, np.ndarray]:
+        ridx, num = draw(ids.to_numpy().view(np.uint64))
+        return ridx, num, frf_np(num + np.uint64(data_seed))
 
     return compute
 
 
 def _make_sequence_kernel(plan: ColumnPlan, spark: SparkSession):
-    """pandas UDF: id -> struct(ridx, num, r01) — struct(num, r01) for
+    """Arrow UDF: id -> struct(ridx, num, r01) — struct(num, r01) for
     single-range columns, whose ridx is the constant 0 (the dispatch
     field would ship 4 dead bytes per row per column through Arrow;
     at the 20M-row bench mix that is ~320 MB of transfer for nothing).
@@ -287,30 +296,27 @@ def _make_sequence_kernel(plan: ColumnPlan, spark: SparkSession):
     fields.
     """
     compute = _make_sequencer(plan, spark)
+    schema = "num long, r01 double" if len(plan.ranges) == 1 else "ridx int, num long, r01 double"
 
-    if len(plan.ranges) == 1:
-
-        @pandas_udf("num long, r01 double")
-        def kernel(ids: pd.Series) -> pd.DataFrame:
-            idx = ids.to_numpy(dtype=np.int64).astype(np.uint64)
-            _, num, r01 = compute(idx)
-            return pd.DataFrame({"num": num.astype(np.int64), "r01": r01})
-
-        return kernel
-
-    @pandas_udf("ridx int, num long, r01 double")
-    def kernel(ids: pd.Series) -> pd.DataFrame:
-        idx = ids.to_numpy(dtype=np.int64).astype(np.uint64)
-        ridx, num, r01 = compute(idx)
-        return pd.DataFrame(
-            {"ridx": ridx.astype(np.int32), "num": num.astype(np.int64), "r01": r01}
-        )
+    @arrow_udf(schema)
+    def kernel(ids: pa.Array) -> pa.Array:
+        ridx, num, r01 = compute(ids)
+        fields = {"num": pa.array(num.view(np.int64)), "r01": pa.array(r01)}
+        if ridx is not None:
+            fields = {"ridx": pa.array(ridx.astype(np.int32)), **fields}
+        return pa.StructArray.from_arrays(list(fields.values()), names=list(fields))
 
     return kernel
 
 
+def _range_strings(r: RangePlan, number: np.ndarray, r01: np.ndarray) -> pa.Array:
+    """One range's values as an Arrow string array, null-gated by r01."""
+    null_gate = r01 < r.null_pct if r.null_pct > 0 else None
+    return pa.array(r.vgen.np_value(number), type=pa.string(), mask=null_gate)
+
+
 def _make_fused_kernel(plan: ColumnPlan, spark: SparkSession):
-    """pandas UDF: id -> final value, for columns whose every range needs
+    """Arrow UDF: id -> final value, for columns whose every range needs
     the Python value path (uuid/template/plain-string/text).
 
     Fusing sequencer + jitter + null gate + value into one UDF halves
@@ -320,22 +326,22 @@ def _make_fused_kernel(plan: ColumnPlan, spark: SparkSession):
     compute = _make_sequencer(plan, spark)
     ranges = plan.ranges
 
-    @pandas_udf(plan.dtype)
-    def kernel(ids: pd.Series) -> pd.Series:
-        idx = ids.to_numpy(dtype=np.int64).astype(np.uint64)
-        ridx, num, r01 = compute(idx)
+    @arrow_udf(plan.dtype)
+    def kernel(ids: pa.Array) -> pa.Array:
+        ridx, num, r01 = compute(ids)
         numf = num.astype(np.float64)
-        out = pd.Series(np.empty(len(idx), dtype=object))
+        if ridx is None:
+            r = ranges[0]
+            return _range_strings(r, numf + r01 * r.factor, r01)
+        parts, rows = [], []
         for r in ranges:
-            m = ridx == r.index if len(ranges) > 1 else np.ones(len(idx), dtype=bool)
-            if not m.any():
-                continue
-            number = numf[m] + r01[m] * r.factor
-            vals = pd.Series(r.vgen.np_value(number))
-            if r.null_pct > 0:
-                vals[np.asarray(r01[m] < r.null_pct)] = None
-            out[np.asarray(m)] = vals.to_numpy(dtype=object)
-        return out
+            at = np.flatnonzero(ridx == r.index)
+            parts.append(_range_strings(r, numf[at] + r01[at] * r.factor, r01[at]))
+            rows.append(at)
+        # each row's position in the range-ordered concatenation
+        pos = np.empty(len(ridx), dtype=np.int64)
+        pos[np.concatenate(rows)] = np.arange(len(ridx))
+        return pa.concat_arrays(parts).take(pos)
 
     return kernel
 
@@ -343,10 +349,9 @@ def _make_fused_kernel(plan: ColumnPlan, spark: SparkSession):
 def _make_value_udf(vgen, dtype: str):
     """Vectorized numpy value kernel for the non-native generators."""
 
-    @pandas_udf(dtype)
-    def value_udf(number: pd.Series) -> pd.Series:
-        out = vgen.np_value(number.to_numpy(dtype=np.float64))
-        return pd.Series(out)
+    @arrow_udf(dtype)
+    def value_udf(number: pa.Array) -> pa.Array:
+        return pa.array(vgen.np_value(number.to_numpy()), type=pa.string())
 
     return value_udf
 

@@ -9,7 +9,11 @@ space (used to clamp distinct counts and derive the jitter factor).
 Each generator exposes up to three synchronized forms:
 
 * ``expr(number, num)``  — native Spark Column (JVM, codegen); preferred
-* ``np_value(number)``   — numpy kernel for the Arrow/pandas-UDF path
+* ``np_value(number)``   — numpy kernel for the Arrow-UDF path; string
+                           generators return any array ``pa.array(...,
+                           type=pa.string())`` accepts (object, ``U``, or
+                           ``S`` for fixed-width ASCII: Arrow keeps an
+                           ``S`` value's trailing NULs)
 * ``sql(number_expr)``   — DuckDB SQL mirror for exact oracle queries
                            (None when not SQL-expressible)
 
@@ -280,7 +284,8 @@ class UUIDGen:
         for j, (hi, lo) in enumerate(self._NIBBLE_POS):
             out[:, hi] = self._HEX[b[:, j] >> 4]
             out[:, lo] = self._HEX[b[:, j] & 0xF]
-        return out.reshape(-1).view("S36").astype("U36")
+        # ASCII bytes: Arrow builds strings from S36 directly (no UCS-4)
+        return out.reshape(-1).view("S36")
 
     def sql(self, number_expr: str) -> str | None:
         return None

@@ -404,3 +404,72 @@ def test_feistel_mode_engine_vs_oracle_exact(spark):
         assert sql is not None
         want = {int(i): int(v) for i, v in duckdb.connect().execute(sql).fetchall()}
         assert got == want and len(got) == 3000, col
+
+
+# A second model for the golden test: the multi-range fused path (a
+# string column mixing a nullable simple range and a template range), a
+# nullable fused uuid column and the value-UDF path (enum + simple
+# string: one native range, one Python range).
+MIXED_CFG = {
+    "random_seed": 5,
+    "models": {
+        "mixed": {
+            "rows_count": 5000,
+            "columns": [
+                {"name": "uuid", "type": "uuid", "null_percentage": 0.2},
+                {"name": "s_ranges", "type": "string", "ranges": [
+                    {"type_params": {"min_length": 3, "max_length": 5},
+                     "null_percentage": 0.1, "range_percentage": 0.5},
+                    {"type_params": {"template": "AA-00"}, "range_percentage": 0.5}]},
+                {"name": "s_enum", "type": "string", "ranges": [
+                    {"values": ["a", "b", "c"], "range_percentage": 0.5},
+                    {"type_params": {"min_length": 3, "max_length": 5},
+                     "range_percentage": 0.5}]},
+            ],
+        }
+    },
+}
+
+# sha256[:16] of each model's rows, pinned before the Arrow-native
+# kernels and the table-driven Feistel rounds landed: any change to a
+# generated value (or its string form) moves a digest.
+GOLDEN = {
+    ("auto", "m"): "80046bfb8035e127",
+    ("auto", "child"): "cb1070d151990d61",
+    ("auto", "child_ord"): "18964d91d8e6b565",
+    ("auto", "mixed"): "e4bda590835bf3e5",
+    ("feistel", "m"): "2256156b7486b5b6",
+    ("feistel", "child"): "2d3cb655a9d91c75",
+    ("feistel", "child_ord"): "18964d91d8e6b565",
+    ("feistel", "mixed"): "c1de62c99a4b322d",
+}
+
+
+def _rows_digest(df) -> str:
+    """Every column cast to string, rows ordered by id, fields joined by
+    ``|`` (None written as ``\\N``) and rows by newlines; sha256[:16]."""
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    rows = (
+        df.select(*[F.col(c).cast("string") for c in df.columns])
+        .orderBy(F.col("id").cast("long"))
+        .collect()
+    )
+    text = "\n".join("|".join("\\N" if v is None else v for v in r) for r in rows)
+    return hashlib.sha256(text.encode()).hexdigest()[:16]
+
+
+@pytest.mark.parametrize("permutation", ["auto", "feistel"])
+def test_golden_engine_output(spark, permutation):
+    """Engine output pinned end to end in both permutation tiers. The
+    DuckDB oracle shares ``feistel_np`` with the engine, so only fixed
+    digests catch a change to the kernels that both would follow."""
+    got = {}
+    for cfg, models in ((CFG, ("m", "child", "child_ord")), (MIXED_CFG, ("mixed",))):
+        eng = Engine(parse_config({**cfg, "permutation": permutation}))
+        for model in models:
+            got[(permutation, model)] = _rows_digest(eng.model_df_with_id(spark, model))
+    want = {k: v for k, v in GOLDEN.items() if k[0] == permutation}
+    assert got == want

@@ -131,6 +131,92 @@ def test_feistel_large_domain():
     assert len(set(out.tolist())) == len(out)
 
 
+# sha256[:16] of feistel_np over a strided 50,000-index sample, pinned
+# before the round tables landed. The DuckDB oracle builds its table
+# from feistel_np itself, so it cannot see a changed network; these can.
+FEISTEL_GOLDEN = {
+    (2, 1): "35dbc1da3d51ca01",
+    (5, 7): "e9eb7918abef076e",
+    (100, 3): "e10d9f609aa4a806",
+    (4097, 11): "0aa6c39c80b87228",
+    (65536, 5): "acebd3018855a329",
+    (2097153, 13): "d6c318914cdccbf5",
+    (3_000_000, 42): "8957de3f4b3e2869",
+    (4294967291, 99): "f848a737be57c3e0",  # 16-bit halves: table rounds
+    (17179869187, 7): "ae8385802a7c8711",
+    (10_000_000_000, 2024): "c45fc6f87fb723e8",  # 17-bit half: arithmetic rounds
+}
+
+
+@pytest.mark.parametrize("n,seed", list(FEISTEL_GOLDEN))
+def test_feistel_golden(n, seed):
+    import hashlib
+
+    idx = (np.arange(50_000, dtype=np.uint64) * np.uint64(7919)) % np.uint64(n)
+    got = hashlib.sha256(feistel_np(idx, n, seed).astype("<u8").tobytes()).hexdigest()[:16]
+    assert got == FEISTEL_GOLDEN[(n, seed)]
+
+
+def _feistel_py(x: int, n: int, seed: int, rounds: int = 4) -> int:
+    """The Feistel network and cycle-walk on Python ints, one value."""
+    mask64 = (1 << 64) - 1
+
+    def splitmix(s: int) -> int:
+        s = (s + 0x9E3779B97F4A7C15) & mask64
+        s ^= s >> 30
+        s = (s * 0xBF58476D1CE4E5B9) & mask64
+        s ^= s >> 27
+        s = (s * 0x94D049BB133111EB) & mask64
+        s ^= s >> 31
+        s ^= s >> 12
+        s = (s ^ (s << 25)) & mask64
+        return s ^ (s >> 27)
+
+    def round_fn(v: int, rnd: int, bits: int) -> int:
+        key = (seed + 0x9E3779B97F4A7C15 * (rnd + 1)) & mask64
+        return splitmix(v ^ key) & ((1 << bits) - 1)
+
+    total = max((n - 1).bit_length(), 2)
+    h_l = total // 2
+    h_r = total - h_l
+    while True:
+        left, right = (x >> h_r) & ((1 << h_l) - 1), x & ((1 << h_r) - 1)
+        for rnd in range(rounds):
+            if rnd % 2 == 0:
+                left ^= round_fn(right, rnd, h_l)
+            else:
+                right ^= round_fn(left, rnd, h_r)
+        x = (left << h_r) | right
+        if x < n:
+            return x
+
+
+@pytest.mark.parametrize("n", [2, 3, 65537, 2**32 - 5])
+def test_feistel_matches_scalar_reference(n):
+    idx = sorted({0, 1, n - 1, *((i * 7919 + 13) % n for i in range(500))})
+    got = feistel_np(np.array(idx, dtype=np.uint64), n, seed=17)
+    assert got.tolist() == [_feistel_py(i, n, 17) for i in idx]
+
+
+def test_round_tables_bounded():
+    """A table per round, uint16 and indexed by every source-half value;
+    the cache keeps its fixed size; halves wider than 16 bits build
+    none and take the arithmetic rounds."""
+    from sdvg_spark.core.sequence import _ROUND_TABLES_MAX, _round_tables
+
+    tabs = _round_tables(3, 15, 16)
+    assert [t.dtype for t in tabs] == [np.uint16] * 4
+    assert [len(t) for t in tabs] == [1 << 16, 1 << 15, 1 << 16, 1 << 15]
+    assert int(tabs[0].max()) < 1 << 15 and int(tabs[1].max()) < 1 << 16
+    assert _round_tables.cache_info().maxsize == _ROUND_TABLES_MAX
+
+    _round_tables.cache_clear()
+    n = 2**34 + 3  # 35 bits: 17- and 18-bit halves
+    out = feistel_np(np.arange(1000, dtype=np.uint64), n, seed=1)
+    assert (out < n).all() and len(set(out.tolist())) == 1000
+    assert _round_tables.cache_info().currsize == 0
+
+
 def test_frf_matches_pure_python_reference():
     """Independent check of the Go fastRandomFloat formula
     (reference generator/utils.go:180-196) using Python bigints —
