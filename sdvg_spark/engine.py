@@ -9,12 +9,13 @@ generation is embarrassingly parallel and idempotent under any
 partitioning. At 100 TB this means: no stage boundaries, no skew, output
 parallelism == input splits of ``range``.
 
-The one non-native step is the seeded permutation (an Arrow UDF:
-numpy uint64 kernels over Arrow batches that return Arrow arrays, with
-no pandas in between). Columns whose sequencers are all *ordered* skip
-it entirely and stay in whole-stage codegen. Value functions are native
-Column expressions for integer/float/datetime/enum/name/phone;
-uuid/template/plain-string/text use vectorized numpy Arrow UDFs.
+Column expressions cover only closed-form columns: one ordered range,
+no jitter, no null gate and a native value generator; these stay in
+whole-stage codegen. Every other column is ONE fused Arrow UDF (numpy
+kernels over Arrow batches, no pandas) that runs the seeded permutation,
+range dispatch, jitter, null gate and value generator and returns the
+column's final Arrow array; strings are written as UTF-8 bytes straight
+into Arrow buffers.
 
 Foreign keys re-evaluate the *parent's* pure expression on the child's
 row-ids (the reference's zero-shuffle trick, task.go:86-114): referential
@@ -35,7 +36,7 @@ from pyspark.sql.functions import arrow_udf
 from sdvg_spark.config.model import ColumnSpec, ConfigError, GenerationConfig, ModelSpec
 from sdvg_spark.core.rng import derive_seed
 from sdvg_spark.core.sequence import ordered_col, ordered_np, perm_np, resolve_mode
-from sdvg_spark.generators.values import EnumGen, make_value_gen
+from sdvg_spark.generators.values import arrow_type, make_value_gen
 from sdvg_spark.session import configure_session
 
 
@@ -71,22 +72,14 @@ class ColumnPlan:
         return len(self.ranges) == 1 and self.ranges[0].ordered
 
     @property
-    def fully_udf(self) -> bool:
-        """Every range's value generator needs the Python path (uuid,
-        free-form strings, templates, text): fuse sequencer + value into
-        ONE Arrow UDF so each row crosses the JVM<->Arrow boundary once,
-        not twice."""
-        return all(not r.vgen.is_native for r in self.ranges)
-
-    @property
     def pure_native(self) -> bool:
-        """No sequencer kernel needed: single ordered range, no jitter
-        (factor 0) and no null gate — the whole column is a closed-form
-        expression of id and stays in whole-stage codegen."""
+        """No kernel needed: single ordered range, no jitter (factor 0),
+        no null gate and a native value generator — the whole column is
+        a closed-form expression of id and stays in whole-stage codegen."""
         if not self.all_ordered_single:
             return False
         r = self.ranges[0]
-        return r.factor == 0.0 and r.null_pct == 0.0
+        return r.factor == 0.0 and r.null_pct == 0.0 and r.vgen.is_native
 
 
 def plan_column(cfg: GenerationConfig, model: ModelSpec, column: ColumnSpec) -> ColumnPlan:
@@ -196,7 +189,7 @@ def _column_dtype(data_column: ColumnSpec, plans: list[RangePlan]) -> str:
 
 
 # ---------------------------------------------------------------------------
-# sequencer kernel (the only Arrow-UDF stage of the pipeline)
+# the fused column kernel (the only Arrow-UDF stage of the pipeline)
 
 
 def _make_sequencer(plan: ColumnPlan, spark: SparkSession):
@@ -282,61 +275,54 @@ def _make_sequencer(plan: ColumnPlan, spark: SparkSession):
     return compute
 
 
-def _make_sequence_kernel(plan: ColumnPlan, spark: SparkSession):
-    """Arrow UDF: id -> struct(ridx, num, r01) — struct(num, r01) for
-    single-range columns, whose ridx is the constant 0 (the dispatch
-    field would ship 4 dead bytes per row per column through Arrow;
-    at the 20M-row bench mix that is ~320 MB of transfer for nothing).
-
-    Emitting r01 here — not as a native column expression — matters:
-    the SplitMix chain as a Catalyst tree doubles in size per scramble
-    step (each xor references its operand twice), and every downstream
-    reference re-inlines it. The Arrow node is a materialization
-    barrier, so the value expressions only ever reference cheap struct
-    fields.
-    """
-    compute = _make_sequencer(plan, spark)
-    schema = "num long, r01 double" if len(plan.ranges) == 1 else "ridx int, num long, r01 double"
-
-    @arrow_udf(schema)
-    def kernel(ids: pa.Array) -> pa.Array:
-        ridx, num, r01 = compute(ids)
-        fields = {"num": pa.array(num.view(np.int64)), "r01": pa.array(r01)}
-        if ridx is not None:
-            fields = {"ridx": pa.array(ridx.astype(np.int32)), **fields}
-        return pa.StructArray.from_arrays(list(fields.values()), names=list(fields))
-
-    return kernel
+def _null_gated(values: pa.Array, gate: np.ndarray | None) -> pa.Array:
+    """``values`` with the rows where ``gate`` is True set to null: a
+    new validity bitmap over the same value buffers."""
+    if gate is None or not gate.any():
+        return values
+    valid = ~gate
+    if values.null_count:
+        valid &= values.is_valid().to_numpy(zero_copy_only=False)
+    if values.offset:
+        valid = np.concatenate([np.zeros(values.offset, dtype=bool), valid])
+    bitmap = pa.py_buffer(np.packbits(valid, bitorder="little"))
+    return pa.Array.from_buffers(
+        values.type, len(values), [bitmap, *values.buffers()[1:]], offset=values.offset
+    )
 
 
-def _range_strings(r: RangePlan, number: np.ndarray, r01: np.ndarray) -> pa.Array:
-    """One range's values as an Arrow string array, null-gated by r01."""
-    null_gate = r01 < r.null_pct if r.null_pct > 0 else None
-    return pa.array(r.vgen.np_value(number), type=pa.string(), mask=null_gate)
+def _range_values(r: RangePlan, num: np.ndarray, r01: np.ndarray, atype: pa.DataType) -> pa.Array:
+    """One range's final values: jitter, value generator, the column's
+    Arrow type and the null gate. ``r01`` = frf(data_seed + num) drives
+    both the jitter and the gate (reference generator.go:220-237 uses
+    the same hash draw for both)."""
+    values = r.vgen.np_value(num.astype(np.float64) + r01 * r.factor)
+    if values.type != atype:
+        values = values.cast(atype)  # a narrower range widens
+    return _null_gated(values, r01 < r.null_pct if r.null_pct > 0 else None)
 
 
 def _make_fused_kernel(plan: ColumnPlan, spark: SparkSession):
-    """Arrow UDF: id -> final value, for columns whose every range needs
-    the Python value path (uuid/template/plain-string/text).
+    """Arrow UDF: id -> the column's final Arrow array (every column
+    that is not :attr:`ColumnPlan.pure_native`).
 
-    Fusing sequencer + jitter + null gate + value into one UDF halves
-    the JVM<->Arrow round-trips versus kernel + value-UDF chaining —
-    measured 35 s -> ~8 s for 2M uuid rows on local[32].
+    Sequencer, jitter, null gate and value run in one Python pass, so
+    each row crosses the JVM<->Arrow boundary once, carrying only its
+    final value: no struct of draws for the JVM to unpack and finish.
     """
     compute = _make_sequencer(plan, spark)
     ranges = plan.ranges
+    atype = arrow_type(plan.dtype)
 
     @arrow_udf(plan.dtype)
     def kernel(ids: pa.Array) -> pa.Array:
         ridx, num, r01 = compute(ids)
-        numf = num.astype(np.float64)
         if ridx is None:
-            r = ranges[0]
-            return _range_strings(r, numf + r01 * r.factor, r01)
+            return _range_values(ranges[0], num, r01, atype)
         parts, rows = [], []
         for r in ranges:
             at = np.flatnonzero(ridx == r.index)
-            parts.append(_range_strings(r, numf[at] + r01[at] * r.factor, r01[at]))
+            parts.append(_range_values(r, num[at], r01[at], atype))
             rows.append(at)
         # each row's position in the range-ordered concatenation
         pos = np.empty(len(ridx), dtype=np.int64)
@@ -346,47 +332,12 @@ def _make_fused_kernel(plan: ColumnPlan, spark: SparkSession):
     return kernel
 
 
-def _make_value_udf(vgen, dtype: str):
-    """Vectorized numpy value kernel for the non-native generators."""
-
-    @arrow_udf(dtype)
-    def value_udf(number: pa.Array) -> pa.Array:
-        return pa.array(vgen.np_value(number.to_numpy()), type=pa.string())
-
-    return value_udf
-
-
-def value_expr(plan: ColumnPlan, num: Column, ridx: Column, r01: Column) -> Column:
-    """Jitter + null gate + value dispatch, given the draw numbers.
-
-    ``r01`` = frf(data_seed + num) drives BOTH the jitter and the null
-    gate (reference generator.go:220-237 uses the same hash draw for
-    both); it arrives pre-computed from the sequencer kernel."""
-
-    def range_value(r: RangePlan) -> Column:
-        number = num.cast("double") + r01 * F.lit(r.factor)
-        native = r.vgen.expr(number, num)
-        value = (
-            native
-            if native is not None
-            else _make_value_udf(r.vgen, r.vgen.spark_dtype)(number)
-        )
-        value = value.cast(plan.dtype)
-        if r.null_pct > 0:
-            value = F.when(
-                r01 < F.lit(r.null_pct), F.lit(None).cast(plan.dtype)
-            ).otherwise(value)
-        return value
-
-    if len(plan.ranges) == 1:
-        result = range_value(plan.ranges[0])
-    else:
-        result = None
-        for r in plan.ranges:
-            cond = ridx == F.lit(r.index)
-            v = range_value(r)
-            result = F.when(cond, v) if result is None else result.when(cond, v)
-    return result.alias(plan.name)
+def value_expr(plan: ColumnPlan) -> Column:
+    """A :attr:`ColumnPlan.pure_native` column as a closed-form native
+    expression of ``id``."""
+    r = plan.ranges[0]
+    num = ordered_col(F.col("id"), r.distinct, r.cnt)
+    return r.vgen.expr(num.cast("double"), num).cast(plan.dtype).alias(plan.name)
 
 
 class Engine:
@@ -426,46 +377,15 @@ class Engine:
         (batch ``spark.range`` or a streaming rate source — generation is
         a pure function of the row index either way)."""
         extra = [F.col(c) for c in (extra_cols or [])]
-
-        # Stage 1: one Arrow kernel per non-closed-form column — fused
-        # (value included) when every range needs the Python value path,
-        # else a sequencer struct whose fields feed native expressions.
-        seq_cols = []
-        for plan in plans:
-            if plan.pure_native:
-                continue
-            if plan.fully_udf:
-                kernel = _make_fused_kernel(plan, spark)
-                seq_cols.append(kernel(F.col("id")).alias(f"__val_{plan.name}"))
-            else:
-                kernel = _make_sequence_kernel(plan, spark)
-                seq_cols.append(kernel(F.col("id")).alias(f"__seq_{plan.name}"))
-        staged = base.select(F.col("id"), *extra, *seq_cols) if seq_cols else base
-
-        # Stage 2: jitter + null gate + value dispatch, all native.
-        exprs = []
-        for plan in plans:
-            if plan.pure_native:
-                r = plan.ranges[0]
-                num = ordered_col(F.col("id"), r.distinct, r.cnt)
-                ridx = F.lit(0)
-                r01 = F.lit(0.0)
-            elif plan.fully_udf:
-                exprs.append(F.col(f"__val_{plan.name}").alias(plan.name))
-                continue
-            else:
-                num = F.col(f"__seq_{plan.name}.num")
-                # single-range kernels omit the constant dispatch field
-                ridx = (
-                    F.col(f"__seq_{plan.name}.ridx")
-                    if len(plan.ranges) > 1
-                    else F.lit(0)
-                )
-                r01 = F.col(f"__seq_{plan.name}.r01")
-            exprs.append(value_expr(plan, num, ridx, r01))
+        exprs = [
+            value_expr(plan)
+            if plan.pure_native
+            else _make_fused_kernel(plan, spark)(F.col("id")).alias(plan.name)
+            for plan in plans
+        ]
         if keep_id:
             exprs = [F.col("id"), *exprs]
-        return staged.select(*extra, *exprs)
+        return base.select(*extra, *exprs)
 
     def model_df_with_id(self, spark: SparkSession, model_name: str, **kw) -> DataFrame:
         """model_df plus the raw row-id column (oracle comparisons)."""

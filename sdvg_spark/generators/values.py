@@ -8,12 +8,15 @@ space (used to clamp distinct counts and derive the jitter factor).
 
 Each generator exposes up to three synchronized forms:
 
-* ``expr(number, num)``  — native Spark Column (JVM, codegen); preferred
-* ``np_value(number)``   — numpy kernel for the Arrow-UDF path; string
-                           generators return any array ``pa.array(...,
-                           type=pa.string())`` accepts (object, ``U``, or
-                           ``S`` for fixed-width ASCII: Arrow keeps an
-                           ``S`` value's trailing NULs)
+* ``expr(number, num)``  — native Spark Column (JVM, codegen) of the
+                           ``is_native`` generators; used for closed-form
+                           columns (one ordered range, no jitter, no null
+                           gate)
+* ``np_value(number)``   — numpy kernel for the engine's fused Arrow UDF;
+                           returns a ``pyarrow.Array`` of its
+                           ``spark_dtype`` (see :func:`arrow_type`). String
+                           forms write UTF-8 bytes straight into Arrow
+                           buffers (:func:`glyph_strings`)
 * ``sql(number_expr)``   — DuckDB SQL mirror for exact oracle queries
                            (None when not SQL-expressible)
 
@@ -25,8 +28,10 @@ from __future__ import annotations
 
 import math
 from datetime import datetime, timezone
+from functools import cached_property
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -42,6 +47,92 @@ from sdvg_spark.generators import locales
 _EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 _TWO63 = float(1 << 63)
 
+_ARROW_TYPES = {
+    "tinyint": pa.int8(),
+    "smallint": pa.int16(),
+    "int": pa.int32(),
+    "bigint": pa.int64(),
+    "float": pa.float32(),
+    "double": pa.float64(),
+    "timestamp": pa.timestamp("us", tz="UTC"),  # Spark's Arrow form
+    "string": pa.string(),
+}
+
+
+def arrow_type(spark_dtype: str) -> pa.DataType:
+    """The Arrow type Spark exchanges a column of ``spark_dtype`` as."""
+    return _ARROW_TYPES[spark_dtype]
+
+
+# ---------------------------------------------------------------------------
+# strings as Arrow buffers
+
+_MAX_OFFSET = (1 << 31) - 1  # pa.string() offsets are int32
+
+
+class GlyphTable:
+    """UTF-8 bytes of each glyph of a charset, zero-padded to the widest
+    (``bytes``: (G, W) uint8) with each glyph's byte count (``widths``).
+    A glyph code is an index into ``chars``."""
+
+    def __init__(self, chars: str):
+        enc = [c.encode() for c in chars]
+        self.index = {c: i for i, c in enumerate(chars)}
+        self.widths = np.array([len(e) for e in enc], dtype=np.uint8)
+        self.bytes = np.zeros((len(enc), int(self.widths.max())), dtype=np.uint8)
+        for i, e in enumerate(enc):
+            self.bytes[i, : len(e)] = np.frombuffer(e, dtype=np.uint8)
+        self.uniform = bool((self.widths == self.widths[0]).all())
+        self.code_dtype = np.uint8 if len(enc) <= 256 else np.int32
+
+    def codes(self, chars: str) -> np.ndarray:
+        """The glyph codes of ``chars``."""
+        return np.array([self.index[c] for c in chars], dtype=self.code_dtype)
+
+
+def _check_offsets(total_bytes: int) -> None:
+    if total_bytes > _MAX_OFFSET:
+        raise OverflowError(
+            f"{total_bytes} bytes of strings in one Arrow batch overflow the "
+            "int32 string offsets; lower spark.sql.execution.arrow."
+            "maxRecordsPerBatch"
+        )
+
+
+def _string_array(n: int, offsets: np.ndarray, data: np.ndarray) -> pa.StringArray:
+    return pa.StringArray.from_buffers(
+        n, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)
+    )
+
+
+def glyph_strings(
+    codes: np.ndarray, glyphs: GlyphTable, lengths: np.ndarray | None = None
+) -> pa.StringArray:
+    """Row r of the (n, L) glyph-code matrix ``codes`` — its first
+    ``lengths[r]`` codes, or all L — as the r-th string of an Arrow
+    string array, built from its UTF-8 bytes with no Python strings."""
+    n, L = codes.shape
+    if lengths is not None and (lengths == L).all():
+        lengths = None
+    if lengths is None and glyphs.uniform:
+        w = glyphs.bytes.shape[1]
+        _check_offsets(n * L * w)
+        data = glyphs.bytes[codes].reshape(-1)
+        return _string_array(n, np.arange(n + 1, dtype=np.int64) * (L * w), data)
+    cell = glyphs.widths[codes]  # bytes per glyph cell
+    if lengths is not None:
+        cell[np.arange(L)[None, :] >= lengths[:, None]] = 0
+    offsets = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(cell.sum(axis=1, dtype=np.int64), out=offsets[1:])
+    _check_offsets(int(offsets[-1]))
+    w = glyphs.bytes.shape[1]
+    if w == 1:
+        data = glyphs.bytes[codes, 0][cell > 0]
+    else:
+        keep = np.arange(w)[None, None, :] < cell[:, :, None]
+        data = glyphs.bytes[codes][keep]
+    return _string_array(n, offsets, data)
+
 
 def _unix_sec_nsec(dt: datetime) -> tuple[int, int]:
     """Floor seconds since epoch + nanosecond remainder (Go Unix() semantics)."""
@@ -49,15 +140,6 @@ def _unix_sec_nsec(dt: datetime) -> tuple[int, int]:
     sec = delta.days * 86400 + delta.seconds
     nsec = delta.microseconds * 1000
     return sec, nsec
-
-
-def _ordered_int64_py(from_: int, to: int, number: float, total: int) -> int:
-    step = (float(to) - float(from_) + 1.0) / float(total)
-    v = step * number
-    u = int(v) & ((1 << 64) - 1)
-    if u >= (1 << 63):
-        u -= 1 << 64
-    return from_ + u
 
 
 def _ordered_int64_np(from_: int, to: int, number: np.ndarray, total: int) -> np.ndarray:
@@ -117,10 +199,10 @@ class IntegerGen:
         v = _ordered_int64_col(self.p.from_, self.p.to, number, self.total)
         return v.cast(self.spark_dtype)
 
-    def np_value(self, number: np.ndarray) -> np.ndarray:
+    def np_value(self, number: np.ndarray) -> pa.Array:
         v = _ordered_int64_np(self.p.from_, self.p.to, number, self.total)
         dt = {8: np.int8, 16: np.int16, 32: np.int32, 64: np.int64}[self.p.bit_width]
-        return v.astype(dt)
+        return pa.array(v.astype(dt))
 
     def sql(self, number_expr: str) -> str | None:
         base = _ordered_int64_sql(self.p.from_, self.p.to, number_expr, self.total)
@@ -157,13 +239,13 @@ class FloatGen:
             v = F.lit(self.p.from_) * (F.lit(1.0) - s) + F.lit(self.p.to) * s
         return v.cast(self.spark_dtype)
 
-    def np_value(self, number: np.ndarray) -> np.ndarray:
+    def np_value(self, number: np.ndarray) -> pa.Array:
         if self.p.from_ == self.p.to:
-            v = np.full(len(number), self.p.from_)
+            v = np.full(len(number), float(self.p.from_))
         else:
             s = number / float(self.total)
             v = self.p.from_ * (1.0 - s) + self.p.to * s
-        return v.astype(np.float32) if self.p.bit_width == 32 else v
+        return pa.array(v.astype(np.float32) if self.p.bit_width == 32 else v)
 
     def sql(self, number_expr: str) -> str | None:
         if self.p.from_ == self.p.to:
@@ -215,13 +297,14 @@ class DateTimeGen:
             return vsec * F.lit(1_000_000_000) + vnsec
         return F.timestamp_micros(vsec * F.lit(1_000_000) + (vnsec / F.lit(1000)).cast("long"))
 
-    def np_value(self, number: np.ndarray) -> np.ndarray:
+    def np_value(self, number: np.ndarray) -> pa.Array:
         vsec = _ordered_int64_np(self.from_sec, self.to_sec, number, self.total)
         vnsec = _ordered_int64_np(self.from_nsec, self.to_nsec, number, self.total)
         vnsec = np.where(vnsec > 1_000_000_000, vnsec - 1_000_000_000, vnsec)
         if self.ns_unit:
-            return vsec * 1_000_000_000 + vnsec  # int64 nanos
-        return vsec * 1_000_000 + vnsec // 1000  # int64 micros
+            return pa.array(vsec * 1_000_000_000 + vnsec)  # int64 nanos
+        micros = vsec * 1_000_000 + vnsec // 1000
+        return pa.array(micros, type=arrow_type("timestamp"))
 
     def sql(self, number_expr: str) -> str | None:
         vsec = _ordered_int64_sql(self.from_sec, self.to_sec, number_expr, self.total)
@@ -254,38 +337,37 @@ class UUIDGen:
     def set_total(self, total: int) -> None:
         self.total = max(total, 1)
 
-    def expr(self, number: Column, num: Column) -> None:
-        return None  # UDF path only
+    # hex digit pair of each byte value, as the uint16 whose two
+    # (little-endian) bytes are the two ASCII digits
+    _HEX2 = np.frombuffer(
+        "".join(f"{b:02x}" for b in range(256)).encode(), dtype="<u2"
+    )
+    # canonical 8-4-4-4-12 layout: column 32 of the (n, 33) matrix of
+    # 32 hex digits plus one '-' column supplies the dashes
+    _LAYOUT = np.array(
+        [*range(0, 8), 32, *range(8, 12), 32, *range(12, 16), 32,
+         *range(16, 20), 32, *range(20, 32)]
+    )
 
-    # canonical 8-4-4-4-12 layout: char positions of each byte's nibbles
-    _DASHES = (8, 13, 18, 23)
-    _NIBBLE_POS = [
-        (0, 1), (2, 3), (4, 5), (6, 7),          # bytes 0-3
-        (9, 10), (11, 12),                        # bytes 4-5
-        (14, 15), (16, 17),                       # bytes 6-7
-        (19, 20), (21, 22),                       # bytes 8-9
-        (24, 25), (26, 27), (28, 29), (30, 31), (32, 33), (34, 35),  # 10-15
-    ]
-    _HEX = np.frombuffer(b"0123456789abcdef", dtype=np.uint8)
-
-    def np_value(self, number: np.ndarray) -> np.ndarray:
+    def np_value(self, number: np.ndarray) -> pa.Array:
         n = len(number)
         idx = number / float(self.total)
-        b = np.empty((n, 16), dtype=np.uint8)
+        pos = np.empty(n)
+        b = np.empty((16, n), dtype=np.uint8)
         for i in range(16):  # 16 vectorized passes, no per-row work
-            pos = np.floor(255.0 * idx)
-            b[:, i] = pos.astype(np.uint8)
-            idx = 255.0 * idx - pos
+            np.multiply(idx, 255.0, out=idx)
+            np.floor(idx, out=pos)
+            b[i] = pos
+            np.subtract(idx, pos, out=idx)
             np.maximum(idx, 0.0, out=idx)
-        b[:, 6] = (b[:, 6] & 0x0F) | 0x40
-        b[:, 8] = (b[:, 8] & 0x3F) | 0x80
-        out = np.empty((n, 36), dtype=np.uint8)
-        out[:, list(self._DASHES)] = ord("-")
-        for j, (hi, lo) in enumerate(self._NIBBLE_POS):
-            out[:, hi] = self._HEX[b[:, j] >> 4]
-            out[:, lo] = self._HEX[b[:, j] & 0xF]
-        # ASCII bytes: Arrow builds strings from S36 directly (no UCS-4)
-        return out.reshape(-1).view("S36")
+        b[6] = (b[6] & 0x0F) | 0x40
+        b[8] = (b[8] & 0x3F) | 0x80
+        _check_offsets(36 * n)
+        digits = np.empty((n, 33), dtype=np.uint8)
+        digits[:, :32] = self._HEX2[np.ascontiguousarray(b.T)].view(np.uint8)
+        digits[:, 32] = ord("-")
+        data = digits.take(self._LAYOUT, axis=1).reshape(-1)
+        return _string_array(n, np.arange(n + 1, dtype=np.int64) * 36, data)
 
     def sql(self, number_expr: str) -> str | None:
         return None
@@ -362,12 +444,18 @@ class EnumGen:
         idx = F.floor(num / F.lit(self.rows_per_value)).cast("int")
         return F.element_at(self._array_lit(dt), idx + F.lit(1))
 
-    def np_value(self, number: np.ndarray) -> np.ndarray:
-        idx = (number.astype(np.int64) // self.rows_per_value).astype(np.int64)
-        out = np.empty(len(number), dtype=object)
-        for r in range(len(number)):
-            out[r] = self.values[int(idx[r])]
-        return out
+    @cached_property
+    def _arrow_values(self) -> pa.Array:
+        """``values`` as cast by :meth:`expr` (an int literal wraps to
+        32 bits like Spark's long -> int cast)."""
+        values = self.values
+        if self.spark_dtype == "int":
+            values = [None if v is None else (v + (1 << 31)) % (1 << 32) - (1 << 31) for v in values]
+        return pa.array(values, type=arrow_type(self.spark_dtype))
+
+    def np_value(self, number: np.ndarray) -> pa.Array:
+        idx = number.astype(np.int64) // self.rows_per_value
+        return self._arrow_values.take(pa.array(idx))
 
     def sql(self, num_expr: str, duck_type: str | None = None) -> str:
         def lit(v) -> str:
@@ -931,128 +1019,154 @@ class StringGen:
 
     # -- numpy kernels ------------------------------------------------------
 
-    def np_value(self, number: np.ndarray) -> np.ndarray:
+    def np_value(self, number: np.ndarray) -> pa.Array:
         p = self.p
         if p.template:
             return self._template_np(number)
-        if p.logical_type == "first_name":
-            items = self.pack.first_names(p.min_length, p.max_length)
-            return self._list_pick_np(items, number)
-        if p.logical_type == "last_name":
-            items = self.pack.last_names_filtered(p.min_length, p.max_length)
-            return self._list_pick_np(items, number)
+        if p.logical_type in ("first_name", "last_name"):
+            return self._list_pick_np(number)
         if p.logical_type == "phone":
             return self._phone_np(number)
         if p.logical_type == "text":
             return self._text_np(number)
         return self._simple_np(number)
 
-    def _list_pick_np(self, items: list[str], number: np.ndarray) -> np.ndarray:
-        pos = _ordered_int64_np(0, len(items) - 1, number, self.total)
-        arr = np.array(items, dtype=object)
-        return arr[pos.astype(np.int64)]
+    @cached_property
+    def _names(self) -> pa.Array:
+        p = self.p
+        if p.logical_type == "first_name":
+            return pa.array(self.pack.first_names(p.min_length, p.max_length), pa.string())
+        return pa.array(self.pack.last_names_filtered(p.min_length, p.max_length), pa.string())
 
-    def _phone_np(self, number: np.ndarray) -> np.ndarray:
-        """Pattern pick + zero-padded digit fill (reference phone,
-        value/string.go:221-237)."""
+    def _list_pick_np(self, number: np.ndarray) -> pa.Array:
+        pos = _ordered_int64_np(0, len(self._names) - 1, number, self.total)
+        return self._names.take(pa.array(pos))
+
+    @cached_property
+    def _phone_glyphs(self) -> tuple[list[str], GlyphTable]:
         pats = self.pack.phone_patterns_filtered(self.p.min_length, self.p.max_length)
-        pos = _ordered_int64_np(0, len(pats) - 1, number, self.total)
-        out = np.empty(len(number), dtype=object)
-        for r in range(len(number)):
-            pat = pats[int(pos[r])]
-            ndig = pat.count("#")
-            pn = _ordered_int64_py(0, 10**ndig - 1, float(number[r]), self.total)
-            digits = str(pn).zfill(ndig)
-            buf = []
-            di = 0
-            for ch in pat:
-                if ch == "#":
-                    buf.append(digits[di])
-                    di += 1
-                else:
-                    buf.append(ch)
-            out[r] = "".join(buf)
-        return out
+        literals = sorted({ch for pat in pats for ch in pat} - set("#" + locales.NUMBERS))
+        return pats, GlyphTable(locales.NUMBERS + "".join(literals))
 
-    def _template_np(self, number: np.ndarray) -> np.ndarray:
+    def _phone_np(self, number: np.ndarray) -> pa.Array:
+        """Pattern pick + zero-padded digit fill (reference phone,
+        value/string.go:221-237): the i-th '#' of the picked pattern is
+        the i-th digit of the pattern's number written with ``ndig``
+        digits, as the native and SQL forms' ``lpad`` writes it."""
+        pats, glyphs = self._phone_glyphs
+        pos = _ordered_int64_np(0, len(pats) - 1, number, self.total)
+        codes = np.zeros((len(number), max(map(len, pats))), dtype=glyphs.code_dtype)
+        lengths = np.zeros(len(number), dtype=np.int64)
+        for k, pat in enumerate(pats):
+            rows = np.flatnonzero(pos == k)
+            if not rows.size:
+                continue
+            ndig = pat.count("#")
+            pn = _ordered_int64_np(0, 10**ndig - 1, number[rows], self.total)
+            while (big := pn >= 10**ndig).any():  # lpad keeps the leading digits
+                pn[big] //= 10
+            sub = np.empty((rows.size, len(pat)), dtype=glyphs.code_dtype)
+            di = ndig
+            for j, ch in enumerate(pat):
+                if ch == "#":
+                    di -= 1
+                    sub[:, j] = pn // 10**di % 10  # digit glyph code == digit
+                else:
+                    sub[:, j] = glyphs.index[ch]
+            codes[rows, : len(pat)] = sub
+            lengths[rows] = len(pat)
+        return glyph_strings(codes, glyphs, lengths)
+
+    @cached_property
+    def _template_slots(self) -> tuple[GlyphTable, list[tuple[int, np.ndarray | int]]]:
+        """The template's glyph table and, per character, either its
+        class's glyph codes (a drawn slot) or the literal's code."""
+        pack = self.pack
+        classes = {
+            "A": pack.large_letters,
+            "a": pack.small_letters,
+            "0": locales.NUMBERS,
+            "#": locales.SPECIAL_CHARS,
+        }
+        tmpl = self.p.template
+        glyphs = GlyphTable("".join(dict.fromkeys("".join(classes.get(ch, ch) for ch in tmpl))))
+        slots = []
+        for ch in tmpl:
+            letters = classes.get(ch)
+            slots.append((len(letters), glyphs.codes(letters)) if letters else (0, glyphs.index[ch]))
+        return glyphs, slots
+
+    def _template_np(self, number: np.ndarray) -> pa.Array:
         """Digit-chain fill of A/a/0/# template slots (reference
         templateString, value/string.go:174-201)."""
-        pack = self.pack
-        tmpl = self.p.template
+        glyphs, slots = self._template_slots
         idx = number / float(self.total)
-        cols: list[np.ndarray | str] = []
-        for ch in tmpl:
-            letters = {
-                "A": pack.large_letters,
-                "a": pack.small_letters,
-                "0": locales.NUMBERS,
-                "#": locales.SPECIAL_CHARS,
-            }.get(ch)
-            if letters is None:
-                cols.append(ch)
+        codes = np.empty((len(number), len(slots)), dtype=glyphs.code_dtype)
+        for j, (base, table) in enumerate(slots):
+            if not base:
+                codes[:, j] = table
                 continue
-            flo = len(letters) * idx
+            flo = base * idx
             pos = np.floor(flo)
             idx = np.maximum(flo - pos, 0.0)
-            arr = np.array(list(letters), dtype="U1")
-            cols.append(arr[pos.astype(np.int64)])
-        n = len(number)
-        L = len(tmpl)
-        mat = np.empty((n, L), dtype="U1")
-        for j, c in enumerate(cols):
-            mat[:, j] = c  # broadcast for literal str, vector for drawn
-        return np.ascontiguousarray(mat).reshape(-1).view(f"U{L}")
+            codes[:, j] = table[pos.astype(np.int64)]
+        return glyph_strings(codes, glyphs)
 
-    def _simple_np(self, number: np.ndarray) -> np.ndarray:
+    @cached_property
+    def _charset_glyphs(self) -> GlyphTable:
+        return GlyphTable(self.charset)
+
+    def _simple_np(self, number: np.ndarray) -> pa.Array:
         """Vectorized lexicographic unranking using the prefix tables
-        (reference simpleString, value/string.go:382-410)."""
+        (reference simpleString, value/string.go:382-410). The walk
+        carries the shrinking list ``act`` of rows still descending."""
         p = self.p
         cbp = self.count_by_prefix
         sbp = self.sum_by_prefix
-        cs = self.charset
-        cs_arr = np.array(list(cs), dtype=object)
+        glyphs = self._charset_glyphs
+        ncs = len(self.charset)
         n = len(number)
-        remain = number.astype(np.float64).copy()
-        chars = np.full((n, p.max_length), -1, dtype=np.int64)
-        plen = np.zeros(n, dtype=np.int64)
-        active = np.ones(n, dtype=bool)
-        for depth in range(p.max_length + 1):
-            if not active.any():
-                break
-            remain[active] -= cbp[depth]
-            nxt = sbp[depth + 1] if depth + 1 < len(sbp) else 0.0
-            stop = active & ((remain < 0) | (nxt == 0.0))
-            plen[stop] = depth
-            active &= ~stop
-            if not active.any() or depth >= p.max_length:
-                plen[active] = depth
-                active[:] = False
-                break
-            i = np.floor(remain[active] / nxt)
-            remain[active] -= nxt * i
-            chars[active, depth] = np.minimum(i, len(cs) - 1).astype(np.int64)
-        # vectorized assembly: (n, max_len) U1 matrix; unused tail stays
-        # '\x00' which numpy strips on U-string view conversion.
-        n_len = p.max_length - p.min_length + 1
-        numi = number.astype(np.int64)
         L = max(p.max_length, 1)
-        mat = np.zeros((n, L), dtype="U1")
-        cs_u = np.array(list(cs), dtype="U1")
-        pos_grid = np.arange(L)[None, :]
-        body = pos_grid < plen[:, None]
-        safe_chars = np.where(chars[:, :L] >= 0, chars[:, :L], 0)
-        mat[body] = cs_u[safe_chars[body]]
+        codes = np.zeros((n, L), dtype=glyphs.code_dtype)
+        plen = np.zeros(n, dtype=np.int64)
+        act = np.arange(n)
+        remain = number.astype(np.float64)
+        for depth in range(p.max_length + 1):
+            remain = remain - cbp[depth]
+            nxt = sbp[depth + 1] if depth + 1 < len(sbp) else 0.0
+            if nxt == 0.0:
+                plen[act] = depth
+                break
+            go = remain >= 0
+            plen[act[~go]] = depth
+            act, remain = act[go], remain[go]
+            if not act.size:
+                break
+            if depth >= p.max_length:
+                plen[act] = depth
+                break
+            i = np.floor(remain / nxt)
+            remain = remain - nxt * i
+            codes[act, depth] = np.minimum(i, ncs - 1)
         # short strings extend to dest = min_len + num % n_len with
         # cs[(num + i*i) % |cs|], i = offset past the prefix
-        dest = np.where(plen < p.min_length, p.min_length + numi % n_len, plen)
-        ext = body ^ (pos_grid < dest[:, None])  # plen <= pos < dest
-        if ext.any():
-            i_off = pos_grid - plen[:, None]
-            ext_idx = (numi[:, None] + i_off * i_off) % len(cs)
-            mat[ext] = cs_u[ext_idx[ext]]
-        return np.ascontiguousarray(mat).reshape(-1).view(f"U{L}")
+        n_len = p.max_length - p.min_length + 1
+        numi = number.astype(np.int64)
+        dest = plen
+        short = np.flatnonzero(plen < p.min_length)
+        if short.size:
+            dest = plen.copy()
+            dest[short] = p.min_length + numi[short] % n_len
+            pos_grid = np.arange(L)[None, :]
+            s_plen = plen[short][:, None]
+            ext = (pos_grid >= s_plen) & (pos_grid < dest[short][:, None])
+            i_off = pos_grid - s_plen
+            sub = codes[short]
+            sub[ext] = ((numi[short][:, None] + i_off * i_off) % ncs)[ext]
+            codes[short] = sub
+        return glyph_strings(codes, glyphs, dest)
 
-    def _text_np(self, number: np.ndarray) -> np.ndarray:
+    def _text_np(self, number: np.ndarray) -> pa.Array:
         """Combinatorial unranking of word sequences (reference text,
         value/string.go:239-324, re-enumerated by length bucket so each
         pick is O(#distinct word lengths), not O(#words))."""
@@ -1066,9 +1180,8 @@ class StringGen:
         n_lens = len(wlens)
         max_pre = len(comp) - 1
         n_len = p.max_length - p.min_length + 1
-        out = np.empty(len(number), dtype=object)
-        for r in range(len(number)):
-            num = float(number[r])
+        out = []
+        for num in number.tolist():
             wanted = p.min_length + 1 + int(num) % n_len
             k = int(math.floor((comp[max_pre] - 1) * (num / float(self.total))))
             parts: list[str] = []
@@ -1097,7 +1210,7 @@ class StringGen:
                 text_len += L
                 remaining -= L
             if not ok:
-                out[r] = ""
+                out.append("")
                 continue
             while text_len < wanted:
                 w = words[k % (len(words) - 1)]
@@ -1105,8 +1218,8 @@ class StringGen:
                 parts.append(locales.WORDS_DELIMITER)
                 text_len += len(w) + 1
             text = "".join(parts)
-            out[r] = text[:wanted] if len(text) > wanted else text
-        return out
+            out.append(text[:wanted] if len(text) > wanted else text)
+        return pa.array(out, type=pa.string())
 
 
 def make_value_gen(column_type: str, params) -> IntegerGen | FloatGen | DateTimeGen | UUIDGen | EnumGen | StringGen:

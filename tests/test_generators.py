@@ -406,10 +406,46 @@ def test_feistel_mode_engine_vs_oracle_exact(spark):
         assert got == want and len(got) == 3000, col
 
 
+def test_native_and_template_ranges_in_one_column(spark):
+    """A column mixing ranges with native value forms (phone, last
+    name, enum) and a template range equals the DuckDB oracle. Each
+    range's values are computed only over that range's rows: a template
+    fed another range's (larger) draw numbers indexes past its alphabet,
+    which is how a `when`-dispatched value UDF used to fail here."""
+    import duckdb
+
+    from sdvg_spark.oracle import column_oracle_sql
+
+    cfg = parse_config(
+        {
+            "random_seed": 3,
+            "models": {
+                "m": {
+                    "rows_count": 2500,
+                    "columns": [
+                        {"name": "s", "type": "string", "ranges": [
+                            {"type_params": {"logical_type": "phone", "locale": "ru"},
+                             "range_percentage": 0.25},
+                            {"type_params": {"logical_type": "last_name"},
+                             "null_percentage": 0.2, "range_percentage": 0.25},
+                            {"values": ["q", None, "zz"], "range_percentage": 0.25},
+                            {"type_params": {"template": "A#0a"},
+                             "range_percentage": 0.25}]},
+                    ],
+                }
+            },
+        }
+    )
+    got = {r.id: r.s for r in Engine(cfg).column_df(spark, "m", "s").collect()}
+    want = dict(duckdb.connect().execute(column_oracle_sql(cfg, "m", "s")).fetchall())
+    assert got == want and len(got) == 2500
+    assert any(v is not None and len(v) == 4 and v[0].isupper() for v in got.values())
+
+
 # A second model for the golden test: the multi-range fused path (a
 # string column mixing a nullable simple range and a template range), a
-# nullable fused uuid column and the value-UDF path (enum + simple
-# string: one native range, one Python range).
+# nullable fused uuid column and a column mixing an enum range with a
+# simple-string range.
 MIXED_CFG = {
     "random_seed": 5,
     "models": {
@@ -430,6 +466,77 @@ MIXED_CFG = {
     },
 }
 
+# Multi-byte glyphs (Russian letters, ё) through every string path: the
+# simple-string unranking, templates, a two-range column whose ranges
+# are both Python-built, and a non-unique uuid column.
+UNICODE_CFG = {
+    "random_seed": 9,
+    "models": {
+        "unicode": {
+            "rows_count": 4000,
+            "columns": [
+                {"name": "ru_s", "type": "string",
+                 "type_params": {"locale": "ru", "min_length": 2, "max_length": 7},
+                 "null_percentage": 0.15},
+                {"name": "ru_t", "type": "string",
+                 "type_params": {"locale": "ru", "template": "Aa-0 ё"}},
+                {"name": "en_short", "type": "string",
+                 "type_params": {"min_length": 1, "max_length": 4}},
+                {"name": "s_mix", "type": "string", "ranges": [
+                    {"type_params": {"locale": "ru", "min_length": 1, "max_length": 3},
+                     "range_percentage": 0.6},
+                    {"type_params": {"template": "a0#"}, "null_percentage": 0.3,
+                     "range_percentage": 0.4}]},
+                {"name": "uuid_half", "type": "uuid", "distinct_percentage": 0.5},
+            ],
+        }
+    },
+}
+
+# Every Arrow type a column can come back as, enum ranges of each type
+# (with a null literal), the ns datetime unit, phones and names (native
+# generators inside a permuted column), ordered Python-built columns and
+# mixed-width ranges that widen to the column's type.
+TYPES_CFG = {
+    "random_seed": 11,
+    "models": {
+        "types": {
+            "rows_count": 3000,
+            "columns": [
+                {"name": "e_null", "type": "string", "values": ["x", None, "y"],
+                 "null_percentage": 0.1},
+                {"name": "e_int", "type": "integer", "ranges": [
+                    {"values": [7, -3, 100], "range_percentage": 0.5},
+                    {"type_params": {"bit_width": 64, "from": -10, "to": 10},
+                     "range_percentage": 0.5}]},
+                {"name": "f_enum", "type": "float", "values": [0.1, 2.5, -7.25]},
+                {"name": "dt_ns", "type": "datetime",
+                 "type_params": {"unit": "ns", "from": "2001-02-03T04:05:06.123456789Z",
+                                 "to": "2003-01-01T00:00:00Z"},
+                 "null_percentage": 0.05},
+                {"name": "dt_enum", "type": "datetime",
+                 "values": ["2020-01-01T00:00:00Z", "2021-06-01T12:00:00Z"]},
+                {"name": "phone_n", "type": "string",
+                 "type_params": {"logical_type": "phone"}, "null_percentage": 0.2},
+                {"name": "last_ru", "type": "string",
+                 "type_params": {"logical_type": "last_name", "locale": "ru"}},
+                {"name": "uuid_ord", "type": "uuid", "ordered": True},
+                {"name": "t_ord", "type": "string", "type_params": {"template": "0"},
+                 "ordered": True},
+                {"name": "s_ord", "type": "string",
+                 "type_params": {"min_length": 3, "max_length": 6}, "ordered": True},
+                {"name": "i8", "type": "integer", "type_params": {"bit_width": 8},
+                 "null_percentage": 0.3},
+                {"name": "f_mix", "type": "float", "ranges": [
+                    {"type_params": {"bit_width": 32, "from": 0, "to": 1},
+                     "range_percentage": 0.5},
+                    {"type_params": {"bit_width": 64, "from": 5, "to": 6},
+                     "null_percentage": 0.5, "range_percentage": 0.5}]},
+            ],
+        }
+    },
+}
+
 # sha256[:16] of each model's rows, pinned before the Arrow-native
 # kernels and the table-driven Feistel rounds landed: any change to a
 # generated value (or its string form) moves a digest.
@@ -442,6 +549,10 @@ GOLDEN = {
     ("feistel", "child"): "2d3cb655a9d91c75",
     ("feistel", "child_ord"): "18964d91d8e6b565",
     ("feistel", "mixed"): "c1de62c99a4b322d",
+    ("auto", "unicode"): "799855d4a6150fed",
+    ("auto", "types"): "b551495d45882ab6",
+    ("feistel", "unicode"): "95b3847beb5f37ac",
+    ("feistel", "types"): "9f3274784422176e",
 }
 
 
@@ -467,7 +578,12 @@ def test_golden_engine_output(spark, permutation):
     DuckDB oracle shares ``feistel_np`` with the engine, so only fixed
     digests catch a change to the kernels that both would follow."""
     got = {}
-    for cfg, models in ((CFG, ("m", "child", "child_ord")), (MIXED_CFG, ("mixed",))):
+    for cfg, models in (
+        (CFG, ("m", "child", "child_ord")),
+        (MIXED_CFG, ("mixed",)),
+        (UNICODE_CFG, ("unicode",)),
+        (TYPES_CFG, ("types",)),
+    ):
         eng = Engine(parse_config({**cfg, "permutation": permutation}))
         for model in models:
             got[(permutation, model)] = _rows_digest(eng.model_df_with_id(spark, model))

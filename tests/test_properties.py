@@ -66,7 +66,7 @@ def test_simple_string_unranking_injective(min_len, extra):
         }
     )
     n = int(min(vg.total, 300))
-    vals = vg.np_value(np.arange(n, dtype=np.float64))
+    vals = vg.np_value(np.arange(n, dtype=np.float64)).to_pylist()
     assert len(set(vals)) == n
     assert all(min_len <= len(v) <= min_len + extra for v in vals)
 
@@ -93,7 +93,7 @@ def test_template_unranking_injective(tmpl):
     # reference alike; the injectivity contract applies below it
     assume(vg.total <= true_space)
     n = int(min(vg.total, 300))
-    vals = vg.np_value(np.arange(n, dtype=np.float64))
+    vals = vg.np_value(np.arange(n, dtype=np.float64)).to_pylist()
     assert len(set(vals)) == n
     assert all(len(v) == len(tmpl) for v in vals)
 
@@ -113,7 +113,7 @@ def test_text_unranking_injective_and_bounded(min_len, extra):
         rows=200,
     )
     n = int(min(vg.total, 200))
-    vals = vg.np_value(np.arange(n, dtype=np.float64))
+    vals = vg.np_value(np.arange(n, dtype=np.float64)).to_pylist()
     assert all(v for v in vals)  # every rank decodes
     assert len(set(vals)) == n
     # wantedLen = min + delimiter + num % (max-min+1) in the reference
@@ -127,7 +127,7 @@ def test_text_unranking_injective_and_bounded(min_len, extra):
 def test_uuid_unranking_injective(rows):
     vg = _vgen({"type": "uuid"}, rows=rows)
     n = int(min(vg.total, rows))
-    vals = vg.np_value(np.arange(n, dtype=np.float64))
+    vals = vg.np_value(np.arange(n, dtype=np.float64)).to_pylist()
     assert len(set(vals)) == n
 
 
