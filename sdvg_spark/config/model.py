@@ -435,6 +435,16 @@ class ModelSpec:
             if cerrs:
                 errs.append(f"columns[{c.name}]:")
                 errs.extend(cerrs)
+            elif c.type == "integer":
+                # integer enum values are 32-bit: a wider literal would
+                # wrap silently (and the DuckDB mirror rejects it)
+                errs.extend(
+                    f"{self.name}.{c.name}: integer enum literal {v} is outside "
+                    f"int32 [{-(2**31)}, {2**31 - 1}]"
+                    for r in c.ranges
+                    for v in r.values or ()
+                    if v is not None and not -(2**31) <= v < 2**31
+                )
         for pc in self.partition_columns:
             if pc.name not in seen:
                 errs.append(f"partition_columns[{pc.name}] does not exist")

@@ -1,21 +1,29 @@
 """The engine: a validated config becomes one DataFrame per model.
 
-Execution model (Spark-first; see SURVEY.md §7): each model is
-``spark.range(generate_from, generate_to)`` and every column is a
-deterministic expression of the row id. Nothing here shuffles — the
+Execution model (Spark-first; see SURVEY.md §7): every cell is a pure
+function of (seed, model, column, row id). Nothing here shuffles — the
 sequencer pipeline (permute -> range dispatch -> draw number -> jitter ->
-null gate -> value) is a pure function of (seed, column key, id), so
-generation is embarrassingly parallel and idempotent under any
-partitioning. At 100 TB this means: no stage boundaries, no skew, output
-parallelism == input splits of ``range``.
+null gate -> value) needs nothing but the id, so generation is
+embarrassingly parallel and idempotent under any partitioning. A model
+is ``spark.range(0, P, 1, P).mapInArrow(...)``: one descriptor row per
+task, and task ``t`` makes the ids of Range's split ``t`` of
+``[generate_from, generate_to)`` itself with ``np.arange``. No id column
+crosses from the JVM to Python and nothing is joined back: each Arrow
+batch returns holding every column of the model. At 100 TB this means:
+no stage boundaries, no skew, one task per split.
 
-Column expressions cover only closed-form columns: one ordered range,
-no jitter, no null gate and a native value generator; these stay in
-whole-stage codegen. Every other column is ONE fused Arrow UDF (numpy
-kernels over Arrow batches, no pandas) that runs the seeded permutation,
-range dispatch, jitter, null gate and value generator and returns the
-column's final Arrow array; strings are written as UTF-8 bytes straight
-into Arrow buffers.
+One evaluator (``_make_evaluator``) turns a batch of ids into the final
+Arrow array of every column (numpy kernels over Arrow buffers, no
+pandas): the seeded permutation, range dispatch, jitter, null gate and
+value generator in one pass, strings written as UTF-8 bytes straight
+into Arrow buffers. A model whose columns are all closed-form (one
+ordered range, no jitter, no null gate, a native value generator) skips
+Python and stays a ``select`` of native expressions over
+``spark.range``, inside whole-stage codegen. Streaming
+(``apply_columns``) maps the same evaluator over a source's ``id``.
+Catalyst cannot prune the map's outputs: selecting some columns of a
+model, or counting it, still computes every column (sinks write whole
+models).
 
 Foreign keys re-evaluate the *parent's* pure expression on the child's
 row-ids (the reference's zero-shuffle trick, task.go:86-114): referential
@@ -25,13 +33,15 @@ integrity without materializing or joining the parent.
 from __future__ import annotations
 
 import math
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
 from sdvg_spark.config.model import ColumnSpec, ConfigError, GenerationConfig, ModelSpec
 from sdvg_spark.core.rng import derive_seed
@@ -75,7 +85,9 @@ class ColumnPlan:
     def pure_native(self) -> bool:
         """No kernel needed: single ordered range, no jitter (factor 0),
         no null gate and a native value generator — the whole column is
-        a closed-form expression of id and stays in whole-stage codegen."""
+        a closed-form expression of id. A model of such columns only is
+        a native ``select`` in whole-stage codegen; in any other model
+        the evaluator computes the column without an frf draw."""
         if not self.all_ordered_single:
             return False
         r = self.ranges[0]
@@ -189,12 +201,12 @@ def _column_dtype(data_column: ColumnSpec, plans: list[RangePlan]) -> str:
 
 
 # ---------------------------------------------------------------------------
-# the fused column kernel (the only Arrow-UDF stage of the pipeline)
+# the model evaluator (the only Python stage of the pipeline)
 
 
 def _make_sequencer(plan: ColumnPlan, spark: SparkSession):
-    """Closure: Arrow int64 id array -> (ridx, num, r01) numpy arrays;
-    ridx is None for single-range columns (its dispatch is the constant 0).
+    """Closure: int64 id array -> (ridx, num, r01) numpy arrays; ridx is
+    None for single-range columns (its dispatch is the constant 0).
 
     One vectorized pass computes the column-level permutation, the
     range dispatch, the per-range draw number, and the frf hash draw
@@ -268,8 +280,8 @@ def _make_sequencer(plan: ColumnPlan, spark: SparkSession):
                     num[m] = perm_np(k[m], int(distincts[j]), int(order_seeds[j]), "feistel")
         return (None if single else ridx), num
 
-    def compute(ids: pa.Array) -> tuple[np.ndarray | None, np.ndarray, np.ndarray]:
-        ridx, num = draw(ids.to_numpy().view(np.uint64))
+    def compute(ids: np.ndarray) -> tuple[np.ndarray | None, np.ndarray, np.ndarray]:
+        ridx, num = draw(ids.view(np.uint64))
         return ridx, num, frf_np(num + np.uint64(data_seed))
 
     return compute
@@ -291,31 +303,44 @@ def _null_gated(values: pa.Array, gate: np.ndarray | None) -> pa.Array:
     )
 
 
-def _range_values(r: RangePlan, num: np.ndarray, r01: np.ndarray, atype: pa.DataType) -> pa.Array:
+def _range_values(
+    r: RangePlan, num: np.ndarray, r01: np.ndarray | None, atype: pa.DataType
+) -> pa.Array:
     """One range's final values: jitter, value generator, the column's
     Arrow type and the null gate. ``r01`` = frf(data_seed + num) drives
     both the jitter and the gate (reference generator.go:220-237 uses
-    the same hash draw for both)."""
-    values = r.vgen.np_value(num.astype(np.float64) + r01 * r.factor)
+    the same hash draw for both); a closed-form range has neither and
+    passes None. A zero factor adds exactly 0.0 to a non-negative
+    number, so that jitter is skipped."""
+    number = num.astype(np.float64)
+    if r.factor:
+        number += r01 * r.factor
+    values = r.vgen.np_value(number)
     if values.type != atype:
         values = values.cast(atype)  # a narrower range widens
     return _null_gated(values, r01 < r.null_pct if r.null_pct > 0 else None)
 
 
-def _make_fused_kernel(plan: ColumnPlan, spark: SparkSession):
-    """Arrow UDF: id -> the column's final Arrow array (every column
-    that is not :attr:`ColumnPlan.pure_native`).
+def _make_column(plan: ColumnPlan, spark: SparkSession) -> Callable[[np.ndarray], pa.Array]:
+    """int64 ids -> the column's final Arrow array.
 
-    Sequencer, jitter, null gate and value run in one Python pass, so
-    each row crosses the JVM<->Arrow boundary once, carrying only its
-    final value: no struct of draws for the JVM to unpack and finish.
+    Sequencer, jitter, null gate and value run in one numpy pass. A
+    :attr:`ColumnPlan.pure_native` column is its ordered draw and value
+    form, with no frf draw: its factor and null share are both 0.
     """
-    compute = _make_sequencer(plan, spark)
     ranges = plan.ranges
     atype = arrow_type(plan.dtype)
+    if plan.pure_native:
+        r = ranges[0]
 
-    @arrow_udf(plan.dtype)
-    def kernel(ids: pa.Array) -> pa.Array:
+        def closed_form(ids: np.ndarray) -> pa.Array:
+            return _range_values(r, ordered_np(ids.view(np.uint64), r.distinct, r.cnt), None, atype)
+
+        return closed_form
+
+    compute = _make_sequencer(plan, spark)
+
+    def column(ids: np.ndarray) -> pa.Array:
         ridx, num, r01 = compute(ids)
         if ridx is None:
             return _range_values(ranges[0], num, r01, atype)
@@ -329,7 +354,23 @@ def _make_fused_kernel(plan: ColumnPlan, spark: SparkSession):
         pos[np.concatenate(rows)] = np.arange(len(ridx))
         return pa.concat_arrays(parts).take(pos)
 
-    return kernel
+    return column
+
+
+def _make_evaluator(
+    plans: list[ColumnPlan], spark: SparkSession
+) -> Callable[[np.ndarray], list[pa.Array]]:
+    """int64 ids -> one final Arrow array per plan, in plan order."""
+    columns = [_make_column(plan, spark) for plan in plans]
+
+    def evaluate(ids: np.ndarray) -> list[pa.Array]:
+        return [column(ids) for column in columns]
+
+    return evaluate
+
+
+def _fields(plans: list[ColumnPlan]) -> list[T.StructField]:
+    return [T.StructField(plan.name, from_arrow_type(arrow_type(plan.dtype))) for plan in plans]
 
 
 def value_expr(plan: ColumnPlan) -> Column:
@@ -362,8 +403,7 @@ class Engine:
         model = self.cfg.models[model_name]
         lo = model.generate_from if generate_from is None else generate_from
         hi = model.generate_to if generate_to is None else generate_to
-        base = spark.range(lo, hi, 1, num_partitions)
-        return self.apply_columns(spark, base, self.plans_for(model), keep_id=keep_id)
+        return self._generate(spark, self.plans_for(model), lo, hi, num_partitions, keep_id)
 
     def apply_columns(
         self,
@@ -374,18 +414,70 @@ class Engine:
         extra_cols: list[str] | None = None,
     ) -> DataFrame:
         """Evaluate column plans over ANY DataFrame with an ``id`` column
-        (batch ``spark.range`` or a streaming rate source — generation is
-        a pure function of the row index either way)."""
-        extra = [F.col(c) for c in (extra_cols or [])]
-        exprs = [
-            value_expr(plan)
-            if plan.pure_native
-            else _make_fused_kernel(plan, spark)(F.col("id")).alias(plan.name)
-            for plan in plans
-        ]
-        if keep_id:
-            exprs = [F.col("id"), *exprs]
-        return base.select(*extra, *exprs)
+        (a streaming rate source, say — generation is a pure function of
+        the row index either way): ``extra_cols`` pass through first,
+        then ``id`` when ``keep_id`` is set, then the columns. One
+        ``mapInArrow`` evaluates every column of a batch, unless all of
+        them are closed-form native expressions."""
+        extra = list(extra_cols or [])
+        passed = extra + (["id"] if keep_id else [])
+        if all(plan.pure_native for plan in plans):
+            return base.select(*passed, *map(value_expr, plans))
+        evaluate = _make_evaluator(plans, spark)
+        schema = T.StructType([base.schema[c] for c in passed] + _fields(plans))
+        names = schema.names
+
+        def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for b in batches:
+                cols = evaluate(b.column("id").to_numpy())
+                yield pa.RecordBatch.from_arrays([*map(b.column, passed), *cols], names=names)
+
+        return base.select(*extra, "id").mapInArrow(task, schema)
+
+    def _generate(
+        self,
+        spark: SparkSession,
+        plans: list[ColumnPlan],
+        lo: int,
+        hi: int,
+        num_partitions: int | None,
+        keep_id: bool,
+    ) -> DataFrame:
+        """Rows ``[lo, hi)`` of ``plans``, each task making its own ids.
+
+        Task ``t`` of ``P`` owns Range's split ``[lo + n*t // P,
+        lo + n*(t+1) // P)``, so every partition holds the ids of
+        ``spark.range(lo, hi, 1, P)``; only ``t`` crosses from the JVM.
+        Its ids come from ``np.arange`` in batches of
+        ``spark.sql.execution.arrow.maxRecordsPerBatch``, and each batch
+        returns as one Arrow batch of every column. A model of
+        closed-form columns only stays a native ``select`` over
+        ``spark.range``: no Python worker at all.
+        """
+        if all(plan.pure_native for plan in plans):
+            return self.apply_columns(spark, spark.range(lo, hi, 1, num_partitions), plans, keep_id)
+        num_tasks = num_partitions or spark.sparkContext.defaultParallelism
+        n = max(hi - lo, 0)
+        batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+        if batch <= 0:  # Spark's "no limit"
+            batch = max(n, 1)
+        evaluate = _make_evaluator(plans, spark)
+        id_field = [T.StructField("id", T.LongType(), nullable=False)] if keep_id else []
+        schema = T.StructType(id_field + _fields(plans))
+        names = schema.names
+
+        def task(descriptors: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for d in descriptors:
+                for t in d.column(0).to_pylist():
+                    first, last = lo + n * t // num_tasks, lo + n * (t + 1) // num_tasks
+                    for start in range(first, last, batch):
+                        ids = np.arange(start, min(start + batch, last), dtype=np.int64)
+                        cols = evaluate(ids)
+                        if keep_id:
+                            cols = [pa.array(ids), *cols]
+                        yield pa.RecordBatch.from_arrays(cols, names=names)
+
+        return spark.range(0, num_tasks, 1, num_tasks).mapInArrow(task, schema)
 
     def model_df_with_id(self, spark: SparkSession, model_name: str, **kw) -> DataFrame:
         """model_df plus the raw row-id column (oracle comparisons)."""
@@ -403,6 +495,6 @@ class Engine:
         configure_session(spark)
         model = self.cfg.models[model_name]
         plan = plan_column(self.cfg, model, model.column(column_name))
-        lo, hi = model.generate_from, model.generate_to
-        base = spark.range(lo, hi, 1, num_partitions)
-        return self.apply_columns(spark, base, [plan], keep_id=True)
+        return self._generate(
+            spark, [plan], model.generate_from, model.generate_to, num_partitions, keep_id=True
+        )

@@ -9,10 +9,10 @@ space (used to clamp distinct counts and derive the jitter factor).
 Each generator exposes up to three synchronized forms:
 
 * ``expr(number, num)``  — native Spark Column (JVM, codegen) of the
-                           ``is_native`` generators; used for closed-form
-                           columns (one ordered range, no jitter, no null
-                           gate)
-* ``np_value(number)``   — numpy kernel for the engine's fused Arrow UDF;
+                           ``is_native`` generators; used for models whose
+                           columns are all closed-form (one ordered range,
+                           no jitter, no null gate)
+* ``np_value(number)``   — numpy kernel for the engine's model evaluator;
                            returns a ``pyarrow.Array`` of its
                            ``spark_dtype`` (see :func:`arrow_type`). String
                            forms write UTF-8 bytes straight into Arrow

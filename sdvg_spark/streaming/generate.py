@@ -1,13 +1,13 @@
-"""Streaming synthetic data: the batch engine's column expressions over
-a Structured Streaming source.
+"""Streaming synthetic data: the batch engine's column evaluator mapped
+over a Structured Streaming source's row ids.
 
 The reference engine is batch-only (its HTTP "streaming" sink is
 micro-batched POSTs, SURVEY.md §1.3); this module is the beyond-parity
 streaming surface. Because every generated cell is a pure function of
-(seed, column, row-index), the SAME column expressions evaluate over a
-``rate`` source's monotonically increasing ``value`` — each micro-batch
-materializes the next slice of the identical deterministic dataset a
-batch run would produce. Use cases: sink load-testing, live demo feeds,
+(seed, column, row-index), the SAME evaluator (``Engine.apply_columns``)
+runs over a ``rate`` source's monotonically increasing ``value`` — each
+micro-batch materializes the next slice of the identical deterministic
+dataset a batch run would produce. Use cases: sink load-testing, live demo feeds,
 replayable event streams.
 """
 

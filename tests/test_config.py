@@ -140,6 +140,18 @@ def test_enum_numeric_coercion_sorted():
     assert vals == [1, 2, 3]
 
 
+def test_integer_enum_literal_outside_int32_rejected():
+    """Integer enum values are 32-bit: a wider literal is a config
+    error naming model.column and the literal, not a silent wrap."""
+    for bad in (2**31, -(2**31) - 1, 3000000000):
+        with pytest.raises(ConfigError, match=rf"m\.c: integer enum literal {bad} "):
+            parse_config(_one_col_cfg({"name": "c", "type": "integer", "values": [5, bad]}))
+    cfg = parse_config(
+        _one_col_cfg({"name": "c", "type": "integer", "values": [2**31 - 1, None, -(2**31)]})
+    )
+    assert cfg.models["m"].column("c").ranges[0].values == [None, -(2**31), 2**31 - 1]
+
+
 def test_generate_from_to_defaults():
     cfg = parse_config(_one_col_cfg({"name": "c", "type": "integer"}, rows=50))
     m = cfg.models["m"]

@@ -442,9 +442,9 @@ def test_native_and_template_ranges_in_one_column(spark):
     assert any(v is not None and len(v) == 4 and v[0].isupper() for v in got.values())
 
 
-# A second model for the golden test: the multi-range fused path (a
-# string column mixing a nullable simple range and a template range), a
-# nullable fused uuid column and a column mixing an enum range with a
+# A second model for the golden test: the multi-range path (a string
+# column mixing a nullable simple range and a template range), a
+# nullable uuid column and a column mixing an enum range with a
 # simple-string range.
 MIXED_CFG = {
     "random_seed": 5,
@@ -589,3 +589,71 @@ def test_golden_engine_output(spark, permutation):
             got[(permutation, model)] = _rows_digest(eng.model_df_with_id(spark, model))
     want = {k: v for k, v in GOLDEN.items() if k[0] == permutation}
     assert got == want
+
+
+def _task_slices(df):
+    """(count, min id, max id) of each non-empty partition, by partition."""
+    from pyspark.sql import functions as F
+
+    return sorted(
+        tuple(r)
+        for r in df.groupBy(F.spark_partition_id().alias("p"))
+        .agg(F.count("*"), F.min("id"), F.max("id"))
+        .collect()
+    )
+
+
+def test_task_slices_match_range(spark):
+    """Each generation task makes its own ids: partition p must hold
+    exactly the ids of partition p of ``spark.range(lo, hi, 1, P)``, so
+    part files and the rotation coalesce see the same layout. The last
+    case, 10 rows over 64 tasks, leaves most tasks empty."""
+    cfg = parse_config({"random_seed": 7, "models": {"m": {
+        "rows_count": 1000, "generate_from": 13, "columns": [
+            {"name": "v", "type": "integer", "type_params": {"bit_width": 64}},
+            {"name": "k", "type": "integer",
+             "type_params": {"bit_width": 64, "from": 1, "to": 1000}, "ordered": True}]}}})
+    eng = Engine(cfg)
+    for p, lo, hi in ((1, 13, 1000), (3, 13, 1000), (7, 13, 1000), (64, 13, 1000), (64, 990, 1000)):
+        got = _task_slices(eng.model_df_with_id(spark, "m", generate_from=lo, generate_to=hi,
+                                                num_partitions=p))
+        assert got == _task_slices(spark.range(lo, hi, 1, p)), (p, lo, hi)
+
+
+def test_rows_independent_of_arrow_batch_size(spark):
+    """A task's ids are cut into Arrow batches of maxRecordsPerBatch; a
+    7-row batch must generate the same rows as the default."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    eng = Engine(parse_config(MIXED_CFG))
+    want = _rows_digest(eng.model_df_with_id(spark, "mixed"))
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "7")
+        got = _rows_digest(eng.model_df_with_id(spark, "mixed"))
+    finally:
+        spark.conf.set(key, old)
+    assert got == want
+
+
+def test_integer_enum_int32_extremes_match_oracle(spark):
+    """The int32 bounds are valid integer enum literals: the engine
+    writes them unchanged and equals the DuckDB oracle on them, both in
+    the model's Arrow map and, for the closed-form column ``o``, in the
+    native select of ``column_df``."""
+    import duckdb
+
+    from sdvg_spark.oracle import column_oracle_sql
+
+    lo, hi = -(2**31), 2**31 - 1
+    cfg = parse_config({"random_seed": 4, "models": {"m": {"rows_count": 500, "columns": [
+        {"name": "e", "type": "integer", "values": [hi, 0, lo]},
+        {"name": "n", "type": "integer", "values": [lo, None, hi], "null_percentage": 0.1},
+        {"name": "o", "type": "integer", "values": [hi, lo], "ordered": True}]}}})
+    eng = Engine(cfg)
+    rows = eng.model_df_with_id(spark, "m").collect()
+    for col, values in (("e", {lo, 0, hi}), ("n", {lo, None, hi}), ("o", {lo, hi})):
+        want = dict(duckdb.connect().execute(column_oracle_sql(cfg, "m", col)).fetchall())
+        got = {r.id: r[col] for r in rows}
+        assert got == want and len(got) == 500, col
+        assert set(got.values()) == values, col
+    assert {r.id: r.o for r in eng.column_df(spark, "m", "o").collect()} == got

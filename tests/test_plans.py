@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import re
 
 import pytest
 
@@ -57,8 +58,11 @@ def test_top_revenue_broadcasts_dimensions(spark, entry):
 
 
 def test_generation_is_shuffle_free(spark):
-    """The whole generator collapses to range -> project: every cell is
-    a pure function of (seed, column, id), so no exchange may appear."""
+    """The whole generator collapses to one map over range: every cell
+    is a pure function of (seed, column, id), so no exchange may appear.
+    A model with a Python column is one MapInArrow (each task makes its
+    own ids, no per-column Python UDF); a model of closed-form columns
+    only runs no Python at all."""
     from sdvg_spark.config.model import parse_config
     from sdvg_spark.engine import Engine
 
@@ -82,6 +86,30 @@ def test_generation_is_shuffle_free(spark):
     plan = _plan(df)
     assert "Exchange" not in plan
     assert "Range" in plan
+    # formatted mode: one "(n) Node" details header per plan node
+    assert len(re.findall(r"^\(\d+\) MapInArrow\b", plan, re.M)) == 1
+    assert "ArrowEvalPython" not in plan
+
+    native = parse_config(
+        {
+            "random_seed": 5,
+            "models": {
+                "m": {
+                    "rows_count": 1000,
+                    "columns": [
+                        {"name": "k", "type": "integer",
+                         "type_params": {"bit_width": 64, "from": 1, "to": 1000},
+                         "ordered": True},
+                    ],
+                }
+            },
+        }
+    )
+    plan = _plan(Engine(native).model_df(spark, "m"))
+    assert "Exchange" not in plan
+    assert "Range" in plan
+    for node in ("MapInArrow", "Python"):  # ArrowEvalPython, BatchEvalPython, ...
+        assert node not in plan, node
 
 
 def test_fk_generation_is_shuffle_free(spark):
