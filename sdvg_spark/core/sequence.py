@@ -25,8 +25,8 @@ contract — a seeded bijective "shuffle" of ``[0, n)`` that cycles — as a
   compute the round per row.
 
 Both are exposed through ``perm_np(idx, n, seed, mode)``; the *ordered*
-sequencer (a monotone step function) is pure arithmetic and has a native
-Spark expression form.
+sequencer (a monotone step function) is pure arithmetic (``ordered_np``,
+mirrored in DuckDB SQL by ``ordered_sql``).
 """
 
 from __future__ import annotations
@@ -34,8 +34,6 @@ from __future__ import annotations
 from functools import lru_cache
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from sdvg_spark.core.rng import MASK64, splitmix64_np, dlit
 
@@ -223,8 +221,7 @@ def perm_np(idx: np.ndarray, n: int, seed: int, mode: str) -> np.ndarray:
     if n <= 0:
         return np.zeros(len(idx), dtype=np.uint64)
     k = np.asarray(idx, dtype=np.uint64) % np.uint64(n)
-    if mode == "auto":
-        mode = "lfsr" if n <= LFSR_TABLE_CAP else "feistel"
+    mode = resolve_mode(n, mode)
     if mode == "lfsr":
         return lfsr_walk(n, seed)[k]
     if mode == "feistel":
@@ -233,6 +230,8 @@ def perm_np(idx: np.ndarray, n: int, seed: int, mode: str) -> np.ndarray:
 
 
 def resolve_mode(n: int, mode: str) -> str:
+    """The tier of a domain of ``n``: 'auto' is the parity table up to
+    ``LFSR_TABLE_CAP`` and feistel above; any other mode stays."""
     if mode == "auto":
         return "lfsr" if n <= LFSR_TABLE_CAP else "feistel"
     return mode
@@ -262,13 +261,6 @@ def ordered_np(k: np.ndarray, distinct: int, cycle: int) -> np.ndarray:
     kk = np.asarray(k, dtype=np.uint64) % np.uint64(max(cycle, 1))
     res = kk.astype(np.float64) * np.float64(distinct) / np.float64(max(cycle, 1))
     return res.astype(np.uint64)
-
-
-def ordered_col(k: Column, distinct: int, cycle: int) -> Column:
-    """Native Spark form of the ordered sequencer (positive k)."""
-    cyc = max(cycle, 1)
-    kk = k % F.lit(cyc)
-    return (kk.cast("double") * F.lit(float(distinct)) / F.lit(float(cyc))).cast("long")
 
 
 def ordered_sql(k_expr: str, distinct: int, cycle: int) -> str:

@@ -16,14 +16,12 @@ One evaluator (``_make_evaluator``) turns a batch of ids into the final
 Arrow array of every column (numpy kernels over Arrow buffers, no
 pandas): the seeded permutation, range dispatch, jitter, null gate and
 value generator in one pass, strings written as UTF-8 bytes straight
-into Arrow buffers. A model whose columns are all closed-form (one
-ordered range, no jitter, no null gate, a native value generator) skips
-Python and stays a ``select`` of native expressions over
-``spark.range``, inside whole-stage codegen. Streaming
-(``apply_columns``) maps the same evaluator over a source's ``id``.
-Catalyst cannot prune the map's outputs: selecting some columns of a
-model, or counting it, still computes every column (sinks write whole
-models).
+into Arrow buffers. Every model runs it, closed-form columns (one
+ordered range, no jitter, no null gate) included: each generator has
+one execution form. Streaming (``apply_columns``) maps the same
+evaluator over a source's ``id``. Catalyst cannot prune the map's
+outputs: selecting some columns of a model, or counting it, still
+computes every column (sinks write whole models).
 
 Foreign keys re-evaluate the *parent's* pure expression on the child's
 row-ids (the reference's zero-shuffle trick, task.go:86-114): referential
@@ -38,14 +36,13 @@ from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_type
 
 from sdvg_spark.config.model import ColumnSpec, ConfigError, GenerationConfig, ModelSpec
 from sdvg_spark.core.rng import derive_seed
-from sdvg_spark.core.sequence import ordered_col, ordered_np, perm_np, resolve_mode
+from sdvg_spark.core.sequence import ordered_np, perm_np, resolve_mode
 from sdvg_spark.generators.values import arrow_type, make_value_gen
 from sdvg_spark.session import configure_session
 
@@ -83,15 +80,13 @@ class ColumnPlan:
 
     @property
     def pure_native(self) -> bool:
-        """No kernel needed: single ordered range, no jitter (factor 0),
-        no null gate and a native value generator — the whole column is
-        a closed-form expression of id. A model of such columns only is
-        a native ``select`` in whole-stage codegen; in any other model
-        the evaluator computes the column without an frf draw."""
+        """Closed-form: a single ordered range, no jitter (factor 0) and
+        no null gate, so the column is its value generator over the
+        ordered draw of id and the evaluator needs no frf draw."""
         if not self.all_ordered_single:
             return False
         r = self.ranges[0]
-        return r.factor == 0.0 and r.null_pct == 0.0 and r.vgen.is_native
+        return r.factor == 0.0 and r.null_pct == 0.0
 
 
 def plan_column(cfg: GenerationConfig, model: ModelSpec, column: ColumnSpec) -> ColumnPlan:
@@ -373,14 +368,6 @@ def _fields(plans: list[ColumnPlan]) -> list[T.StructField]:
     return [T.StructField(plan.name, from_arrow_type(arrow_type(plan.dtype))) for plan in plans]
 
 
-def value_expr(plan: ColumnPlan) -> Column:
-    """A :attr:`ColumnPlan.pure_native` column as a closed-form native
-    expression of ``id``."""
-    r = plan.ranges[0]
-    num = ordered_col(F.col("id"), r.distinct, r.cnt)
-    return r.vgen.expr(num.cast("double"), num).cast(plan.dtype).alias(plan.name)
-
-
 class Engine:
     """Config -> DataFrames; ``jobs.run_generate`` writes them to sinks."""
 
@@ -417,12 +404,9 @@ class Engine:
         (a streaming rate source, say — generation is a pure function of
         the row index either way): ``extra_cols`` pass through first,
         then ``id`` when ``keep_id`` is set, then the columns. One
-        ``mapInArrow`` evaluates every column of a batch, unless all of
-        them are closed-form native expressions."""
+        ``mapInArrow`` evaluates every column of a batch."""
         extra = list(extra_cols or [])
         passed = extra + (["id"] if keep_id else [])
-        if all(plan.pure_native for plan in plans):
-            return base.select(*passed, *map(value_expr, plans))
         evaluate = _make_evaluator(plans, spark)
         schema = T.StructType([base.schema[c] for c in passed] + _fields(plans))
         names = schema.names
@@ -450,12 +434,8 @@ class Engine:
         ``spark.range(lo, hi, 1, P)``; only ``t`` crosses from the JVM.
         Its ids come from ``np.arange`` in batches of
         ``spark.sql.execution.arrow.maxRecordsPerBatch``, and each batch
-        returns as one Arrow batch of every column. A model of
-        closed-form columns only stays a native ``select`` over
-        ``spark.range``: no Python worker at all.
+        returns as one Arrow batch of every column.
         """
-        if all(plan.pure_native for plan in plans):
-            return self.apply_columns(spark, spark.range(lo, hi, 1, num_partitions), plans, keep_id)
         num_tasks = num_partitions or spark.sparkContext.defaultParallelism
         n = max(hi - lo, 0)
         batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))

@@ -6,19 +6,19 @@ number-th element of the type's totally ordered value space after
 ``set_total(distinct_count)``; ``values_count`` is the size of that
 space (used to clamp distinct counts and derive the jitter factor).
 
-Each generator exposes up to three synchronized forms:
+Each generator exposes two synchronized forms:
 
-* ``expr(number, num)``  — native Spark Column (JVM, codegen) of the
-                           ``is_native`` generators; used for models whose
-                           columns are all closed-form (one ordered range,
-                           no jitter, no null gate)
-* ``np_value(number)``   — numpy kernel for the engine's model evaluator;
-                           returns a ``pyarrow.Array`` of its
-                           ``spark_dtype`` (see :func:`arrow_type`). String
-                           forms write UTF-8 bytes straight into Arrow
-                           buffers (:func:`glyph_strings`)
-* ``sql(number_expr)``   — DuckDB SQL mirror for exact oracle queries
-                           (None when not SQL-expressible)
+* ``np_value(number)``   — the execution form: a numpy kernel for the
+                           engine's model evaluator, which runs every
+                           column; returns a ``pyarrow.Array`` of the
+                           range's own type (the engine widens it to the
+                           column's, see :func:`arrow_type`). String forms
+                           write UTF-8 bytes straight into Arrow buffers
+                           (:func:`glyph_strings`)
+* ``sql(number_expr)``   — the oracle form: a DuckDB SQL mirror for exact
+                           oracle queries (None when not SQL-expressible;
+                           the stepwise string and uuid unrankings use
+                           ``sql_lateral``)
 
 ``number`` is the jittered draw (float64 = num + frf*factor, frf < 1 so
 ``floor(number) == num`` always); ``num`` is the integer draw.
@@ -32,8 +32,6 @@ from functools import cached_property
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from sdvg_spark.config.model import (
     DateTimeParams,
@@ -151,21 +149,6 @@ def _ordered_int64_np(from_: int, to: int, number: np.ndarray, total: int) -> np
         return u.view(np.int64) + np.int64(from_)
 
 
-def _ordered_int64_col(from_: int, to: int, number: Column, total: int) -> Column:
-    """Native Spark: from + int64(uint64(step * number)).
-
-    The uint64->int64 reinterpretation matters only when the value space
-    crosses 2^63 (e.g. full-range 64-bit integers); handled by an
-    explicit branch since a double->long cast saturates rather than
-    wraps. Requires ANSI off so the long addition wraps like Go.
-    """
-    step = (float(to) - float(from_) + 1.0) / float(total)
-    v = number * F.lit(step)
-    small = F.lit(from_) + v.cast("long")
-    big = F.lit(from_) + (v - F.lit(_TWO63)).cast("long") + F.lit(-(1 << 63))
-    return F.when(v < F.lit(_TWO63), small).otherwise(big)
-
-
 def _ordered_int64_sql(from_: int, to: int, number_expr: str, total: int) -> str | None:
     step = (float(to) - float(from_) + 1.0) / float(total)
     if float(to) - float(from_) + 1.0 >= _TWO63:
@@ -179,25 +162,15 @@ def _ordered_int64_sql(from_: int, to: int, number_expr: str, total: int) -> str
 class IntegerGen:
     """n-th integer of [from, to]; semantics per reference value/integer.go."""
 
-    is_native = True
-
     def __init__(self, params: IntegerParams):
         self.p = params
         self.total = 1
-
-    @property
-    def spark_dtype(self) -> str:
-        return {8: "tinyint", 16: "smallint", 32: "int", 64: "bigint"}[self.p.bit_width]
 
     def values_count(self) -> float:
         return self.p.values_count
 
     def set_total(self, total: int) -> None:
         self.total = max(total, 1)
-
-    def expr(self, number: Column, num: Column) -> Column:
-        v = _ordered_int64_col(self.p.from_, self.p.to, number, self.total)
-        return v.cast(self.spark_dtype)
 
     def np_value(self, number: np.ndarray) -> pa.Array:
         v = _ordered_int64_np(self.p.from_, self.p.to, number, self.total)
@@ -215,29 +188,15 @@ class IntegerGen:
 class FloatGen:
     """Linear interpolation from..to; float32 cast for bit_width 32."""
 
-    is_native = True
-
     def __init__(self, params: FloatParams):
         self.p = params
         self.total = 1
-
-    @property
-    def spark_dtype(self) -> str:
-        return "float" if self.p.bit_width == 32 else "double"
 
     def values_count(self) -> float:
         return math.inf
 
     def set_total(self, total: int) -> None:
         self.total = max(total, 1)
-
-    def expr(self, number: Column, num: Column) -> Column:
-        if self.p.from_ == self.p.to:
-            v = F.lit(float(self.p.from_))
-        else:
-            s = number / F.lit(float(self.total))
-            v = F.lit(self.p.from_) * (F.lit(1.0) - s) + F.lit(self.p.to) * s
-        return v.cast(self.spark_dtype)
 
     def np_value(self, number: np.ndarray) -> pa.Array:
         if self.p.from_ == self.p.to:
@@ -271,12 +230,6 @@ class DateTimeGen:
         self.to_nsec = to_nsec + (1_000_000_000 if to_nsec < self.from_nsec else 0)
         self.ns_unit = getattr(params, "unit", "us") == "ns"
 
-    is_native = True
-
-    @property
-    def spark_dtype(self) -> str:
-        return "bigint" if self.ns_unit else "timestamp"
-
     def values_count(self) -> float:
         sec_count = float(self.to_sec - self.from_sec) + 1
         nsec_count = float(self.to_nsec - self.from_nsec) + 1
@@ -284,18 +237,6 @@ class DateTimeGen:
 
     def set_total(self, total: int) -> None:
         self.total = max(total, 1)
-
-    def _sec_nsec_cols(self, number: Column) -> tuple[Column, Column]:
-        vsec = _ordered_int64_col(self.from_sec, self.to_sec, number, self.total)
-        vnsec = _ordered_int64_col(self.from_nsec, self.to_nsec, number, self.total)
-        vnsec = F.when(vnsec > F.lit(1_000_000_000), vnsec - F.lit(1_000_000_000)).otherwise(vnsec)
-        return vsec, vnsec
-
-    def expr(self, number: Column, num: Column) -> Column:
-        vsec, vnsec = self._sec_nsec_cols(number)
-        if self.ns_unit:
-            return vsec * F.lit(1_000_000_000) + vnsec
-        return F.timestamp_micros(vsec * F.lit(1_000_000) + (vnsec / F.lit(1000)).cast("long"))
 
     def np_value(self, number: np.ndarray) -> pa.Array:
         vsec = _ordered_int64_np(self.from_sec, self.to_sec, number, self.total)
@@ -327,9 +268,6 @@ class UUIDGen:
 
     def __init__(self):
         self.total = 1
-
-    spark_dtype = "string"
-    is_native = False
 
     def values_count(self) -> float:
         return float((1 << 118) - 1)
@@ -404,8 +342,6 @@ class EnumGen:
     list (nulls first). ``values`` must already be coerced/sorted by the
     config layer."""
 
-    is_native = True
-
     def __init__(self, values: list, column_type: str):
         self.values = values
         self.column_type = column_type
@@ -422,13 +358,6 @@ class EnumGen:
             "uuid": "string",
         }[self.column_type]
 
-    def dtype_for(self, bit_width: int | None = None) -> str:
-        if self.column_type == "integer" and bit_width:
-            return {8: "tinyint", 16: "smallint", 32: "int", 64: "bigint"}[bit_width]
-        if self.column_type == "float" and bit_width:
-            return "float" if bit_width == 32 else "double"
-        return self.spark_dtype
-
     def values_count(self) -> float:
         return float(len(self.values))
 
@@ -436,22 +365,11 @@ class EnumGen:
         self.total = max(total, 1)
         self.rows_per_value = math.ceil(self.total / len(self.values))
 
-    def _array_lit(self, dtype: str) -> Column:
-        return F.array(*[F.lit(v).cast(dtype) for v in self.values])
-
-    def expr(self, number: Column, num: Column, dtype: str | None = None) -> Column:
-        dt = dtype or self.spark_dtype
-        idx = F.floor(num / F.lit(self.rows_per_value)).cast("int")
-        return F.element_at(self._array_lit(dt), idx + F.lit(1))
-
     @cached_property
     def _arrow_values(self) -> pa.Array:
-        """``values`` as cast by :meth:`expr` (an int literal wraps to
-        32 bits like Spark's long -> int cast)."""
-        values = self.values
-        if self.spark_dtype == "int":
-            values = [None if v is None else (v + (1 << 31)) % (1 << 32) - (1 << 31) for v in values]
-        return pa.array(values, type=arrow_type(self.spark_dtype))
+        """``values`` as an Arrow array of :attr:`spark_dtype` (config
+        validation keeps integer literals inside int32)."""
+        return pa.array(self.values, type=arrow_type(self.spark_dtype))
 
     def np_value(self, number: np.ndarray) -> pa.Array:
         idx = number.astype(np.int64) // self.rows_per_value
@@ -491,12 +409,6 @@ class StringGen:
         self.sum_by_prefix: list[float] = []
         self.completions: list[int] = []
         self._prepare()
-
-    spark_dtype = "string"
-
-    @property
-    def is_native(self) -> bool:
-        return self.p.logical_type in ("first_name", "last_name", "phone") and not self.p.template
 
     def _prepare(self) -> None:
         p = self.p
@@ -619,63 +531,6 @@ class StringGen:
                 self.count_by_prefix[prefix] = count_by_length[prefix] / div
                 for length in range(p.max_length - prefix + 1):
                     self.sum_by_prefix[prefix] += count_by_length[length + prefix] / div
-
-    # -- native paths -------------------------------------------------------
-
-    def expr(self, number: Column, num: Column) -> Column | None:
-        p = self.p
-        if p.template:
-            return None  # UDF
-        if p.logical_type == "first_name":
-            names = self.pack.first_names(p.min_length, p.max_length)
-            return self._list_pick_col(names, number)
-        if p.logical_type == "last_name":
-            names = self.pack.last_names_filtered(p.min_length, p.max_length)
-            return self._list_pick_col(names, number)
-        if p.logical_type == "phone":
-            return self._phone_col(number)
-        return None  # text / simple string -> UDF
-
-    def _list_pick_col(self, items: list[str], number: Column) -> Column:
-        """n-th element of a sorted name list (reference firstName/
-        lastName, value/string.go:203-219) as a native array-literal
-        lookup — stays inside whole-stage codegen."""
-        pos = _ordered_int64_col(0, len(items) - 1, number, self.total)
-        return F.element_at(F.lit(items), pos.cast("int") + F.lit(1))
-
-    @staticmethod
-    def _splice_pattern(pattern: str, digits: Column) -> Column:
-        """Fill '#' slots of pattern left-to-right from a digit string.
-
-        Grouped by runs (one substring per '#' run) — a per-character
-        splice deep-copies the digits expression tree per slot and blows
-        up Catalyst analysis time.
-        """
-        import re as _re
-
-        parts: list[Column] = []
-        di = 1
-        for run in _re.findall(r"#+|[^#]+", pattern):
-            if run.startswith("#"):
-                parts.append(F.substring(digits, di, len(run)))
-                di += len(run)
-            else:
-                parts.append(F.lit(run))
-        return F.concat(*parts)
-
-    def _phone_col(self, number: Column) -> Column:
-        pats = self.pack.phone_patterns_filtered(self.p.min_length, self.p.max_length)
-        pos = _ordered_int64_col(0, len(pats) - 1, number, self.total).cast("int")
-        result = F.lit(None).cast("string")
-        for k, pat in enumerate(pats):
-            ndig = pat.count("#")
-            max_phone = 10**ndig - 1
-            phone_num = _ordered_int64_col(0, max_phone, number, self.total)
-            digits = F.lpad(phone_num.cast("string"), ndig, "0")
-            result = F.when(pos == F.lit(k), self._splice_pattern(pat, digits)).otherwise(
-                result
-            )
-        return result
 
     # -- SQL mirrors --------------------------------------------------------
 
@@ -1052,7 +907,7 @@ class StringGen:
         """Pattern pick + zero-padded digit fill (reference phone,
         value/string.go:221-237): the i-th '#' of the picked pattern is
         the i-th digit of the pattern's number written with ``ndig``
-        digits, as the native and SQL forms' ``lpad`` writes it."""
+        digits, as the SQL form's ``lpad`` writes it."""
         pats, glyphs = self._phone_glyphs
         pos = _ordered_int64_np(0, len(pats) - 1, number, self.total)
         codes = np.zeros((len(number), max(map(len, pats))), dtype=glyphs.code_dtype)

@@ -407,8 +407,8 @@ def test_feistel_mode_engine_vs_oracle_exact(spark):
 
 
 def test_native_and_template_ranges_in_one_column(spark):
-    """A column mixing ranges with native value forms (phone, last
-    name, enum) and a template range equals the DuckDB oracle. Each
+    """A column mixing phone, last name and enum ranges with a
+    template range equals the DuckDB oracle. Each
     range's values are computed only over that range's rows: a template
     fed another range's (larger) draw numbers indexes past its alphabet,
     which is how a `when`-dispatched value UDF used to fail here."""
@@ -494,8 +494,8 @@ UNICODE_CFG = {
 }
 
 # Every Arrow type a column can come back as, enum ranges of each type
-# (with a null literal), the ns datetime unit, phones and names (native
-# generators inside a permuted column), ordered Python-built columns and
+# (with a null literal), the ns datetime unit, phones and names inside a
+# permuted column, ordered columns that are still jittered and
 # mixed-width ranges that widen to the column's type.
 TYPES_CFG = {
     "random_seed": 11,
@@ -591,6 +591,74 @@ def test_golden_engine_output(spark, permutation):
     assert got == want
 
 
+# Every column closed-form (one ordered range, no jitter, no null gate):
+# exhaustive integer ranges up to both int64 ends, enums of each type
+# (with a null literal), names whose lists are shorter than the model,
+# a constant datetime and 11-value datetime ranges in both units.
+CLOSED_CFG = {
+    "random_seed": 3,
+    "models": {
+        "closed": {
+            "rows_count": 2000,
+            "columns": [
+                {"name": "i8", "type": "integer",
+                 "type_params": {"bit_width": 8, "from": -128, "to": 127}, "ordered": True},
+                {"name": "i16", "type": "integer",
+                 "type_params": {"bit_width": 16, "from": -1000, "to": 999}, "ordered": True},
+                {"name": "i32_top", "type": "integer",
+                 "type_params": {"bit_width": 32, "from": 2**31 - 2000, "to": 2**31 - 1},
+                 "ordered": True},
+                {"name": "i64_top", "type": "integer",
+                 "type_params": {"bit_width": 64, "from": 2**63 - 2000, "to": 2**63 - 1},
+                 "ordered": True},
+                {"name": "i64_bottom", "type": "integer",
+                 "type_params": {"bit_width": 64, "from": -(2**63), "to": -(2**63) + 1999},
+                 "ordered": True},
+                {"name": "e_str", "type": "string", "values": ["b", None, "a", "zz"],
+                 "ordered": True},
+                {"name": "e_int", "type": "integer", "values": [2**31 - 1, 0, -(2**31), None],
+                 "ordered": True},
+                {"name": "e_float", "type": "float", "values": [1.5, -2.25, 3e30],
+                 "ordered": True},
+                {"name": "e_dt", "type": "datetime",
+                 "values": ["2020-01-01T00:00:00Z", "1999-12-31T23:59:59Z"], "ordered": True},
+                {"name": "first_en", "type": "string",
+                 "type_params": {"logical_type": "first_name", "min_length": 3, "max_length": 4},
+                 "ordered": True},
+                {"name": "last_ru", "type": "string",
+                 "type_params": {"logical_type": "last_name", "locale": "ru",
+                                 "min_length": 3, "max_length": 4},
+                 "ordered": True},
+                {"name": "dt_const", "type": "datetime",
+                 "type_params": {"from": "2020-01-01T00:00:00.123456Z",
+                                 "to": "2020-01-01T00:00:00.123456Z"},
+                 "ordered": True},
+                {"name": "dt_sec", "type": "datetime",
+                 "type_params": {"from": "2020-01-01T00:00:00Z", "to": "2020-01-01T00:00:10Z"},
+                 "ordered": True},
+                {"name": "dt_ns", "type": "datetime",
+                 "type_params": {"unit": "ns", "from": "2020-01-01T00:00:00Z",
+                                 "to": "2020-01-01T00:00:10Z"},
+                 "ordered": True},
+            ],
+        }
+    },
+}
+
+
+def test_closed_form_model_golden(spark):
+    """A model of closed-form columns only runs the same Arrow map as
+    any other model. Its digest was pinned when such a model was a
+    ``select`` of hand-written native expressions, so the map must
+    reproduce those values row for row: integers at both int64 ends,
+    enums of every type with a null literal, names, a constant datetime
+    with a sub-second part and whole-second ranges in both units."""
+    eng = Engine(parse_config(CLOSED_CFG))
+    plans = eng.plans_for(eng.cfg.models["closed"])
+    assert len(plans) == 14 and all(p.pure_native for p in plans)
+    assert _rows_digest(eng.model_df_with_id(spark, "closed")) == "abbf36342e1270a9"
+
+
 def _task_slices(df):
     """(count, min id, max id) of each non-empty partition, by partition."""
     from pyspark.sql import functions as F
@@ -638,8 +706,8 @@ def test_rows_independent_of_arrow_batch_size(spark):
 def test_integer_enum_int32_extremes_match_oracle(spark):
     """The int32 bounds are valid integer enum literals: the engine
     writes them unchanged and equals the DuckDB oracle on them, both in
-    the model's Arrow map and, for the closed-form column ``o``, in the
-    native select of ``column_df``."""
+    the whole model and, for the closed-form column ``o``, in the
+    one-column model of ``column_df``."""
     import duckdb
 
     from sdvg_spark.oracle import column_oracle_sql

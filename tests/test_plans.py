@@ -60,9 +60,9 @@ def test_top_revenue_broadcasts_dimensions(spark, entry):
 def test_generation_is_shuffle_free(spark):
     """The whole generator collapses to one map over range: every cell
     is a pure function of (seed, column, id), so no exchange may appear.
-    A model with a Python column is one MapInArrow (each task makes its
-    own ids, no per-column Python UDF); a model of closed-form columns
-    only runs no Python at all."""
+    Every model is one MapInArrow (each task makes its own ids, no
+    per-column Python UDF), a model of closed-form columns only too:
+    there is no second, native-expression form of a value."""
     from sdvg_spark.config.model import parse_config
     from sdvg_spark.engine import Engine
 
@@ -90,7 +90,7 @@ def test_generation_is_shuffle_free(spark):
     assert len(re.findall(r"^\(\d+\) MapInArrow\b", plan, re.M)) == 1
     assert "ArrowEvalPython" not in plan
 
-    native = parse_config(
+    closed = parse_config(
         {
             "random_seed": 5,
             "models": {
@@ -105,11 +105,11 @@ def test_generation_is_shuffle_free(spark):
             },
         }
     )
-    plan = _plan(Engine(native).model_df(spark, "m"))
+    plan = _plan(Engine(closed).model_df(spark, "m"))
     assert "Exchange" not in plan
     assert "Range" in plan
-    for node in ("MapInArrow", "Python"):  # ArrowEvalPython, BatchEvalPython, ...
-        assert node not in plan, node
+    assert len(re.findall(r"^\(\d+\) MapInArrow\b", plan, re.M)) == 1
+    assert "ArrowEvalPython" not in plan
 
 
 def test_fk_generation_is_shuffle_free(spark):
