@@ -458,6 +458,15 @@ class ModelSpec:
         raise KeyError(name)
 
 
+# reference parquet codec names (models/generator_output.go) -> pyarrow's.
+# pyarrow's "lz4" is the parquet format's LZ4_RAW: the Hadoop-framed
+# LZ4 codec is deprecated and pyarrow cannot write it.
+PARQUET_CODECS = {
+    "uncompressed": "none", "none": "none", "snappy": "snappy", "gzip": "gzip",
+    "zstd": "zstd", "brotli": "brotli", "lz4": "lz4", "lz4raw": "lz4", "lz4_raw": "lz4",
+}
+
+
 @dataclass
 class OutputConfig:
     type: str = "devnull"
@@ -499,11 +508,6 @@ class OutputConfig:
 
     SUPPORTED = ("devnull", "csv", "parquet", "http", "tcs")
 
-    # codecs Spark's parquet writer handles natively in this build
-    SPARK_PARQUET_CODECS = ("uncompressed", "none", "snappy", "gzip", "lz4", "zstd")
-    # reference codecs Spark lacks; routed to the pyarrow writer path
-    PYARROW_ONLY_CODECS = ("brotli", "lz4raw", "lz4_raw")
-
     def validate(self) -> list[str]:
         errs = []
         if self.type not in self.SUPPORTED:
@@ -541,7 +545,7 @@ class OutputConfig:
                     "(neither Spark nor pyarrow ships an LZO codec); use "
                     "lz4 or zstd"
                 )
-            elif codec not in self.SPARK_PARQUET_CODECS + self.PYARROW_ONLY_CODECS:
+            elif codec not in PARQUET_CODECS:
                 errs.append(f"unknown parquet codec {self.compression!r}")
         return errs
 

@@ -107,13 +107,20 @@ def scale_shuffle_partitions(
     return n
 
 
+def default_cpus(master: str | None = None) -> str:
+    """The session's parallelism: ``SPARK_GRAFT_CPUS`` if set; else, in
+    local mode, the CPUs this process may run on, and 32 on a cluster."""
+    local = (master or os.environ.get("SPARK_MASTER") or "local").startswith("local")
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)) if local else 32)
+
+
 def get_spark(app_name: str = "sdvg-spark", master: str | None = None) -> SparkSession:
     """Build (or reuse) a session with engine defaults.
 
-    Designed for a real cluster: nothing here assumes local mode. On the
-    test container, ``SPARK_GRAFT_CPUS`` caps local parallelism.
+    Designed for a real cluster: nothing here assumes local mode. Without
+    ``master`` or ``SPARK_MASTER`` it runs ``local[default_cpus()]``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus(master)
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", cpus)

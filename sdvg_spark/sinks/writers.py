@@ -1,24 +1,27 @@
 """Sinks: devnull / CSV / Parquet / HTTP / TCS, with Hive partitioning.
 
-Spark-native mappings of the reference writers (SURVEY.md §2.4):
-rotation (``rows_per_file``) -> ``maxRecordsPerFile``; Hive partition
-routing -> ``partitionBy``; CSV float precision and datetime formats ->
-pre-write formatting expressions; HTTP/TCS micro-batched POST ->
-``foreachPartition`` with exponential backoff.
+Parquet goes through one Arrow writer with a per-job staging commit
+(``sinks/parquet.py``): it names the files ``{model}_{n}.parquet`` and
+the partition directories ``col=value`` / ``col=null`` itself.
 
-Layout parity (reference model_writer.go:166-233, csv.go:339-341,
-parquet.go:348): a post-write pass on local filesystems renames
-``part-*`` files to ``{model}_{n}.{ext}``, ``__HIVE_DEFAULT_PARTITION__``
+CSV stays on Spark's writer, because its float precision and Go-layout
+datetime formats are Spark expressions (SURVEY.md §2.4): rotation
+(``rows_per_file``) -> ``maxRecordsPerFile``, Hive partition routing ->
+``partitionBy``. Layout parity (reference model_writer.go:166-233,
+csv.go:339-341): a post-write pass on local filesystems renames
+``part-*`` files to ``{model}_{n}.csv``, ``__HIVE_DEFAULT_PARTITION__``
 dirs to ``col=null``, and restores ``write_to_output: true`` partition
 directory names. On object-store paths (``s3://`` etc.) renames are
 O(data), so the pass is skipped and Spark's native layout is kept.
+
+HTTP/TCS post micro-batches from ``foreachPartition`` with exponential
+backoff.
 """
 
 from __future__ import annotations
 
 import os
 import time
-import urllib.request
 from typing import Iterable
 
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -116,9 +119,9 @@ def _prepare_partitioning(
     return df, keys
 
 
-def _restore_layout(path: str, model: ModelSpec, ext: str) -> None:
+def _restore_layout(path: str, model: ModelSpec) -> None:
     """Post-write rename pass for local paths: reference-style partition
-    dir names and ``{model}_{n}.{ext}`` file names (csv.go:339-341)."""
+    dir names and ``{model}_{n}.csv`` file names (csv.go:339-341)."""
     if "://" in path or not os.path.isdir(path):
         return
     # directories bottom-up so child renames happen before parents move
@@ -140,15 +143,15 @@ def _restore_layout(path: str, model: ModelSpec, ext: str) -> None:
                 else:
                     os.rename(src, dst)
     for root, _dirs, files in os.walk(path):
-        parts = sorted(f for f in files if f.startswith("part-") and f.endswith(ext))
+        parts = sorted(f for f in files if f.startswith("part-") and f.endswith(".csv"))
         if not parts:
             continue
         taken = {f for f in files if not f.startswith("part-")}
         n = 0
         for f in parts:
-            while f"{model.name}_{n}{ext}" in taken:  # resume/append numbering
+            while f"{model.name}_{n}.csv" in taken:  # resume/append numbering
                 n += 1
-            new = f"{model.name}_{n}{ext}"
+            new = f"{model.name}_{n}.csv"
             taken.add(new)
             os.rename(os.path.join(root, f), os.path.join(root, new))
             crc = os.path.join(root, f".{f}.crc")
@@ -187,63 +190,29 @@ def write_model(
         if parts:
             w = w.partitionBy(*parts)
         w.csv(path)
-        _restore_layout(path, model, ".csv")
+        _restore_layout(path, model)
         return path
 
     if out.type == "parquet":
-        # pyarrow path when per-column encodings are configured OR the
-        # codec is one Spark's writer can't produce (BROTLI / LZ4_RAW,
-        # reference writer/parquet/parquet.go:34-43)
-        if (
-            out.compression.lower() in OutputConfig.PYARROW_ONLY_CODECS
-            or any(c.parquet is not None and c.parquet.encoding != "PLAIN"
-                   for c in model.columns)
-        ):
-            from sdvg_spark.sinks.parquet_encodings import write_parquet_encoded
+        from sdvg_spark.sinks.parquet import write_parquet
 
-            enc_df = _coalesce_for_rotation(_parquet_rounded(df, out), model)
-            if out.sort_by:
-                enc_df = enc_df.sortWithinPartitions(*out.sort_by)
-            elif out.zorder_by:
-                from sdvg_spark.sinks.zorder import apply_zorder
-
-                enc_df = apply_zorder(enc_df, model, out)
-            write_parquet_encoded(enc_df, model, out, path, mode)
-            return path
-        spark.conf.set(
-            "spark.sql.parquet.outputTimestampType",
-            "TIMESTAMP_MILLIS" if out.timestamp_unit == "millis" else "TIMESTAMP_MICROS",
-        )
-        pdf, parts = _prepare_partitioning(
-            _coalesce_for_rotation(_parquet_rounded(df, out), model), model
-        )
+        pdf = _coalesce_for_rotation(_parquet_rounded(df, out), model)
         if out.sort_by:
             # task-local sort (no shuffle): each output file's row groups
             # get tight, non-overlapping min/max stats on the sort keys,
-            # so a reader filtering on them skips whole row groups.
-            # Partition keys must LEAD the ordering: FileFormatWriter
-            # requires rows ordered by the partitionBy columns and would
-            # otherwise insert its own sort over ours, leaving
-            # within-partition order unspecified
-            pdf = pdf.sortWithinPartitions(*parts, *out.sort_by)
+            # so a reader filtering on them skips whole row groups
+            pdf = pdf.sortWithinPartitions(*out.sort_by)
         elif out.zorder_by:
             # multi-dimensional clustering: one range shuffle on the
-            # Morton code (partition keys lead both the partitioning and
-            # the sort — see sinks/zorder.py). Overrides the rotation
-            # coalesce's partition count; rows_per_file still caps file
-            # sizes via maxRecordsPerFile.
+            # Morton code, partition keys leading (see sinks/zorder.py).
+            # Overrides the rotation coalesce's partition count;
+            # rows_per_file still caps file sizes.
             from sdvg_spark.sinks.zorder import apply_zorder
 
-            pdf = apply_zorder(pdf, model, out, lead=parts)
-        w = (
-            pdf.write.mode(mode)
-            .option("compression", out.compression)
-            .option("maxRecordsPerFile", model.rows_per_file or 0)
-        )
-        if parts:
-            w = w.partitionBy(*parts)
-        w.parquet(path)
-        _restore_layout(path, model, ".parquet")
+            pdf = apply_zorder(
+                pdf, model, out, lead=[p.name for p in model.partition_columns]
+            )
+        write_parquet(spark, pdf, model, out, path, mode)
         return path
 
     if out.type in ("http", "tcs"):
@@ -256,8 +225,7 @@ def write_model(
 def _write_http(df: DataFrame, model: ModelSpec, out: OutputConfig) -> None:
     """Micro-batched POST from each partition with exponential backoff
     (reference writer/http/http.go:81-127). Runs on executors; each
-    partition posts independently — at 1000 executors this is 1000
-    concurrent senders without driver involvement."""
+    partition posts independently, without driver involvement."""
     endpoint = out.endpoint
     headers = dict(out.headers)
     if out.type == "tcs":
