@@ -10,9 +10,9 @@ output/general/conflicts.go:25-195).
 The Spark engine's resume is strictly cheaper than the reference's
 sequential sequencer drain: generation is a pure function of the row
 index, so resuming is ``spark.range(written, to)`` in append mode —
-no rescan, no replay. The number of rows already on disk is read from
-the sink itself (parquet metadata / CSV line count via DuckDB), which
-is more robust than trusting a checkpoint counter written on a timer.
+no rescan, no replay. ``jobs.run_generate`` resumes at the model's
+``{model}.checkpoint`` if its directory is not empty, else at the rows
+the sink committed (``rows_on_disk``).
 """
 
 from __future__ import annotations
@@ -138,7 +138,7 @@ def rows_on_disk(
     """Rows already written for a model (the resume point).
 
     Counts the committed files only (``plan_stats.committed_files``:
-    a killed job's ``_temporary/`` staging is not output). Parquet row
+    a failed job's ``_staging/`` is not output). Parquet row
     counts come from footers (no scan); CSV needs a DuckDB line pass.
     CSV layout (header, delimiter) comes from the OUTPUT CONFIG, never
     from sniffing: auto-detection can mistake the first data row of an

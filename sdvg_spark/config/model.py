@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import json
 import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 from datetime import datetime, timezone
 from typing import Any
 
@@ -426,6 +426,8 @@ class ModelSpec:
             errs.append(f"generate_to must be <= rows_count: {self.generate_to}")
         if self.generate_to is not None and self.generate_from > self.generate_to:
             errs.append(f"generate_from must be <= generate_to: {self.generate_from}")
+        if self.rows_per_file < 0:
+            errs.append(f"rows_per_file must be >= 0: {self.rows_per_file}")
         seen: set[str] = set()
         for c in self.columns:
             if c.name in seen:
@@ -516,6 +518,12 @@ class OutputConfig:
             errs.append(f"{self.type} output requires an endpoint")
         if self.timestamp_unit not in ("millis", "micros"):
             errs.append(f"timestamp_unit must be millis|micros: {self.timestamp_unit}")
+        if len(self.delimiter) != 1:
+            errs.append(f"delimiter must be one character: {self.delimiter!r}")
+        if self.float_precision < 0:
+            errs.append(f"float_precision must be >= 0: {self.float_precision}")
+        if self.checkpoint_rows < 0:
+            errs.append(f"checkpoint_rows must be >= 0: {self.checkpoint_rows}")
         if self.sort_by and self.type != "parquet":
             errs.append("sort_by is only supported for parquet output")
         if not isinstance(self.sort_by, list) or not all(
@@ -721,13 +729,17 @@ def parse_config(raw: dict[str, Any]) -> GenerationConfig:
         dir=str(out_raw.get("dir", "output")),
     )
     # writer options live under output.params (reference layout,
-    # generator_output.go) but are also accepted at the top level
+    # generator_output.go) but are also accepted at the top level;
+    # unknown keys are ignored
+    defaults = {f.name: getattr(output, f.name) for f in fields(OutputConfig)}
     for src in (out_raw, out_raw.get("params") or {}):
         for k, v in src.items():
-            if k in ("type", "dir", "params"):
+            if k in ("type", "dir") or k not in defaults:
                 continue
-            if hasattr(output, k):
-                setattr(output, k, v)
+            want = type(defaults[k])
+            if not (type(v) is want or (want is float and type(v) is int)):
+                raise ConfigError(f"output.{k} must be {want.__name__}, got {v!r}")
+            setattr(output, k, v)
 
     seed = int(raw.get("random_seed", 0))
     seed_auto = seed == 0

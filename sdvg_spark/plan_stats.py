@@ -9,9 +9,9 @@ job, and needs no session at all.
 A dataset is a file or a directory tree. Which files belong to it
 follows Spark's own listing rule (``shouldFilterOutPathName``): a file
 or directory whose name starts with ``.``, or with ``_`` and holds no
-``=``, is not data. That skips ``_SUCCESS``, ``.crc`` checksums and a
-killed job's ``_temporary/`` staging, and keeps partition directories
-such as ``__part_tag=x/``.
+``=``, is not data. That skips ``_SUCCESS``, ``.crc`` checksums, the
+file sinks' ``_staging/`` and a killed Spark job's ``_temporary/``,
+and keeps partition directories such as ``tag=x/`` or ``__part_tag=x/``.
 
 Every function raises on a missing or unreadable dataset: a caller
 that decides on these numbers (a resume point, a tier) must never

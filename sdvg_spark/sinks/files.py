@@ -1,18 +1,22 @@
-"""Parquet sink: one Arrow writer, committed per job.
+"""File sinks: one Arrow writer for parquet and CSV, committed per job.
 
-The reference's parquet sink is one Arrow-based writer
-(writer/parquet/parquet.go: codecs, per-column encodings, millis/micros
-timestamps, ``rows_per_file`` rotation). Here it is a ``mapInArrow``
-stage whose tasks stream Arrow batches into ``pyarrow.parquet``
-writers, one per Hive partition directory.
+The reference writes ``{model}_{n}.parquet`` / ``.csv`` files, rotated
+at ``rows_per_file``, one Hive partition directory per key
+(writer/parquet/parquet.go, writer/csv/csv.go, model_writer.go). Here
+that is one ``mapInArrow`` stage: each task splits its Arrow batches by
+partition key and streams them into ``pyarrow.parquet`` writers, or
+writes the CSV lines Spark's ``to_csv`` rendered (Python does no
+quoting, so the bytes are those of Spark's own CSV writer).
 
 Each task attempt writes under the hidden ``<model>/_staging/<attempt
 id>/`` and returns one row per file. Only after the action succeeds
-does the driver move the files into place as ``{model}_{n}.parquet``,
-task by task, and (in overwrite mode) delete the old files. A failed
-job leaves nothing that ``backup.rows_on_disk`` counts (it skips ``_``
-names); a driver that dies mid-commit leaves whole tasks in task order,
-for a generated model a prefix of its ids.
+does the driver delete the old files (overwrite mode) and move the new
+ones into place as ``{model}_{n}``, task by task. A failed job leaves
+nothing that ``backup.rows_on_disk`` counts (it skips ``_`` names). A
+driver that dies mid-commit leaves the first tasks' files, the last
+task's perhaps in part: a prefix of the ids for an unpartitioned
+model, but not for a partitioned one, whose tasks commit one directory
+after another.
 
 Paths resolve through ``pyarrow.fs.FileSystem.from_uri``. Only local
 paths and ``file://`` URIs are tested.
@@ -40,6 +44,7 @@ from sdvg_spark.config.model import PARQUET_CODECS, ModelSpec, OutputConfig
 _DICTIONARY = ("PLAIN_DICT", "RLE_DICTIONARY")
 
 _KEY = "__key_"
+_LINE = "__line"
 _STAGING = "_staging"
 # one row per staged file, as the tasks return it
 _RESULT = "dir string, part long, seq long, rows long, file string"
@@ -82,13 +87,77 @@ def _path(*parts: str) -> str:
     return "/".join(p for p in parts if p)
 
 
+class _Parquet:
+    suffix = ".parquet"
+
+    def __init__(self, model: ModelSpec, out: OutputConfig, payload: list[str]):
+        encoding = {c.name: c.parquet.encoding for c in model.columns
+                    if c.parquet and c.parquet.encoding not in _DICTIONARY and c.name in payload}
+        self.options = {
+            "compression": PARQUET_CODECS[out.compression.lower()],
+            "use_dictionary": [c for c in payload if c not in encoding],
+            "column_encoding": encoding or None,
+            "coerce_timestamps": "ms" if out.timestamp_unit == "millis" else "us",
+            # no ARROW:schema footer entry: Spark's writer never wrote one,
+            # and at a few hundred bytes it would dominate small files
+            "store_schema": False,
+        }
+
+    def open(self, fs, path: str, schema: pa.Schema):
+        return pq.ParquetWriter(path, schema, filesystem=fs, **self.options)
+
+    @staticmethod
+    def write(f, tbl: pa.Table) -> None:
+        f.write_table(tbl, row_group_size=tbl.num_rows)
+
+
+class _Csv:
+    """Files of ``header`` and then one line per row, each ended by
+    ``\\n``."""
+
+    suffix = ".csv"
+
+    def __init__(self, header: bytes):
+        self.header = header
+
+    @classmethod
+    def render(cls, spark: SparkSession, cols: list[str], out: OutputConfig):
+        """(the CSV line of ``cols`` as Spark's ``to_csv`` renders it, the
+        format with the header ``to_csv`` renders from the names: one
+        small job). Spaces are kept and an empty string is an empty
+        field, like a null. A one-field row whose line would be empty is
+        written ``""``: Spark's CSV writer skipped such rows and
+        ``to_csv`` fails on them."""
+        options = {"sep": out.delimiter, "emptyValue": "",
+                   "ignoreLeadingWhiteSpace": "false", "ignoreTrailingWhiteSpace": "false"}
+        line = F.to_csv(F.struct(*cols), options)
+        if len(cols) == 1:
+            empty = F.coalesce(F.col(cols[0]).cast("string"), F.lit("")) == ""
+            line = F.when(empty, F.lit('""')).otherwise(line)
+        if out.without_headers:
+            return line, cls(b"")
+        (h,) = spark.range(1).select(F.to_csv(F.struct(*map(F.lit, cols)), options)).first()
+        return line, cls(f"{h}\n".encode())
+
+    def open(self, fs, path: str, schema: pa.Schema):
+        f = fs.open_output_stream(path, compression=None)
+        f.write(self.header)
+        return f
+
+    @staticmethod
+    def write(f, tbl: pa.Table) -> None:
+        ended = pc.binary_join_element_wise(tbl.column(0).combine_chunks(), "\n", "")
+        text = pc.binary_join(pa.ListArray.from_arrays([0, len(ended)], ended), "")
+        f.write(text[0].as_buffer())
+
+
 class _DirWriter:
     """One task's rows for one partition directory: files of
-    ``rows_per_file`` rows, each row group at most ``group_rows`` rows.
-    Closed files are appended to ``done``."""
+    ``rows_per_file`` rows, written ``group_rows`` rows at a time (a
+    parquet row group each). Closed files are appended to ``done``."""
 
-    def __init__(self, fs, base, rel, rows_per_file, group_rows, options, done):
-        self.fs, self.base, self.rel, self.options, self.done = fs, base, rel, options, done
+    def __init__(self, fs, base, rel, rows_per_file, group_rows, fmt, done):
+        self.fs, self.base, self.rel, self.fmt, self.done = fs, base, rel, fmt, done
         self.rows_per_file, self.group_rows = rows_per_file, group_rows
         self.pending, self.pending_rows, self.in_file, self.seq, self.writer = [], 0, 0, 0, None
 
@@ -107,11 +176,10 @@ class _DirWriter:
     def _write_group(self) -> None:
         tbl = pa.Table.from_batches(self.pending)
         if self.writer is None:
-            self.file = _path(self.base, self.rel, f"{self.seq}.parquet")
+            self.file = _path(self.base, self.rel, f"{self.seq}{self.fmt.suffix}")
             self.fs.create_dir(_path(self.base, self.rel), recursive=True)
-            self.writer = pq.ParquetWriter(
-                self.file, tbl.schema, filesystem=self.fs, **self.options)
-        self.writer.write_table(tbl, row_group_size=tbl.num_rows)
+            self.writer = self.fmt.open(self.fs, self.file, tbl.schema)
+        self.fmt.write(self.writer, tbl)
         self.in_file += tbl.num_rows
         self.pending, self.pending_rows = [], 0
 
@@ -132,14 +200,14 @@ def _remove(fs, path: str) -> None:
         fs.delete_file(path)
 
 
-def _next_number(fs, d: str, model_name: str) -> int:
-    """One past the highest ``{model}_{n}.parquet`` already in ``d``."""
-    pat = re.compile(rf"^{re.escape(model_name)}_(\d+)\.parquet$")
+def _next_number(fs, d: str, name: str, suffix: str) -> int:
+    """One past the highest ``{name}_{n}{suffix}`` already in ``d``."""
+    pat = re.compile(rf"^{re.escape(name)}_(\d+){re.escape(suffix)}$")
     infos = fs.get_file_info(pafs.FileSelector(d, allow_not_found=True))
     return max((int(m.group(1)) + 1 for i in infos if (m := pat.match(i.base_name))), default=0)
 
 
-def _commit(fs, root: str, model_name: str, staged: list, mode: str) -> None:
+def _commit(fs, root: str, name: str, suffix: str, staged: list, mode: str) -> None:
     """Move the staged files into place."""
     if mode == "overwrite":
         for info in fs.get_file_info(pafs.FileSelector(root)):
@@ -149,9 +217,9 @@ def _commit(fs, root: str, model_name: str, staged: list, mode: str) -> None:
     moves = []
     for r in sorted(staged, key=lambda r: (r.dir, r.part, r.seq)):
         if r.dir not in number:
-            number[r.dir] = _next_number(fs, _path(root, r.dir), model_name)
+            number[r.dir] = _next_number(fs, _path(root, r.dir), name, suffix)
             fs.create_dir(_path(root, r.dir), recursive=True)
-        moves.append((r.part, r.file, _path(r.dir, f"{model_name}_{number[r.dir]}.parquet")))
+        moves.append((r.part, r.file, _path(r.dir, f"{name}_{number[r.dir]}{suffix}")))
         number[r.dir] += 1
     moves.sort(key=lambda m: m[0])  # task by task; stable, so names ascend
     for _part, src, dst in moves:
@@ -159,7 +227,7 @@ def _commit(fs, root: str, model_name: str, staged: list, mode: str) -> None:
     _remove(fs, _path(root, _STAGING))
 
 
-def write_parquet(
+def write_files(
     spark: SparkSession,
     df: DataFrame,
     model: ModelSpec,
@@ -167,9 +235,10 @@ def write_parquet(
     path: str,
     mode: str = "overwrite",
 ) -> None:
-    """Write ``df`` as ``model``'s parquet files under ``path`` and
-    commit them. Each task writes the rows in the order it gets them.
-    ``mode="append"`` numbers new files past the existing ones."""
+    """Write ``df`` as ``model``'s files of type ``out.type`` (parquet or
+    csv) under ``path`` and commit them. Each task writes the rows in the
+    order it gets them. ``mode="append"`` numbers new files past the
+    existing ones."""
     fs, root = pafs.FileSystem.from_uri(path if "://" in path else os.path.abspath(path))
     root = root.rstrip("/")
     names = [p.name for p in model.partition_columns]
@@ -178,21 +247,16 @@ def write_parquet(
     # Spark renders the directory values, exactly as its own writer did
     df = df.select("*", *[F.col(n).cast("string").alias(k) for n, k in zip(names, keys)])
     payload = [c for c in df.columns if c not in hidden]
-    encoding = {c.name: c.parquet.encoding for c in model.columns
-                if c.parquet and c.parquet.encoding not in _DICTIONARY and c.name in payload}
-    options = {
-        "compression": PARQUET_CODECS[out.compression.lower()],
-        "use_dictionary": [c for c in payload if c not in encoding],
-        "column_encoding": encoding or None,
-        "coerce_timestamps": "ms" if out.timestamp_unit == "millis" else "us",
-        # no ARROW:schema footer entry: Spark's writer never wrote one,
-        # and at a few hundred bytes it would dominate small files
-        "store_schema": False,
-    }
-    millis = out.timestamp_unit == "millis"
+    if out.type == "csv":
+        line, fmt = _Csv.render(spark, payload, out)
+        df = df.select(line.alias(_LINE), *keys)
+        payload = [_LINE]
+    else:
+        fmt = _Parquet(model, out, payload)
+    millis = out.type == "parquet" and out.timestamp_unit == "millis"
     rows_per_file = model.rows_per_file or 1 << 62
-    # row groups of at most one Arrow batch, so a task's memory does not
-    # grow with its row count (a batch size <= 0 is Spark's "no limit")
+    # files written one Arrow batch at a time, so a task's memory does
+    # not grow with its row count (a batch size <= 0 is Spark's "no limit")
     group_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
     group_rows = group_rows if group_rows > 0 else rows_per_file
     staging = _path(root, _STAGING)
@@ -209,7 +273,7 @@ def write_parquet(
                 batch = _floor_millis(batch)
             for rel, rows in _split(batch, keys, names) if keys else [("", batch)]:
                 if rel not in dirs:
-                    dirs[rel] = _DirWriter(fs, base, rel, rows_per_file, group_rows, options, done)
+                    dirs[rel] = _DirWriter(fs, base, rel, rows_per_file, group_rows, fmt, done)
                 dirs[rel].add(rows.select(payload))
         for d in dirs.values():
             d.close()
@@ -227,4 +291,4 @@ def write_parquet(
         with contextlib.suppress(OSError):
             _remove(fs, staging)
         raise
-    _commit(fs, root, model.name, staged, mode)
+    _commit(fs, root, model.name, fmt.suffix, staged, mode)

@@ -1,18 +1,11 @@
 """Sinks: devnull / CSV / Parquet / HTTP / TCS, with Hive partitioning.
 
-Parquet goes through one Arrow writer with a per-job staging commit
-(``sinks/parquet.py``): it names the files ``{model}_{n}.parquet`` and
-the partition directories ``col=value`` / ``col=null`` itself.
-
-CSV stays on Spark's writer, because its float precision and Go-layout
-datetime formats are Spark expressions (SURVEY.md §2.4): rotation
-(``rows_per_file``) -> ``maxRecordsPerFile``, Hive partition routing ->
-``partitionBy``. Layout parity (reference model_writer.go:166-233,
-csv.go:339-341): a post-write pass on local filesystems renames
-``part-*`` files to ``{model}_{n}.csv``, ``__HIVE_DEFAULT_PARTITION__``
-dirs to ``col=null``, and restores ``write_to_output: true`` partition
-directory names. On object-store paths (``s3://`` etc.) renames are
-O(data), so the pass is skipped and Spark's native layout is kept.
+CSV and parquet go through one Arrow writer with a per-job staging
+commit (``sinks/files.py``): it names the files ``{model}_{n}.csv`` /
+``{model}_{n}.parquet``, rotates them at ``rows_per_file`` and names
+the partition directories ``col=value`` / ``col=null`` itself. The
+values it writes are shaped here in Spark: CSV's float precision and
+Go-layout datetime formats (SURVEY.md §2.4), parquet's float rounding.
 
 HTTP/TCS post micro-batches from ``foreachPartition`` with exponential
 backoff.
@@ -29,11 +22,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sdvg_spark.config.model import ModelSpec, OutputConfig
-
-_RFC3339 = "yyyy-MM-dd'T'HH:mm:ssXXX"
-
+from sdvg_spark.sinks.files import write_files
 from sdvg_spark.sinks.go_layout import go_layout_to_jdk
 from sdvg_spark.sinks.template import DEFAULT_BODY_TEMPLATE
+
+_RFC3339 = "yyyy-MM-dd'T'HH:mm:ssXXX"
 
 
 def _csv_formatted(df: DataFrame, out: OutputConfig) -> DataFrame:
@@ -85,6 +78,9 @@ def _coalesce_for_rotation(df: DataFrame, model: ModelSpec) -> DataFrame:
     file per task. Never coalesces a task above ~10M rows: a small model
     gets file-count parity, a 1e9-row model keeps its write parallelism
     (file-count parity is not worth serializing a cluster-scale write).
+    With the default ``rows_per_file`` (= ``rows_count``) a model under
+    10M rows gets ONE task, and as ``coalesce`` is narrow, so does its
+    generation.
     """
     if not model.rows_count or not model.rows_per_file:
         return df
@@ -95,68 +91,6 @@ def _coalesce_for_rotation(df: DataFrame, model: ModelSpec) -> DataFrame:
     # current), so no partition probe is needed — probing via df.rdd
     # forced a physical-plan build per write call.
     return df.coalesce(want)
-
-
-_PART_PREFIX = "__part_"
-
-
-def _prepare_partitioning(
-    df: DataFrame, model: ModelSpec
-) -> tuple[DataFrame, list[str]]:
-    """Partition keys for ``partitionBy``. Spark always drops partition
-    columns from the data files — which matches ``write_to_output: false``
-    (model_writer.go:193-199). For ``write_to_output: true`` the column
-    must stay in the payload, so we partition on an aliased copy and the
-    parity pass renames the directories back."""
-    keys: list[str] = []
-    for pc in model.partition_columns:
-        if pc.write_to_output:
-            alias = _PART_PREFIX + pc.name
-            df = df.withColumn(alias, F.col(pc.name))
-            keys.append(alias)
-        else:
-            keys.append(pc.name)
-    return df, keys
-
-
-def _restore_layout(path: str, model: ModelSpec) -> None:
-    """Post-write rename pass for local paths: reference-style partition
-    dir names and ``{model}_{n}.csv`` file names (csv.go:339-341)."""
-    if "://" in path or not os.path.isdir(path):
-        return
-    # directories bottom-up so child renames happen before parents move
-    for root, dirs, _files in os.walk(path, topdown=False):
-        for d in dirs:
-            new = d
-            if new.startswith(_PART_PREFIX):
-                new = new[len(_PART_PREFIX) :]
-            if new.endswith("=__HIVE_DEFAULT_PARTITION__"):
-                new = new[: -len("__HIVE_DEFAULT_PARTITION__")] + "null"
-            if new != d:
-                src, dst = os.path.join(root, d), os.path.join(root, new)
-                if os.path.isdir(dst):
-                    # resume/append: the parity-named dir already exists
-                    # from an earlier run — merge instead of rename
-                    for f in os.listdir(src):
-                        os.rename(os.path.join(src, f), os.path.join(dst, f))
-                    os.rmdir(src)
-                else:
-                    os.rename(src, dst)
-    for root, _dirs, files in os.walk(path):
-        parts = sorted(f for f in files if f.startswith("part-") and f.endswith(".csv"))
-        if not parts:
-            continue
-        taken = {f for f in files if not f.startswith("part-")}
-        n = 0
-        for f in parts:
-            while f"{model.name}_{n}.csv" in taken:  # resume/append numbering
-                n += 1
-            new = f"{model.name}_{n}.csv"
-            taken.add(new)
-            os.rename(os.path.join(root, f), os.path.join(root, new))
-            crc = os.path.join(root, f".{f}.crc")
-            if os.path.exists(crc):
-                os.remove(crc)
 
 
 def write_model(
@@ -177,25 +111,11 @@ def write_model(
         return "noop://"
 
     if out.type == "csv":
-        pdf, parts = _prepare_partitioning(
-            _coalesce_for_rotation(_csv_formatted(df, out), model), model
-        )
-        w = (
-            pdf.write.mode(mode)
-            .option("header", not out.without_headers)
-            .option("sep", out.delimiter)
-            .option("emptyValue", "")
-            .option("maxRecordsPerFile", model.rows_per_file or 0)
-        )
-        if parts:
-            w = w.partitionBy(*parts)
-        w.csv(path)
-        _restore_layout(path, model)
+        write_files(spark, _coalesce_for_rotation(_csv_formatted(df, out), model),
+                    model, out, path, mode)
         return path
 
     if out.type == "parquet":
-        from sdvg_spark.sinks.parquet import write_parquet
-
         pdf = _coalesce_for_rotation(_parquet_rounded(df, out), model)
         if out.sort_by:
             # task-local sort (no shuffle): each output file's row groups
@@ -212,7 +132,7 @@ def write_model(
             pdf = apply_zorder(
                 pdf, model, out, lead=[p.name for p in model.partition_columns]
             )
-        write_parquet(spark, pdf, model, out, path, mode)
+        write_files(spark, pdf, model, out, path, mode)
         return path
 
     if out.type in ("http", "tcs"):

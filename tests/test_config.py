@@ -180,3 +180,34 @@ def test_models_to_ignore_must_exist():
 def test_unknown_type_rejected():
     with pytest.raises(ConfigError):
         parse_config(_one_col_cfg({"name": "c", "type": "decimal"}))
+
+
+@pytest.mark.parametrize(
+    "model_extra,output,field",
+    [
+        ({"rows_per_file": -1}, {}, "rows_per_file"),
+        ({}, {"delimiter": ""}, "delimiter"),
+        ({}, {"delimiter": "::"}, "delimiter"),
+        ({}, {"float_precision": -1}, "float_precision"),
+        ({}, {"checkpoint_rows": -1}, "checkpoint_rows"),
+        ({}, {"without_headers": "false"}, "without_headers"),
+        ({}, {"checkpoint_rows": "10"}, "checkpoint_rows"),
+        ({}, {"params": {"float_precision": 2.5}}, "float_precision"),
+    ],
+    ids=["rows_per_file<0", "delimiter=''", "delimiter='::'", "float_precision<0",
+         "checkpoint_rows<0", "without_headers=str", "checkpoint_rows=str", "params.float"],
+)
+def test_bad_output_values_rejected_at_parse(model_extra, output, field):
+    raw = _one_col_cfg({"name": "c", "type": "integer"}, **model_extra)
+    raw["output"] = {"type": "csv", "dir": "/tmp/out", **output}
+    with pytest.raises(ConfigError, match=field):
+        parse_config(raw)
+
+
+def test_output_values_of_the_field_type_accepted():
+    raw = _one_col_cfg({"name": "c", "type": "integer"})
+    raw["output"] = {"type": "http", "endpoint": "http://localhost:1",
+                     "params": {"timeout_seconds": 5, "delimiter": "\t", "headers": {"a": "b"}},
+                     "not_a_field": object()}
+    out = parse_config(raw).output
+    assert (out.timeout_seconds, out.delimiter, out.headers) == (5, "\t", {"a": "b"})

@@ -1,7 +1,7 @@
-"""The parquet sink's Arrow writer: Spark-compatible partition directory
-names, encodings, millisecond timestamps, rotation, the per-job commit
-and the session it leaves behind. Read back with DuckDB, pyarrow and
-Spark's own hive-partitioned reader."""
+"""The file sinks' Arrow writer: Spark-compatible partition directory
+names, parquet encodings, millisecond timestamps, rotation, the per-job
+commit (parquet and CSV) and the session it leaves behind. Read back
+with DuckDB, pyarrow and Spark's own hive-partitioned reader."""
 
 from __future__ import annotations
 
@@ -63,7 +63,7 @@ def test_partition_directory_names_match_spark(spark, tmp_path):
 
 
 def test_escape_matches_spark(spark):
-    from sdvg_spark.sinks.parquet import _escape
+    from sdvg_spark.sinks.files import _escape
 
     utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     s = "".join(map(chr, range(1, 256))) + "é日 "
@@ -159,13 +159,15 @@ def test_rotation_carries_remainder(spark, tmp_path):
     assert got == [(100_000, 1, 100_000), (100_000, 100_001, 200_000)]
 
 
-@pytest.mark.parametrize("failing", [0, 1, 3])
+@pytest.mark.parametrize("failing,fmt", [(0, "parquet"), (1, "parquet"), (3, "parquet"),
+                                         (1, "csv")], ids=["0", "1", "3", "csv"])
 def test_failed_task_commits_nothing_and_resume_writes_every_id_once(
-        spark, tmp_path, failing):
+        spark, tmp_path, failing, fmt):
     rows, tasks = 4000, 4
     # rows_per_file keeps the rotation coalesce at one task per slice
     raw = _raw(tmp_path, {"t": {"rows_count": rows, "rows_per_file": rows // tasks,
-                                "columns": [_int("k", rows), {"name": "v", "type": "float"}]}})
+                                "columns": [_int("k", rows), {"name": "v", "type": "float"}]}},
+               type=fmt)
     cfg = parse_config(raw)
     df = Engine(cfg).model_df(spark, "t", num_partitions=tasks)
     staging = f"{tmp_path}/t/_staging"
@@ -176,7 +178,7 @@ def test_failed_task_commits_nothing_and_resume_writes_every_id_once(
         if TaskContext.get().partitionId() == failing:
             # fail only after the other tasks have staged their files
             deadline = time.monotonic() + 120
-            while (len(glob.glob(f"{staging}/*/*.parquet")) < tasks - 1
+            while (len(glob.glob(f"{staging}/*/*.{fmt}")) < tasks - 1
                    and time.monotonic() < deadline):
                 time.sleep(0.05)
             time.sleep(1)
@@ -185,14 +187,14 @@ def test_failed_task_commits_nothing_and_resume_writes_every_id_once(
 
     with pytest.raises(Exception, match="injected task failure"):
         write_model(spark, df.mapInArrow(fail_one, df.schema), cfg.models["t"], cfg.output)
-    assert not glob.glob(f"{tmp_path}/t/**/t_*.parquet", recursive=True)
-    assert rows_on_disk(str(tmp_path / "t"), "parquet") == 0
+    assert not glob.glob(f"{tmp_path}/t/**/t_*.{fmt}", recursive=True)
+    assert rows_on_disk(str(tmp_path / "t"), fmt) == 0
 
     save_backup(str(tmp_path), raw)
     run_generate(raw, spark=spark, continue_generation=True)
     assert duckdb.sql(
         f"SELECT count(*), count(DISTINCT k), min(k), max(k) "
-        f"FROM read_parquet('{tmp_path}/t/**/*.parquet')").fetchone() == (rows, rows, 1, rows)
+        f"FROM read_{fmt}('{tmp_path}/t/**/*.{fmt}')").fetchone() == (rows, rows, 1, rows)
 
 
 def test_default_cpus(monkeypatch):
