@@ -21,7 +21,10 @@ ordered range, no jitter, no null gate) included: each generator has
 one execution form. Streaming (``apply_columns``) maps the same
 evaluator over a source's ``id``. Catalyst cannot prune the map's
 outputs: selecting some columns of a model, or counting it, still
-computes every column (sinks write whole models).
+computes every column (sinks write whole models). A sink that needs no
+values in the JVM passes a ``TaskConsumer``: its function runs in the
+generating task over that task's value batches, and the task returns
+what it yields (devnull: one row count).
 
 Foreign keys re-evaluate the *parent's* pure expression on the child's
 row-ids (the reference's zero-shuffle trick, task.go:86-114): referential
@@ -33,6 +36,7 @@ from __future__ import annotations
 import math
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -368,6 +372,15 @@ def _fields(plans: list[ColumnPlan]) -> list[T.StructField]:
     return [T.StructField(plan.name, from_arrow_type(arrow_type(plan.dtype))) for plan in plans]
 
 
+class TaskConsumer(NamedTuple):
+    """What a generation task does with its value batches instead of
+    returning them: ``fn`` takes the task's iterator of batches and
+    yields the task's output batches, of Spark schema ``schema``."""
+
+    fn: Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]
+    schema: T.StructType
+
+
 class Engine:
     """Config -> DataFrames; ``jobs.run_generate`` writes them to sinks."""
 
@@ -385,12 +398,17 @@ class Engine:
         generate_to: int | None = None,
         num_partitions: int | None = None,
         keep_id: bool = False,
+        consumer: TaskConsumer | None = None,
     ) -> DataFrame:
+        """Rows ``[generate_from, generate_to)`` of a model; with a
+        ``consumer``, what its tasks make of those rows instead."""
         configure_session(spark)
         model = self.cfg.models[model_name]
         lo = model.generate_from if generate_from is None else generate_from
         hi = model.generate_to if generate_to is None else generate_to
-        return self._generate(spark, self.plans_for(model), lo, hi, num_partitions, keep_id)
+        return self._generate(
+            spark, self.plans_for(model), lo, hi, num_partitions, keep_id, consumer
+        )
 
     def apply_columns(
         self,
@@ -426,6 +444,7 @@ class Engine:
         hi: int,
         num_partitions: int | None,
         keep_id: bool,
+        consumer: TaskConsumer | None = None,
     ) -> DataFrame:
         """Rows ``[lo, hi)`` of ``plans``, each task making its own ids.
 
@@ -434,7 +453,9 @@ class Engine:
         ``spark.range(lo, hi, 1, P)``; only ``t`` crosses from the JVM.
         Its ids come from ``np.arange`` in batches of
         ``spark.sql.execution.arrow.maxRecordsPerBatch``, and each batch
-        returns as one Arrow batch of every column.
+        becomes one Arrow batch of every column: the task returns those
+        batches, or hands them to ``consumer.fn`` and returns what that
+        yields.
         """
         num_tasks = num_partitions or spark.sparkContext.defaultParallelism
         n = max(hi - lo, 0)
@@ -446,18 +467,22 @@ class Engine:
         schema = T.StructType(id_field + _fields(plans))
         names = schema.names
 
+        def batches(t: int) -> Iterator[pa.RecordBatch]:
+            first, last = lo + n * t // num_tasks, lo + n * (t + 1) // num_tasks
+            for start in range(first, last, batch):
+                ids = np.arange(start, min(start + batch, last), dtype=np.int64)
+                cols = evaluate(ids)
+                if keep_id:
+                    cols = [pa.array(ids), *cols]
+                yield pa.RecordBatch.from_arrays(cols, names=names)
+
         def task(descriptors: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for d in descriptors:
                 for t in d.column(0).to_pylist():
-                    first, last = lo + n * t // num_tasks, lo + n * (t + 1) // num_tasks
-                    for start in range(first, last, batch):
-                        ids = np.arange(start, min(start + batch, last), dtype=np.int64)
-                        cols = evaluate(ids)
-                        if keep_id:
-                            cols = [pa.array(ids), *cols]
-                        yield pa.RecordBatch.from_arrays(cols, names=names)
+                    yield from consumer.fn(batches(t)) if consumer else batches(t)
 
-        return spark.range(0, num_tasks, 1, num_tasks).mapInArrow(task, schema)
+        out_schema = consumer.schema if consumer else schema
+        return spark.range(0, num_tasks, 1, num_tasks).mapInArrow(task, out_schema)
 
     def model_df_with_id(self, spark: SparkSession, model_name: str, **kw) -> DataFrame:
         """model_df plus the raw row-id column (oracle comparisons)."""

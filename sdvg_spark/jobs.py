@@ -10,10 +10,12 @@ already on disk (pure index->value generation makes the skip O(1)).
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 
 from sdvg_spark.backup import (
     ConflictError,
@@ -28,9 +30,18 @@ from sdvg_spark.backup import (
     save_checkpoint,
 )
 from sdvg_spark.config.model import GenerationConfig, parse_config
-from sdvg_spark.engine import Engine
+from sdvg_spark.engine import Engine, TaskConsumer
 
 ProgressFn = Callable[[str, float], None]
+
+
+def _discard(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """devnull in the generating task: drop the values, return the count."""
+    rows = sum(b.num_rows for b in batches)
+    yield pa.RecordBatch.from_arrays([pa.array([rows], pa.int64())], names=["rows"])
+
+
+_DISCARD = TaskConsumer(_discard, T.StructType([T.StructField("rows", T.LongType(), False)]))
 
 
 def run_generate(
@@ -128,7 +139,10 @@ def run_generate(
         start = m.generate_from + done
         while start < m.generate_to:
             end = min(start + step, m.generate_to)
-            df = eng.model_df(spark, m.name, generate_from=start, generate_to=end)
+            # devnull's values never leave the task that makes them: the
+            # noop write gets one row count per task
+            df = eng.model_df(spark, m.name, generate_from=start, generate_to=end,
+                              consumer=_DISCARD if out.type == "devnull" else None)
             mode = "append" if start > m.generate_from else "overwrite"
             written[m.name] = write_model(spark, df, m, out, mode=mode)
             if file_sink:

@@ -10,6 +10,7 @@ can fix up an externally provided session (e.g. the verify driver's).
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
@@ -107,18 +108,33 @@ def scale_shuffle_partitions(
     return n
 
 
+def _is_local(master: str | None) -> bool:
+    return (master or os.environ.get("SPARK_MASTER") or "local").startswith("local")
+
+
 def default_cpus(master: str | None = None) -> str:
     """The session's parallelism: ``SPARK_GRAFT_CPUS`` if set; else, in
     local mode, the CPUs this process may run on, and 32 on a cluster."""
-    local = (master or os.environ.get("SPARK_MASTER") or "local").startswith("local")
+    local = _is_local(master)
     return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)) if local else 32)
+
+
+def _daemon_finds_package() -> bool:
+    """Whether a Python process started here imports this package from
+    the same root: the working directory, ``PYTHONPATH`` or
+    site-packages (the local workers' daemon sees only those)."""
+    root = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep), *site.getsitepackages()]
+    return any(p and os.path.realpath(p) == root for p in paths)
 
 
 def get_spark(app_name: str = "sdvg-spark", master: str | None = None) -> SparkSession:
     """Build (or reuse) a session with engine defaults.
 
     Designed for a real cluster: nothing here assumes local mode. Without
-    ``master`` or ``SPARK_MASTER`` it runs ``local[default_cpus()]``.
+    ``master`` or ``SPARK_MASTER`` it runs ``local[default_cpus()]``. In
+    local mode the Python workers fork from ``sdvg_spark.worker_daemon``
+    (no per-task zip re-read) when it can import this package.
     """
     cpus = default_cpus(master)
     builder = (
@@ -147,5 +163,7 @@ def get_spark(app_name: str = "sdvg-spark", master: str | None = None) -> SparkS
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER"):
         builder = builder.master(f"local[{cpus}]")
+    if _is_local(master) and _daemon_finds_package():
+        builder = builder.config("spark.python.daemon.module", "sdvg_spark.worker_daemon")
     spark = builder.getOrCreate()
     return configure_session(spark)

@@ -217,6 +217,29 @@ def test_round_tables_bounded():
     assert _round_tables.cache_info().currsize == 0
 
 
+@pytest.mark.parametrize("seed", [0, 17, 2**31 - 1])
+@pytest.mark.parametrize("n", [2, 3, 5, 101, 1001, 65536])
+def test_perm_table_matches_network(n, seed):
+    """A domain of at most 2^16 is a gather from the tabulated
+    permutation; it must give the network's values at every index, in
+    any order, and the table stays uint16 and bounded."""
+    from sdvg_spark.core.sequence import (
+        _PERM_TABLE_MAX_N,
+        _PERM_TABLES_MAX,
+        _feistel_net,
+        _perm_table,
+    )
+
+    assert n <= _PERM_TABLE_MAX_N
+    idx = np.random.default_rng(seed).permutation(np.arange(n, dtype=np.uint64))
+    got = feistel_np(idx, n, seed)
+    assert got.dtype == np.uint64
+    assert got.tolist() == _feistel_net(idx, n, seed).tolist()
+    tab = _perm_table(n, seed, 4)
+    assert tab.dtype == np.uint16 and len(tab) == n and not tab.flags.writeable
+    assert _PERM_TABLES_MAX * (_PERM_TABLE_MAX_N * 2) <= 32 << 20
+
+
 def test_frf_matches_pure_python_reference():
     """Independent check of the Go fastRandomFloat formula
     (reference generator/utils.go:180-196) using Python bigints —

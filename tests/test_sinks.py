@@ -104,6 +104,45 @@ def test_devnull(spark, tmp_path):
     assert out["t"].startswith("noop")
 
 
+@pytest.mark.parametrize("parts", [1, 4, 7, 503])
+def test_devnull_consumer_counts_every_row(spark, tmp_path, parts):
+    """devnull drops values in the generating task: each task returns
+    one ``rows`` row, and the rows add up to the model's, with empty
+    tasks (503 > 500 rows) returning 0."""
+    from sdvg_spark.jobs import _DISCARD
+
+    df = Engine(parse_config(_cfg(tmp_path / "dn", "devnull"))).model_df(
+        spark, "t", num_partitions=parts, consumer=_DISCARD
+    )
+    counts = [r["rows"] for r in df.collect()]
+    assert len(counts) == parts
+    assert sum(counts) == 500
+
+
+def test_devnull_plan_returns_only_row_counts(spark, tmp_path, monkeypatch):
+    """run_generate hands the devnull write a DataFrame of one ``rows``
+    column made by one MapInArrow: no value crosses to the JVM."""
+    import re
+
+    import sdvg_spark.sinks.writers as W
+
+    seen = []
+    write_model = W.write_model
+
+    def spy(spark, df, *a, **k):
+        seen.append(df)
+        return write_model(spark, df, *a, **k)
+
+    monkeypatch.setattr(W, "write_model", spy)
+    run_generate(_cfg(tmp_path / "dn", "devnull"), spark=spark)
+    (df,) = seen
+    assert df.columns == ["rows"]
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    assert len(re.findall(r"^\(\d+\) MapInArrow\b", plan, re.M)) == 1
+    assert "Exchange" not in plan
+
+
 def test_http_sink(spark, tmp_path):
     from http.server import BaseHTTPRequestHandler, HTTPServer
 
