@@ -45,8 +45,8 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_type
 
 from sdvg_spark.config.model import ColumnSpec, ConfigError, GenerationConfig, ModelSpec
-from sdvg_spark.core.rng import derive_seed
-from sdvg_spark.core.sequence import ordered_np, perm_np, resolve_mode
+from sdvg_spark.core.rng import derive_seed, frf_np
+from sdvg_spark.core.sequence import mod_np, ordered_np, perm_np, resolve_mode
 from sdvg_spark.generators.values import arrow_type, make_value_gen
 from sdvg_spark.session import configure_session
 
@@ -204,13 +204,16 @@ def _column_dtype(data_column: ColumnSpec, plans: list[RangePlan]) -> str:
 
 
 def _make_sequencer(plan: ColumnPlan, spark: SparkSession):
-    """Closure: int64 id array -> (ridx, num, r01) numpy arrays; ridx is
-    None for single-range columns (its dispatch is the constant 0).
+    """Closure: uint64 id array -> one ``(rows, num)`` pair per range:
+    the positions of the batch rows the range owns (None for a
+    single-range column: every row) and their draw numbers.
 
     One vectorized pass computes the column-level permutation, the
-    range dispatch, the per-range draw number, and the frf hash draw
-    (jitter/null source). LFSR parity tables ride a Spark broadcast so
-    executors get them once; feistel mode needs none (100 TB path).
+    range dispatch and the per-range draw number. The dispatch is a sum
+    of compares against the inner range bounds, and each range's row
+    partition is taken once and serves both its draw and its values.
+    LFSR parity tables ride a Spark broadcast so executors get them
+    once; feistel mode needs none (100 TB path).
 
     Accepted deviation (multi-range columns only): the per-range draw
     is derived from the permuted generator number (k = gnum - off), not
@@ -223,67 +226,56 @@ def _make_sequencer(plan: ColumnPlan, spark: SparkSession):
     rows = plan.rows
     data_seed = plan.data_seed
     mode = plan.perm_mode
-    single = len(plan.ranges) == 1
-    single_ordered = plan.all_ordered_single
-    offs = np.array([r.off for r in plan.ranges], dtype=np.uint64)
-    cnts = np.array([r.cnt for r in plan.ranges], dtype=np.uint64)
-    distincts = np.array([r.distinct for r in plan.ranges], dtype=np.uint64)
-    ordereds = np.array([r.ordered for r in plan.ranges], dtype=bool)
-    order_seeds = np.array([r.order_seed for r in plan.ranges], dtype=np.uint64)
-    bounds = np.cumsum(cnts)  # dispatch boundaries (exclusive)
+    ranges = plan.ranges
+    first = ranges[0]
+    # dispatch boundaries between ranges (exclusive ends of all but the
+    # last block; gnum < rows <= the last end)
+    inner = np.cumsum([r.cnt for r in ranges], dtype=np.uint64)[:-1]
+    ridx_dtype = np.min_scalar_type(len(ranges))
 
     # Ship parity tables via broadcast (they can be MBs); feistel needs
     # none. A range whose distinct exceeds the parity cap (e.g. an FK
     # into a >cap parent from a small child) gets no table and falls
     # back to feistel per-range (range_perm_mode).
     tables_bc = None
-    if mode == "lfsr" and not single_ordered:
+    if mode == "lfsr" and not plan.all_ordered_single:
         from sdvg_spark.core.sequence import lfsr_walk, range_perm_mode
 
         tables = {"col": np.asarray(lfsr_walk(rows, data_seed))}
-        for r in plan.ranges:
+        for r in ranges:
             if not r.ordered and range_perm_mode(mode, r.distinct) == "lfsr":
                 tables[r.index] = np.asarray(lfsr_walk(r.distinct, int(r.order_seed)))
         tables_bc = spark.sparkContext.broadcast(tables)
 
-    from sdvg_spark.core.rng import frf_np
+    def range_draw(r: RangePlan, k: np.ndarray) -> np.ndarray:
+        if r.ordered:
+            return ordered_np(k, r.distinct, r.cnt)
+        tab = tables_bc.value.get(r.index) if tables_bc is not None else None
+        if tab is not None:
+            return tab[mod_np(k, r.distinct).view(np.int64)]
+        return perm_np(k, r.distinct, int(r.order_seed), "feistel")
 
-    def draw(idx: np.ndarray) -> tuple[np.ndarray | None, np.ndarray]:
-        if single_ordered:
-            return None, ordered_np(idx, int(distincts[0]), int(cnts[0]))
-        if single and tables_bc is None:
-            # one permuted range at offset 0: the dispatch is the
-            # identity (ridx 0, k == gnum), so skip it
-            gnum = perm_np(idx, rows, data_seed, mode)
-            return None, perm_np(gnum, int(distincts[0]), int(order_seeds[0]), "feistel")
+    def draw(idx: np.ndarray) -> list[tuple[np.ndarray | None, np.ndarray]]:
+        if plan.all_ordered_single:
+            return [(None, ordered_np(idx, first.distinct, first.cnt))]
         if tables_bc is not None:
-            tables = tables_bc.value
-            gnum = tables["col"][(idx % np.uint64(rows)).astype(np.int64)]
+            gnum = tables_bc.value["col"][mod_np(idx, rows).view(np.int64)]
         else:
             gnum = perm_np(idx, rows, data_seed, mode)
-        ridx = np.searchsorted(bounds, gnum, side="right").astype(np.int64)
-        np.minimum(ridx, len(bounds) - 1, out=ridx)
-        k = gnum - offs[ridx]
-        num = np.zeros(len(idx), dtype=np.uint64)
-        for j in range(len(offs)):
-            m = ridx == j
-            if not m.any():
-                continue
-            if ordereds[j]:
-                num[m] = ordered_np(k[m], int(distincts[j]), int(cnts[j]))
-            else:
-                tab = tables_bc.value.get(j) if tables_bc is not None else None
-                if tab is not None:
-                    num[m] = tab[(k[m] % distincts[j]).astype(np.int64)]
-                else:
-                    num[m] = perm_np(k[m], int(distincts[j]), int(order_seeds[j]), "feistel")
-        return (None if single else ridx), num
+        if not len(inner):
+            # one range at offset 0: the dispatch is the identity
+            # (every row, k == gnum)
+            return [(None, range_draw(first, gnum))]
+        ridx = np.zeros(len(gnum), dtype=ridx_dtype)
+        for b in inner:
+            ridx += gnum >= b
+        parts = []
+        for r in ranges:
+            at = np.flatnonzero(ridx == r.index)
+            parts.append((at, range_draw(r, gnum[at] - np.uint64(r.off))))
+        return parts
 
-    def compute(ids: np.ndarray) -> tuple[np.ndarray | None, np.ndarray, np.ndarray]:
-        ridx, num = draw(ids.view(np.uint64))
-        return ridx, num, frf_np(num + np.uint64(data_seed))
-
-    return compute
+    return draw
 
 
 def _null_gated(values: pa.Array, gate: np.ndarray | None) -> pa.Array:
@@ -302,56 +294,51 @@ def _null_gated(values: pa.Array, gate: np.ndarray | None) -> pa.Array:
     )
 
 
-def _range_values(
-    r: RangePlan, num: np.ndarray, r01: np.ndarray | None, atype: pa.DataType
-) -> pa.Array:
+def _range_values(r: RangePlan, num: np.ndarray, data_seed: int, atype: pa.DataType) -> pa.Array:
     """One range's final values: jitter, value generator, the column's
     Arrow type and the null gate. ``r01`` = frf(data_seed + num) drives
     both the jitter and the gate (reference generator.go:220-237 uses
-    the same hash draw for both); a closed-form range has neither and
-    passes None. A zero factor adds exactly 0.0 to a non-negative
+    the same hash draw for both); a range with neither (factor 0, no
+    null share: a closed-form column, an enum, a small integer range)
+    computes no draw. A zero factor adds exactly 0.0 to a non-negative
     number, so that jitter is skipped."""
     number = num.astype(np.float64)
-    if r.factor:
-        number += r01 * r.factor
+    gate = None
+    if r.factor or r.null_pct > 0:
+        r01 = frf_np(num + np.uint64(data_seed))
+        if r.null_pct > 0:
+            gate = r01 < r.null_pct
+        if r.factor:
+            r01 *= r.factor
+            number += r01
     values = r.vgen.np_value(number)
     if values.type != atype:
         values = values.cast(atype)  # a narrower range widens
-    return _null_gated(values, r01 < r.null_pct if r.null_pct > 0 else None)
+    return _null_gated(values, gate)
 
 
 def _make_column(plan: ColumnPlan, spark: SparkSession) -> Callable[[np.ndarray], pa.Array]:
     """int64 ids -> the column's final Arrow array.
 
     Sequencer, jitter, null gate and value run in one numpy pass. A
-    :attr:`ColumnPlan.pure_native` column is its ordered draw and value
-    form, with no frf draw: its factor and null share are both 0.
+    multi-range column concatenates its ranges' values and takes them
+    back into row order. A :attr:`ColumnPlan.pure_native` column is its
+    ordered draw and value form: its factor and null share are both 0,
+    so it computes no frf draw.
     """
     ranges = plan.ranges
     atype = arrow_type(plan.dtype)
-    if plan.pure_native:
-        r = ranges[0]
-
-        def closed_form(ids: np.ndarray) -> pa.Array:
-            return _range_values(r, ordered_np(ids.view(np.uint64), r.distinct, r.cnt), None, atype)
-
-        return closed_form
-
-    compute = _make_sequencer(plan, spark)
+    draw = _make_sequencer(plan, spark)
 
     def column(ids: np.ndarray) -> pa.Array:
-        ridx, num, r01 = compute(ids)
-        if ridx is None:
-            return _range_values(ranges[0], num, r01, atype)
-        parts, rows = [], []
-        for r in ranges:
-            at = np.flatnonzero(ridx == r.index)
-            parts.append(_range_values(r, num[at], r01[at], atype))
-            rows.append(at)
+        parts = draw(ids.view(np.uint64))
+        values = [_range_values(r, num, plan.data_seed, atype) for r, (_, num) in zip(ranges, parts)]
+        if len(values) == 1:
+            return values[0]
         # each row's position in the range-ordered concatenation
-        pos = np.empty(len(ridx), dtype=np.int64)
-        pos[np.concatenate(rows)] = np.arange(len(ridx))
-        return pa.concat_arrays(parts).take(pos)
+        pos = np.empty(len(ids), dtype=np.int64)
+        pos[np.concatenate([at for at, _ in parts])] = np.arange(len(ids))
+        return pa.concat_arrays(values).take(pos)
 
     return column
 

@@ -82,6 +82,15 @@ class GlyphTable:
             self.bytes[i, : len(e)] = np.frombuffer(e, dtype=np.uint8)
         self.uniform = bool((self.widths == self.widths[0]).all())
         self.code_dtype = np.uint8 if len(enc) <= 256 else np.int32
+        # 1-byte glyphs are ASCII, so at most 128 of them: their codes
+        # map to bytes through a 256-byte ``bytes.translate`` table
+        self.ascii = bytes(self.bytes[:, 0]).ljust(256, b"\0") if self.bytes.shape[1] == 1 else None
+
+    def ascii_bytes(self, codes: np.ndarray) -> np.ndarray:
+        """The byte of each code of a 1-byte table, flattened in C
+        order: one ``bytes.translate`` pass, with none of the intp index
+        array a numpy gather converts the uint8 codes to."""
+        return np.frombuffer(codes.astype(np.uint8, copy=False).tobytes().translate(self.ascii), dtype=np.uint8)
 
     def codes(self, chars: str) -> np.ndarray:
         """The glyph codes of ``chars``."""
@@ -108,14 +117,20 @@ def glyph_strings(
 ) -> pa.StringArray:
     """Row r of the (n, L) glyph-code matrix ``codes`` — its first
     ``lengths[r]`` codes, or all L — as the r-th string of an Arrow
-    string array, built from its UTF-8 bytes with no Python strings."""
+    string array, built from its UTF-8 bytes with no Python strings.
+
+    Every row a full L glyphs of one width is the fixed-stride case:
+    the code matrix maps straight into the data buffer, and when each
+    glyph is a single byte (an ASCII charset, a template, a phone) that
+    is one ``bytes.translate`` of the codes (:meth:`GlyphTable.ascii_bytes`),
+    not a 2-D gather of (G, 1) rows."""
     n, L = codes.shape
+    w = glyphs.bytes.shape[1]
     if lengths is not None and (lengths == L).all():
         lengths = None
     if lengths is None and glyphs.uniform:
-        w = glyphs.bytes.shape[1]
         _check_offsets(n * L * w)
-        data = glyphs.bytes[codes].reshape(-1)
+        data = glyphs.ascii_bytes(codes) if w == 1 else glyphs.bytes[codes].reshape(-1)
         return _string_array(n, np.arange(n + 1, dtype=np.int64) * (L * w), data)
     cell = glyphs.widths[codes]  # bytes per glyph cell
     if lengths is not None:
@@ -123,9 +138,8 @@ def glyph_strings(
     offsets = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(cell.sum(axis=1, dtype=np.int64), out=offsets[1:])
     _check_offsets(int(offsets[-1]))
-    w = glyphs.bytes.shape[1]
     if w == 1:
-        data = glyphs.bytes[codes, 0][cell > 0]
+        data = glyphs.ascii_bytes(codes)[(cell > 0).reshape(-1)]
     else:
         keep = np.arange(w)[None, None, :] < cell[:, :, None]
         data = glyphs.bytes[codes][keep]
@@ -142,11 +156,10 @@ def _unix_sec_nsec(dt: datetime) -> tuple[int, int]:
 
 def _ordered_int64_np(from_: int, to: int, number: np.ndarray, total: int) -> np.ndarray:
     step = (float(to) - float(from_) + 1.0) / float(total)
-    v = step * number
-    u = v.astype(np.uint64)  # trunc toward zero; v >= 0 always
-    with np.errstate(over="ignore"):
-        # from + int64(uint64(v)): two's-complement wrap addition
-        return u.view(np.int64) + np.int64(from_)
+    v = (step * number).astype(np.uint64).view(np.int64)  # trunc toward zero; v >= 0 always
+    # from + int64(uint64(v)): two's-complement wrap addition, in place
+    v += np.int64(from_)
+    return v
 
 
 def _ordered_int64_sql(from_: int, to: int, number_expr: str, total: int) -> str | None:
@@ -175,7 +188,7 @@ class IntegerGen:
     def np_value(self, number: np.ndarray) -> pa.Array:
         v = _ordered_int64_np(self.p.from_, self.p.to, number, self.total)
         dt = {8: np.int8, 16: np.int16, 32: np.int32, 64: np.int64}[self.p.bit_width]
-        return pa.array(v.astype(dt))
+        return pa.array(v.astype(dt, copy=False))
 
     def sql(self, number_expr: str) -> str | None:
         base = _ordered_int64_sql(self.p.from_, self.p.to, number_expr, self.total)
@@ -202,8 +215,12 @@ class FloatGen:
         if self.p.from_ == self.p.to:
             v = np.full(len(number), float(self.p.from_))
         else:
+            # from * (1 - s) + to * s, in place
             s = number / float(self.total)
-            v = self.p.from_ * (1.0 - s) + self.p.to * s
+            v = np.subtract(1.0, s)
+            v *= self.p.from_
+            s *= self.p.to
+            v += s
         return pa.array(v.astype(np.float32) if self.p.bit_width == 32 else v)
 
     def sql(self, number_expr: str) -> str | None:
@@ -241,11 +258,15 @@ class DateTimeGen:
     def np_value(self, number: np.ndarray) -> pa.Array:
         vsec = _ordered_int64_np(self.from_sec, self.to_sec, number, self.total)
         vnsec = _ordered_int64_np(self.from_nsec, self.to_nsec, number, self.total)
-        vnsec = np.where(vnsec > 1_000_000_000, vnsec - 1_000_000_000, vnsec)
+        np.subtract(vnsec, 1_000_000_000, out=vnsec, where=vnsec > 1_000_000_000)
         if self.ns_unit:
-            return pa.array(vsec * 1_000_000_000 + vnsec)  # int64 nanos
-        micros = vsec * 1_000_000 + vnsec // 1000
-        return pa.array(micros, type=arrow_type("timestamp"))
+            vsec *= 1_000_000_000
+            vsec += vnsec
+            return pa.array(vsec)  # int64 nanos
+        vsec *= 1_000_000
+        vnsec //= 1000
+        vsec += vnsec
+        return pa.array(vsec, type=arrow_type("timestamp"))
 
     def sql(self, number_expr: str) -> str | None:
         vsec = _ordered_int64_sql(self.from_sec, self.to_sec, number_expr, self.total)
@@ -259,6 +280,14 @@ class DateTimeGen:
         if self.ns_unit:
             return f"CAST({vsec} * 1000000000 + {vnsec} AS BIGINT)"
         return f"make_timestamp({vsec} * 1000000 + {vnsec} // 1000)"
+
+
+def _hex4_table() -> np.ndarray:
+    """Entry ``b0 | b1 << 8`` is the uint32 whose little-endian bytes
+    are the ASCII hex digits of ``b0`` then ``b1``."""
+    hex2 = np.frombuffer("".join(f"{b:02x}" for b in range(256)).encode(), dtype="<u2")
+    pair = np.arange(1 << 16)
+    return hex2[pair & 0xFF].astype("<u4") | hex2[pair >> 8].astype("<u4") << 16
 
 
 class UUIDGen:
@@ -275,37 +304,53 @@ class UUIDGen:
     def set_total(self, total: int) -> None:
         self.total = max(total, 1)
 
-    # hex digit pair of each byte value, as the uint16 whose two
-    # (little-endian) bytes are the two ASCII digits
-    _HEX2 = np.frombuffer(
-        "".join(f"{b:02x}" for b in range(256)).encode(), dtype="<u2"
-    )
-    # canonical 8-4-4-4-12 layout: column 32 of the (n, 33) matrix of
-    # 32 hex digits plus one '-' column supplies the dashes
-    _LAYOUT = np.array(
-        [*range(0, 8), 32, *range(8, 12), 32, *range(12, 16), 32,
-         *range(16, 20), 32, *range(20, 32)]
+    # the 4 hex digits of each byte pair (b0, b1), at index b0 | b1 << 8
+    # (the little-endian uint16 view of the pair): 256 KB, built once
+    _HEX4 = _hex4_table()
+    # the canonical 8-4-4-4-12 string as one 36-byte record: word i is
+    # the hex of byte pair i, and the dashes sit between the groups
+    _WORDS = (0, 4, 9, 14, 19, 24, 28, 32)
+    _DASHES = (8, 13, 18, 23)
+    _RECORD = np.dtype(
+        {
+            "names": [f"w{i}" for i in range(8)] + [f"d{i}" for i in range(4)],
+            "formats": ["<u4"] * 8 + ["u1"] * 4,
+            "offsets": [*_WORDS, *_DASHES],
+            "itemsize": 36,
+        }
     )
 
     def np_value(self, number: np.ndarray) -> pa.Array:
+        """The canonical strings of the draws ``number``, as one Arrow
+        string array.
+
+        The 16-step ``floor(255·idx)`` digit chain writes its bytes one
+        column at a time into an (n, 16) uint8 matrix; each byte pair is
+        then 4 hex digits gathered from :attr:`_HEX4` through the
+        matrix's uint16 view, and the 8 words and 4 dashes fill one
+        36-byte record per row, which is the string buffer: no
+        transpose, no (n, 33) digit matrix, no per-character gather."""
         n = len(number)
         idx = number / float(self.total)
         pos = np.empty(n)
-        b = np.empty((16, n), dtype=np.uint8)
+        b = np.empty((n, 16), dtype=np.uint8)
         for i in range(16):  # 16 vectorized passes, no per-row work
             np.multiply(idx, 255.0, out=idx)
             np.floor(idx, out=pos)
-            b[i] = pos
+            b[:, i] = pos
+            # x - floor(x) >= 0 for every x (IEEE subtraction is
+            # monotone), so the mirror's greatest(..., 0.0) is a no-op
             np.subtract(idx, pos, out=idx)
-            np.maximum(idx, 0.0, out=idx)
-        b[6] = (b[6] & 0x0F) | 0x40
-        b[8] = (b[8] & 0x3F) | 0x80
+        b[:, 6] = (b[:, 6] & 0x0F) | 0x40
+        b[:, 8] = (b[:, 8] & 0x3F) | 0x80
         _check_offsets(36 * n)
-        digits = np.empty((n, 33), dtype=np.uint8)
-        digits[:, :32] = self._HEX2[np.ascontiguousarray(b.T)].view(np.uint8)
-        digits[:, 32] = ord("-")
-        data = digits.take(self._LAYOUT, axis=1).reshape(-1)
-        return _string_array(n, np.arange(n + 1, dtype=np.int64) * 36, data)
+        hex4 = self._HEX4.take(b.view("<u2"))
+        out = np.empty(n, dtype=self._RECORD)
+        for i in range(8):
+            out[f"w{i}"] = hex4[:, i]
+        for i in range(4):
+            out[f"d{i}"] = ord("-")
+        return _string_array(n, np.arange(n + 1, dtype=np.int64) * 36, out.view(np.uint8))
 
     def sql(self, number_expr: str) -> str | None:
         return None
@@ -372,7 +417,9 @@ class EnumGen:
         return pa.array(self.values, type=arrow_type(self.spark_dtype))
 
     def np_value(self, number: np.ndarray) -> pa.Array:
-        idx = number.astype(np.int64) // self.rows_per_value
+        idx = number.astype(np.int64)
+        if self.rows_per_value > 1:
+            idx //= self.rows_per_value
         return self._arrow_values.take(pa.array(idx))
 
     def sql(self, num_expr: str, duck_type: str | None = None) -> str:
@@ -409,6 +456,16 @@ class StringGen:
         self.sum_by_prefix: list[float] = []
         self.completions: list[int] = []
         self._prepare()
+
+    def __getstate__(self) -> dict:
+        """Pickle as the params and total only: a task closure then
+        carries no locale pack, charset or cached table, and unpickling
+        rebuilds them from the process's cached :func:`locales.get_locale`."""
+        return {"p": self.p, "total": self.total}
+
+    def __setstate__(self, state: dict) -> None:
+        self.__init__(state["p"])
+        self.set_total(state["total"])
 
     def _prepare(self) -> None:
         p = self.p
@@ -963,7 +1020,7 @@ class StringGen:
                 continue
             flo = base * idx
             pos = np.floor(flo)
-            idx = np.maximum(flo - pos, 0.0)
+            idx = flo - pos  # >= 0: the mirror's greatest(..., 0.0) is a no-op
             codes[:, j] = table[pos.astype(np.int64)]
         return glyph_strings(codes, glyphs)
 
@@ -974,7 +1031,11 @@ class StringGen:
     def _simple_np(self, number: np.ndarray) -> pa.Array:
         """Vectorized lexicographic unranking using the prefix tables
         (reference simpleString, value/string.go:382-410). The walk
-        carries the shrinking list ``act`` of rows still descending."""
+        carries the shrinking list ``act`` of rows still descending;
+        while every row still descends (always, for a fixed length, up
+        to float rounding) ``act`` is all rows and the walk writes whole
+        code columns with no compress step. A prefix count of 0 (every
+        length below ``min_length``) subtracts nothing and is skipped."""
         p = self.p
         cbp = self.count_by_prefix
         sbp = self.sum_by_prefix
@@ -984,32 +1045,36 @@ class StringGen:
         L = max(p.max_length, 1)
         codes = np.zeros((n, L), dtype=glyphs.code_dtype)
         plen = np.zeros(n, dtype=np.int64)
-        act = np.arange(n)
+        act = slice(None)  # every row, until one stops
         remain = number.astype(np.float64)
         for depth in range(p.max_length + 1):
-            remain = remain - cbp[depth]
+            if cbp[depth]:
+                remain -= cbp[depth]
             nxt = sbp[depth + 1] if depth + 1 < len(sbp) else 0.0
             if nxt == 0.0:
                 plen[act] = depth
                 break
             go = remain >= 0
-            plen[act[~go]] = depth
-            act, remain = act[go], remain[go]
-            if not act.size:
-                break
+            if not go.all():
+                if isinstance(act, slice):
+                    act = np.arange(n)
+                plen[act[~go]] = depth
+                act, remain = act[go], remain[go]
+                if not act.size:
+                    break
             if depth >= p.max_length:
                 plen[act] = depth
                 break
-            i = np.floor(remain / nxt)
-            remain = remain - nxt * i
-            codes[act, depth] = np.minimum(i, ncs - 1)
+            q = np.floor(remain / nxt)
+            remain -= nxt * q
+            codes[act, depth] = np.minimum(q, ncs - 1, out=q)
         # short strings extend to dest = min_len + num % n_len with
         # cs[(num + i*i) % |cs|], i = offset past the prefix
         n_len = p.max_length - p.min_length + 1
-        numi = number.astype(np.int64)
         dest = plen
         short = np.flatnonzero(plen < p.min_length)
         if short.size:
+            numi = number.astype(np.int64)
             dest = plen.copy()
             dest[short] = p.min_length + numi[short] % n_len
             pos_grid = np.arange(L)[None, :]

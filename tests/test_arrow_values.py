@@ -1,8 +1,11 @@
 """Arrow forms of the value generators: the string-buffer builder, the
-engine's null gate, and the vectorized phone form against its DuckDB
-mirror."""
+engine's null gate, the vectorized phone form against its DuckDB
+mirror, the uuid and plain-string kernels against per-row references,
+and the pickled size of a task's evaluator."""
 
 from __future__ import annotations
+
+import math
 
 import duckdb
 import numpy as np
@@ -91,3 +94,134 @@ def test_phone_matches_oracle_sql(locale):
     assert got == want
     pats = vg.pack.phone_patterns_filtered()
     assert {len(v) for v in got} == {len(pat) for pat in pats}
+
+
+def _uuid_py(number: float, total: int) -> str:
+    """The reference uuid on Python floats, one value: 16 base-255
+    digits of number/total, the RFC-4122 v4 and variant bits, then the
+    8-4-4-4-12 hex form."""
+    idx = number / float(total)
+    digits = []
+    for _ in range(16):
+        x = 255.0 * idx
+        d = math.floor(x)
+        digits.append(d)
+        idx = max(x - d, 0.0)
+    digits[6] = (digits[6] & 0x0F) | 0x40
+    digits[8] = (digits[8] & 0x3F) | 0x80
+    h = bytes(digits).hex()
+    return f"{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:]}"
+
+
+@pytest.mark.parametrize("total", [1, 255, 255**3, 3_000_000, 2**53])
+def test_uuid_matches_scalar_reference(total):
+    """The uuid kernel (byte matrix, 4-digit table, 36-byte records)
+    equals the per-row chain at the ends of the draw range, on draws
+    where 255·idx lands on an integer, and on jittered draws."""
+    from sdvg_spark.generators.values import UUIDGen
+
+    gen = UUIDGen()
+    gen.set_total(total)
+    top = float(total - 1) + 0.9999999999999999
+    exact = [k * total / 255.0 for k in range(255)]  # idx == k/255
+    jittered = np.random.default_rng(total % 1000).random(300) * total
+    number = np.array([0.0, top, float(total - 1), *exact, *jittered])
+    got = gen.np_value(number)
+    got.validate(full=True)
+    assert got.to_pylist() == [_uuid_py(x, total) for x in number.tolist()]
+    assert len(gen.np_value(number[:0])) == 0
+
+
+def _simple_py(gen: StringGen, number: float) -> tuple[str, int]:
+    """The reference plain-string unranking on Python floats, one
+    value: the prefix-table walk, then the tail extension of a prefix
+    shorter than min_length. Returns the string and the walk's depth."""
+    p, cs = gen.p, gen.charset
+    cbp, sbp = gen.count_by_prefix, gen.sum_by_prefix
+    remain, chars, plen = float(number), [], 0
+    for depth in range(p.max_length + 1):
+        remain = remain - cbp[depth]
+        nxt = sbp[depth + 1] if depth + 1 < len(sbp) else 0.0
+        plen = depth
+        if nxt == 0.0 or remain < 0 or depth >= p.max_length:
+            break
+        i = math.floor(remain / nxt)
+        remain = remain - nxt * i
+        chars.append(cs[min(i, len(cs) - 1)])
+    if plen < p.min_length:
+        num = int(number)
+        dest = p.min_length + num % (p.max_length - p.min_length + 1)
+        chars += [cs[(num + i * i) % len(cs)] for i in range(dest - plen)]
+    return "".join(chars), plen
+
+
+@pytest.mark.parametrize(
+    "locale,min_len,max_len,total",
+    [("en", 8, 8, 3_000_000), ("en", 2, 6, 50_000), ("ru", 3, 5, 20_000), ("en", 4, 6, 40)],
+    ids=["fixed", "varied", "ru_varied", "short"],
+)
+def test_simple_strings_match_scalar_reference(locale, min_len, max_len, total):
+    """The plain-string walk equals the per-row reference on the path
+    where every row descends to the end (a fixed length), on the
+    compressing path where rows stop at different depths, and on
+    strings whose walk stops short of min_length (a quotient that rounds
+    up to the next digit leaves a negative remainder) and which the
+    tail extension fills."""
+    p = StringParams(locale=locale, min_length=min_len, max_length=max_len)
+    p.fill_defaults()
+    gen = StringGen(p)
+    gen.set_total(total)
+    # just below a multiple of a prefix block: the walk's quotient can
+    # round up there
+    edges = [np.nextafter(k * gen.sum_by_prefix[d], 0.0) for d in (1, 2, 3) for k in range(1, 62)]
+    rng = np.random.default_rng(min_len * 100 + max_len)
+    number = np.concatenate([
+        np.arange(min(total, 500), dtype=np.float64),
+        rng.random(2000) * total,
+        [x for x in edges if x < total],
+        [float(total - 1) + 0.9999999999999999],
+    ])
+    got = gen.np_value(number)
+    got.validate(full=True)
+    want, depths = zip(*(_simple_py(gen, x) for x in number.tolist()))
+    assert got.to_pylist() == list(want)
+    assert {len(s) for s in want} <= set(range(min_len, max_len + 1))
+    assert min(depths) < min_len  # some walks stop short and are extended
+    if min_len < max_len:
+        assert len(set(depths)) > 2  # rows stopped at different depths
+
+
+def test_evaluator_pickles_small_and_round_trips():
+    """A task's closure carries each string generator as its params and
+    total, not its locale pack: the gen_devnull mix pickles to under
+    32 KB, and round-tripped evaluators (ru names and text included)
+    give the same batches."""
+    import cloudpickle
+
+    from perfbench.workloads import GEN_COLUMNS
+    from sdvg_spark.config.model import parse_config
+    from sdvg_spark.engine import Engine, _make_evaluator
+
+    def evaluator(columns, rows):
+        cfg = parse_config({"random_seed": 3, "permutation": "feistel",
+                            "models": {"m": {"rows_count": rows, "columns": columns}}})
+        return _make_evaluator(Engine(cfg).plans_for(cfg.models["m"]), None)
+
+    devnull = evaluator(GEN_COLUMNS, 3_000_000)
+    assert len(cloudpickle.dumps(devnull)) < 32 << 10
+    extra = [
+        {"name": "ru_last", "type": "string", "type_params": {"logical_type": "last_name", "locale": "ru"}},
+        {"name": "ru_first", "type": "string", "type_params": {"logical_type": "first_name", "locale": "ru"}},
+        {"name": "ru_text", "type": "string",
+         "type_params": {"logical_type": "text", "locale": "ru", "min_length": 5, "max_length": 40}},
+        {"name": "en_text", "type": "string",
+         "type_params": {"logical_type": "text", "min_length": 1, "max_length": 20}},
+        {"name": "ru_s", "type": "string", "type_params": {"locale": "ru", "min_length": 2, "max_length": 6}},
+        {"name": "tmpl", "type": "string", "type_params": {"locale": "ru", "template": "Aa-0#"}},
+        {"name": "phone", "type": "string", "type_params": {"logical_type": "phone", "locale": "ru"}},
+    ]
+    ids = np.arange(1_000, 3_000, dtype=np.int64)
+    for ev in (devnull, evaluator(GEN_COLUMNS + extra, 5_000)):
+        back = cloudpickle.loads(cloudpickle.dumps(ev))
+        for a, b in zip(ev(ids), back(ids)):
+            assert a.equals(b)

@@ -406,6 +406,31 @@ def test_feistel_mode_engine_vs_oracle_exact(spark):
         assert got == want and len(got) == 3000, col
 
 
+@pytest.mark.parametrize("permutation", ["auto", "feistel"])
+def test_multi_range_column_without_draw_matches_oracle(spark, permutation):
+    """A two-range column whose ranges neither jitter (each draws its
+    whole value space: factor 0) nor gate nulls computes no frf draw at
+    all, and still equals its DuckDB mirror row for row."""
+    import duckdb
+
+    from sdvg_spark.engine import plan_column
+    from sdvg_spark.oracle import column_oracle_sql
+
+    cfg = parse_config({"random_seed": 21, "permutation": permutation, "models": {"m": {
+        "rows_count": 1000, "columns": [
+            {"name": "v", "type": "integer", "ranges": [
+                {"values": [5, -1, 42], "range_percentage": 0.5},
+                {"type_params": {"bit_width": 32, "from": 0, "to": 100},
+                 "range_percentage": 0.5}]}]}}})
+    model = cfg.models["m"]
+    plan = plan_column(cfg, model, model.column("v"))
+    assert [(r.factor, r.null_pct) for r in plan.ranges] == [(0.0, 0.0), (0.0, 0.0)]
+    got = {r.id: r.v for r in Engine(cfg).column_df(spark, "m", "v").collect()}
+    want = dict(duckdb.connect().execute(column_oracle_sql(cfg, "m", "v")).fetchall())
+    assert got == want and len(got) == 1000
+    assert {5, -1, 42} <= set(got.values()) and any(0 <= v <= 100 and v != 5 for v in got.values())
+
+
 def test_native_and_template_ranges_in_one_column(spark):
     """A column mixing phone, last name and enum ranges with a
     template range equals the DuckDB oracle. Each

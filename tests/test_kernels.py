@@ -198,6 +198,38 @@ def test_feistel_matches_scalar_reference(n):
     assert got.tolist() == [_feistel_py(i, n, 17) for i in idx]
 
 
+@pytest.mark.parametrize("mode", ["lfsr", "feistel"])
+@pytest.mark.parametrize("n", [1, 7, 1000, 70_001])
+def test_perm_and_ordered_mod_only_past_the_domain(mode, n):
+    """perm_np and ordered_np skip the ``mod`` when a batch lies inside
+    the domain; batches that straddle it (an ordered FK child larger
+    than its parent, streaming ids far past rows_count) must still give
+    the values of the explicit ``%``."""
+    from sdvg_spark.core.sequence import mod_np
+
+    un = np.uint64(n)
+    batches = {
+        "inside": np.arange(n, dtype=np.uint64),
+        "last": np.array([n - 1], dtype=np.uint64),
+        "up_to_n": np.arange(n + 1, dtype=np.uint64),
+        "straddle": np.arange(max(n - 50, 0), n + 50, dtype=np.uint64),
+        "child_of_smaller_parent": np.arange(3 * n + 5, dtype=np.uint64),
+        "stream": np.uint64(2**40) + np.arange(200, dtype=np.uint64) * np.uint64(977),
+        "empty": np.zeros(0, dtype=np.uint64),
+    }
+    for name, idx in batches.items():
+        k = idx % un
+        assert mod_np(idx, n).tolist() == k.tolist(), name
+        assert perm_np(idx, n, 11, mode).tolist() == perm_np(k, n, 11, mode).tolist(), name
+        if mode == "feistel":
+            assert perm_np(idx, n, 11, mode).tolist() == feistel_np(k, n, 11).tolist(), name
+        else:
+            assert perm_np(idx, n, 11, mode).tolist() == lfsr_walk(n, 11)[k].tolist(), name
+        cycle, distinct = n, max(n // 3, 1)
+        want = (k.astype(np.float64) * float(distinct) / float(cycle)).astype(np.uint64)
+        assert ordered_np(idx, distinct, cycle).tolist() == want.tolist(), name
+
+
 def test_round_tables_bounded():
     """A table per round, uint16 and indexed by every source-half value;
     the cache keeps its fixed size; halves wider than 16 bits build
