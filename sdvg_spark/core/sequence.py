@@ -6,9 +6,10 @@ A sequential walk cannot be distributed, so this engine exposes the same
 contract — a seeded bijective "shuffle" of ``[0, n)`` that cycles — as a
 *pure function* of the row index, in two tiers:
 
-* **lfsr** (parity tier): the LFSR period is precomputed once on the
-  driver with the same primitive polynomials, then indexed. Bit-exact
-  with the reference walk, bounded by driver memory (default cap 1<<22).
+* **lfsr** (parity tier): the LFSR period is computed with the same
+  primitive polynomials by the process that reads it, once (numpy
+  lanes, ``lfsr_walk``: 8 B a row, a 256-key LRU per process), then
+  indexed. Bit-exact with the reference walk, capped at 1<<22 rows.
 * **feistel** (scale tier): a 4-round alternating-unbalanced Feistel
   network over exactly ``ceil(log2 n)`` bits with cycle-walking, keyed
   by the same seed. A jump-free bijection with identical guarantees
@@ -77,32 +78,43 @@ def lfsr_walk(distinct: int, seed: int) -> np.ndarray:
     skipped; emitted value is ``state - 1``. The k-th sequencer pull is
     ``walk[k % distinct]`` (the reference's explicit cycle reset is a
     no-op given the period — see tests).
+
+    The Galois step is linear over GF(2): ``lanes`` lanes start at s0,
+    A^m s0, A^2m s0, ... (A^m's columns: the unit vectors after ``m``
+    steps) and step ``m`` times at once; read lane by lane they are the
+    period s1, s2, ... The table is read-only: tasks share it.
     """
-    if distinct <= 0:
-        return np.zeros(0, dtype=np.uint64)
-    if distinct == 1:
-        return np.zeros(1, dtype=np.uint64)
     if distinct > LFSR_TABLE_CAP:
         raise ValueError(
             f"LFSR parity table for n={distinct} exceeds cap {LFSR_TABLE_CAP}; "
             "use feistel mode"
         )
-    bits = distinct.bit_length()
-    mask = (1 << bits) - 1
-    poly = PRIMITIVE_POLYNOMIALS[bits]
-    state = seed & mask
-    if state == 0:
-        state = (1 << (bits - 1)) | 1
-    out = np.empty(distinct, dtype=np.uint64)
-    for i in range(distinct):
-        while True:
-            bit = state & 1
-            state >>= 1
-            if bit:
-                state ^= poly
-            if state <= distinct:
-                break
-        out[i] = state - 1
+    if distinct <= 1:
+        out = np.zeros(max(distinct, 0), dtype=np.uint64)
+    else:
+        bits = distinct.bit_length()
+        period = (1 << bits) - 1  # a maximal register visits each nonzero state once
+        state = seed & period or (1 << (bits - 1)) | 1
+        poly = np.uint32(PRIMITIVE_POLYNOMIALS[bits])
+        m = 1 << (bits + 1) // 2
+        lanes = -(-period // m)
+
+        def walk(s: np.ndarray, rows: np.ndarray) -> np.ndarray:
+            for row in rows:  # row i: every lane after i + 1 steps
+                np.bitwise_xor(s >> 1, (s & 1) * poly, out=row)
+                s = row
+            return rows
+
+        units = np.uint32(1) << np.arange(bits, dtype=np.uint32)
+        jump = walk(units, np.empty((m, bits), dtype=np.uint32))[-1]
+        starts = np.empty(lanes, dtype=np.uint32)
+        for j in range(lanes):
+            starts[j] = state
+            state = int(np.bitwise_xor.reduce(jump[state & units != 0]))
+        states = walk(starts, np.empty((m, lanes), dtype=np.uint32)).T.ravel()[:period]
+        out = states[states <= distinct].astype(np.uint64)
+        out -= np.uint64(1)
+    out.setflags(write=False)
     return out
 
 
@@ -268,7 +280,7 @@ def perm_np(idx: np.ndarray, n: int, seed: int, mode: str) -> np.ndarray:
     k = mod_np(idx, n)
     mode = resolve_mode(n, mode)
     if mode == "lfsr":
-        return lfsr_walk(n, seed)[k]
+        return lfsr_walk(n, seed).take(k.view(np.int64))
     if mode == "feistel":
         return feistel_np(k, n, seed)
     raise ValueError(f"unknown permutation mode: {mode}")

@@ -46,7 +46,8 @@ from pyspark.sql.pandas.types import from_arrow_type
 
 from sdvg_spark.config.model import ColumnSpec, ConfigError, GenerationConfig, ModelSpec
 from sdvg_spark.core.rng import derive_seed, frf_np
-from sdvg_spark.core.sequence import mod_np, ordered_np, perm_np, resolve_mode
+from sdvg_spark.core.sequence import LFSR_TABLE_CAP, ordered_np, perm_np
+from sdvg_spark.core.sequence import range_perm_mode, resolve_mode
 from sdvg_spark.generators.values import arrow_type, make_value_gen
 from sdvg_spark.session import configure_session
 
@@ -159,16 +160,21 @@ def plan_column(cfg: GenerationConfig, model: ModelSpec, column: ColumnSpec) -> 
         )
         off += cnt
 
-    dtype = _column_dtype(data_column, plans)
-    return ColumnPlan(
+    plan = ColumnPlan(
         name=column.name,
         column_type=data_column.type,
         rows=rows,
         data_seed=data_seed,
         perm_mode=resolve_mode(rows, cfg.permutation),
         ranges=plans,
-        dtype=dtype,
+        dtype=_column_dtype(data_column, plans),
     )
+    if plan.perm_mode == "lfsr" and not plan.all_ordered_single and rows > LFSR_TABLE_CAP:
+        raise ConfigError(
+            f"{model.name}.{column.name}: permutation lfsr is capped at "
+            f"{LFSR_TABLE_CAP} rows ({rows} asked); use feistel or auto"
+        )
+    return plan
 
 
 def _column_dtype(data_column: ColumnSpec, plans: list[RangePlan]) -> str:
@@ -203,7 +209,7 @@ def _column_dtype(data_column: ColumnSpec, plans: list[RangePlan]) -> str:
 # the model evaluator (the only Python stage of the pipeline)
 
 
-def _make_sequencer(plan: ColumnPlan, spark: SparkSession):
+def _make_sequencer(plan: ColumnPlan):
     """Closure: uint64 id array -> one ``(rows, num)`` pair per range:
     the positions of the batch rows the range owns (None for a
     single-range column: every row) and their draw numbers.
@@ -212,8 +218,9 @@ def _make_sequencer(plan: ColumnPlan, spark: SparkSession):
     range dispatch and the per-range draw number. The dispatch is a sum
     of compares against the inner range bounds, and each range's row
     partition is taken once and serves both its draw and its values.
-    LFSR parity tables ride a Spark broadcast so executors get them
-    once; feistel mode needs none (100 TB path).
+    Both tiers draw through ``perm_np``: each worker builds the LFSR
+    tables it reads, once (``lfsr_walk``'s LRU); a range over the cap
+    draws from feistel (``range_perm_mode``).
 
     Accepted deviation (multi-range columns only): the per-range draw
     is derived from the permuted generator number (k = gnum - off), not
@@ -233,35 +240,15 @@ def _make_sequencer(plan: ColumnPlan, spark: SparkSession):
     inner = np.cumsum([r.cnt for r in ranges], dtype=np.uint64)[:-1]
     ridx_dtype = np.min_scalar_type(len(ranges))
 
-    # Ship parity tables via broadcast (they can be MBs); feistel needs
-    # none. A range whose distinct exceeds the parity cap (e.g. an FK
-    # into a >cap parent from a small child) gets no table and falls
-    # back to feistel per-range (range_perm_mode).
-    tables_bc = None
-    if mode == "lfsr" and not plan.all_ordered_single:
-        from sdvg_spark.core.sequence import lfsr_walk, range_perm_mode
-
-        tables = {"col": np.asarray(lfsr_walk(rows, data_seed))}
-        for r in ranges:
-            if not r.ordered and range_perm_mode(mode, r.distinct) == "lfsr":
-                tables[r.index] = np.asarray(lfsr_walk(r.distinct, int(r.order_seed)))
-        tables_bc = spark.sparkContext.broadcast(tables)
-
     def range_draw(r: RangePlan, k: np.ndarray) -> np.ndarray:
         if r.ordered:
             return ordered_np(k, r.distinct, r.cnt)
-        tab = tables_bc.value.get(r.index) if tables_bc is not None else None
-        if tab is not None:
-            return tab[mod_np(k, r.distinct).view(np.int64)]
-        return perm_np(k, r.distinct, int(r.order_seed), "feistel")
+        return perm_np(k, r.distinct, int(r.order_seed), range_perm_mode(mode, r.distinct))
 
     def draw(idx: np.ndarray) -> list[tuple[np.ndarray | None, np.ndarray]]:
         if plan.all_ordered_single:
             return [(None, ordered_np(idx, first.distinct, first.cnt))]
-        if tables_bc is not None:
-            gnum = tables_bc.value["col"][mod_np(idx, rows).view(np.int64)]
-        else:
-            gnum = perm_np(idx, rows, data_seed, mode)
+        gnum = perm_np(idx, rows, data_seed, mode)
         if not len(inner):
             # one range at offset 0: the dispatch is the identity
             # (every row, k == gnum)
@@ -317,7 +304,7 @@ def _range_values(r: RangePlan, num: np.ndarray, data_seed: int, atype: pa.DataT
     return _null_gated(values, gate)
 
 
-def _make_column(plan: ColumnPlan, spark: SparkSession) -> Callable[[np.ndarray], pa.Array]:
+def _make_column(plan: ColumnPlan) -> Callable[[np.ndarray], pa.Array]:
     """int64 ids -> the column's final Arrow array.
 
     Sequencer, jitter, null gate and value run in one numpy pass. A
@@ -328,7 +315,7 @@ def _make_column(plan: ColumnPlan, spark: SparkSession) -> Callable[[np.ndarray]
     """
     ranges = plan.ranges
     atype = arrow_type(plan.dtype)
-    draw = _make_sequencer(plan, spark)
+    draw = _make_sequencer(plan)
 
     def column(ids: np.ndarray) -> pa.Array:
         parts = draw(ids.view(np.uint64))
@@ -343,11 +330,9 @@ def _make_column(plan: ColumnPlan, spark: SparkSession) -> Callable[[np.ndarray]
     return column
 
 
-def _make_evaluator(
-    plans: list[ColumnPlan], spark: SparkSession
-) -> Callable[[np.ndarray], list[pa.Array]]:
+def _make_evaluator(plans: list[ColumnPlan]) -> Callable[[np.ndarray], list[pa.Array]]:
     """int64 ids -> one final Arrow array per plan, in plan order."""
-    columns = [_make_column(plan, spark) for plan in plans]
+    columns = [_make_column(plan) for plan in plans]
 
     def evaluate(ids: np.ndarray) -> list[pa.Array]:
         return [column(ids) for column in columns]
@@ -399,7 +384,6 @@ class Engine:
 
     def apply_columns(
         self,
-        spark: SparkSession,
         base: DataFrame,
         plans: list[ColumnPlan],
         keep_id: bool = False,
@@ -412,7 +396,7 @@ class Engine:
         ``mapInArrow`` evaluates every column of a batch."""
         extra = list(extra_cols or [])
         passed = extra + (["id"] if keep_id else [])
-        evaluate = _make_evaluator(plans, spark)
+        evaluate = _make_evaluator(plans)
         schema = T.StructType([base.schema[c] for c in passed] + _fields(plans))
         names = schema.names
 
@@ -449,7 +433,7 @@ class Engine:
         batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
         if batch <= 0:  # Spark's "no limit"
             batch = max(n, 1)
-        evaluate = _make_evaluator(plans, spark)
+        evaluate = _make_evaluator(plans)
         id_field = [T.StructField("id", T.LongType(), nullable=False)] if keep_id else []
         schema = T.StructType(id_field + _fields(plans))
         names = schema.names

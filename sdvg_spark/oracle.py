@@ -6,8 +6,8 @@ Given a (config, model, column) this emits one DuckDB query producing
 function, jitter, range dispatch and null gate are recomputed
 independently from the plan parameters; the seeded permutation (which
 *is* the semantic, not a derived quantity) is embedded as an array
-literal precomputed by the same driver-side code the engine broadcasts
-to executors.
+literal built by the same ``core/sequence`` tables the engine's
+workers read.
 
 Columns whose value generators have no SQL mirror (uuid, free-form
 strings, text) return ``None`` — the driver then records the weaker

@@ -56,4 +56,4 @@ def stream_model(
     extra = ["event_time"] if include_event_time else None
     if not include_event_time:
         base = base.select("id")
-    return eng.apply_columns(spark, base, plans, extra_cols=extra)
+    return eng.apply_columns(base, plans, extra_cols=extra)

@@ -205,7 +205,7 @@ def test_evaluator_pickles_small_and_round_trips():
     def evaluator(columns, rows):
         cfg = parse_config({"random_seed": 3, "permutation": "feistel",
                             "models": {"m": {"rows_count": rows, "columns": columns}}})
-        return _make_evaluator(Engine(cfg).plans_for(cfg.models["m"]), None)
+        return _make_evaluator(Engine(cfg).plans_for(cfg.models["m"]))
 
     devnull = evaluator(GEN_COLUMNS, 3_000_000)
     assert len(cloudpickle.dumps(devnull)) < 32 << 10

@@ -284,6 +284,60 @@ def test_fk_into_oversized_parent_falls_back_to_feistel_per_range(spark):
     assert all(1 <= r.ref <= 10**12 for r in rows)
 
 
+def test_lfsr_over_cap_is_a_config_error():
+    """``permutation: lfsr`` over a column domain above the parity cap
+    fails when the column is planned, on the driver; an ordered
+    single-range column reads no table and plans."""
+    from sdvg_spark.config.model import ConfigError
+    from sdvg_spark.core.sequence import LFSR_TABLE_CAP
+    from sdvg_spark.engine import plan_column
+
+    def plan(ordered):
+        cfg = parse_config({
+            "random_seed": 5,
+            "permutation": "lfsr",
+            "models": {"m": {"rows_count": LFSR_TABLE_CAP + 5, "columns": [
+                {"name": "i", "type": "integer", "ordered": ordered,
+                 "type_params": {"bit_width": 64, "from": 0, "to": 10**12}}]}},
+        })
+        model = cfg.models["m"]
+        return plan_column(cfg, model, model.column("i"))
+
+    with pytest.raises(ConfigError, match="lfsr"):
+        plan(False)
+    assert plan(True).all_ordered_single
+
+
+def test_generate_makes_no_broadcast(spark, tmp_path, monkeypatch):
+    """Each worker builds the LFSR parity tables it reads: a devnull
+    generate of an ``auto`` model with permuted columns (single- and
+    multi-range) broadcasts nothing."""
+    from pyspark import SparkContext
+
+    from sdvg_spark.jobs import run_generate
+
+    calls = []
+    broadcast = SparkContext.broadcast
+
+    def counting(self, value):
+        calls.append(type(value))
+        return broadcast(self, value)
+
+    monkeypatch.setattr(SparkContext, "broadcast", counting)
+    raw = {
+        "random_seed": 4,
+        "output": {"type": "devnull", "dir": str(tmp_path / "dn")},
+        "models": {"m": {"rows_count": 3000, "columns": [
+            {"name": "f", "type": "float", "type_params": {"from": 0, "to": 1}},
+            {"name": "r", "type": "integer", "ranges": [
+                {"type_params": {"bit_width": 32, "from": 0, "to": 9}, "range_percentage": 0.5},
+                {"type_params": {"bit_width": 32, "from": 100, "to": 10**6},
+                 "range_percentage": 0.5}]}]}},
+    }
+    assert run_generate(raw, spark=spark)["m"].startswith("noop")
+    assert calls == []
+
+
 def test_datetime_ns_unit_lossless_and_oracle_exact(spark):
     """unit: ns emits bigint epoch-nanos carrying the full nanosecond
     interpolation (the reference's datetime precision); truncating to

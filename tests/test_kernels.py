@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from sdvg_spark.core.rng import derive_seed, frf_col, frf_cte_chain, frf_np
 from sdvg_spark.core.sequence import (
     LFSR_TABLE_CAP,
+    PRIMITIVE_POLYNOMIALS,
     feistel_np,
     lfsr_walk,
     ordered_np,
@@ -107,6 +108,46 @@ def test_perm_cycles():
 def test_lfsr_walk_full_period():
     walk = lfsr_walk(100, seed=9)
     assert sorted(walk.tolist()) == list(range(100))
+
+
+def _lfsr_walk_py(distinct: int, seed: int) -> list[int]:
+    """The LFSR sequencer on Python ints, one state at a time: step the
+    Galois register, skip states > distinct, emit state - 1."""
+    if distinct <= 1:
+        return [0] * max(distinct, 0)
+    bits = distinct.bit_length()
+    mask = (1 << bits) - 1
+    poly = PRIMITIVE_POLYNOMIALS[bits]
+    state = seed & mask
+    if state == 0:
+        state = (1 << (bits - 1)) | 1
+    out = []
+    for _ in range(distinct):
+        while True:
+            bit = state & 1
+            state >>= 1
+            if bit:
+                state ^= poly
+            if state <= distinct:
+                break
+        out.append(state - 1)
+    return out
+
+
+@pytest.mark.parametrize("width", range(1, 23))
+def test_lfsr_walk_matches_scalar_reference(width):
+    """The lane walk equals the state-by-state walk at the smallest, the
+    next and the largest domain of each register width, for a seed
+    whose low bits are all zero (the fixup start state) and one whose
+    are not. The cached table is read-only."""
+    k = width - 1
+    for n in sorted({2**k, 2**k + 1, 2 ** (k + 1) - 1}):
+        for seed in (1 << 40, 0x9E3779B97F4A7C15):
+            walk = lfsr_walk(n, seed)
+            assert walk.dtype == np.uint64 and not walk.flags.writeable
+            assert walk.tolist() == _lfsr_walk_py(n, seed), (n, seed)
+    assert lfsr_walk.cache_info().maxsize == 256
+    lfsr_walk.cache_clear()  # up to 32 MB a table
 
 
 def test_resolve_mode_caps_lfsr():
