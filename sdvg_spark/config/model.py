@@ -504,6 +504,7 @@ class OutputConfig:
     endpoint: str = ""
     headers: dict[str, str] = field(default_factory=dict)
     batch_size: int = 1000
+    # parsed but not read: each generation task is one sender
     workers_count: int = 1
     timeout_seconds: float = 60.0
     body_template: str = ""

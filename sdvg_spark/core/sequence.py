@@ -8,8 +8,9 @@ contract — a seeded bijective "shuffle" of ``[0, n)`` that cycles — as a
 
 * **lfsr** (parity tier): the LFSR period is computed with the same
   primitive polynomials by the process that reads it, once (numpy
-  lanes, ``lfsr_walk``: 8 B a row, a 256-key LRU per process), then
-  indexed. Bit-exact with the reference walk, capped at 1<<22 rows.
+  lanes, ``lfsr_walk``: uint32, 4 B a row, a 256-key LRU per process),
+  then indexed and widened to uint64. Bit-exact with the reference
+  walk, capped at 1<<22 rows.
 * **feistel** (scale tier): a 4-round alternating-unbalanced Feistel
   network over exactly ``ceil(log2 n)`` bits with cycle-walking, keyed
   by the same seed. A jump-free bijection with identical guarantees
@@ -82,7 +83,8 @@ def lfsr_walk(distinct: int, seed: int) -> np.ndarray:
     The Galois step is linear over GF(2): ``lanes`` lanes start at s0,
     A^m s0, A^2m s0, ... (A^m's columns: the unit vectors after ``m``
     steps) and step ``m`` times at once; read lane by lane they are the
-    period s1, s2, ... The table is read-only: tasks share it.
+    period s1, s2, ... The table is uint32 (every value is below
+    ``LFSR_TABLE_CAP``) and read-only: tasks share it.
     """
     if distinct > LFSR_TABLE_CAP:
         raise ValueError(
@@ -90,7 +92,7 @@ def lfsr_walk(distinct: int, seed: int) -> np.ndarray:
             "use feistel mode"
         )
     if distinct <= 1:
-        out = np.zeros(max(distinct, 0), dtype=np.uint64)
+        out = np.zeros(max(distinct, 0), dtype=np.uint32)
     else:
         bits = distinct.bit_length()
         period = (1 << bits) - 1  # a maximal register visits each nonzero state once
@@ -112,8 +114,8 @@ def lfsr_walk(distinct: int, seed: int) -> np.ndarray:
             starts[j] = state
             state = int(np.bitwise_xor.reduce(jump[state & units != 0]))
         states = walk(starts, np.empty((m, lanes), dtype=np.uint32)).T.ravel()[:period]
-        out = states[states <= distinct].astype(np.uint64)
-        out -= np.uint64(1)
+        out = states[states <= distinct]
+        out -= np.uint32(1)
     out.setflags(write=False)
     return out
 
@@ -280,7 +282,7 @@ def perm_np(idx: np.ndarray, n: int, seed: int, mode: str) -> np.ndarray:
     k = mod_np(idx, n)
     mode = resolve_mode(n, mode)
     if mode == "lfsr":
-        return lfsr_walk(n, seed).take(k.view(np.int64))
+        return lfsr_walk(n, seed).take(k.view(np.int64)).astype(np.uint64)
     if mode == "feistel":
         return feistel_np(k, n, seed)
     raise ValueError(f"unknown permutation mode: {mode}")

@@ -24,7 +24,8 @@ outputs: selecting some columns of a model, or counting it, still
 computes every column (sinks write whole models). A sink that needs no
 values in the JVM passes a ``TaskConsumer``: its function runs in the
 generating task over that task's value batches, and the task returns
-what it yields (devnull: one row count).
+what it yields (devnull: one row count; HTTP/TCS: the rows and requests
+it posted; ``sinks/writers.task_consumer`` picks it).
 
 Foreign keys re-evaluate the *parent's* pure expression on the child's
 row-ids (the reference's zero-shuffle trick, task.go:86-114): referential
@@ -347,7 +348,9 @@ def _fields(plans: list[ColumnPlan]) -> list[T.StructField]:
 class TaskConsumer(NamedTuple):
     """What a generation task does with its value batches instead of
     returning them: ``fn`` takes the task's iterator of batches and
-    yields the task's output batches, of Spark schema ``schema``."""
+    yields the task's output batches, of Spark schema ``schema``. It
+    runs in the generating task, so a retried task runs it again over
+    the same values (an HTTP/TCS sink posts them again)."""
 
     fn: Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]
     schema: T.StructType

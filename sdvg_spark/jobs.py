@@ -10,12 +10,10 @@ already on disk (pure index->value generation makes the skip O(1)).
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from typing import Any
 
-import pyarrow as pa
 from pyspark.sql import SparkSession
-from pyspark.sql import types as T
 
 from sdvg_spark.backup import (
     ConflictError,
@@ -30,18 +28,11 @@ from sdvg_spark.backup import (
     save_checkpoint,
 )
 from sdvg_spark.config.model import GenerationConfig, parse_config
-from sdvg_spark.engine import Engine, TaskConsumer
+from sdvg_spark.engine import Engine
+from sdvg_spark.sinks import writers
+from sdvg_spark.sinks.writers import _DISCARD  # noqa: F401  re-exported: devnull's consumer
 
 ProgressFn = Callable[[str, float], None]
-
-
-def _discard(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """devnull in the generating task: drop the values, return the count."""
-    rows = sum(b.num_rows for b in batches)
-    yield pa.RecordBatch.from_arrays([pa.array([rows], pa.int64())], names=["rows"])
-
-
-_DISCARD = TaskConsumer(_discard, T.StructType([T.StructField("rows", T.LongType(), False)]))
 
 
 def run_generate(
@@ -119,8 +110,6 @@ def run_generate(
 
         spark = get_spark()
 
-    from sdvg_spark.sinks.writers import write_model
-
     eng = Engine(cfg)
     written: dict[str, str] = {}
     for m in active:
@@ -137,14 +126,17 @@ def run_generate(
         # action is atomic, so the tick rides the slice boundary).
         step = out.checkpoint_rows if file_sink and out.checkpoint_rows > 0 else total
         start = m.generate_from + done
+        # devnull and HTTP/TCS values never leave the task that makes
+        # them: the write gets one record per task
+        consumer = writers.task_consumer(m, out)
         while start < m.generate_to:
             end = min(start + step, m.generate_to)
-            # devnull's values never leave the task that makes them: the
-            # noop write gets one row count per task
             df = eng.model_df(spark, m.name, generate_from=start, generate_to=end,
-                              consumer=_DISCARD if out.type == "devnull" else None)
+                              consumer=consumer)
             mode = "append" if start > m.generate_from else "overwrite"
-            written[m.name] = write_model(spark, df, m, out, mode=mode)
+            # looked up on the module at call time, so a wrapped
+            # write_model sees every sink's write
+            written[m.name] = writers.write_model(spark, df, m, out, mode=mode)
             if file_sink:
                 save_checkpoint(out.dir, m.model_dir, end - m.generate_from)
             start = end

@@ -18,11 +18,12 @@ from typing import Any
 
 
 def _json_default(v: Any) -> Any:
-    """Match Go's json.Marshal: time.Time -> RFC3339 string."""
+    """Match Go's json.Marshal of a UTC time.Time: RFC3339 ending in ``Z``
+    (an aware datetime converted to UTC, a naive one taken as UTC)."""
     if isinstance(v, _dt.datetime):
-        if v.tzinfo is None:  # engine datetimes are UTC-naive
-            return v.isoformat(timespec="seconds") + "Z"
-        return v.isoformat(timespec="seconds")
+        if v.tzinfo is not None:
+            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+        return v.isoformat(timespec="seconds") + "Z"
     if isinstance(v, _dt.date):
         return v.isoformat()
     return str(v)
@@ -113,27 +114,19 @@ def _exec(nodes: list[tuple], ctx: Any, out: list[str]) -> None:
 
 
 def render(template: str, ctx: Any) -> str:
+    # split: text, then (`{{-`, action, `-}}`, text) per action
+    pieces = _TOKEN.split(template)
     parts: list[tuple[str, str]] = []
-    pos = 0
-    trim_next = False  # a preceding `-}}` trims our leading whitespace
-    for m in _TOKEN.finditer(template):
-        if m.start() > pos:
-            text = template[pos : m.start()]
-            if trim_next:
-                text = text.lstrip()
-            if m.group(1):  # `{{-` trims trailing whitespace before it
-                text = text.rstrip()
-            if text:
-                parts.append(("text", text))
-        parts.append(("action", m.group(2)))
-        trim_next = bool(m.group(3))
-        pos = m.end()
-    if pos < len(template):
-        text = template[pos:]
-        if trim_next:
+    for i in range(0, len(pieces), 4):
+        text = pieces[i]
+        if i and pieces[i - 1]:  # a preceding `-}}` trims our leading whitespace
             text = text.lstrip()
+        if i + 1 < len(pieces) and pieces[i + 1]:  # `{{-` trims trailing whitespace before it
+            text = text.rstrip()
         if text:
             parts.append(("text", text))
+        if i + 2 < len(pieces):
+            parts.append(("action", pieces[i + 2]))
     nodes, _ = _parse(parts, 0)
     out: list[str] = []
     _exec(nodes, ctx, out)

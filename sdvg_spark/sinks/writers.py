@@ -1,30 +1,35 @@
 """Sinks: devnull / CSV / Parquet / HTTP / TCS, with Hive partitioning.
 
-CSV and parquet go through one Arrow writer with a per-job staging
-commit (``sinks/files.py``): it names the files ``{model}_{n}.csv`` /
-``{model}_{n}.parquet``, rotates them at ``rows_per_file`` and names
-the partition directories ``col=value`` / ``col=null`` itself. The
-values it writes are shaped here in Spark: CSV's float precision and
-Go-layout datetime formats (SURVEY.md §2.4), parquet's float rounding.
-
-HTTP/TCS post micro-batches from ``foreachPartition`` with exponential
-backoff.
+A sink is what the generating task does with its values
+(``task_consumer``) plus the driver step of ``write_model``. devnull
+drops them (``_DISCARD``). HTTP/TCS post them from that task in
+``batch_size`` rows with exponential backoff (reference
+writer/http/http.go:81-127), at least once: a retried task posts its
+batches again. CSV and parquet take them as rows into one Arrow writer
+with a per-job staging commit (``sinks/files.py``), shaped here in
+Spark: CSV's float precision and Go-layout datetime formats (SURVEY.md
+§2.4), parquet's float rounding.
 """
 
 from __future__ import annotations
 
+import functools
+import itertools
 import os
 import time
-from typing import Iterable
+import urllib.request
+from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, Row, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sdvg_spark.config.model import ModelSpec, OutputConfig
+from sdvg_spark.engine import TaskConsumer
 from sdvg_spark.sinks.files import write_files
 from sdvg_spark.sinks.go_layout import go_layout_to_jdk
-from sdvg_spark.sinks.template import DEFAULT_BODY_TEMPLATE
+from sdvg_spark.sinks.template import DEFAULT_BODY_TEMPLATE, render
 
 _RFC3339 = "yyyy-MM-dd'T'HH:mm:ssXXX"
 
@@ -93,6 +98,68 @@ def _coalesce_for_rotation(df: DataFrame, model: ModelSpec) -> DataFrame:
     return df.coalesce(want)
 
 
+def _counts(**counts: int) -> pa.RecordBatch:
+    """A task's record: one row of int64 counts."""
+    return pa.RecordBatch.from_pydict({k: pa.array([v], pa.int64()) for k, v in counts.items()})
+
+
+def _schema(*names: str) -> T.StructType:
+    return T.StructType([T.StructField(n, T.LongType(), False) for n in names])
+
+
+def _discard(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """devnull in the generating task: drop the values, return the count."""
+    yield _counts(rows=sum(b.num_rows for b in batches))
+
+
+_DISCARD = TaskConsumer(_discard, _schema("rows"))
+
+
+def _send(body: bytes, endpoint: str, headers: dict[str, str], timeout: float) -> None:
+    """POST ``body``, retried with exponential backoff for ``timeout`` s."""
+    delay = 1.0
+    deadline = time.monotonic() + timeout
+    while True:
+        req = urllib.request.Request(endpoint, data=body, headers=headers, method="POST")
+        try:
+            # urlopen raises HTTPError unless the answer is 2xx
+            with urllib.request.urlopen(req, timeout=timeout):
+                return
+        except Exception:
+            if time.monotonic() + delay > deadline:
+                raise
+            time.sleep(delay)
+            delay = min(delay * 2, 600.0)
+
+
+def _post(batches: Iterator[pa.RecordBatch], model_name: str, out: OutputConfig) -> Iterator[pa.RecordBatch]:
+    """HTTP/TCS in the generating task: its rows, one dict each, posted
+    in requests of ``batch_size`` rows that may span Arrow batches;
+    returns the task's (rows, requests)."""
+    headers = dict(out.headers)
+    if out.type == "tcs":
+        headers.setdefault("x-tcs-timeout_ms", str(int(out.timeout_seconds * 1000)))
+    headers.setdefault("Content-Type", "application/json")
+    rows = (r for b in batches for r in b.to_pylist())
+    posted = sent = 0
+    while chunk := list(itertools.islice(rows, max(out.batch_size, 1))):
+        body = render(out.body_template or DEFAULT_BODY_TEMPLATE, {"ModelName": model_name, "Rows": chunk})
+        _send(body.encode("utf-8"), out.endpoint, headers, out.timeout_seconds)
+        posted, sent = posted + len(chunk), sent + 1
+    yield _counts(rows=posted, requests=sent)
+
+
+def task_consumer(model: ModelSpec, out: OutputConfig) -> TaskConsumer | None:
+    """What a generation task does with its values for ``out``'s sink;
+    ``None``: it returns them as rows (CSV, parquet)."""
+    if out.type == "devnull":
+        return _DISCARD
+    if out.type in ("http", "tcs"):
+        return TaskConsumer(functools.partial(_post, model_name=model.name, out=out),
+                            _schema("rows", "requests"))
+    return None
+
+
 def write_model(
     spark: SparkSession,
     df: DataFrame,
@@ -102,6 +169,9 @@ def write_model(
 ) -> str:
     """Write one model's DataFrame to the configured sink; returns path.
 
+    ``df`` is what ``task_consumer(model, out)`` made of the model's
+    rows: the rows themselves for CSV and parquet, one record per task
+    for HTTP/TCS (devnull writes any DataFrame to ``noop``).
     ``mode="append"`` is the resume path (jobs.run_generate): the
     DataFrame then covers only the missing row range."""
     path = os.path.join(out.dir, model.model_dir)
@@ -136,62 +206,11 @@ def write_model(
         return path
 
     if out.type in ("http", "tcs"):
-        _write_http(df, model, out)
+        # the tasks posted as they ran: df holds their (rows, requests)
+        posted = sum(r["rows"] for r in df.collect())
+        want = model.generate_to - model.generate_from
+        if posted != want:
+            raise RuntimeError(f"{out.type} sink posted {posted} of {want} rows of {model.name!r}")
         return out.endpoint
 
     raise ValueError(f"unknown output type {out.type!r}")
-
-
-def _write_http(df: DataFrame, model: ModelSpec, out: OutputConfig) -> None:
-    """Micro-batched POST from each partition with exponential backoff
-    (reference writer/http/http.go:81-127). Runs on executors; each
-    partition posts independently, without driver involvement."""
-    endpoint = out.endpoint
-    headers = dict(out.headers)
-    if out.type == "tcs":
-        headers.setdefault("x-tcs-timeout_ms", str(int(out.timeout_seconds * 1000)))
-    headers.setdefault("Content-Type", "application/json")
-    batch_size = max(out.batch_size, 1)
-    timeout = out.timeout_seconds
-    model_name = model.name
-    col_names = [f.name for f in df.schema.fields]
-    body_template = out.body_template or DEFAULT_BODY_TEMPLATE
-
-    def post_partition(rows: Iterable[Row]) -> None:
-        # re-import on the executor: unpickling the closure restores the
-        # `urllib` package but not the `urllib.request` submodule
-        import urllib.request
-
-        from sdvg_spark.sinks.template import render
-
-        def send(batch: list[dict]) -> None:
-            body = render(
-                body_template, {"ModelName": model_name, "Rows": batch}
-            ).encode("utf-8")
-            delay = 1.0
-            deadline = time.monotonic() + timeout
-            while True:
-                req = urllib.request.Request(
-                    endpoint, data=body, headers=headers, method="POST"
-                )
-                try:
-                    with urllib.request.urlopen(req, timeout=timeout) as resp:
-                        if 200 <= resp.status < 300:
-                            return
-                        raise OSError(f"http status {resp.status}")
-                except Exception:
-                    if time.monotonic() + delay > deadline:
-                        raise
-                    time.sleep(delay)
-                    delay = min(delay * 2, 600.0)
-
-        batch: list[dict] = []
-        for row in rows:
-            batch.append({k: row[k] for k in col_names})
-            if len(batch) >= batch_size:
-                send(batch)
-                batch = []
-        if batch:
-            send(batch)
-
-    df.foreachPartition(post_partition)

@@ -144,10 +144,22 @@ def test_lfsr_walk_matches_scalar_reference(width):
     for n in sorted({2**k, 2**k + 1, 2 ** (k + 1) - 1}):
         for seed in (1 << 40, 0x9E3779B97F4A7C15):
             walk = lfsr_walk(n, seed)
-            assert walk.dtype == np.uint64 and not walk.flags.writeable
+            assert walk.dtype == np.uint32 and not walk.flags.writeable
             assert walk.tolist() == _lfsr_walk_py(n, seed), (n, seed)
     assert lfsr_walk.cache_info().maxsize == 256
-    lfsr_walk.cache_clear()  # up to 32 MB a table
+    lfsr_walk.cache_clear()  # up to 16 MB a table
+
+
+def test_lfsr_table_is_uint32_and_perm_gathers_uint64():
+    """A parity table holds 4 B a row (every value is below the 2^22
+    cap); ``perm_np`` widens what it gathers to uint64."""
+    for n in (1, 3000, LFSR_TABLE_CAP):
+        assert lfsr_walk(n, 7).nbytes == 4 * n
+    idx = np.arange(7000, dtype=np.uint64)
+    got = perm_np(idx, 3000, 7, "lfsr")
+    assert got.dtype == np.uint64
+    assert got.tolist() == [int(lfsr_walk(3000, 7)[i % 3000]) for i in range(7000)]
+    lfsr_walk.cache_clear()
 
 
 def test_resolve_mode_caps_lfsr():

@@ -88,3 +88,15 @@ def test_trim_markers():
     assert out == '{ "rows":[1] }'
     out = render("a {{- 1 -}} b", {})
     assert out == "a1b"
+
+
+def test_datetimes_render_in_utc_with_z():
+    """A tz-aware datetime is rendered in UTC ending in ``Z``, as Go's
+    json.Marshal renders a UTC time.Time; a naive one is taken as UTC."""
+    import datetime as dt
+
+    want = '["2024-01-01T07:57:56Z"]'
+    utc = dt.datetime(2024, 1, 1, 7, 57, 56, 123456, tzinfo=dt.timezone.utc)
+    tokyo = utc.astimezone(dt.timezone(dt.timedelta(hours=9)))
+    for v in (utc, tokyo, utc.replace(tzinfo=None)):
+        assert render("{{ json .V }}", {"V": [v]}) == want, v
