@@ -9,21 +9,22 @@ output/general/conflicts.go:25-195).
 
 The Spark engine's resume is strictly cheaper than the reference's
 sequential sequencer drain: generation is a pure function of the row
-index, so resuming is ``spark.range(written, to)`` in append mode —
-no rescan, no replay. ``jobs.run_generate`` resumes at the model's
-``{model}.checkpoint`` if its directory is not empty, else at the rows
-the sink committed (``rows_on_disk``).
+index, so write task ``t`` of ``P`` always writes the same files. The
+checkpoint records ``P`` before the model's one write job, each task
+leaves a mark when its files are written (``sinks/files.py``), and
+``jobs.run_generate`` resumes by rerunning only the unmarked tasks in
+append mode — no rescan, no replay. A checkpoint whose model directory
+is empty or gone is stale: that model starts over.
 """
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
 import shutil
 from typing import Any
-
-from sdvg_spark.plan_stats import committed_files, rows
 
 BACKUP_FILE = "backup.json"
 
@@ -95,70 +96,37 @@ def check_output_conflicts(out_dir: str, model_dirs: list[str]) -> list[str]:
 def clean_outputs(out_dir: str, model_dirs: list[str]) -> None:
     for d in model_dirs:
         shutil.rmtree(os.path.join(out_dir, d), ignore_errors=True)
-        try:
+        with contextlib.suppress(FileNotFoundError):
             os.remove(checkpoint_path(out_dir, d))
-        except FileNotFoundError:
-            pass
-    try:
+    with contextlib.suppress(FileNotFoundError):
         os.remove(backup_path(out_dir))
-    except FileNotFoundError:
-        pass
 
 
 def checkpoint_path(out_dir: str, model_dir: str) -> str:
     return os.path.join(out_dir, f"{model_dir}.checkpoint")
 
 
-def save_checkpoint(out_dir: str, model_dir: str, saved_rows: int) -> None:
-    """Commit the per-model resume point (reference {model}.checkpoint,
-    model_writer.go:120-164). Written atomically (tmp + rename) AFTER
-    the corresponding Spark write action committed, so the counter never
-    over-reports."""
+def save_checkpoint(
+    out_dir: str, model_dir: str, saved_rows: int, tasks: int | None = None
+) -> None:
+    """Save the per-model resume point (reference {model}.checkpoint,
+    model_writer.go:120-164) atomically: ``saved_rows`` committed rows,
+    and the task count of the write job under way over the rest."""
     p = checkpoint_path(out_dir, model_dir)
     tmp = p + ".tmp"
+    payload = {"saved_rows": int(saved_rows)}
+    if tasks is not None:
+        payload["tasks"] = int(tasks)
     with open(tmp, "w", encoding="utf-8") as f:
-        json.dump({"saved_rows": int(saved_rows)}, f)
+        json.dump(payload, f)
     os.replace(tmp, p)
 
 
-def load_checkpoint(out_dir: str, model_dir: str) -> int | None:
+def load_checkpoint(out_dir: str, model_dir: str, key: str = "saved_rows") -> int | None:
+    """A field of the model's checkpoint, or None without it."""
     p = checkpoint_path(out_dir, model_dir)
-    if not os.path.exists(p):
-        return None
     try:
         with open(p, encoding="utf-8") as f:
-            return int(json.load(f)["saved_rows"])
-    except (ValueError, KeyError, OSError):
+            return int(json.load(f)[key])
+    except (ValueError, KeyError, TypeError, OSError):
         return None
-
-
-def rows_on_disk(
-    path: str, fmt: str, *, header: bool = True, delimiter: str = ","
-) -> int:
-    """Rows already written for a model (the resume point).
-
-    Counts the committed files only (``plan_stats.committed_files``:
-    a failed job's ``_staging/`` is not output). Parquet row
-    counts come from footers (no scan); CSV needs a DuckDB line pass.
-    CSV layout (header, delimiter) comes from the OUTPUT CONFIG, never
-    from sniffing: auto-detection can mistake the first data row of an
-    all-string headerless file for a header, undercounting by one per
-    file and making resume duplicate those rows. Missing dir -> 0.
-    """
-    if not os.path.isdir(path):
-        return 0
-    if fmt == "parquet":
-        return rows(path)
-    if fmt == "csv":
-        import duckdb
-
-        files = committed_files(path)
-        if not files:
-            return 0
-        (n,) = duckdb.connect().execute(
-            "SELECT count(*) FROM read_csv($1, union_by_name=true, "
-            "header=$2, delim=$3, all_varchar=true)",
-            [files, bool(header), delimiter],
-        ).fetchone()
-        return int(n or 0)
-    return 0

@@ -494,11 +494,10 @@ class OutputConfig:
     # shuffle at write time — unlike sort_by, which is task-local.
     # Mutually exclusive with sort_by; numeric/datetime columns only.
     zorder_by: list[str] = field(default_factory=list)
-    # file sinks: commit a {model}.checkpoint after every this-many rows
-    # (0 = one checkpoint per model, written after the model completes).
-    # The reference ticks its checkpoint on a 5 s timer
-    # (model_writer.go:120-164); a Spark write is one atomic job, so
-    # mid-run checkpoints come from slicing the job instead.
+    # file sinks: the most rows a crash loses (0 = no bound). A model is
+    # one write job whose tasks commit and resume one by one, so this
+    # raises the task count until no task holds more rows. The reference
+    # ticks its {model}.checkpoint on a 5 s timer (model_writer.go:120-164).
     checkpoint_rows: int = 0
     # http / tcs
     endpoint: str = ""

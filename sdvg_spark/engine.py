@@ -35,13 +35,14 @@ integrity without materializing or joining the parent.
 from __future__ import annotations
 
 import math
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Collection, Iterator
 from dataclasses import dataclass
 from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_type
 
@@ -345,6 +346,11 @@ def _fields(plans: list[ColumnPlan]) -> list[T.StructField]:
     return [T.StructField(plan.name, from_arrow_type(arrow_type(plan.dtype))) for plan in plans]
 
 
+def task_range(lo: int, hi: int, num_tasks: int, t: int) -> range:
+    """The ids task ``t`` of ``num_tasks`` makes (``Engine._generate``)."""
+    return range(lo + (hi - lo) * t // num_tasks, lo + (hi - lo) * (t + 1) // num_tasks)
+
+
 class TaskConsumer(NamedTuple):
     """What a generation task does with its value batches instead of
     returning them: ``fn`` takes the task's iterator of batches and
@@ -374,15 +380,17 @@ class Engine:
         num_partitions: int | None = None,
         keep_id: bool = False,
         consumer: TaskConsumer | None = None,
+        tasks: Collection[int] | None = None,
     ) -> DataFrame:
         """Rows ``[generate_from, generate_to)`` of a model; with a
-        ``consumer``, what its tasks make of those rows instead."""
+        ``consumer``, what its tasks make of those rows instead; with
+        ``tasks``, only those tasks make theirs (the others stay empty)."""
         configure_session(spark)
         model = self.cfg.models[model_name]
         lo = model.generate_from if generate_from is None else generate_from
         hi = model.generate_to if generate_to is None else generate_to
         return self._generate(
-            spark, self.plans_for(model), lo, hi, num_partitions, keep_id, consumer
+            spark, self.plans_for(model), lo, hi, num_partitions, keep_id, consumer, tasks
         )
 
     def apply_columns(
@@ -419,13 +427,14 @@ class Engine:
         num_partitions: int | None,
         keep_id: bool,
         consumer: TaskConsumer | None = None,
+        tasks: Collection[int] | None = None,
     ) -> DataFrame:
         """Rows ``[lo, hi)`` of ``plans``, each task making its own ids.
 
         Task ``t`` of ``P`` owns Range's split ``[lo + n*t // P,
-        lo + n*(t+1) // P)``, so every partition holds the ids of
-        ``spark.range(lo, hi, 1, P)``; only ``t`` crosses from the JVM.
-        Its ids come from ``np.arange`` in batches of
+        lo + n*(t+1) // P)`` (``task_range``), so every partition holds
+        the ids of ``spark.range(lo, hi, 1, P)``; only ``t`` crosses from
+        the JVM, and only for ``tasks`` if given. Its ids come from ``np.arange`` in batches of
         ``spark.sql.execution.arrow.maxRecordsPerBatch``, and each batch
         becomes one Arrow batch of every column: the task returns those
         batches, or hands them to ``consumer.fn`` and returns what that
@@ -456,7 +465,10 @@ class Engine:
                     yield from consumer.fn(batches(t)) if consumer else batches(t)
 
         out_schema = consumer.schema if consumer else schema
-        return spark.range(0, num_tasks, 1, num_tasks).mapInArrow(task, out_schema)
+        descriptors = spark.range(0, num_tasks, 1, num_tasks)
+        if tasks is not None:  # partition t keeps descriptor t
+            descriptors = descriptors.where(F.col("id").isin(sorted(tasks)))
+        return descriptors.mapInArrow(task, out_schema)
 
     def model_df_with_id(self, spark: SparkSession, model_name: str, **kw) -> DataFrame:
         """model_df plus the raw row-id column (oracle comparisons)."""

@@ -3,13 +3,17 @@
 The reference lifecycle (SURVEY.md §3 EP1, cli/commands/generate/
 generate.go:37-174): parse/validate -> output setup (conflict check) ->
 backup save or resume -> per-model generation -> teardown. Here each
-model is one Spark write action; resume restarts at the exact row count
-already on disk (pure index->value generation makes the skip O(1)).
+model is one Spark job. A file sink's write task is the unit of commit
+(``sinks/files.py``): ``{model}.checkpoint`` records the task count
+before the job, and resume reruns only the unmarked tasks, which pure
+index->value generation makes write the same files.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import shutil
 from collections.abc import Callable
 from typing import Any
 
@@ -23,13 +27,13 @@ from sdvg_spark.backup import (
     config_fingerprint,
     load_backup,
     load_checkpoint,
-    rows_on_disk,
     save_backup,
     save_checkpoint,
 )
 from sdvg_spark.config.model import GenerationConfig, parse_config
-from sdvg_spark.engine import Engine
+from sdvg_spark.engine import Engine, task_range
 from sdvg_spark.sinks import writers
+from sdvg_spark.sinks.files import marked_tasks
 from sdvg_spark.sinks.writers import _DISCARD  # noqa: F401  re-exported: devnull's consumer
 
 ProgressFn = Callable[[str, float], None]
@@ -47,14 +51,14 @@ def run_generate(
 
     ``force`` cleans colliding outputs; ``continue_generation`` resumes
     an interrupted run — the config must be identical to the backed-up
-    one (a recursive diff is reported otherwise), and each model
-    restarts at the rows already present in its sink directory.
+    one (a recursive diff is reported otherwise), and each model runs
+    the tasks its checkpoint's job left unmarked.
     """
     cfg: GenerationConfig = parse_config(raw)
     out = cfg.output
     file_sink = out.type in ("csv", "parquet")
     active = [m for name, m in cfg.models.items() if name not in cfg.models_to_ignore]
-    resume_rows: dict[str, int] = {}
+    resume: dict[str, tuple[int, int | None]] = {}
 
     if file_sink:
         conflicts = check_output_conflicts(out.dir, [m.model_dir for m in active])
@@ -80,22 +84,19 @@ def run_generate(
                     # run actually drew, not a fresh wall-clock one
                     cfg.random_seed = int(bk["resolved_seed"])
                 for m in active:
-                    # the checkpoint is the fast path (O(1) on restart);
-                    # re-counting rows on disk is the fallback for runs
-                    # that died before their first checkpoint commit. A
-                    # checkpoint with no output dir behind it is stale
-                    # (someone deleted the data) — fall back to counting.
+                    # a model starts over without a checkpoint, when its
+                    # checkpoint has no output behind it (someone deleted
+                    # the data), and if it is an unfinished zorder_by
+                    # model, whose write tasks are range partitions, not
+                    # generation tasks; no file of it may outlive a crash
+                    # of its new job
                     mdir = os.path.join(out.dir, m.model_dir)
-                    ck = load_checkpoint(out.dir, m.model_dir)
-                    if ck is not None and os.path.isdir(mdir) and os.listdir(mdir):
-                        resume_rows[m.name] = ck
+                    saved = load_checkpoint(out.dir, m.model_dir)
+                    if saved is None or not os.path.isdir(mdir) or not os.listdir(mdir) or (
+                            out.zorder_by and saved < m.generate_to - m.generate_from):
+                        shutil.rmtree(mdir, ignore_errors=True)
                     else:
-                        resume_rows[m.name] = rows_on_disk(
-                            mdir,
-                            out.type,
-                            header=not out.without_headers,
-                            delimiter=out.delimiter,
-                        )
+                        resume[m.name] = saved, load_checkpoint(out.dir, m.model_dir, "tasks")
         elif conflicts:
             if not force:
                 raise ConflictError(
@@ -114,32 +115,33 @@ def run_generate(
     written: dict[str, str] = {}
     for m in active:
         total = m.generate_to - m.generate_from
-        done = min(resume_rows.get(m.name, 0), total)
+        saved, tasks = resume.get(m.name, (0, None))
+        lo, hi = m.generate_from + min(saved, total), m.generate_to
+        path = os.path.join(out.dir, m.model_dir)
+        marked = marked_tasks(path) if tasks else []
         if on_progress:
+            done = lo - m.generate_from + sum(len(task_range(lo, hi, tasks, t)) for t in marked)
             on_progress(m.name, done / total if total else 1.0)
-        if done >= total:
-            written[m.name] = os.path.join(out.dir, m.model_dir)
+        if lo >= hi:
+            written[m.name] = path
             continue
-        # checkpoint_rows > 0 slices the write into several jobs so a
-        # long-running model commits resume points mid-run (the Spark
-        # analogue of the reference's 5 s checkpoint ticker — one write
-        # action is atomic, so the tick rides the slice boundary).
-        step = out.checkpoint_rows if file_sink and out.checkpoint_rows > 0 else total
-        start = m.generate_from + done
+        sink = {}
+        if file_sink:
+            tasks = tasks or writers.file_tasks(spark, m, out, hi - lo)
+            save_checkpoint(out.dir, m.model_dir, lo - m.generate_from, tasks)
+            # append keeps the committed rows and the marks; saved_rows
+            # advances once every file is in place, so it never over-reports
+            sink = {"mode": "append" if lo > m.generate_from or marked else "overwrite",
+                    "task_ids": functools.partial(task_range, lo, hi, tasks),
+                    "committed": functools.partial(save_checkpoint, out.dir, m.model_dir, total)}
         # devnull and HTTP/TCS values never leave the task that makes
         # them: the write gets one record per task
-        consumer = writers.task_consumer(m, out)
-        while start < m.generate_to:
-            end = min(start + step, m.generate_to)
-            df = eng.model_df(spark, m.name, generate_from=start, generate_to=end,
-                              consumer=consumer)
-            mode = "append" if start > m.generate_from else "overwrite"
-            # looked up on the module at call time, so a wrapped
-            # write_model sees every sink's write
-            written[m.name] = writers.write_model(spark, df, m, out, mode=mode)
-            if file_sink:
-                save_checkpoint(out.dir, m.model_dir, end - m.generate_from)
-            start = end
-            if on_progress:
-                on_progress(m.name, (start - m.generate_from) / total if total else 1.0)
+        df = eng.model_df(spark, m.name, generate_from=lo, num_partitions=tasks,
+                          consumer=writers.task_consumer(m, out),
+                          tasks=[t for t in range(tasks) if t not in marked] if marked else None)
+        # looked up on the module at call time, so a wrapped
+        # write_model sees every sink's write
+        written[m.name] = writers.write_model(spark, df, m, out, **sink)
+        if on_progress:
+            on_progress(m.name, 1.0)
     return written

@@ -1,4 +1,4 @@
-"""File sinks: one Arrow writer for parquet and CSV, committed per job.
+"""File sinks: one Arrow writer for parquet and CSV, committed per task.
 
 The reference writes ``{model}_{n}.parquet`` / ``.csv`` files, rotated
 at ``rows_per_file``, one Hive partition directory per key
@@ -8,15 +8,15 @@ partition key and streams them into ``pyarrow.parquet`` writers, or
 writes the CSV lines Spark's ``to_csv`` rendered (Python does no
 quoting, so the bytes are those of Spark's own CSV writer).
 
-Each task attempt writes under the hidden ``<model>/_staging/<attempt
-id>/`` and returns one row per file. Only after the action succeeds
-does the driver delete the old files (overwrite mode) and move the new
-ones into place as ``{model}_{n}``, task by task. A failed job leaves
-nothing that ``backup.rows_on_disk`` counts (it skips ``_`` names). A
-driver that dies mid-commit leaves the first tasks' files, the last
-task's perhaps in part: a prefix of the ids for an unpartitioned
-model, but not for a partitioned one, whose tasks commit one directory
-after another.
+A write task is the unit of commit. Each attempt writes under the
+hidden ``<model>/_staging/<attempt id>/`` and, whole, moves it to its
+mark ``<model>/_tasks/<t>/`` (``t``: its partition) unless another
+attempt holds it. The driver then moves the marked files into place as
+``{model}_{n}``, numbered per directory in (task, file) order, calls
+``committed``, then drops the marks. Overwrite mode drops stale marks
+first and the old files at commit; append keeps both and numbers past
+the files there, so rerunning only the unmarked tasks finishes a failed
+job or commit (``jobs.run_generate``'s resume). No ``_`` name is output.
 
 Paths resolve through ``pyarrow.fs.FileSystem.from_uri``. Only local
 paths and ``file://`` URIs are tested.
@@ -27,6 +27,7 @@ from __future__ import annotations
 import contextlib
 import os
 import re
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -46,10 +47,7 @@ _DICTIONARY = ("PLAIN_DICT", "RLE_DICTIONARY")
 _KEY = "__key_"
 _LINE = "__line"
 _STAGING = "_staging"
-# one row per staged file, as the tasks return it
-_RESULT = "dir string, part long, seq long, rows long, file string"
-_RESULT_ARROW = pa.schema([("dir", pa.string()), ("part", pa.int64()), ("seq", pa.int64()),
-                           ("rows", pa.int64()), ("file", pa.string())])
+TASKS = "_tasks"
 
 # the characters Spark's ExternalCatalogUtils.escapePathName writes as %XX
 _ESCAPED = frozenset([*map(chr, range(1, 32)), *"\"#%'*/:=?\\\x7f{[]^"])
@@ -154,10 +152,10 @@ class _Csv:
 class _DirWriter:
     """One task's rows for one partition directory: files of
     ``rows_per_file`` rows, written ``group_rows`` rows at a time (a
-    parquet row group each). Closed files are appended to ``done``."""
+    parquet row group each), named ``<seq><suffix>``."""
 
-    def __init__(self, fs, base, rel, rows_per_file, group_rows, fmt, done):
-        self.fs, self.base, self.rel, self.fmt, self.done = fs, base, rel, fmt, done
+    def __init__(self, fs, base, rel, rows_per_file, group_rows, fmt):
+        self.fs, self.base, self.rel, self.fmt = fs, base, rel, fmt
         self.rows_per_file, self.group_rows = rows_per_file, group_rows
         self.pending, self.pending_rows, self.in_file, self.seq, self.writer = [], 0, 0, 0, None
 
@@ -188,7 +186,6 @@ class _DirWriter:
             self._write_group()
         if self.writer is not None:
             self.writer.close()
-            self.done.append((self.rel, self.seq, self.in_file, self.file))
             self.writer, self.in_file, self.seq = None, 0, self.seq + 1
 
 
@@ -200,31 +197,29 @@ def _remove(fs, path: str) -> None:
         fs.delete_file(path)
 
 
-def _next_number(fs, d: str, name: str, suffix: str) -> int:
-    """One past the highest ``{name}_{n}{suffix}`` already in ``d``."""
-    pat = re.compile(rf"^{re.escape(name)}_(\d+){re.escape(suffix)}$")
-    infos = fs.get_file_info(pafs.FileSelector(d, allow_not_found=True))
-    return max((int(m.group(1)) + 1 for i in infos if (m := pat.match(i.base_name))), default=0)
-
-
-def _commit(fs, root: str, name: str, suffix: str, staged: list, mode: str) -> None:
-    """Move the staged files into place."""
-    if mode == "overwrite":
-        for info in fs.get_file_info(pafs.FileSelector(root)):
-            if info.base_name != _STAGING:
-                _remove(fs, info.path)
+def _moves(fs, root: str, name: str, suffix: str) -> Iterator[tuple[str, str]]:
+    """(source, destination) of each marked file, directory by
+    directory in (task, seq) order, numbered past the files there."""
+    tasks, pat = _path(root, TASKS), re.compile(rf"^{re.escape(name)}_(\d+){re.escape(suffix)}$")
+    marked = []
+    for info in fs.get_file_info(pafs.FileSelector(tasks, allow_not_found=True, recursive=True)):
+        if info.type == pafs.FileType.File:
+            t, *rel, file = info.path[len(tasks) + 1:].split("/")
+            marked.append(("/".join(rel), int(t), int(file[:-len(suffix)]), info.path))
     number: dict[str, int] = {}
-    moves = []
-    for r in sorted(staged, key=lambda r: (r.dir, r.part, r.seq)):
-        if r.dir not in number:
-            number[r.dir] = _next_number(fs, _path(root, r.dir), name, suffix)
-            fs.create_dir(_path(root, r.dir), recursive=True)
-        moves.append((r.part, r.file, _path(r.dir, f"{name}_{number[r.dir]}{suffix}")))
-        number[r.dir] += 1
-    moves.sort(key=lambda m: m[0])  # task by task; stable, so names ascend
-    for _part, src, dst in moves:
-        fs.move(_path(root, src), _path(root, dst))
-    _remove(fs, _path(root, _STAGING))
+    for rel, _t, _seq, src in sorted(marked):
+        if rel not in number:
+            fs.create_dir(_path(root, rel), recursive=True)
+            there = fs.get_file_info(pafs.FileSelector(_path(root, rel)))
+            number[rel] = max((int(m[1]) + 1 for i in there if (m := pat.match(i.base_name))), default=0)
+        yield src, _path(root, rel, f"{name}_{number[rel]}{suffix}")
+        number[rel] += 1
+
+
+def marked_tasks(path: str) -> list[int]:
+    """The tasks that hold a mark in the local model directory ``path``."""
+    marks = os.path.join(path, TASKS)
+    return sorted(map(int, os.listdir(marks))) if os.path.isdir(marks) else []
 
 
 def write_files(
@@ -234,11 +229,13 @@ def write_files(
     out: OutputConfig,
     path: str,
     mode: str = "overwrite",
+    task_ids: Callable[[int], range] | None = None,
+    committed: Callable[[], None] | None = None,
 ) -> None:
     """Write ``df`` as ``model``'s files of type ``out.type`` (parquet or
-    csv) under ``path`` and commit them. Each task writes the rows in the
-    order it gets them. ``mode="append"`` numbers new files past the
-    existing ones."""
+    csv) under ``path``, each task its rows in the order it gets them,
+    and commit them. A task marks only a whole write: all its files, and
+    all the ``task_ids(t)`` rows partition ``t`` must get if given."""
     fs, root = pafs.FileSystem.from_uri(path if "://" in path else os.path.abspath(path))
     root = root.rstrip("/")
     names = [p.name for p in model.partition_columns]
@@ -259,36 +256,56 @@ def write_files(
     # not grow with its row count (a batch size <= 0 is Spark's "no limit")
     group_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
     group_rows = group_rows if group_rows > 0 else rows_per_file
-    staging = _path(root, _STAGING)
+    staging, tasks = _path(root, _STAGING), _path(root, TASKS)
 
     def write_task(batches):
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
-        base = _path(staging, str(ctx.taskAttemptId()))
+        t, base = ctx.partitionId(), _path(staging, str(ctx.taskAttemptId()))
+        fs.create_dir(base)
         dirs: dict[str, _DirWriter] = {}
-        done: list = []
+        got = 0
         for batch in batches:
+            got += batch.num_rows
             if millis:
                 batch = _floor_millis(batch)
             for rel, rows in _split(batch, keys, names) if keys else [("", batch)]:
                 if rel not in dirs:
-                    dirs[rel] = _DirWriter(fs, base, rel, rows_per_file, group_rows, fmt, done)
+                    dirs[rel] = _DirWriter(fs, base, rel, rows_per_file, group_rows, fmt)
                 dirs[rel].add(rows.select(payload))
         for d in dirs.values():
             d.close()
-        yield pa.RecordBatch.from_pylist(
-            [{"dir": rel, "part": ctx.partitionId(), "seq": seq, "rows": n,
-              "file": file[len(root) + 1:]} for rel, seq, n, file in done],
-            schema=_RESULT_ARROW)
+        mark = _path(tasks, str(t))
+        staged = fs.get_file_info(pafs.FileSelector(base, recursive=True))
+        if fs.get_file_info(mark).type != pafs.FileType.NotFound:
+            _remove(fs, base)  # another attempt wrote this task
+        elif (sum(i.type == pafs.FileType.File for i in staged) != sum(d.seq for d in dirs.values())
+              or task_ids is not None and got != len(task_ids(t))):
+            # a killed task's input ends early, as if it were whole, and
+            # a failed job's staging goes while its tasks may still run
+            raise RuntimeError(f"write task {t} was cut short")
+        else:
+            fs.create_dir(tasks)
+            fs.move(base, mark)
+        yield from ()
 
-    fs.create_dir(root, recursive=True)
+    _remove(fs, staging)
+    if mode == "overwrite":
+        _remove(fs, tasks)
     try:
-        staged = df.mapInArrow(write_task, _RESULT).collect()
-    except Exception:
-        # best effort: tasks being killed may still write there, and a
-        # leftover staging directory is never counted as output
+        df.mapInArrow(write_task, "t long").collect()
+    finally:
+        # best effort: a failed job's tasks being killed may still write
+        # there, and its marks stay for a resume
         with contextlib.suppress(OSError):
             _remove(fs, staging)
-        raise
-    _commit(fs, root, model.name, fmt.suffix, staged, mode)
+    if mode == "overwrite":
+        for info in fs.get_file_info(pafs.FileSelector(root, allow_not_found=True)):
+            if info.base_name not in (_STAGING, TASKS):
+                _remove(fs, info.path)
+    for src, dst in _moves(fs, root, model.name, fmt.suffix):
+        fs.move(src, dst)
+    if committed is not None:
+        committed()
+    _remove(fs, tasks)

@@ -18,12 +18,13 @@ from typing import Any
 
 
 def _json_default(v: Any) -> Any:
-    """Match Go's json.Marshal of a UTC time.Time: RFC3339 ending in ``Z``
-    (an aware datetime converted to UTC, a naive one taken as UTC)."""
+    """Match Go's json.Marshal of a UTC time.Time: RFC3339Nano ending in
+    ``Z``, the fraction's trailing zeros trimmed (an aware datetime
+    converted to UTC, a naive one taken as UTC)."""
     if isinstance(v, _dt.datetime):
         if v.tzinfo is not None:
             v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        return v.isoformat(timespec="seconds") + "Z"
+        return v.isoformat(timespec="seconds") + f".{v.microsecond:06}".rstrip(".0") + "Z"
     if isinstance(v, _dt.date):
         return v.isoformat()
     return str(v)

@@ -6,7 +6,7 @@ drops them (``_DISCARD``). HTTP/TCS post them from that task in
 ``batch_size`` rows with exponential backoff (reference
 writer/http/http.go:81-127), at least once: a retried task posts its
 batches again. CSV and parquet take them as rows into one Arrow writer
-with a per-job staging commit (``sinks/files.py``), shaped here in
+that commits task by task (``sinks/files.py``), shaped here in
 Spark: CSV's float precision and Go-layout datetime formats (SURVEY.md
 §2.4), parquet's float rounding.
 """
@@ -18,7 +18,7 @@ import itertools
 import os
 import time
 import urllib.request
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -77,25 +77,19 @@ def _parquet_rounded(df: DataFrame, out: OutputConfig) -> DataFrame:
 _ROWS_PER_TASK_CAP = 10_000_000
 
 
-def _coalesce_for_rotation(df: DataFrame, model: ModelSpec) -> DataFrame:
-    """Shrink task count toward ``ceil(rows / rows_per_file)`` so file
-    counts track the reference's single-writer rotation instead of one
-    file per task. Never coalesces a task above ~10M rows: a small model
-    gets file-count parity, a 1e9-row model keeps its write parallelism
-    (file-count parity is not worth serializing a cluster-scale write).
-    With the default ``rows_per_file`` (= ``rows_count``) a model under
-    10M rows gets ONE task, and as ``coalesce`` is narrow, so does its
-    generation.
-    """
-    if not model.rows_count or not model.rows_per_file:
-        return df
-    target = -(-model.rows_count // model.rows_per_file)
-    floor_tasks = -(-model.rows_count // _ROWS_PER_TASK_CAP)
-    want = max(target, floor_tasks)
-    # coalesce() can only reduce partition count (no-op when want >=
-    # current), so no partition probe is needed — probing via df.rdd
-    # forced a physical-plan build per write call.
-    return df.coalesce(want)
+def file_tasks(spark: SparkSession, model: ModelSpec, out: OutputConfig, rows: int) -> int:
+    """Tasks to generate and write ``rows`` rows of ``model`` to files:
+    ``ceil(rows_count / rows_per_file)`` for the reference's file count,
+    at most the session's parallelism, at least one per ~10M rows; then
+    enough that none holds over ``checkpoint_rows``, the most a crash
+    loses, as a task is the unit of commit."""
+    tasks = spark.sparkContext.defaultParallelism
+    if model.rows_count and model.rows_per_file:
+        tasks = min(tasks, max(-(-model.rows_count // model.rows_per_file),
+                               -(-model.rows_count // _ROWS_PER_TASK_CAP)))
+    if out.checkpoint_rows > 0:
+        tasks = max(tasks, -(-rows // out.checkpoint_rows))
+    return tasks
 
 
 def _counts(**counts: int) -> pa.RecordBatch:
@@ -166,14 +160,15 @@ def write_model(
     model: ModelSpec,
     out: OutputConfig,
     mode: str = "overwrite",
+    task_ids: Callable[[int], range] | None = None,
+    committed: Callable[[], None] | None = None,
 ) -> str:
     """Write one model's DataFrame to the configured sink; returns path.
 
     ``df`` is what ``task_consumer(model, out)`` made of the model's
     rows: the rows themselves for CSV and parquet, one record per task
-    for HTTP/TCS (devnull writes any DataFrame to ``noop``).
-    ``mode="append"`` is the resume path (jobs.run_generate): the
-    DataFrame then covers only the missing row range."""
+    for HTTP/TCS (devnull writes any DataFrame to ``noop``). ``mode``,
+    ``task_ids`` and ``committed``: see ``sinks/files.write_files``."""
     path = os.path.join(out.dir, model.model_dir)
 
     if out.type == "devnull":
@@ -181,12 +176,11 @@ def write_model(
         return "noop://"
 
     if out.type == "csv":
-        write_files(spark, _coalesce_for_rotation(_csv_formatted(df, out), model),
-                    model, out, path, mode)
+        write_files(spark, _csv_formatted(df, out), model, out, path, mode, task_ids, committed)
         return path
 
     if out.type == "parquet":
-        pdf = _coalesce_for_rotation(_parquet_rounded(df, out), model)
+        pdf = _parquet_rounded(df, out)
         if out.sort_by:
             # task-local sort (no shuffle): each output file's row groups
             # get tight, non-overlapping min/max stats on the sort keys,
@@ -195,14 +189,13 @@ def write_model(
         elif out.zorder_by:
             # multi-dimensional clustering: one range shuffle on the
             # Morton code, partition keys leading (see sinks/zorder.py).
-            # Overrides the rotation coalesce's partition count;
-            # rows_per_file still caps file sizes.
+            # Its write tasks are range partitions, not generation
+            # tasks; rows_per_file still caps file sizes.
             from sdvg_spark.sinks.zorder import apply_zorder
 
-            pdf = apply_zorder(
-                pdf, model, out, lead=[p.name for p in model.partition_columns]
-            )
-        write_files(spark, pdf, model, out, path, mode)
+            pdf = apply_zorder(pdf, model, out, lead=[p.name for p in model.partition_columns])
+            task_ids = None
+        write_files(spark, pdf, model, out, path, mode, task_ids, committed)
         return path
 
     if out.type in ("http", "tcs"):

@@ -14,7 +14,8 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from sdvg_spark.backup import rows_on_disk, save_backup
+from sdvg_spark import plan_stats
+from sdvg_spark.backup import save_backup
 from sdvg_spark.config.model import parse_config
 from sdvg_spark.engine import Engine
 from sdvg_spark.jobs import run_generate
@@ -111,7 +112,7 @@ def test_rle_reaches_the_writer_and_a_failed_overwrite_keeps_old_files(spark, tm
     with pytest.raises(Exception, match="RLE only supports BOOLEAN"):
         write_model(spark, df, cfg.models["t"], cfg.output)
     assert sorted(os.listdir(tmp_path / "t")) == before == ["t_0.parquet"]
-    assert rows_on_disk(str(tmp_path / "t"), "parquet") == 100
+    assert plan_stats.rows(str(tmp_path / "t")) == 100
 
 
 def test_timestamp_millis_floors(spark, tmp_path):
@@ -188,7 +189,7 @@ def test_failed_task_commits_nothing_and_resume_writes_every_id_once(
     with pytest.raises(Exception, match="injected task failure"):
         write_model(spark, df.mapInArrow(fail_one, df.schema), cfg.models["t"], cfg.output)
     assert not glob.glob(f"{tmp_path}/t/**/t_*.{fmt}", recursive=True)
-    assert rows_on_disk(str(tmp_path / "t"), fmt) == 0
+    assert plan_stats.committed_files(str(tmp_path / "t")) == []
 
     save_backup(str(tmp_path), raw)
     run_generate(raw, spark=spark, continue_generation=True)

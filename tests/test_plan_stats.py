@@ -6,12 +6,10 @@ from __future__ import annotations
 import os
 import shutil
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from sdvg_spark import plan_stats
-from sdvg_spark.backup import rows_on_disk
 
 # the repo's committed sf0.01 tables
 TABLES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "perfbench", "data")
@@ -83,22 +81,3 @@ def test_missing_path_raises_and_entry_falls_back(tmp_path):
     with pytest.raises(Exception):
         plan_stats.rows(str(bad))
     assert E._parquet_rows(sf, "bad") == -1
-
-
-@pytest.mark.parametrize("fmt", ["parquet", "csv"])
-def test_rows_on_disk_partial_part_layout(spark, tmp_path, fmt):
-    """A write killed before the rename pass leaves ``__part_<col>=v/``
-    directories; their rows are committed output and count toward the
-    resume point, exactly as DuckDB counts them."""
-    d = str(tmp_path / "t")
-    df = spark.range(300).selectExpr("id", "cast(id % 3 AS string) AS __part_tag")
-    w = df.write.partitionBy("__part_tag")
-    if fmt == "csv":
-        w.option("header", True).csv(d)
-        sql = f"SELECT count(*) FROM read_csv('{d}/*/*.csv', header=true)"
-    else:
-        w.parquet(d)
-        sql = f"SELECT count(*) FROM read_parquet('{d}/*/*.parquet')"
-    assert {f for f in os.listdir(d) if "=" in f} == {f"__part_tag={i}" for i in range(3)}
-    (want,) = duckdb.connect().execute(sql).fetchone()
-    assert rows_on_disk(d, fmt) == want == 300

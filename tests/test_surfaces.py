@@ -47,22 +47,51 @@ def test_conflict_detection(spark, tmp_path):
     run_generate(raw, spark=spark, force=True)
 
 
-def test_resume_appends_missing_rows(spark, tmp_path):
+def _fail_task(failing, tasks_dir, others):
+    """A mapInArrow function that fails partition ``failing`` once
+    ``others`` tasks hold a mark under ``tasks_dir``."""
+
+    def fail(batches):
+        from pyspark import TaskContext
+
+        if TaskContext.get().partitionId() == failing:
+            deadline = time.monotonic() + 60
+            while len(os.listdir(tasks_dir) if os.path.isdir(tasks_dir) else []) < others:
+                if time.monotonic() > deadline:
+                    break
+                time.sleep(0.05)
+            raise RuntimeError("injected task failure")
+        yield from batches
+
+    return fail
+
+
+def _crashed_run(spark, monkeypatch, raw, failing, others):
+    """run_generate with one write task failing after ``others`` tasks
+    marked their files written."""
+    from sdvg_spark.jobs import run_generate
+    from sdvg_spark.sinks import writers
+
+    write_model = writers.write_model
+    fail = _fail_task(failing, os.path.join(raw["output"]["dir"], "t", "_tasks"), others)
+    with monkeypatch.context() as m:
+        m.setattr(writers, "write_model",
+                  lambda spark, df, *a, **k: write_model(spark, df.mapInArrow(fail, df.schema),
+                                                         *a, **k))
+        with pytest.raises(Exception, match="injected task failure"):
+            run_generate(raw, spark=spark)
+
+
+def test_resume_appends_missing_rows(spark, tmp_path, monkeypatch):
     from sdvg_spark.jobs import run_generate
 
     out = tmp_path / "r"
     full = _raw_cfg(out, rows=400)
+    full["output"]["checkpoint_rows"] = 100  # four write tasks
 
-    # simulate an interrupted run: generate only the first 150 rows
-    partial = json.loads(json.dumps(full))
-    partial["models"]["t"]["generate_to"] = 150
-    run_generate(partial, spark=spark)
-
-    # overwrite backup with the FULL config fingerprint (as if the full
-    # run had started and died mid-way)
-    from sdvg_spark.backup import save_backup
-
-    save_backup(str(out), full)
+    # an interrupted run: the last task fails after the other three
+    # committed their files to their marks
+    _crashed_run(spark, monkeypatch, full, failing=3, others=3)
 
     progress = []
     run_generate(
@@ -76,8 +105,8 @@ def test_resume_appends_missing_rows(spark, tmp_path):
         f"SELECT count(*), count(DISTINCT k), max(k) FROM read_parquet('{out}/t/*.parquet')"
     ).fetchone()
     assert (n, distinct, kmax) == (400, 400, 400)
-    # first progress call reports the resume point
-    assert progress[0] == ("t", 150 / 400)
+    # first progress call reports the resume point: the marked tasks' rows
+    assert progress[0] == ("t", 300 / 400)
 
 
 def test_resume_rejects_changed_config(spark, tmp_path):
@@ -398,26 +427,27 @@ def test_unseeded_config_draws_wall_clock_seed_and_resume_reuses_it(spark, tmp_p
 
 def test_checkpointed_resume_skips_output_scan(spark, tmp_path, monkeypatch):
     """Kill-and-resume via {model}.checkpoint: restart must read the
-    checkpoint counter, never re-scan the output (O(output) on a 10-hour
-    job). rows_on_disk is poisoned to prove it isn't called."""
-    from sdvg_spark import jobs
-    from sdvg_spark.backup import load_checkpoint, save_backup
+    checkpoint and the task marks, never the output (O(output) on a
+    10-hour job). Parquet footers and DuckDB are poisoned to prove it."""
+    from sdvg_spark import plan_stats
+    from sdvg_spark.backup import load_checkpoint
     from sdvg_spark.jobs import run_generate
 
     out = tmp_path / "ck"
     raw = _raw_cfg(out, rows=400)
-    raw["output"]["checkpoint_rows"] = 100  # slice into 4 jobs
-    partial = json.loads(json.dumps(raw))
-    partial["models"]["t"]["generate_to"] = 200
-    run_generate(partial, spark=spark)
-    assert load_checkpoint(str(out), "t") == 200
-    save_backup(str(out), raw)  # as if the full run died mid-way
+    raw["output"]["checkpoint_rows"] = 100  # four write tasks in one job
+    _crashed_run(spark, monkeypatch, raw, failing=1, others=2)
+    assert load_checkpoint(str(out), "t") == 0
+    assert load_checkpoint(str(out), "t", "tasks") == 4
 
     def boom(*a, **k):
-        raise AssertionError("resume re-scanned the output instead of reading the checkpoint")
+        raise AssertionError("resume read the output instead of the checkpoint")
 
-    monkeypatch.setattr(jobs, "rows_on_disk", boom)
-    run_generate(raw, spark=spark, continue_generation=True)
+    with monkeypatch.context() as m:
+        m.setattr(plan_stats, "footers", boom)
+        m.setattr(duckdb, "connect", boom)
+        m.setattr(duckdb, "sql", boom)
+        run_generate(raw, spark=spark, continue_generation=True)
     assert load_checkpoint(str(out), "t") == 400
     con = duckdb.connect()
     n, distinct = con.execute(

@@ -95,8 +95,23 @@ def test_datetimes_render_in_utc_with_z():
     json.Marshal renders a UTC time.Time; a naive one is taken as UTC."""
     import datetime as dt
 
-    want = '["2024-01-01T07:57:56Z"]'
+    want = '["2024-01-01T07:57:56.123456Z"]'
     utc = dt.datetime(2024, 1, 1, 7, 57, 56, 123456, tzinfo=dt.timezone.utc)
     tokyo = utc.astimezone(dt.timezone(dt.timedelta(hours=9)))
     for v in (utc, tokyo, utc.replace(tzinfo=None)):
         assert render("{{ json .V }}", {"V": [v]}) == want, v
+
+
+def test_datetimes_keep_their_fraction_as_rfc3339nano():
+    """Go's json.Marshal writes a time.Time as RFC3339Nano: the
+    sub-second fraction with its trailing zeros trimmed, none at all
+    when it is zero."""
+    import datetime as dt
+
+    cases = {0: "2020-01-01T00:00:00Z", 87164: "2020-01-01T00:00:00.087164Z",
+             500000: "2020-01-01T00:00:00.5Z", 10: "2020-01-01T00:00:00.00001Z",
+             999999: "2020-01-01T00:00:00.999999Z"}
+    for us, want in cases.items():
+        v = dt.datetime(2020, 1, 1, 0, 0, 0, us)
+        assert json.loads(render("{{ json .V }}", {"V": [v]})) == [want], us
+        assert render("{{ .V }}", {"V": v}) == json.dumps(want), us
